@@ -23,6 +23,12 @@ watermark-advanced law the oracle pins TRUE.  At 100 TB each window is
 one incremental run: the scan prunes to the window at the source, every
 stage after it is a codegen expression or one keyed window, and the sink
 is the partitioned distributed write the engine always does.
+
+The batch run scans the docstore ONCE: the lake write is the only job
+over the source, and the funnel counts are a ``pyspark.sql.Observation``
+on the rows that write already processes, placed above the ``user_id``
+shuffle so they are collected in the write's result stage (see
+:func:`pipeline_reference_etl` for why there and not on the scan side).
 """
 
 from __future__ import annotations
@@ -32,12 +38,17 @@ import os
 import shutil
 from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 _WINDOW_LO = "2024-01-08 00:00:00"
 _WINDOW_HI = "2024-01-14 23:59:59.999999"
+
+# the normalized record every stage carries; the lakes add dt (and the
+# stream's lake the event time it merges on)
+_RECORD_DDL = "event_id BIGINT, user_id BIGINT, value DOUBLE"
+_STREAM_LAKE_DDL = f"{_RECORD_DDL}, ts TIMESTAMP, dt STRING"
 
 _RUN_DIRS: list[str] = []
 
@@ -60,6 +71,46 @@ def _run_dir(prefix: str, tag: str) -> str:
     return path
 
 
+def _with_validity(df: DataFrame) -> DataFrame:
+    """Stage 2, shared by the batch and streaming runs: serialize each
+    record → corrupt a deterministic subset (event_id % 7 == 0) → PERMISSIVE
+    re-parse.  ``is_valid`` is TRUE iff the re-parse kept the record — the
+    reference's tolerate-and-null path with real attrition, same
+    construction as ``json_validate_nullify``."""
+    rec = F.to_json(F.struct("event_id", "user_id", "value"))
+    corrupted = F.when(F.col("event_id") % 7 == 0,
+                       F.concat(F.lit("x"), rec)).otherwise(rec)
+    parsed = F.from_json(corrupted, _RECORD_DDL)
+    return df.withColumn("is_valid", parsed.getField("event_id").isNotNull())
+
+
+def _observed_survivors(spark: SparkSession, sf_dir: str,
+                        funnel: Observation) -> DataFrame:
+    """Stages 1-3 of :func:`pipeline_reference_etl`: the canonical
+    survivors, with the scanned/valid/unique counts observed into
+    ``funnel`` on the ranked rows above the ``user_id`` exchange."""
+    from build_pipeline_with_apache_beam_spark.sources.docstore import (
+        scan_docstore_pushdown,
+    )
+
+    # stage 1: windowed source scan, predicate pushed into the connector;
+    # stage 2: serialize → validate (PERMISSIVE) → normalized whitelist
+    ann = _with_validity(scan_docstore_pushdown(spark, sf_dir))
+    # stage 3: keep-latest canonical per user, valid rows ranked first so
+    # `keep` selects exactly the valid records' latest per user
+    w = W.partitionBy("user_id").orderBy(
+        F.desc("is_valid"), F.desc("ts"), F.desc("event_id"))
+    keep = F.col("is_valid") & (F.col("_rn") == 1)
+    return (ann.withColumn("_rn", F.row_number().over(w))
+            .observe(funnel,
+                     F.count(F.lit(1)).alias("n_scanned"),
+                     F.count_if(F.col("is_valid")).alias("n_valid"),
+                     F.count_if(keep).alias("n_unique"))
+            .where(keep)
+            .select("event_id", "user_id", "value",
+                    F.date_format("ts", "yyyy-MM-dd").alias("dt")))
+
+
 def pipeline_reference_etl(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scan → validate/normalize → dedup-canonical → partitioned sink →
     watermark commit, as ONE run over one processing window.
@@ -67,9 +118,7 @@ def pipeline_reference_etl(spark: SparkSession, sf_dir: str) -> DataFrame:
     Funnel semantics (each SQL-recomputable):
     - ``n_scanned``: docstore rows in the window (purchase events);
     - ``n_valid``: records surviving the serialize → PERMISSIVE-re-parse
-      validation (a deterministic subset, event_id % 7 == 0, is corrupted
-      before the parse — the reference's tolerate-and-null path with real
-      attrition, same construction as ``json_validate_nullify``);
+      validation (:func:`_with_validity`);
     - ``n_unique``: keep-latest canonical per user (ties: highest
       event_id) — the identity-collapse the reference gets from Mongo's
       ``_id``;
@@ -78,50 +127,41 @@ def pipeline_reference_etl(spark: SparkSession, sf_dir: str) -> DataFrame:
       not an assumption);
     - ``watermark_advanced``: TRUE iff the run-log watermark equals the
       window end AFTER the sink succeeded (law boolean).
+
+    One scan, one window, one write job.  The keep-latest window ranks
+    EVERY scanned row (valid rows first), so ``_rn == 1 AND is_valid`` is
+    exactly the canonical survivor set and the first three counts are an
+    ``Observation`` on the ranked rows the lake write already processes —
+    no second and third scan of the source to count them.  The
+    observation sits above the ``user_id`` shuffle, in the write's result
+    stage: result-task accumulator updates are applied once per
+    partition, whereas a shuffle-map stage that is retried (a lost
+    executor, a fetch failure) re-applies its updates and would
+    over-count the funnel.  The returned frame is a one-row literal: all
+    five values are known once the write, the re-read and the watermark
+    commit have run.
     """
-    from build_pipeline_with_apache_beam_spark.sources.docstore import (
-        scan_docstore_pushdown,
-    )
-    from build_pipeline_with_apache_beam_spark.sources.sinks import (
-        SCRATCH,
-        source_tag,
-    )
+    from build_pipeline_with_apache_beam_spark.sources.sinks import source_tag
     from build_pipeline_with_apache_beam_spark.streaming.watermark import (
         WatermarkStore,
     )
 
-    # stage 1: windowed source scan, predicate pushed into the connector
-    scanned = scan_docstore_pushdown(spark, sf_dir)
-
-    # stage 2: serialize → validate (PERMISSIVE) → normalized whitelist
-    rec = F.to_json(F.struct("event_id", "user_id", "value"))
-    corrupted = F.when(F.col("event_id") % 7 == 0,
-                       F.concat(F.lit("x"), rec)).otherwise(rec)
-    parsed = F.from_json(
-        corrupted, "event_id BIGINT, user_id BIGINT, value DOUBLE")
-    ann = scanned.withColumn(
-        "is_valid", parsed.getField("event_id").isNotNull())
-
-    # stage 3: keep-latest canonical per user over the valid records
-    w = W.partitionBy("user_id").orderBy(F.desc("ts"), F.desc("event_id"))
-    survivors = (ann.where("is_valid")
-                 .withColumn("_rn", F.row_number().over(w))
-                 .where(F.col("_rn") == 1)
-                 .select("event_id", "user_id", "value",
-                         F.date_format("ts", "yyyy-MM-dd").alias("dt")))
+    funnel = Observation("reference_etl_funnel")
+    survivors = _observed_survivors(spark, sf_dir, funnel)
 
     # stage 4: partitioned JSON lake write, then re-read (never trust an
-    # unverified sink — the count below comes off the re-read)
+    # unverified sink — n_sunk comes off the re-read, counted eagerly: a
+    # later same-process rerun rmtree's the same pid-scoped dir)
     tag = source_tag(sf_dir)
     lake = _run_dir("etl_lake", tag)
     shutil.rmtree(lake, ignore_errors=True)
     survivors.write.partitionBy("dt").json(lake)
-    back = spark.read.schema(
-        "event_id BIGINT, user_id BIGINT, value DOUBLE, dt STRING").json(lake)
+    counts = funnel.get
+    n_sunk = spark.read.schema(f"{_RECORD_DDL}, dt STRING").json(
+        lake).count()
 
     # stage 5: watermark commit AFTER the verified sink (the reference
     # marks done before its pipeline runs — documented non-goal)
-    n_sunk = back.count()
     wm_root = _run_dir("etl_wm", tag)
     shutil.rmtree(wm_root, ignore_errors=True)
     store = WatermarkStore(wm_root)
@@ -130,17 +170,14 @@ def pipeline_reference_etl(spark: SparkSession, sf_dir: str) -> DataFrame:
     store.commit(win_lo, win_hi, record_count=n_sunk)
     advanced = store.last_processed() == win_hi
 
-    funnel = ann.agg(
-        F.count(F.lit(1)).alias("n_scanned"),
-        F.count_if(F.col("is_valid")).alias("n_valid"))
-    uniq = survivors.agg(F.count(F.lit(1)).alias("n_unique"))
-    # n_sunk pinned as the EAGER re-read count (back.count() above), not a
-    # lazy re-scan of the lake: a later same-process rerun rmtree's the
-    # same pid-scoped dir, which would invalidate a previously returned
-    # lazy frame at collect time.
-    return (funnel.crossJoin(uniq)
-            .withColumn("n_sunk", F.lit(int(n_sunk)).cast("bigint"))
-            .withColumn("watermark_advanced", F.lit(bool(advanced))))
+    # SQL literal, never createDataFrame (Python-RDD build sides stall
+    # broadcasts)
+    return spark.sql(
+        f"SELECT CAST({int(counts['n_scanned'])} AS BIGINT) AS n_scanned, "
+        f"CAST({int(counts['n_valid'])} AS BIGINT) AS n_valid, "
+        f"CAST({int(counts['n_unique'])} AS BIGINT) AS n_unique, "
+        f"CAST({int(n_sunk)} AS BIGINT) AS n_sunk, "
+        f"{'TRUE' if advanced else 'FALSE'} AS watermark_advanced")
 
 
 def publish_lake_version(lake: str, tmp: str) -> None:
@@ -320,15 +357,8 @@ def run_etl_stream(spark: SparkSession, sf_dir: str, lake: str, wm_root: str,
         # applied per micro-batch — the tail does not know the window)
         win = ev.where((F.col("ts") >= win_lo) & (F.col("ts") <= win_hi)
                        & (F.col("event_type") == "purchase"))
-        # stage 2: serialize → corrupt subset → PERMISSIVE re-parse (the
-        # identical validation construction as pipeline_reference_etl)
-        rec = F.to_json(F.struct("event_id", "user_id", "value"))
-        corrupted = F.when(F.col("event_id") % 7 == 0,
-                           F.concat(F.lit("x"), rec)).otherwise(rec)
-        parsed = F.from_json(
-            corrupted, "event_id BIGINT, user_id BIGINT, value DOUBLE")
-        ann = win.withColumn(
-            "is_valid", parsed.getField("event_id").isNotNull())
+        # stage 2: the batch twin's validation, applied per micro-batch
+        ann = _with_validity(win)
         counts = ann.agg(
             F.count(F.lit(1)).alias("ns"),
             F.count_if(F.col("is_valid")).alias("nv"),
@@ -342,9 +372,8 @@ def run_etl_stream(spark: SparkSession, sf_dir: str, lake: str, wm_root: str,
                         .select("event_id", "user_id", "value", "ts"))
         current = os.path.join(lake, "current")
         if os.path.exists(current):
-            existing = sess.read.schema(
-                "event_id BIGINT, user_id BIGINT, value DOUBLE, "
-                "ts TIMESTAMP, dt STRING").json(current).drop("dt")
+            existing = sess.read.schema(_STREAM_LAKE_DDL).json(
+                current).drop("dt")
             merged = (existing.unionByName(batch_latest)
                       .withColumn("_rn", F.row_number().over(w))
                       .where(F.col("_rn") == 1).drop("_rn"))
@@ -363,9 +392,7 @@ def run_etl_stream(spark: SparkSession, sf_dir: str, lake: str, wm_root: str,
         _gc_lake_versions(lake)  # reap crash debris before staging more
         tmp = os.path.join(lake, f"v{batch_id}_{_uuid.uuid4().hex[:8]}")
         out.write.partitionBy("dt").mode("overwrite").json(tmp)
-        n_sunk = sess.read.schema(
-            "event_id BIGINT, user_id BIGINT, value DOUBLE, "
-            "ts TIMESTAMP, dt STRING").json(tmp).count()
+        n_sunk = sess.read.schema(_STREAM_LAKE_DDL).json(tmp).count()
         publish_lake_version(lake, tmp)
         # stage 5: watermark/run-log commit strictly AFTER the verified
         # swap; the record carries the batch's funnel counts so the final
@@ -482,9 +509,8 @@ def pipeline_reference_etl_stream(spark: SparkSession, sf_dir: str,
     hist = store.history()
     n_scanned, n_valid = _runlog_funnel(hist)
     wm_final = store.last_processed()
-    back = spark.read.schema(
-        "event_id BIGINT, user_id BIGINT, value DOUBLE, "
-        "ts TIMESTAMP, dt STRING").json(os.path.join(lake, "current"))
+    back = spark.read.schema(_STREAM_LAKE_DDL).json(
+        os.path.join(lake, "current"))
     n_sunk = back.count()
     n_unique = back.select("user_id").distinct().count()
     # the law: the final watermark is the max VALID in-window event time —
@@ -533,22 +559,5 @@ ORACLE = {
     # the law being checked (its counts come from the run-log aggregate +
     # drained lake, not one batch plan).
     "pipeline_reference_etl_stream": _FUNNEL_SQL,
-    "pipeline_reference_etl": f"""
-        WITH win AS (
-            SELECT * FROM events
-            WHERE ts >= TIMESTAMP '{_WINDOW_LO}'
-              AND ts <= TIMESTAMP '{_WINDOW_HI}'
-              AND event_type = 'purchase'
-        ), valid AS (
-            SELECT * FROM win WHERE event_id % 7 <> 0
-        ), uniq AS (
-            SELECT COUNT(DISTINCT user_id) AS u FROM valid
-        )
-        SELECT (SELECT COUNT(*) FROM win)::BIGINT AS n_scanned,
-               (SELECT COUNT(*) FROM valid)::BIGINT AS n_valid,
-               u::BIGINT AS n_unique,
-               u::BIGINT AS n_sunk,
-               TRUE AS watermark_advanced
-        FROM uniq
-    """,
+    "pipeline_reference_etl": _FUNNEL_SQL,
 }

@@ -176,7 +176,12 @@ class DocStoreReader(DataSourceReader):
             table = table.filter(mask)
         return table
 
-    def read(self, partition: _FilePartition) -> Iterator[pa.RecordBatch]:
+    def read(self, partition: _FilePartition | None
+             ) -> Iterator[pa.RecordBatch]:
+        # PySpark substitutes one None partition when partitions() returns
+        # none (every file pruned, or an empty manifest): no rows to read
+        if partition is None:
+            return
         # Arrow-batch yield (supported by the Python DataSource API): one
         # columnar parse + vectorized filter per file, no per-row Python
         yield from self._apply_filters(

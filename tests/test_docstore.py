@@ -288,6 +288,22 @@ def test_filter_that_empties_every_file_yields_zero_rows(spark, sf_dir):
     assert got.count() == 0
 
 
+def test_window_before_first_day_counts_zero(spark, sf_dir):
+    """A pushed ts range before the collection's first day prunes every
+    file; PySpark then reads one ``None`` partition, which must yield no
+    rows instead of failing on ``partition.path``."""
+    from build_pipeline_with_apache_beam_spark.sources.docstore import (
+        open_docstore,
+    )
+
+    root = build_collection(spark, sf_dir)
+    with open(os.path.join(root, MANIFEST)) as fh:
+        first = min(m["min_ts"] for m in json.load(fh))
+    got = open_docstore(spark, sf_dir).where(
+        F.col("ts_micros") <= first - 1)
+    assert got.count() == 0
+
+
 def test_vectorized_filters_match_rowwise_semantics_property():
     """Property (round-12): for arbitrary docs and filter sets, the Arrow
     path's vectorized filter application equals the r11 row-at-a-time

@@ -370,7 +370,7 @@ def test_embedding_dedup_hot_bucket_split_bounds_blocks(spark, sf_dir):
     emb = _with_unit_vec(load_table(spark, sf_dir, "embeddings"))
     bucketed = (emb.select("vec_id", "vec", "embedding")
                 .withColumn("bucket",
-                            _bucket(F.col("embedding").cast("array<double>")))
+                            _bucket("CAST(embedding AS ARRAY<DOUBLE>)"))
                 .drop("embedding"))
     sizes = bucketed.groupBy("bucket").agg(
         F.ceil(F.count(F.lit(1)) / MAX_BLOCK).alias("n_sub"))
@@ -529,7 +529,7 @@ def test_lsh_bucket_sql_matches_engine(spark, sf_dir, duck):
     emb = load_table(spark, sf_dir, "embeddings")
     got = {r["vec_id"]: r["b"] for r in emb.select(
         "vec_id",
-        _bucket(F.col("embedding").cast("array<double>")).alias("b"))
+        _bucket("CAST(embedding AS ARRAY<DOUBLE>)").alias("b"))
         .collect()}
     want = dict(duck.execute(
         f"SELECT vec_id, {_bucket_sql('embedding::DOUBLE[]')} "
@@ -553,7 +553,7 @@ def test_sub_block_split_engages_and_spreads_under_forced_cap(spark, sf_dir):
     emb = _with_unit_vec(load_table(spark, sf_dir, "embeddings"))
     bucketed = (emb.select("vec_id", "vec", "embedding")
                 .withColumn("bucket",
-                            _bucket(F.col("embedding").cast("array<double>")))
+                            _bucket("CAST(embedding AS ARRAY<DOUBLE>)"))
                 .drop("embedding"))
     sizes = bucketed.groupBy("bucket").agg(
         F.ceil(F.count(F.lit(1)) / cap).alias("n_sub"))

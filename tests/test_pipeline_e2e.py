@@ -188,3 +188,65 @@ def test_reference_etl_funnel_consistency(spark, sf_dir, duck):
     assert row["n_unique"] == n_unique
     assert row["n_sunk"] == row["n_unique"]          # lossless sink
     assert row["watermark_advanced"] is True
+
+
+def _physical_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_reference_etl_on_empty_collection_returns_zero_funnel(
+        spark, sf_dir, tmp_path, monkeypatch):
+    """An empty collection (every file pruned is the same case) still runs
+    the lake write, so the funnel observation completes with zero counts
+    instead of leaving ``Observation.get`` waiting for metrics."""
+    import threading
+
+    from build_pipeline_with_apache_beam_spark.plans.etl import (
+        pipeline_reference_etl,
+    )
+    from build_pipeline_with_apache_beam_spark.sources.docstore import MANIFEST
+
+    (tmp_path / MANIFEST).write_text("[]")
+    monkeypatch.setenv("SPARK_GRAFT_DOCSTORE_PATH", str(tmp_path))
+    got: list = []
+    run = threading.Thread(
+        target=lambda: got.extend(pipeline_reference_etl(spark, sf_dir)
+                                  .collect()),
+        daemon=True)
+    run.start()
+    run.join(timeout=120)
+    assert not run.is_alive(), "pipeline_reference_etl blocked"
+    assert [tuple(r) for r in got] == [(0, 0, 0, 0, True)]
+
+
+def test_reference_etl_returns_a_frame_that_does_not_rescan(spark, sf_dir):
+    """The funnel is counted during the lake write: the returned frame is
+    a literal row, so collecting or sinking it scans no docstore."""
+    from build_pipeline_with_apache_beam_spark.plans.etl import (
+        pipeline_reference_etl,
+    )
+
+    plan = _physical_plan(pipeline_reference_etl(spark, sf_dir))
+    assert "BatchScan" not in plan, plan
+
+
+def test_reference_etl_observes_funnel_above_user_shuffle(spark, sf_dir):
+    """The funnel's CollectMetrics must sit in the write's result stage,
+    above the user_id Exchange: a retried shuffle-map stage would apply
+    its accumulator updates again and over-count the funnel."""
+    from pyspark.sql import Observation
+
+    from build_pipeline_with_apache_beam_spark.plans.etl import (
+        _observed_survivors,
+    )
+
+    lines = _physical_plan(
+        _observed_survivors(spark, sf_dir, Observation())).splitlines()
+    metrics = [i for i, ln in enumerate(lines) if "CollectMetrics" in ln]
+    shuffle = [i for i, ln in enumerate(lines)
+               if "Exchange hashpartitioning(user_id" in ln]
+    scans = [i for i, ln in enumerate(lines) if "BatchScan" in ln]
+    assert len(metrics) == 1 and len(shuffle) == 1 and len(scans) == 1, \
+        "\n".join(lines)
+    # a tree string lists a parent above its children
+    assert metrics[0] < shuffle[0] < scans[0], "\n".join(lines)
