@@ -3,8 +3,8 @@
 driver contract (round-14 verdict #1 — it must be LAST so a stdout-tail
 capture keeps it whole):
 
-    {"metric": "warm_total_sec", "value": N, "unit": "sec",
-     "queries": {op: sec, ...}, "sf": ..., "cpus": N}
+    {"kind": "per_query", "metric": "warm_total_sec", "value": N,
+     "unit": "sec", "queries": {op: sec, ...}, "sf": ..., "cpus": N}
 
 Preceding lines carry the full detail (cold map, wall) and a compact
 summary (bucket split, control ratio, movers) for the artifacts.
@@ -247,8 +247,11 @@ def main() -> None:
     # tail truncated it mid-map two rounds running — per_query/geomean/
     # scaling all came back empty).  Warm-only + compact separators keeps
     # it as small as a full map can be; the cold map and buckets stay on
-    # the lines above (same numbers, same methodology as r13/r14).
+    # the lines above (same numbers, same methodology as r13/r14).  The
+    # "kind" field tells this line apart from the two above it, which
+    # share its metric name.
     print(json.dumps({
+        "kind": "per_query",
         "metric": "warm_total_sec",
         "value": warm_total,
         "unit": "sec",

@@ -26,123 +26,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-import atexit
-import hashlib
-import os
-import shutil
-
 from build_pipeline_with_apache_beam_spark.catalog import (
+    _staged,
     load_table,
     sized_spread,
     table_meta,
 )
-from build_pipeline_with_apache_beam_spark.sources.sinks import SCRATCH
 
 N_MINHASH = 16          # signature length
 N_BANDS = 4             # LSH bands (4 rows per band)
 ROWS_PER_BAND = N_MINHASH // N_BANDS
 JACCARD_THRESHOLD = 0.7
 SHINGLE_WIDTH = 3
-
-
-_STAGE_DONE: set[tuple[str, str]] = set()
-_CLEANUP_REGISTERED = False
-
-
-def _stage_root() -> str:
-    return os.path.join(SCRATCH, "dedup_stage")
-
-
-def _cleanup_own_stage_dirs() -> None:
-    """atexit: remove THIS process's pid-scoped stage dirs.
-
-    The pid-scoping (r9) stopped cross-process clobbering but left every
-    run's corpus-scale staged parquet behind forever — pytest + bench +
-    sweep each leaked a full copy at sf1/sf3.  Bounded again: each process
-    removes its own dirs on exit, and `_sweep_dead_pid_dirs` collects
-    anything a killed process left behind.
-    """
-    root = _stage_root()
-    suffix = f"-{os.getpid()}"
-    try:
-        entries = os.listdir(root)
-    except OSError:
-        return
-    for d in entries:
-        if d.endswith(suffix):
-            shutil.rmtree(os.path.join(root, d), ignore_errors=True)
-
-
-def _sweep_dead_pid_dirs() -> None:
-    """Remove stage dirs whose owning pid is no longer alive (crash debris)."""
-    root = _stage_root()
-    try:
-        entries = os.listdir(root)
-    except OSError:
-        return
-    for d in entries:
-        pid_part = d.rsplit("-", 1)[-1]
-        if not pid_part.isdigit() or int(pid_part) == os.getpid():
-            continue
-        try:
-            os.kill(int(pid_part), 0)
-        except ProcessLookupError:
-            shutil.rmtree(os.path.join(root, d), ignore_errors=True)
-        except PermissionError:
-            pass  # pid alive under another uid — leave its dir alone
-
-
-def _staged(spark: SparkSession, df: DataFrame, sf_dir: str,
-            name: str, reuse: bool = False) -> DataFrame:
-    """Materialize an intermediate to scratch parquet and re-read it.
-
-    The sketch pipelines are deliberately executed in STAGES (signature
-    index → candidate pairs → verification) rather than as one fused lazy
-    plan.  Two reasons:
-
-    1. **Stability.**  The fused multi-branch DAG (one subtree feeding both
-       sides of a self-join plus a verification join) triggered
-       minute-long intermittent scheduler/execution stalls in local mode
-       (observed 160-540 s on runs that complete in ~5 s staged; single
-       spinning task or a stage stuck at 0 launched tasks; reproducible
-       with and without AQE, codegen, and checkpointing).  Independent
-       sequential actions with simple DAGs show none of that.
-    2. **Scale architecture.**  At 100 TB the MinHash signature table IS a
-       persisted index: you build it incrementally, reuse it across dedup
-       runs, and join new documents against it.  Persisting it columnar
-       between phases is the production shape, not a workaround.
-    """
-    # sf-scoped via the EXPLICIT sf_dir parameter (not shared mutable
-    # state): concurrent runs at different scale factors (gate at sf0.01
-    # while bench reads sf0.1) must not clobber each other's stages.
-    # Keyed on the FULL absolute path (basename + 8-hex path hash), not the
-    # basename alone: two roots sharing a basename (/root/testdata/sf1 vs
-    # .scratch/sfscale/sf1) must not serve each other's staged truth.
-    abspath = os.path.abspath(sf_dir.rstrip("/") or "/")
-    tag = (os.path.basename(abspath) or "default") + "." + \
-        hashlib.md5(abspath.encode()).hexdigest()[:8]
-    # PROCESS-scoped stage root: two engines running the same op at the
-    # same sf (a correctness sweep beside a scale probe) must not
-    # overwrite each other's in-flight _temporary dirs — observed as a
-    # FileNotFoundException on commit during the r9 artifact runs.  The
-    # production analog is one stage dir per pipeline RUN, exactly like a
-    # Structured Streaming checkpoint dir.  Dirs are bounded: removed at
-    # process exit (atexit) and dead-pid debris swept on first use.
-    global _CLEANUP_REGISTERED
-    if not _CLEANUP_REGISTERED:
-        _CLEANUP_REGISTERED = True
-        atexit.register(_cleanup_own_stage_dirs)
-        _sweep_dead_pid_dirs()
-    path = os.path.join(_stage_root(), f"{tag}-{os.getpid()}", name)
-    # reuse=True: skip the rewrite when THIS process already materialized
-    # the stage (never trust a path another process/older code wrote) —
-    # the banded-oracle promotions made three registered ops share the
-    # exact-truth stage, and inputs are immutable within a run
-    if reuse and (tag, name) in _STAGE_DONE and os.path.exists(path):
-        return spark.read.parquet(path)
-    df.write.mode("overwrite").parquet(path)
-    _STAGE_DONE.add((tag, name))
-    return spark.read.parquet(path)
 
 
 # ~128 docs per shingling task: shingling is heavily CPU-bound per row, so
@@ -300,18 +195,18 @@ def fuzzy_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stage 1: the signature index + hashed shingle sets (persisted — at
     # scale this is the reusable dedup index, built incrementally)
     shingled = _docs_with_shingles(spark, sf_dir)
-    sigs = _staged(spark, minhash_signatures(shingled), sf_dir,
+    sigs = _staged(spark, lambda: minhash_signatures(shingled), sf_dir,
                    "minhash_sigs", reuse=True)
     # hashed shingle sets for verification: intersect/union on fixed-width
     # longs instead of ~20-byte strings — smaller shuffle, cheaper compares;
     # xxhash64 collisions are negligible for jaccard
-    hashed = _staged(spark, shingled.select(
+    hashed = _staged(spark, lambda: shingled.select(
         "doc_id",
         F.array_distinct(F.transform("shingles", lambda s: F.xxhash64(s)))
          .alias("sh"),
     ), sf_dir, "minhash_shingle_sets", reuse=True)
     # stage 2: LSH banding → candidate pairs
-    pairs = _staged(spark, lsh_candidate_pairs(sigs), sf_dir,
+    pairs = _staged(spark, lambda: lsh_candidate_pairs(sigs), sf_dir,
                     "minhash_candidates", reuse=True)
     # stage 3: exact-jaccard verification of the candidates
     a = hashed.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
@@ -365,7 +260,7 @@ def dedup_fuzzy_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     occupies it (predictions ⊆ truth, so no prediction-only bucket can
     exist)."""
     truth = _exact_truth_with_jaccard(spark, sf_dir)
-    pred = _staged(spark, fuzzy_minhash_pairs(spark, sf_dir),
+    pred = _staged(spark, lambda: fuzzy_minhash_pairs(spark, sf_dir),
                    sf_dir, "fmh_pred", reuse=True)
     tb = truth.withColumn("bk", _jbucket(F.col("jaccard")))
     pb = pred.withColumn("bk", _jbucket(F.col("jaccard")))
@@ -437,7 +332,7 @@ def simhash_pairs(spark: SparkSession, sf_dir: str,
     toks = docs.select(
         "doc_id", F.explode(F.array_distinct(F.split("text", " "))).alias("tok")
     ).select("doc_id", *chunks)
-    # staged like minhash (see _staged): the 64-agg sketch is the persisted
+    # staged like minhash (see catalog._staged): the 64-agg sketch is the persisted
     # index; the band self-join below reads it as a plain parquet relation.
     # Per-bit aggregate is sum of the raw bit (branch-free) plus one shared
     # count; "majority of signed ±1 sums > 0" ⟺ "2·Σbit > n" — same bits,
@@ -447,7 +342,7 @@ def simhash_pairs(spark: SparkSession, sf_dir: str,
     # reconstruction from pyspark Columns cost ~1.8 s of py4j round-trips
     # PER CALL; integer arithmetic is exact, so the SQL form is
     # bit-identical (oracle-reverified).
-    bit_sums = _staged(spark, toks.groupBy("doc_id").agg(
+    bit_sums = _staged(spark, lambda: toks.groupBy("doc_id").agg(
         F.expr("count(1)").alias("n_toks"),
         *[F.expr(f"sum(shiftrightunsigned(c{b // 16}, {b % 16}) & 1)")
           .alias(f"s_{b}") for b in range(64)]
@@ -588,7 +483,7 @@ def dedup_connected_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     # stage the pair computation BEFORE mirroring: union of the lazy plan
     # would run the jaccard self-join twice
-    pairs = _staged(spark, dedup_ngram_jaccard(spark, sf_dir)
+    pairs = _staged(spark, lambda: dedup_ngram_jaccard(spark, sf_dir)
                     .select("doc_a", "doc_b"), sf_dir, "cc_pairs")
     edges = pairs.union(
         pairs.select(F.col("doc_b").alias("doc_a"),
@@ -661,10 +556,12 @@ def incremental_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # every subsequent ingest, so per-run cost scales with the batch, not
     # the corpus; before r14 the index was silently re-signed per call);
     # only the new batch is (re)signed each run
-    hist_sigs = _staged(spark, minhash_signatures(shingled.where(~is_new)),
-                        sf_dir, "inc_index_sigs", reuse=True)
-    new_sigs = _staged(spark, minhash_signatures(shingled.where(is_new)),
-                       sf_dir, "inc_new_sigs")
+    hist_sigs = _staged(
+        spark, lambda: minhash_signatures(shingled.where(~is_new)),
+        sf_dir, "inc_index_sigs", reuse=True)
+    new_sigs = _staged(
+        spark, lambda: minhash_signatures(shingled.where(is_new)),
+        sf_dir, "inc_new_sigs")
 
     def _bands(sigs: DataFrame) -> DataFrame:
         withb = sigs.select(
@@ -696,12 +593,12 @@ def incremental_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # always a batch doc), a batch-sized build side instead of corpus-sized
     hashed_sets = F.array_distinct(
         F.transform("shingles", lambda s: F.xxhash64(s))).alias("sh")
-    hist_sets = _staged(spark,
-                        shingled.where(~is_new).select("doc_id", hashed_sets),
-                        sf_dir, "inc_index_sets", reuse=True)
-    new_sets = _staged(spark,
-                       shingled.where(is_new).select("doc_id", hashed_sets),
-                       sf_dir, "inc_new_sets")
+    hist_sets = _staged(
+        spark, lambda: shingled.where(~is_new).select("doc_id", hashed_sets),
+        sf_dir, "inc_index_sets", reuse=True)
+    new_sets = _staged(
+        spark, lambda: shingled.where(is_new).select("doc_id", hashed_sets),
+        sf_dir, "inc_new_sets")
     a = new_sets.select(F.col("doc_id").alias("new_doc"),
                         F.col("sh").alias("sh_a"))
     b = (hist_sets.unionByName(new_sets)
@@ -712,7 +609,7 @@ def incremental_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shuffle_hash on both shingle-set joins: corpus-sized array payload
     # (r9 sf3 audit; see fuzzy_minhash_pairs)
     return (
-        _staged(spark, pairs, sf_dir, "inc_candidates")
+        _staged(spark, lambda: pairs, sf_dir, "inc_candidates")
         .join(a.hint("shuffle_hash"), "new_doc")
         .join(b.hint("shuffle_hash"), "cand_doc")
         .withColumn("_r", ratio)
@@ -767,7 +664,7 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     :func:`incremental_minhash_matches`; the batch-equivalence law
     (incremental ≡ full pipeline restricted to new docs) is tested in
     tests/test_llm_ops.py."""
-    pred = _staged(spark, incremental_minhash_pairs(spark, sf_dir),
+    pred = _staged(spark, lambda: incremental_minhash_pairs(spark, sf_dir),
                    sf_dir, "inc_pred")
     truth = _exact_truth_with_jaccard(spark, sf_dir)
     # truth matches per new doc: every truth pair touching the doc
@@ -947,9 +844,22 @@ def _exact_truth_with_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     conservative, never inflated — and ``eval_hot_shingles`` reports the
     dropped mass.  The threshold filter runs on the UNROUNDED ratio (both
     ints divide to the identical IEEE double in DuckDB), then rounds to 4
-    for the emitted value."""
+    for the emitted value.
+
+    Staged once per process per sf (reuse): three registered ops (recall
+    eval, fuzzy histogram, incremental) share this exact-truth index, and
+    a reuse hit runs none of :func:`_exact_truth_plan` — not even its
+    ``mh_eval_sets`` stage."""
+    return _staged(spark, lambda: _exact_truth_plan(spark, sf_dir), sf_dir,
+                   "exact_truth", reuse=True)
+
+
+def _exact_truth_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The lazy plan :func:`_exact_truth_with_jaccard` stages: hashed
+    shingle sets (an eager ``mh_eval_sets`` stage) → capped inverted index
+    → pair self-join → exact ratio at the threshold."""
     shingled = _docs_with_shingles(spark, sf_dir)
-    hashed = _staged(spark, shingled.select(
+    hashed = _staged(spark, lambda: shingled.select(
         "doc_id",
         F.array_distinct(F.transform("shingles", lambda s: F.xxhash64(s)))
         .alias("sh")), sf_dir, "mh_eval_sets")
@@ -973,18 +883,15 @@ def _exact_truth_with_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     ratio = (F.col("n_common")
              / (F.col("n_a") + F.col("n_b") - F.col("n_common")))
     # shuffle_hash: the per-doc size table scales with the corpus
-    truth = (common
-             .join(sizes.select(F.col("doc_id").alias("doc_a"),
-                                F.col("n").alias("n_a"))
-                   .hint("shuffle_hash"), "doc_a")
-             .join(sizes.select(F.col("doc_id").alias("doc_b"),
-                                F.col("n").alias("n_b"))
-                   .hint("shuffle_hash"), "doc_b")
-             .where(ratio >= JACCARD_THRESHOLD)
-             .select("doc_a", "doc_b", F.round(ratio, 4).alias("jaccard")))
-    # staged once per process per sf: three registered ops (recall eval,
-    # fuzzy histogram, incremental) share this exact-truth index
-    return _staged(spark, truth, sf_dir, "exact_truth", reuse=True)
+    return (common
+            .join(sizes.select(F.col("doc_id").alias("doc_a"),
+                               F.col("n").alias("n_a"))
+                  .hint("shuffle_hash"), "doc_a")
+            .join(sizes.select(F.col("doc_id").alias("doc_b"),
+                               F.col("n").alias("n_b"))
+                  .hint("shuffle_hash"), "doc_b")
+            .where(ratio >= JACCARD_THRESHOLD)
+            .select("doc_a", "doc_b", F.round(ratio, 4).alias("jaccard")))
 
 
 def minhash_eval_detail(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1015,7 +922,7 @@ def minhash_eval_detail(spark: SparkSession, sf_dir: str) -> DataFrame:
     # truth and the verified pair set are staged (and per-process cached)
     # parquet indexes shared with dedup_fuzzy_minhash
     t = _exact_truth_with_jaccard(spark, sf_dir).select("doc_a", "doc_b")
-    p = _staged(spark, fuzzy_minhash_pairs(spark, sf_dir),
+    p = _staged(spark, lambda: fuzzy_minhash_pairs(spark, sf_dir),
                 sf_dir, "fmh_pred", reuse=True).select("doc_a", "doc_b")
     # shuffle_hash: both pair sets scale with dup density x corpus
     both = (t.withColumn("in_t", F.lit(1))

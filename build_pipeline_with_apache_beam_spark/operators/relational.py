@@ -23,7 +23,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from build_pipeline_with_apache_beam_spark.catalog import load_table
+from build_pipeline_with_apache_beam_spark.catalog import _staged, load_table
 
 
 # ---------------------------------------------------------------------------
@@ -1135,6 +1135,29 @@ def sql_tpch_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
 TRADE_EDGE_MIN = 40     # min lineitem count for a nation→nation trade edge
 
 
+def _trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Weighted nation→nation trade edges: the 6-way fact collapse
+    :func:`sql_recursive_cte` stages once and recurses over."""
+    from build_pipeline_with_apache_beam_spark.catalog import register_views
+
+    register_views(spark, sf_dir)
+    return spark.sql(f"""
+        -- orders/customer scale with the corpus: shuffle_hash-pinned
+        -- (round-9 sf3 probe; the dim joins below stay broadcast)
+        SELECT /*+ SHUFFLE_HASH(o, c) */
+               cn.n_name AS src, sn.n_name AS dst, COUNT(*) AS w
+        FROM lineitem l
+        JOIN orders o ON l.l_orderkey = o.o_orderkey
+        JOIN customer c ON o.o_custkey = c.c_custkey
+        JOIN nation cn ON c.c_nationkey = cn.n_nationkey
+        JOIN supplier s ON l.l_suppkey = s.s_suppkey
+        JOIN nation sn ON s.s_nationkey = sn.n_nationkey
+        WHERE cn.n_name <> sn.n_name
+        GROUP BY 1, 2
+        HAVING COUNT(*) >= {TRADE_EDGE_MIN}
+    """)
+
+
 def sql_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark 4 ``WITH RECURSIVE``: BFS minimum-hop reachability over the
     nation-level trade graph, written entirely in SQL — the iterative
@@ -1158,33 +1181,15 @@ def sql_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     (round-12 advice), and no ``createDataFrame`` (a Python-RDD build
     side would stall the broadcast — the repo-wide VALUES rule).
     """
-    from build_pipeline_with_apache_beam_spark.catalog import register_views
-    from build_pipeline_with_apache_beam_spark.operators.dedup import _staged
-
-    register_views(spark, sf_dir)
     # The 6-way fact collapse is iteration-invariant AND nation-bounded
     # (≤ 25×24 rows at any sf), so it is a reuse=True persisted stage (r15,
     # guide §2.3 — r14 verdict #5): built once per process by the cold
     # pass, re-read as a tiny parquet after — the same persisted-index
     # shape as the dedup signature stages.  The recursion itself runs
     # fresh on every invocation.
-    edges_df = spark.sql(f"""
-        -- orders/customer scale with the corpus: shuffle_hash-pinned
-        -- (round-9 sf3 probe; the dim joins below stay broadcast)
-        SELECT /*+ SHUFFLE_HASH(o, c) */
-               cn.n_name AS src, sn.n_name AS dst, COUNT(*) AS w
-        FROM lineitem l
-        JOIN orders o ON l.l_orderkey = o.o_orderkey
-        JOIN customer c ON o.o_custkey = c.c_custkey
-        JOIN nation cn ON c.c_nationkey = cn.n_nationkey
-        JOIN supplier s ON l.l_suppkey = s.s_suppkey
-        JOIN nation sn ON s.s_nationkey = sn.n_nationkey
-        WHERE cn.n_name <> sn.n_name
-        GROUP BY 1, 2
-        HAVING COUNT(*) >= {TRADE_EDGE_MIN}
-    """)
-    edge_rows = _staged(spark, edges_df, sf_dir, "trade_edges",
-                        reuse=True).collect()  # driver-bounded: ≤ 25*24 rows
+    edge_rows = _staged(spark, lambda: _trade_edges(spark, sf_dir), sf_dir,
+                        "trade_edges", reuse=True
+                        ).collect()  # driver-bounded: ≤ 25*24 rows
     if edge_rows:
         q = lambda s: "'" + s.replace("'", "''") + "'"  # noqa: E731
         edges_body = (

@@ -123,3 +123,21 @@ def test_bench_oracle_companion_ops_registered():
     missing = set(bench.ORACLE_COMPANION_OPS) - live
     assert not missing, f"companion ops absent from registry: {missing}"
     assert not set(bench.ORACLE_COMPANION_OPS) & set(bench.CONTROL_OPS)
+
+
+def test_bench_final_line_is_the_per_query_kind(spark, sf_dir, monkeypatch,
+                                                capsys):
+    """The final stdout line carries ``"kind": "per_query"`` (the two lines
+    above it share its metric name) and stays the last line."""
+    import json
+
+    import bench
+
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", sf_dir)
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_OPS", "scalar_math_ops")
+    bench.main()
+    lines = [json.loads(ln) for ln in capsys.readouterr().out.splitlines()
+             if ln.startswith("{")]
+    assert lines[-1]["kind"] == "per_query"
+    assert set(lines[-1]["queries"]) == {"scalar_math_ops"}
+    assert all("kind" not in ln for ln in lines[:-1])

@@ -1,0 +1,96 @@
+"""The staging helper's contract (``catalog._staged``): a builder is called
+only when a stage is written, a reuse hit builds and runs nothing, and the
+reused re-read carries the schema parquet inference would return."""
+
+from __future__ import annotations
+
+import glob
+import os
+import uuid
+
+import pytest
+from pyspark.sql import functions as F
+
+from build_pipeline_with_apache_beam_spark.catalog import _staged
+from build_pipeline_with_apache_beam_spark.operators.dedup import (
+    dedup_fuzzy_minhash,
+)
+from build_pipeline_with_apache_beam_spark.sources.sinks import SCRATCH
+
+
+def _once(frame):
+    """A builder that returns ``frame()`` once and raises on a second call."""
+    calls = []
+
+    def build():
+        calls.append(1)
+        if len(calls) > 1:
+            raise AssertionError("builder called on a reuse hit")
+        return frame()
+
+    return build
+
+
+def _jobs_in_group(spark, group: str) -> list[int]:
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_staged_rejects_a_dataframe(spark, tmp_path):
+    """The builder contract fails at the call, not in a later verdict."""
+    with pytest.raises(TypeError, match="callable"):
+        _staged(spark, spark.range(3), str(tmp_path), "not_a_builder")
+
+
+def test_reuse_hit_never_calls_builder(spark, tmp_path):
+    sf = str(tmp_path)
+    build = _once(lambda: spark.range(5))
+    first = _staged(spark, build, sf, "reuse_probe", reuse=True)
+    again = _staged(spark, build, sf, "reuse_probe", reuse=True)
+    assert sorted(r.id for r in again.collect()) == list(range(5))
+    assert again.schema == first.schema
+    # without reuse every call rebuilds
+    with pytest.raises(AssertionError, match="reuse hit"):
+        _staged(spark, build, sf, "reuse_probe")
+
+
+def test_reused_reread_schema_equals_inferred(spark, tmp_path):
+    """The memoized schema is the inferred one (every column nullable),
+    not the written frame's (``id`` is declared non-null)."""
+    sf = str(tmp_path)
+
+    def frame():
+        return spark.range(4).select(
+            "id", F.array(F.col("id"), F.lit(None).cast("long")).alias("xs"),
+            F.when(F.col("id") > 1, F.lit("big")).alias("tag"))
+
+    inferred = _staged(spark, frame, sf, "schema_probe", reuse=True)
+    hit = _staged(spark, frame, sf, "schema_probe", reuse=True)
+    assert hit.schema == inferred.schema
+    assert hit.schema != frame().schema
+    assert all(f.nullable for f in hit.schema.fields)
+    assert sorted(hit.collect()) == sorted(inferred.collect())
+
+
+def test_warm_fuzzy_minhash_runs_no_job_before_its_sink(spark, sf_dir):
+    """A second ``dedup_fuzzy_minhash`` call builds its plan from reused
+    stages alone: no Spark job starts until the sink, and the
+    ``mh_eval_sets`` stage under the reused exact truth is not rewritten."""
+    dedup_fuzzy_minhash(spark, sf_dir)
+    stage_files = glob.glob(os.path.join(
+        SCRATCH, "dedup_stage", f"*-{os.getpid()}", "mh_eval_sets", "*"))
+    assert stage_files, "cold call staged no mh_eval_sets files"
+    mtimes = {f: os.stat(f).st_mtime_ns for f in stage_files}
+
+    sc = spark.sparkContext
+    group = f"staged-warm-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "warm dedup_fuzzy_minhash")
+    try:
+        df = dedup_fuzzy_minhash(spark, sf_dir)
+        assert _jobs_in_group(spark, group) == []
+        df.write.format("noop").mode("overwrite").save()
+        assert _jobs_in_group(spark, group), "sink ran no job in the group"
+    finally:
+        sc._jsc.clearJobGroup()
+    assert {f: os.stat(f).st_mtime_ns for f in stage_files} == mtimes
