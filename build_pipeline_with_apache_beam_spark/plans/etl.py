@@ -416,8 +416,8 @@ def run_etl_stream(spark: SparkSession, sf_dir: str, lake: str, wm_root: str,
     target = min(total_files, stop_after_files
                  if stop_after_files is not None else total_files)
     if max_wait_sec is None:
-        # the docstore reader is row-at-a-time Python by design budget
-        # (sources/docstore.py) — the drain deadline must scale with the
+        # every micro-batch pays a Python DataSource read (one worker per
+        # file) plus a lake merge — the drain deadline must scale with the
         # collection, not sit at a fixed 180 s (observed: the sf10 audit's
         # 3005-file collection stalled at 1002 files against the old
         # constant)

@@ -1,61 +1,54 @@
-"""Custom Python DataSource (docstore): pushdown, pruning, parity.
+"""Docstore connector: manifest pruning, the read contract, parity.
 
 The oracle-parity suite already diffs `scan_docstore_pushdown` against
-DuckDB; these tests pin the DSv2 mechanics — that pushFilters accepts the
-right subset, that accepted ts filters prune whole files via the manifest
-(metadata-only, before any read), and that unsupported filters are handed
-back to Spark.
+DuckDB; these tests pin the connector's mechanics — that a query window
+prunes whole files via the manifest (metadata-only, no Spark job), that a
+malformed line fails the read, that non-finite values round-trip through
+both the batch and the stream reader, and the append and stream-offset
+protocols.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import struct
 
+import pytest
 from pyspark.sql import functions as F
-from pyspark.sql.datasource import (
-    EqualTo,
-    GreaterThanOrEqual,
-    IsNotNull,
-    LessThanOrEqual,
-)
 
 from build_pipeline_with_apache_beam_spark.sources.docstore import (
     MANIFEST,
-    DocStoreReader,
+    append_batch,
     build_collection,
+    open_docstore,
     scan_docstore_pushdown,
 )
 
 
-def _reader_for(root: str) -> DocStoreReader:
-    return DocStoreReader({"path": root})
-
-
 def test_manifest_prunes_files_from_pushed_ts_range(spark, sf_dir):
+    """A 3-day window reads at most the 4 day files it can touch, and the
+    pruning is a driver-side manifest walk: building the read runs no
+    Spark job."""
     root = build_collection(spark, sf_dir)
     with open(os.path.join(root, MANIFEST)) as fh:
-        n_files = len(json.load(fh))
-    assert n_files > 7  # one file per event-day; the range below is 3 days
+        day_files = {os.path.join(root, m["file"]) for m in json.load(fh)}
+    assert len(day_files) > 7  # one file per event-day; the window is 3 days
 
-    r = _reader_for(root)
     lo = 1704672000000000  # 2024-01-08 00:00:00 UTC in micros
     hi = 1704931199999999  # 2024-01-10 23:59:59.999999 UTC
-    rejected = list(r.pushFilters([
-        GreaterThanOrEqual(("ts_micros",), lo),
-        LessThanOrEqual(("ts_micros",), hi),
-    ]))
-    assert rejected == []  # both comparisons accepted
-    parts = r.partitions()
-    assert 0 < len(parts) <= 4, f"pruning failed: {len(parts)}/{n_files} files"
-
-
-def test_unsupported_filters_are_returned_to_spark(spark, sf_dir):
-    root = build_collection(spark, sf_dir)
-    r = _reader_for(root)
-    keep = IsNotNull(("event_type",))
-    rejected = list(r.pushFilters([keep, EqualTo(("event_type",), "click")]))
-    assert rejected == [keep]
+    sc = spark.sparkContext
+    group = "docstore-window-prune"
+    sc.setJobGroup(group, "window pruning")
+    try:
+        read = open_docstore(spark, sf_dir, window=(lo, hi))
+        files = {f.removeprefix("file://") for f in read.inputFiles()}
+    finally:
+        sc.setJobGroup("", "")
+    assert 0 < len(files) <= 4, f"pruning failed: {len(files)} files"
+    assert files <= day_files
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert n_jobs == 0, f"window pruning ran {n_jobs} Spark jobs"
 
 
 def test_stream_restart_consumes_only_new_files(spark, sf_dir, tmp_path):
@@ -65,11 +58,6 @@ def test_stream_restart_consumes_only_new_files(spark, sf_dir, tmp_path):
     hand-rolls with SQLite watermarks, retrieval.py:30-60)."""
     import shutil
 
-    from build_pipeline_with_apache_beam_spark.sources.docstore import (
-        DocStoreDataSource,
-    )
-
-    spark.dataSource.register(DocStoreDataSource)
     src = build_collection(spark, sf_dir)
     # private copy so we can append without touching the shared collection
     root = str(tmp_path / "coll")
@@ -87,8 +75,7 @@ def test_stream_restart_consumes_only_new_files(spark, sf_dir, tmp_path):
     sink, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
 
     def run_once():
-        stream = (spark.readStream.format("docstore")
-                  .option("path", root).load())
+        stream = open_docstore(spark, sf_dir, stream=True, path=root)
 
         def fb(df, bid):
             df.write.mode("append").parquet(sink)
@@ -141,19 +128,13 @@ def test_concurrent_appends_serialize_without_loss(spark, sf_dir, tmp_path):
     from pyspark.sql import functions as F
 
     from build_pipeline_with_apache_beam_spark.catalog import load_table
-    from build_pipeline_with_apache_beam_spark.sources.docstore import (
-        DocStoreDataSource,
-        append_batch,
-        build_collection,
-    )
 
-    spark.dataSource.register(DocStoreDataSource)
     src = build_collection(spark, sf_dir)
     root = str(tmp_path / "appcoll")
     shutil.copytree(src, root)
 
     ev = load_table(spark, sf_dir, "events")
-    base_n = spark.read.format("docstore").option("path", root).load().count()
+    base_n = open_docstore(spark, sf_dir, path=root).count()
 
     def one_batch(tag, offset):
         late = (ev.orderBy("event_id").limit(50)
@@ -170,7 +151,7 @@ def test_concurrent_appends_serialize_without_loss(spark, sf_dir, tmp_path):
         manifest = json.load(fh)
     names = {m["file"] for m in manifest}
     assert {"batch-a.jsonl", "batch-b.jsonl"} <= names, "manifest entry lost"
-    total = spark.read.format("docstore").option("path", root).load().count()
+    total = open_docstore(spark, sf_dir, path=root).count()
     assert total == base_n + 100
 
 
@@ -220,11 +201,6 @@ def test_stream_read_failure_retries_without_loss(spark, sf_dir, tmp_path):
     row exactly as committed — no loss, no duplicate batch commit."""
     import shutil
 
-    from build_pipeline_with_apache_beam_spark.sources.docstore import (
-        DocStoreDataSource,
-    )
-
-    spark.dataSource.register(DocStoreDataSource)
     src = build_collection(spark, sf_dir)
     root = str(tmp_path / "failcoll")
     shutil.copytree(src, root)
@@ -235,7 +211,7 @@ def test_stream_read_failure_retries_without_loss(spark, sf_dir, tmp_path):
     open(victim + ".fail_once", "w").close()
 
     sink, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
-    stream = spark.readStream.format("docstore").option("path", root).load()
+    stream = open_docstore(spark, sf_dir, stream=True, path=root)
 
     def fb(df, bid):
         df.write.mode("append").parquet(sink)
@@ -252,119 +228,25 @@ def test_stream_read_failure_retries_without_loss(spark, sf_dir, tmp_path):
     assert got.select("event_id").distinct().count() == n_expected
 
 
-def test_reader_yields_arrow_record_batches(spark, sf_dir):
-    """Round-12: the DSv2 read path must stay Arrow-batched — one
-    columnar parse per file, filters applied vectorized — not revert to
-    per-document tuples (the r11 scale ceiling)."""
-    import pyarrow as pa
-    from pyspark.sql.datasource import GreaterThanOrEqual
-
-    root = build_collection(spark, sf_dir)
-    r = _reader_for(root)
-    list(r.pushFilters([GreaterThanOrEqual(("value",), 0.0)]))
-    parts = r.partitions()
-    batches = list(r.read(parts[0]))
-    assert batches, "first partition read empty"
-    assert all(isinstance(b, pa.RecordBatch) for b in batches)
-    assert batches[0].schema.names == [
-        "event_id", "ts_micros", "user_id", "event_type", "value"]
-    # vectorized filter applied inside the read
-    assert all(v >= 0.0 for b in batches
-               for v in b.column("value").to_pylist())
-
-
 def test_filter_that_empties_every_file_yields_zero_rows(spark, sf_dir):
     """Edge of the Arrow path: a pushed row-level filter that matches
     nothing (but prunes no files — value has no manifest stats) must
     produce an empty scan, not a crash on empty batch iterators."""
-    from build_pipeline_with_apache_beam_spark.sources.docstore import (
-        DocStoreDataSource,
-    )
-
-    spark.dataSource.register(DocStoreDataSource)
     root = build_collection(spark, sf_dir)
-    got = (spark.read.format("docstore").option("path", root).load()
+    got = (open_docstore(spark, sf_dir, path=root)
            .where(F.col("value") > 1e12))
     assert got.count() == 0
 
 
 def test_window_before_first_day_counts_zero(spark, sf_dir):
-    """A pushed ts range before the collection's first day prunes every
-    file; PySpark then reads one ``None`` partition, which must yield no
-    rows instead of failing on ``partition.path``."""
-    from build_pipeline_with_apache_beam_spark.sources.docstore import (
-        open_docstore,
-    )
-
+    """A window before the collection's first day prunes every file; the
+    read of zero files must yield no rows instead of failing."""
     root = build_collection(spark, sf_dir)
     with open(os.path.join(root, MANIFEST)) as fh:
         first = min(m["min_ts"] for m in json.load(fh))
-    got = open_docstore(spark, sf_dir).where(
-        F.col("ts_micros") <= first - 1)
+    got = open_docstore(spark, sf_dir, window=(0, first - 1))
+    assert got.inputFiles() == []
     assert got.count() == 0
-
-
-def test_vectorized_filters_match_rowwise_semantics_property():
-    """Property (round-12): for arbitrary docs and filter sets, the Arrow
-    path's vectorized filter application equals the r11 row-at-a-time
-    matcher — including the null-never-matches rule — on every row."""
-    import pyarrow as pa
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-    from pyspark.sql.datasource import (
-        EqualTo,
-        GreaterThan,
-        LessThanOrEqual,
-    )
-
-    from build_pipeline_with_apache_beam_spark.sources.docstore import (
-        ARROW_SCHEMA,
-        DocStoreReader,
-    )
-
-    doc = st.fixed_dictionaries({
-        "event_id": st.integers(0, 50),
-        "ts_micros": st.one_of(st.none(), st.integers(0, 10)),
-        "user_id": st.integers(0, 5),
-        "event_type": st.sampled_from(["click", "view", None]),
-        "value": st.one_of(st.none(), st.floats(-2, 2, allow_nan=False)),
-    })
-    filt = st.lists(st.one_of(
-        st.builds(lambda v: EqualTo(("event_type",), v),
-                  st.sampled_from(["click", "view"])),
-        st.builds(lambda v: GreaterThan(("ts_micros",), v),
-                  st.integers(0, 10)),
-        st.builds(lambda v: LessThanOrEqual(("value",), v),
-                  st.floats(-2, 2, allow_nan=False)),
-    ), max_size=3)
-
-    def row_matches(d, filters):  # the r11 matcher, verbatim semantics
-        for f in filters:
-            v = d.get(f.attribute[0])
-            if v is None:
-                return False
-            if isinstance(f, EqualTo) and not v == f.value:
-                return False
-            if isinstance(f, GreaterThan) and not v > f.value:
-                return False
-            if isinstance(f, LessThanOrEqual) and not v <= f.value:
-                return False
-        return True
-
-    @settings(max_examples=200, deadline=None)
-    @given(docs=st.lists(doc, max_size=20), filters=filt)
-    def check(docs, filters):
-        table = pa.Table.from_pylist(docs, schema=ARROW_SCHEMA)
-        r = DocStoreReader({"path": "/nonexistent"})
-        r.filters = filters
-        got = r._apply_filters(table).to_pylist()
-        want = [
-            {k: d[k] for k in ARROW_SCHEMA.names}
-            for d in docs if row_matches(d, filters)
-        ]
-        assert got == want
-
-    check()
 
 
 def test_multipart_append_one_entry_no_driver_bytes(spark, sf_dir,
@@ -376,17 +258,11 @@ def test_multipart_append_one_entry_no_driver_bytes(spark, sf_dir,
     import shutil
 
     from build_pipeline_with_apache_beam_spark.catalog import load_table
-    from build_pipeline_with_apache_beam_spark.sources.docstore import (
-        DocStoreDataSource,
-        append_batch,
-        build_collection,
-    )
 
-    spark.dataSource.register(DocStoreDataSource)
     src = build_collection(spark, sf_dir)
     root = str(tmp_path / "mp_coll")
     shutil.copytree(src, root)
-    base_n = spark.read.format("docstore").option("path", root).load().count()
+    base_n = open_docstore(spark, sf_dir, path=root).count()
 
     ev = load_table(spark, sf_dir, "events")
     late = (ev.limit(120)
@@ -401,7 +277,7 @@ def test_multipart_append_one_entry_no_driver_bytes(spark, sf_dir,
     with open(os.path.join(root, MANIFEST)) as fh:
         manifest = json.load(fh)
     assert manifest[-1] == entry  # ONE entry for the whole batch
-    total = spark.read.format("docstore").option("path", root).load().count()
+    total = open_docstore(spark, sf_dir, path=root).count()
     assert total == base_n + 120
     # duplicate batch name still refused, any partitioning
     import pytest as _pytest
@@ -413,8 +289,7 @@ def test_count_documents_manifest_only_runs_zero_jobs(spark, sf_dir):
     """Round-12 verdict #7: a count over a window that fully covers
     every overlapping file is answered from manifest row-count stats —
     ZERO Spark jobs, zero file bytes; a mid-day window opens ONLY the two
-    boundary files.  (Why not a pushed-down COUNT(*): the Python
-    DataSource API has no aggregate-pushdown hook — see
+    boundary files.  (Why not a pushed-down COUNT(*): see
     count_documents' docstring.)"""
     from datetime import datetime, timezone
 
@@ -532,3 +407,89 @@ def test_append_batch_reclaims_stale_claim_from_dead_producer(
         fh.write(f"some-other-host:{dead_pid}")
     with _pytest.raises(ValueError, match="must be unique"):
         append_batch(spark, root, batch, name="bremote")
+
+
+def _collection_with(spark, root: str, batch_sql: str) -> None:
+    """An empty collection at ``root`` with one appended batch."""
+    os.makedirs(root)
+    with open(os.path.join(root, MANIFEST), "w") as fh:
+        fh.write("[]")
+    append_batch(spark, root, spark.sql(batch_sql).coalesce(1), name="b")
+
+
+def test_malformed_line_fails_the_read(spark, sf_dir, tmp_path):
+    """A collection file with one unparseable line makes the read raise
+    instead of returning a count: a lenient parse would turn the line into
+    an all-null row that an unwindowed count includes."""
+    root = str(tmp_path / "badcoll")
+    os.makedirs(root)
+    with open(os.path.join(root, "bad.jsonl"), "w") as fh:
+        fh.write('{"event_id": 1, "ts_micros": 1, "user_id": 1, '
+                 '"event_type": "click", "value": 1.0}\n'
+                 '{"event_id": 2, "ts_mi\n')
+    with open(os.path.join(root, MANIFEST), "w") as fh:
+        json.dump([{"file": "bad.jsonl", "min_ts": 1, "max_ts": 2,
+                    "n": 2}], fh)
+    with pytest.raises(Exception):
+        open_docstore(spark, sf_dir, path=root).count()
+
+
+_NON_FINITE_SQL = """
+    SELECT * FROM VALUES
+        (1L, 1L, 1L, 'click', CAST('NaN' AS DOUBLE)),
+        (2L, 2L, 1L, 'click', CAST('Infinity' AS DOUBLE)),
+        (3L, 3L, 1L, 'click', CAST('-Infinity' AS DOUBLE)),
+        (4L, 4L, 1L, 'click', CAST('-0.0' AS DOUBLE)),
+        (5L, 5L, 1L, 'click', 0.25D)
+    AS t(event_id, ts_micros, user_id, event_type, value)"""
+_NON_FINITE_BITS = [struct.pack(">d", v) for v in
+                    (float("nan"), float("inf"), float("-inf"), -0.0, 0.25)]
+
+
+def _bits(rows) -> list[bytes]:
+    return [struct.pack(">d", r["value"])
+            for r in sorted(rows, key=lambda r: r["event_id"])]
+
+
+def test_non_finite_values_round_trip_bit_exactly(spark, sf_dir, tmp_path):
+    """append_batch writes NaN/±Inf as Spark's quoted tokens; a batch read
+    of the collection returns every value bit for bit, -0.0 included."""
+    root = str(tmp_path / "nfcoll")
+    _collection_with(spark, root, _NON_FINITE_SQL)
+    rows = open_docstore(spark, sf_dir, path=root).collect()
+    assert _bits(rows) == _NON_FINITE_BITS
+
+
+def test_stream_tail_reads_non_finite_values(spark, sf_dir, tmp_path):
+    """The stream reader parses the same file the batch read does: the
+    quoted non-finite tokens fall back to a line-wise parse and arrive
+    bit for bit."""
+    root = str(tmp_path / "nfstream")
+    _collection_with(spark, root, _NON_FINITE_SQL)
+    got: list = []
+    q = (open_docstore(spark, sf_dir, stream=True, path=root)
+         .writeStream
+         .foreachBatch(lambda df, _bid: got.extend(df.collect()))
+         .option("checkpointLocation", str(tmp_path / "ckpt"))
+         .trigger(availableNow=True).start())
+    q.awaitTermination(120)
+    assert q.exception() is None
+    assert _bits(got) == _NON_FINITE_BITS
+
+
+def test_stream_source_registers_once_per_session(spark, sf_dir,
+                                                  monkeypatch):
+    """Two stream opens in one session register the Python data source
+    once; re-registering logs a 'replaced' warning on every open."""
+    calls: list = []
+    registration = type(spark.dataSource)
+    register = registration.register
+
+    def counting(self, source):
+        calls.append(source)
+        return register(self, source)
+
+    monkeypatch.setattr(registration, "register", counting)
+    for _ in range(2):
+        assert open_docstore(spark, sf_dir, stream=True).isStreaming
+    assert len(calls) <= 1  # none when an earlier open registered it

@@ -227,7 +227,11 @@ def test_reference_etl_returns_a_frame_that_does_not_rescan(spark, sf_dir):
     )
 
     plan = _physical_plan(pipeline_reference_etl(spark, sf_dir))
-    assert "BatchScan" not in plan, plan
+    # a SELECT without FROM plans as `Scan OneRowRelation`, which reads
+    # nothing; any other scan node would read data again
+    scans = [ln for ln in plan.splitlines()
+             if "Scan" in ln and "OneRowRelation" not in ln]
+    assert scans == [], plan
 
 
 def test_reference_etl_observes_funnel_above_user_shuffle(spark, sf_dir):
@@ -245,8 +249,9 @@ def test_reference_etl_observes_funnel_above_user_shuffle(spark, sf_dir):
     metrics = [i for i, ln in enumerate(lines) if "CollectMetrics" in ln]
     shuffle = [i for i, ln in enumerate(lines)
                if "Exchange hashpartitioning(user_id" in ln]
-    scans = [i for i, ln in enumerate(lines) if "BatchScan" in ln]
+    scans = [i for i, ln in enumerate(lines) if "Scan" in ln]
     assert len(metrics) == 1 and len(shuffle) == 1 and len(scans) == 1, \
         "\n".join(lines)
+    assert "FileScan json" in lines[scans[0]], lines[scans[0]]
     # a tree string lists a parent above its children
     assert metrics[0] < shuffle[0] < scans[0], "\n".join(lines)

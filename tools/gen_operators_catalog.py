@@ -5,9 +5,9 @@ registry modules; this emits one catalog row per registered op — id,
 family (module), source location, oracle kind, one-line docstring shape,
 and the latest scale-probe annotation — so a user of the engine can see
 the whole query surface in one file.  The catalog is DERIVED, never
-hand-edited: ``tests/test_registry.py`` asserts its op ids match the
-live registry exactly, so a new op without a regenerated catalog fails
-the suite.
+hand-edited: ``tests/test_registry.py`` asserts the file equals
+:func:`render`'s text, so a new op or a moved op definition without a
+regenerated catalog fails the suite.
 
 Usage: python tools/gen_operators_catalog.py   (writes <repo>/OPERATORS.md)
 """
@@ -57,7 +57,8 @@ def _loc(fn) -> str:
         return "?"
 
 
-def main() -> None:
+def render() -> str:
+    """The catalog's full text, from the live registry."""
     qs = registry.queries()
     # static SQL oracles vs call-time-built (dynamic) ones
     static = set()
@@ -116,11 +117,14 @@ def main() -> None:
             lines.append(f"| `{op}` | {_loc(fn)} | {oracle_kind(op)} "
                          f"| {doc} | {note} |")
         lines.append("")
+    return "\n".join(lines)
 
+
+def main() -> None:
     out = os.path.join(REPO, "OPERATORS.md")
     with open(out, "w") as fh:
-        fh.write("\n".join(lines))
-    print(f"wrote {out}: {len(qs)} ops, {len(fams)} families")
+        fh.write(render())
+    print(f"wrote {out}")
 
 
 if __name__ == "__main__":
