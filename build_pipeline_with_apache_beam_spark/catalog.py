@@ -22,6 +22,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+from build_pipeline_with_apache_beam_spark.session import MAX_PARTITION_BYTES
+
 TABLES = (
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",
@@ -67,22 +69,27 @@ def table_meta(sf_dir: str, name: str) -> tuple[int, int]:
     """(n_rows, n_splits_estimate) for a table, straight off the parquet
     footers — NO Spark job: a ``df.count()`` costs a scheduler round-trip
     per operator call and ``df.rdd.getNumPartitions()`` re-plans the scan
-    (~0.2 s combined per call, measured r15).  The split estimate mirrors
-    Spark's packing math (total bytes / maxPartitionBytes, at least one
-    split per file) closely enough for a spread-or-not threshold."""
+    (~0.2 s combined per call, measured r15).  A table is one file or a
+    directory tree of them (nested or Hive-partitioned ``key=value``
+    dirs); like Spark's file index, names starting with ``_`` or ``.``
+    (``_SUCCESS``, ``_temporary``, checksums) are skipped.  The split
+    estimate mirrors Spark's packing math (total bytes /
+    ``MAX_PARTITION_BYTES``, at least one split per file) closely enough
+    for a spread-or-not threshold."""
     import pyarrow.parquet as pq
 
     path = os.path.join(sf_dir, f"{name}.parquet")
-    files = [path] if os.path.isfile(path) else [
-        os.path.join(path, f) for f in sorted(os.listdir(path))
-        if f.endswith(".parquet")]
+    files = [path] if os.path.isfile(path) else []
+    for root, dirs, names in os.walk(path):
+        dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+        files += [os.path.join(root, f) for f in sorted(names)
+                  if f.endswith(".parquet") and not f.startswith(("_", "."))]
     n_rows = 0
     total_bytes = 0
     for f in files:
         n_rows += pq.ParquetFile(f).metadata.num_rows
         total_bytes += os.path.getsize(f)
-    max_pb = 128 * 1024 * 1024  # keep in sync with session maxPartitionBytes
-    n_splits = max(len(files), -(-total_bytes // max_pb))
+    n_splits = max(len(files), -(-total_bytes // MAX_PARTITION_BYTES))
     return n_rows, int(n_splits)
 
 

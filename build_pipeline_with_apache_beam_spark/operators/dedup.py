@@ -32,6 +32,9 @@ from build_pipeline_with_apache_beam_spark.catalog import (
     sized_spread,
     table_meta,
 )
+from build_pipeline_with_apache_beam_spark.operators.graph import (
+    connected_components,
+)
 
 N_MINHASH = 16          # signature length
 N_BANDS = 4             # LSH bands (4 rows per band)
@@ -470,67 +473,25 @@ def dedup_connected_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Transitive closure of near-duplicate pairs → canonical group ids.
 
     Pair emission (minhash/simhash/jaccard) is only half of dedup: A~B and
-    B~C must collapse into ONE group even when A~C was never emitted.  This
-    is iterative min-label propagation (the hash-join formulation of
-    connected components, same algorithm GraphX/GraphFrames use): every
-    vertex repeatedly adopts the smallest label among itself and its
-    neighbors until fixpoint.  Iterations = graph diameter (near-dup
-    clusters are shallow, so a handful); each iteration is one join + one
-    aggregation, all executor-side — the driver only checks the converged
-    flag.  Label state is re-materialized per iteration to cut lineage (at
-    scale: checkpoint).  Edges here are the deterministic exact-Jaccard
-    pairs, so a DuckDB recursive CTE can verify the grouping exactly.
+    B~C must collapse into ONE group even when A~C was never emitted.  The
+    grouping is ``graph.connected_components`` — the pointer-jumping
+    min-label loop ``graph_component_size_dist`` also runs — over the
+    sampled documents as vertices: near-dup clusters are shallow, so it
+    converges in a handful of rounds, all executor-side, with the driver
+    reading one changed-label count per round.  Edges here are the
+    deterministic exact-Jaccard pairs, so a DuckDB recursive CTE can verify
+    the grouping exactly.
     """
-    # stage the pair computation BEFORE mirroring: union of the lazy plan
+    # stage the pair computation BEFORE mirroring: mirroring the lazy plan
     # would run the jaccard self-join twice
     pairs = _staged(spark, lambda: dedup_ngram_jaccard(spark, sf_dir)
-                    .select("doc_a", "doc_b"), sf_dir, "cc_pairs")
-    edges = pairs.union(
-        pairs.select(F.col("doc_b").alias("doc_a"),
-                     F.col("doc_a").alias("doc_b")))
+                    .select(F.col("doc_a").alias("u"),
+                            F.col("doc_b").alias("v")), sf_dir, "cc_pairs")
     vertices = (load_table(spark, sf_dir, "documents")
-                .where(F.col("doc_id") % 4 == 0).select("doc_id"))
-    # label state is localCheckpoint-ed per pass: the state is
-    # self-referential, so without lineage truncation Catalyst re-analyzes
-    # a plan that grows every iteration and planning — not data — comes to
-    # dominate.  At cluster scale this becomes a reliable checkpoint (cuts
-    # lineage AND bounds recovery).
-    labels = (vertices.withColumn("group_id", F.col("doc_id"))
-              .localCheckpoint())
-    # near-dup clusters are shallow, but convergence is made O(log diameter)
-    # anyway by POINTER-JUMPING after each neighbor-min step
-    # (label := label(label), the classic hash-join CC accelerator)
-    # shuffle_hash on the iteration joins: edge list and label state are
-    # both corpus-sized, but AQE's runtime estimate broadcast the edge
-    # side (128 MiB at sf1, tools/broadcast_audit.py) — key-partitioned
-    # shuffles are the GraphX-style linear plan at any scale
-    for _ in range(12):
-        neighbor_min = (edges.join(labels.hint("shuffle_hash"),
-                                   edges["doc_b"] == labels["doc_id"])
-                        .groupBy("doc_a").agg(F.min("group_id").alias("nmin")))
-        stepped = (labels.join(neighbor_min.hint("shuffle_hash"),
-                               labels["doc_id"] == neighbor_min["doc_a"],
-                               "left")
-                   .select("doc_id",
-                           F.least("group_id", "nmin").alias("group_id"),
-                           (F.col("nmin") < F.col("group_id"))
-                           .alias("chg")))
-        parent = stepped.select(F.col("doc_id").alias("p_id"),
-                                F.col("group_id").alias("p_label"))
-        new_labels = (stepped.join(parent,
-                                   stepped.group_id == parent.p_id, "left")
-                      .select("doc_id",
-                              F.least("group_id",
-                                      F.coalesce("p_label", "group_id"))
-                              .alias("group_id"), "chg")
-                      .localCheckpoint())
-        # convergence flag rides along with the labels — one cheap scan of
-        # the materialized result instead of a second old-vs-new join
-        changed = new_labels.where("chg").count()
-        labels = new_labels.drop("chg")
-        if changed == 0:
-            break
-    return labels.select("doc_id", "group_id")
+                .where(F.col("doc_id") % 4 == 0)
+                .select(F.col("doc_id").alias("node")))
+    return (connected_components(pairs, vertices)
+            .select(F.col("node").alias("doc_id"), "group_id"))
 
 
 def incremental_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:

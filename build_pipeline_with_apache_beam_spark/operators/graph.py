@@ -1,6 +1,8 @@
 """Graph analytics over relationship structure hidden in the fact tables:
-degree distributions, thresholded triangle counting, and PageRank on an
-aggregated trade graph.
+degree distributions, thresholded triangle counting, PageRank on an
+aggregated trade graph, and the iterative algorithms (k-hop reachability,
+connected components, label propagation, weighted shortest paths) on the
+strong co-supply graph.
 
 The reference has no graph story at all (its pipeline is scan→normalize→
 write, retrieval.py / normalization.py); these ops cover the
@@ -12,16 +14,37 @@ Scale shape (the 100-TB question): every op follows the same two-stage
 pattern — ONE distributed pass over the fact table collapses it to an
 edge list keyed on entities (shuffle on the edge key, two-phase count),
 and all graph math after that runs on the edge list, whose size is bounded
-by entity cardinality, not fact rows.  Iteration (PageRank) stays in
-DataFrame land — no ``collect()``; the driver only composes plans, exactly
-like ``dedup_connected_groups``.
+by entity cardinality, not fact rows.  Iteration stays in DataFrame land —
+no ``collect()`` of vertices, no driver-side frontier; the driver only
+composes plans (and, for connected components, reads one converged count
+per round).
+
+One loop per algorithm: ``_relax`` is the Bellman–Ford loop (weighted
+shortest paths, and k-hop reachability as its unit-weight case) and
+``connected_components`` is the pointer-jumping min-label loop (the
+component-size histogram here, and ``dedup.dedup_connected_groups``).
+``_sym_edges`` mirrors an undirected edge list and ``_strong_co_supply``
+is the one strong-tie cut.
+
+One materialization rule, for every op in this module:
+
+- Nothing is ``persist()``-ed.  An input that more than one Spark job
+  reads becomes a ``localCheckpoint`` leaf (the strong-tie edge list, a
+  loop's laid-out edges), so a returned frame pins nothing in the
+  session's CacheManager and there is nothing to ``unpersist``.
+- A loop checkpoints its state every round only when it broadcasts that
+  state (``_relax``) or counts it on the driver (``connected_components``'s
+  convergence test).  A lazily broadcast state nests every earlier round
+  inside the next round's broadcast; at sf0.01 that ran slower than one
+  checkpoint per round, though it starts fewer jobs.
+- A fixed, small round count whose state is joined by shuffle
+  (``graph_label_propagation``) composes one lazy plan: no checkpoint.
+- Iteration state is laid out by size (``_iter_layout``).
 """
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from build_pipeline_with_apache_beam_spark.catalog import load_table
@@ -30,14 +53,8 @@ from build_pipeline_with_apache_beam_spark.catalog import load_table
 # graph-iteration state collapses to ONE partition (one task per round, no
 # scheduling of 31 empty tasks); above it, state is hash-partitioned on its
 # join key so a 10⁸-vertex supplier graph never becomes a one-task
-# straggler.  Env override exists so tests/probes can force the partitioned
-# path at small sf.
+# straggler.
 GRAPH_ROWS_PER_PARTITION = 250_000
-
-
-def _graph_small_limit() -> int:
-    return int(os.environ.get("SPARK_GRAFT_GRAPH_SMALL_LIMIT",
-                              GRAPH_ROWS_PER_PARTITION))
 
 
 def _iter_layout(df: DataFrame, n_rows: int, *keys: str) -> DataFrame:
@@ -45,13 +62,25 @@ def _iter_layout(df: DataFrame, n_rows: int, *keys: str) -> DataFrame:
     the state fits comfortably in a single task, hash-partitioned on the
     iteration join key once it doesn't.  Both paths are plan-gated in
     tests/test_plans.py."""
-    limit = _graph_small_limit()
-    if n_rows <= limit:
+    if n_rows <= GRAPH_ROWS_PER_PARTITION:
         return df.coalesce(1)  # small-bounded
     n_parts = min(
         max(2, -(-n_rows // max(1, GRAPH_ROWS_PER_PARTITION))),
         df.sparkSession.sparkContext.defaultParallelism)
     return df.repartition(n_parts, *[F.col(k) for k in keys])
+
+
+def _laid_out_leaf(df: DataFrame, *keys: str) -> tuple[DataFrame, int]:
+    """``df`` as a ``localCheckpoint`` leaf read through ``_iter_layout``,
+    and its row count.  The layout sits on the read side: a leaf cut from
+    an AQE plan reports no partitioning, so a layout applied before the cut
+    would not spare the next join its exchange, while a one-partition read
+    is narrow and lets two small leaves join without one — as long as the
+    leaf's size estimate, inherited from the plan it was cut from, stays
+    under ``spark.sql.maxSinglePartitionBytes``."""
+    leaf = df.localCheckpoint()
+    n_rows = leaf.count()
+    return _iter_layout(leaf, n_rows, *keys), n_rows
 
 
 def _part_supplier_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -91,18 +120,107 @@ def _co_supply_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("co_parts")))
 
 
-def _strong_co_supply(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Strong-tie co-supply edges: pairs at or above the exact 95th
-    percentile of co-part weight, persisted — the fact table collapses to
-    the pair list ONCE and every downstream branch (threshold, degrees,
-    joins) re-reads the materialized lists instead of re-running the
-    lineitem scan."""
-    pairs = _co_supply_pairs(spark, sf_dir).persist()
-    cut = pairs.agg(
-        F.expr("percentile(co_parts, 0.95)").alias("cut"))
+def _strong_co_supply(spark: SparkSession, sf_dir: str,
+                      weighted: bool = False) -> DataFrame:
+    """Strong-tie co-supply edges ``(u, v)``: pairs at or above the exact
+    95th percentile of co-part weight, as a ``localCheckpoint`` leaf — the
+    fact table collapses to the pair list ONCE and every downstream job
+    (threshold, degrees, joins, loop rounds) reads the materialized list
+    instead of re-running the lineitem scan.  ``weighted`` adds the edge
+    length ``w = max(1, round(10000 / co_parts))``: strong ties are short,
+    and integer lengths make every distance byte-identical on any engine.
+
+    Both consumers of the pair list (the cut and the filter) sit in the
+    one checkpoint job, whose shuffles AQE reuses, so the pair list itself
+    needs no leaf."""
+    pairs = _co_supply_pairs(spark, sf_dir)
+    cut = pairs.agg(F.expr("percentile(co_parts, 0.95)").alias("cut"))
+    w = F.greatest(F.lit(1).cast("long"),
+                   F.round(F.lit(10000.0) / F.col("co_parts")).cast("long"))
     return (pairs.crossJoin(F.broadcast(cut))
             .where(F.col("co_parts") >= F.col("cut"))
-            .select("u", "v")).persist()
+            .select("u", "v", *([w.alias("w")] if weighted else []))
+            .localCheckpoint())
+
+
+def _sym_edges(strong: DataFrame, *cols: str | Column) -> DataFrame:
+    """Both orientations ``(src, dst, *cols)`` of an undirected ``(u, v)``
+    edge list: every vertex sees all of its neighbors as ``dst``."""
+    return (strong.select(F.col("u").alias("src"), F.col("v").alias("dst"),
+                          *cols)
+            .unionAll(strong.select(F.col("v").alias("src"),
+                                    F.col("u").alias("dst"), *cols)))
+
+
+def _relax(sym: DataFrame, rounds: int) -> DataFrame:
+    """Bellman–Ford from the lowest-id ``src`` of the symmetric weighted
+    edge list ``(src, dst, w)``: ``(node, dist)`` for every node within
+    ``rounds`` edges of the seed (the seed itself at distance 0).
+
+    The edge list becomes a size-laid-out leaf (``_iter_layout`` on
+    ``src``).  Each round joins it to the broadcast vertex-bounded distance
+    table, and a two-phase min-aggregate closes the round; the table is
+    checkpointed every round because it is broadcast (round k's plan is
+    O(1), not O(k), and no round nests its predecessors' jobs)."""
+    sym, n_sym = _laid_out_leaf(sym, "src")
+    dist = (sym.agg(F.min("src").alias("node"))
+            .select("node", F.lit(0).cast("long").alias("dist"))
+            .localCheckpoint())
+    for _ in range(rounds):
+        step = (sym.join(F.broadcast(dist), sym.src == dist.node)
+                .select(F.col("dst").alias("node"),
+                        (F.col("dist") + F.col("w")).alias("dist")))
+        # every reached node is an edge endpoint: |dist| <= |sym|
+        dist = (_iter_layout(dist.unionAll(step), n_sym, "node")
+                .groupBy("node").agg(F.min("dist").alias("dist"))
+                .localCheckpoint())
+    return dist
+
+
+def connected_components(edges: DataFrame, vertices: DataFrame) -> DataFrame:
+    """Connected components by iterative min-label propagation (the
+    hash-join formulation GraphX/GraphFrames use): ``(node, group_id)``
+    for every ``node`` of ``vertices``, ``group_id`` the smallest vertex id
+    of its component.  ``edges`` is an undirected ``(u, v)`` list.
+
+    Every vertex adopts the smallest label among itself and its neighbors,
+    then POINTER-JUMPS (label := label(label)): adopting the neighbor
+    minimum alone needs diameter rounds (a path graph would need |V|); the
+    jump halves the remaining distance every pass, so convergence is
+    O(log diameter).  The driver reads only the count of labels that
+    changed, carried as a ``chg`` flag on the new state — one scan of the
+    materialized round, no old-vs-new join.  Because that count reads the
+    state, the state is checkpointed every round; the mirrored edges are a
+    leaf.  Both are laid out by size (``_iter_layout``: edges on ``dst``,
+    labels on ``node``), and the round's joins carry ``shuffle_hash``
+    hints: edge list and label state may both grow with the corpus, and
+    an AQE broadcast of the edge side measured 128 MiB at sf1
+    (tools/broadcast_audit.py)."""
+    sym, _ = _laid_out_leaf(_sym_edges(edges), "dst")
+    labels, n_nodes = _laid_out_leaf(
+        vertices.select("node", F.col("node").alias("group_id")), "node")
+    for _ in range(12):
+        nmin = (sym.join(labels.hint("shuffle_hash"), sym.dst == labels.node)
+                .groupBy("src").agg(F.min("group_id").alias("nmin")))
+        stepped = (labels.join(nmin.hint("shuffle_hash"),
+                               labels.node == nmin.src, "left")
+                   .select("node",
+                           F.least("group_id", "nmin").alias("group_id"),
+                           (F.col("nmin") < F.col("group_id")).alias("chg")))
+        parent = stepped.select(F.col("node").alias("p_node"),
+                                F.col("group_id").alias("p_label"))
+        labels = _iter_layout(
+            stepped.join(parent.hint("shuffle_hash"),
+                         stepped.group_id == parent.p_node, "left")
+            .select("node",
+                    F.least("group_id", F.coalesce("p_label", "group_id"))
+                    .alias("group_id"), "chg")
+            .localCheckpoint(), n_nodes, "node")
+        changed = labels.where("chg").count()
+        labels = labels.drop("chg")
+        if changed == 0:
+            break
+    return labels
 
 
 def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -116,7 +234,8 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     the full pair list.  Triangles use the classic oriented edge-join
     (u<v<w counted exactly once); wedges are sum over nodes of C(deg, 2).
     Both engines apply the identical interpolated-percentile cutoff, so
-    the edge set — and therefore every count — is deterministic."""
+    the edge set — and therefore every count — is deterministic.  Every
+    branch reads the strong-tie leaf, so the op caches nothing."""
     strong = _strong_co_supply(spark, sf_dir)
     deg = (strong.select(F.col("u").alias("node"))
            .unionAll(strong.select(F.col("v").alias("node")))
@@ -224,37 +343,15 @@ def graph_khop_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
     hop distance — the blast-radius query ("if this supplier fails, who
     is 1, 2, 3 tiers away").
 
-    Frontier expansion is iterative DataFrame joins against the persisted
-    symmetric edge list (the same shape dedup_connected_groups uses); the
-    driver composes k plans, never holds vertices.  Each hop's frontier
-    joins edges once — cost is O(frontier × avg-degree) per hop, the BFS
-    optimum.  The edge list's layout is size-aware (``_iter_layout``):
-    one partition while supplier-bounded, hash-partitioned on ``src`` when
-    the entity set grows with the corpus — never a one-task straggler."""
+    BFS is the unit-weight case of Bellman–Ford: three ``_relax`` rounds
+    over the symmetric edge list with ``w = 1`` give every node within
+    three hops its exact hop distance, and ``dist > 0`` drops the seed.
+    The driver composes the rounds and never holds vertices; the layout
+    and per-round checkpoint are ``_relax``'s."""
     strong = _strong_co_supply(spark, sf_dir)
-    n_sym = 2 * strong.count()  # driver-bounded: one count of the edge list
-    sym = _iter_layout(
-        strong.select(F.col("u").alias("src"), F.col("v").alias("dst"))
-        .unionAll(strong.select(F.col("v").alias("src"),
-                                F.col("u").alias("dst"))),
-        n_sym, "src").persist()
-    seed = sym.agg(F.min("src").alias("node"))
-    # each frontier is localCheckpoint-ed so hop k's plan joins a
-    # materialized node list instead of re-planning (and re-running) the
-    # whole BFS prefix — lineage stays O(1) per hop instead of O(k)
-    reached = seed.select("node", F.lit(0).alias("hops")).localCheckpoint()
-    frontier = reached
-    for k in (1, 2, 3):
-        step = (sym.join(F.broadcast(frontier),
-                         sym.src == frontier.node)
-                .select(F.col("dst").alias("node"),
-                        F.lit(k).alias("hops"))
-                .distinct()
-                .localCheckpoint())
-        reached = reached.unionAll(step)
-        frontier = step
-    return (reached.groupBy("node").agg(F.min("hops").alias("min_hops"))
-            .where(F.col("min_hops") > 0)
+    dist = _relax(_sym_edges(strong, F.lit(1).cast("long").alias("w")), 3)
+    return (dist.where(F.col("dist") > 0)
+            .select("node", F.col("dist").cast("int").alias("min_hops"))
             .orderBy("node"))
 
 
@@ -264,24 +361,20 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     well-connected suppliers tie to other hubs (r > 0) or to the
     periphery (r < 0)?
 
-    Degrees come from one aggregate over the persisted edge list; the
+    Degrees come from one aggregate over the strong-tie leaf; the
     correlation is one algebraic aggregate over edges joined to the
     (broadcastable, |nodes|-sized) degree table twice."""
-    strong = _strong_co_supply(spark, sf_dir)
-    sym = (strong.select(F.col("u").alias("a"), F.col("v").alias("b"))
-           .unionAll(strong.select(F.col("v").alias("a"),
-                                   F.col("u").alias("b"))))
-    deg = (sym.groupBy("a").agg(F.count(F.lit(1)).alias("deg"))
-           .withColumnRenamed("a", "node"))
-    da = deg.select(F.col("node").alias("a"), F.col("deg").alias("deg_a"))
-    db = deg.select(F.col("node").alias("b"), F.col("deg").alias("deg_b"))
+    sym = _sym_edges(_strong_co_supply(spark, sf_dir))
+    deg = sym.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
+    da = deg.select(F.col("src"), F.col("deg").alias("deg_a"))
+    db = deg.select(F.col("src").alias("dst"), F.col("deg").alias("deg_b"))
     # corr via try_divide on the covariance form: a regular (e.g. complete)
     # graph has constant degrees → zero variance, where ANSI corr raises
     # DIVIDE_BY_ZERO but the statistic is properly undefined (NULL, as
     # DuckDB's CORR returns)
     corr = F.expr("try_divide(covar_samp(deg_a, deg_b),"
                   " stddev_samp(deg_a) * stddev_samp(deg_b))")
-    return (sym.join(F.broadcast(da), "a").join(F.broadcast(db), "b")
+    return (sym.join(F.broadcast(da), "src").join(F.broadcast(db), "dst")
             .agg(F.count(F.lit(1)).alias("n_directed_edges"),
                  F.round(corr, 4).alias("assortativity")))
 
@@ -291,57 +384,14 @@ def graph_component_size_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph: how many components of each size exist — the shape question
     behind "is the supplier network one giant cluster or many cliques".
 
-    Same iterative min-label propagation as ``dedup_connected_groups``
-    (hash-join connected components, executor-side state, driver checks
-    only the converged flag), but over supplier ties instead of near-dup
-    pairs, rolled up twice: labels → component sizes → size histogram.
-    The strong-tie edge list is bounded by |supplier|, so every iteration
-    is a small-join — at 100 TB of facts the component math never touches
-    the fact table again."""
+    ``connected_components`` (the loop ``dedup_connected_groups`` runs
+    over near-dup pairs) labels the supplier ties, rolled up twice:
+    labels → component sizes → size histogram.  The strong-tie edge list
+    is bounded by |supplier|, so every round is a small join — at 100 TB
+    of facts the component math never touches the fact table again."""
     strong = _strong_co_supply(spark, sf_dir)
-    # size-aware layout (_iter_layout): ONE partition while the strong
-    # graph is small (one task per round, not 32 mostly-empty ones —
-    # the small-graph discipline graph_pagerank_trade uses), hash-
-    # partitioned on the join key once the entity set outgrows a task
-    n_sym = 2 * strong.count()  # driver-bounded: one count of the edge list
-    sym = _iter_layout(
-        strong.select(F.col("u").alias("src"), F.col("v").alias("dst"))
-        .unionAll(strong.select(F.col("v").alias("src"),
-                                F.col("u").alias("dst"))),
-        n_sym, "dst").persist()
-    nodes = (sym.select(F.col("src").alias("node")).distinct())
-    # localCheckpoint (not persist) each round: the label state is
-    # self-referential, so without lineage truncation the logical plan
-    # doubles every iteration and Catalyst re-analysis — not the data —
-    # dominates the runtime.  At cluster scale this becomes a reliable
-    # checkpoint to cut both lineage and recovery cost.
-    labels = _iter_layout(nodes.withColumn("group_id", F.col("node")),
-                          n_sym // 2, "node").localCheckpoint()
-    # propagate + POINTER-JUMP each round: adopting the neighbor minimum
-    # alone needs diameter iterations (a path graph would need |V|); the
-    # extra self-join label := label(label) halves the remaining distance
-    # every pass, so convergence is O(log diameter)
-    for _ in range(12):
-        nmin = (sym.join(labels, sym.dst == labels.node)
-                .groupBy("src").agg(F.min("group_id").alias("nmin")))
-        stepped = (labels.join(nmin, labels.node == nmin.src, "left")
-                   .select("node",
-                           F.least("group_id", "nmin").alias("group_id"),
-                           (F.col("nmin") < F.col("group_id")).alias("chg")))
-        parent = stepped.select(F.col("node").alias("p_node"),
-                                F.col("group_id").alias("p_label"))
-        new_labels = _iter_layout(
-            stepped.join(parent,
-                         stepped.group_id == parent.p_node, "left")
-            .select("node",
-                    F.least("group_id",
-                            F.coalesce("p_label", "group_id"))
-                    .alias("group_id"), "chg"),
-            n_sym // 2, "node").localCheckpoint()
-        changed = new_labels.where("chg").count()
-        labels = new_labels.drop("chg")
-        if changed == 0:
-            break
+    nodes = _sym_edges(strong).select(F.col("src").alias("node")).distinct()
+    labels = connected_components(strong, nodes)
     sizes = labels.groupBy("group_id").agg(
         F.count(F.lit(1)).alias("component_size"))
     return (sizes.groupBy("component_size")
@@ -364,9 +414,7 @@ def graph_link_prediction_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     follows).  Jaccard is integer-DIV basis points for the same reason.
     """
     strong = _strong_co_supply(spark, sf_dir)
-    sym = (strong.select(F.col("u").alias("src"), F.col("v").alias("dst"))
-           .unionAll(strong.select(F.col("v").alias("src"),
-                                   F.col("u").alias("dst"))))
+    sym = _sym_edges(strong)
     deg = sym.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     # a common neighbor always has deg >= 2 (it touches both endpoints),
     # but ANSI mode evaluates the term for deg-1 leaves too — guard it
@@ -408,30 +456,28 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     run for a fixed LPA_ITERS rounds so the result is exactly replayable
     (and hence SQL-oracle-able, unlike randomized LPA).
 
-    Scale shape: each round is one join edge→labels + one two-phase count
-    + one per-node window pick, all keyed on node ids — cost ∝ |edges| per
-    round, bounded by entity cardinality (the fact table collapsed to the
-    edge list once, in ``_strong_co_supply``).  Like the other iterative
-    ops, each round's labels are localCheckpoint-ed: hop k joins a
-    materialized label table, keeping lineage O(1) per round.  Output is
-    the community-size histogram keyed by final label."""
+    Scale shape: each round is one shuffle join edge→labels + one
+    two-phase count + one per-node window pick, all keyed on node ids —
+    cost ∝ |edges| per round, bounded by entity cardinality (the fact
+    table collapsed to the strong-tie leaf once, in ``_strong_co_supply``).
+    The round count is fixed and small and the label state is joined by
+    shuffle, never broadcast, so the rounds compose ONE lazy plan with no
+    checkpoint: the sink runs it as one query.  Output is the
+    community-size histogram keyed by final label."""
     from pyspark.sql import Window as W
 
-    strong = _strong_co_supply(spark, sf_dir)
-    sym = (strong.select(F.col("u").alias("src"), F.col("v").alias("dst"))
-           .unionAll(strong.select(F.col("v").alias("src"),
-                                   F.col("u").alias("dst")))
-           .persist())
+    sym = _sym_edges(_strong_co_supply(spark, sf_dir))
     labels = (sym.select(F.col("src").alias("node")).distinct()
-              .withColumn("label", F.col("node")).localCheckpoint())
+              .withColumn("label", F.col("node")))
     pick = W.partitionBy("node").orderBy(F.col("c").desc(), F.col("label"))
     for _ in range(LPA_ITERS):
-        votes = (sym.join(labels, sym.dst == labels.node)
+        votes = (sym.join(labels.hint("shuffle_hash"),
+                          sym.dst == labels.node)
                  .groupBy(sym.src.alias("node"), "label")
                  .agg(F.count(F.lit(1)).alias("c")))
         labels = (votes.withColumn("rn", F.row_number().over(pick))
                   .where(F.col("rn") == 1)
-                  .select("node", "label").localCheckpoint())
+                  .select("node", "label"))
     return (labels.groupBy(F.col("label").alias("community"))
             .agg(F.count(F.lit(1)).alias("n_members"))
             .orderBy("community"))
@@ -439,41 +485,17 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def graph_shortest_paths_weighted(spark: SparkSession,
                                   sf_dir: str) -> DataFrame:
-    """Bounded weighted shortest paths (Bellman–Ford, 4 relaxation
-    rounds) from the lowest-id supplier of the strong co-supply graph.
-    Edge length is inversely proportional to tie strength —
-    ``max(1, round(10000 / co_parts))`` — so strong ties are short, and
-    the integer weights make every distance byte-identical on any engine.
-
-    Iteration discipline matches ``graph_khop_reachability``: the fact
-    table collapses to the size-aware (``_iter_layout``) symmetric edge
-    list ONCE; each round joins it to the broadcast vertex-bounded
-    distance table, localCheckpoints (round k's plan is O(1), not O(k)),
-    and a two-phase min-aggregate closes the round — never a one-task
-    straggler, never a driver-side frontier."""
-    pairs = _co_supply_pairs(spark, sf_dir).persist()
-    cut = pairs.agg(F.expr("percentile(co_parts, 0.95)").alias("cut"))
-    w = F.greatest(F.lit(1).cast("long"),
-                   F.round(F.lit(10000.0) / F.col("co_parts")).cast("long"))
-    strong = (pairs.crossJoin(F.broadcast(cut))
-              .where(F.col("co_parts") >= F.col("cut"))
-              .select("u", "v", w.alias("w")))
-    n_sym = 2 * strong.count()  # driver-bounded: one count of the edge list
-    sym = _iter_layout(
-        strong.select(F.col("u").alias("src"), F.col("v").alias("dst"), "w")
-        .unionAll(strong.select(F.col("v").alias("src"),
-                                F.col("u").alias("dst"), "w")),
-        n_sym, "src").persist()
-    dist = (sym.agg(F.min("src").alias("node"))
-            .select("node", F.lit(0).cast("long").alias("dist"))
-            .localCheckpoint())
-    for _ in range(4):
-        relax = (sym.join(F.broadcast(dist), sym.src == dist.node)
-                 .select(F.col("dst").alias("node"),
-                         (F.col("dist") + F.col("w")).alias("dist")))
-        dist = (dist.select("node", "dist").unionAll(relax)
-                .groupBy("node").agg(F.min("dist").alias("dist"))
-                .localCheckpoint())
+    """Bounded weighted shortest paths (Bellman–Ford, 4 ``_relax`` rounds)
+    from the lowest-id supplier of the strong co-supply graph.  Edge
+    length is inversely proportional to tie strength —
+    ``max(1, round(10000 / co_parts))`` from ``_strong_co_supply(...,
+    weighted=True)`` — so strong ties are short, and the integer weights
+    make every distance byte-identical on any engine.  Layout, per-round
+    checkpoint and the two-phase min-aggregate that closes each round are
+    ``_relax``'s: never a one-task straggler, never a driver-side
+    frontier."""
+    strong = _strong_co_supply(spark, sf_dir, weighted=True)
+    dist = _relax(_sym_edges(strong, "w"), 4)
     return (dist.select(F.col("node").alias("supplier"), "dist")
             .orderBy("supplier"))
 

@@ -22,6 +22,11 @@ from pyspark.sql import SparkSession
 # this would be sized ~2-3x total cores instead; AQE coalesces down from it.
 _DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
 
+# Largest file split a scan packs into one partition
+# (spark.sql.files.maxPartitionBytes); catalog.table_meta estimates split
+# counts from the same figure.
+MAX_PARTITION_BYTES = 128 * 1024 * 1024
+
 
 def get_spark(app_name: str = "build_pipeline_with_apache_beam_spark",
               extra_conf: dict | None = None) -> SparkSession:
@@ -67,7 +72,7 @@ def get_spark(app_name: str = "build_pipeline_with_apache_beam_spark",
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
+        .config("spark.sql.files.maxPartitionBytes", str(MAX_PARTITION_BYTES))
         # testdata events.parquet carries TIMESTAMP(NANOS); Spark has no nanos
         # type, so scan them as long and let the catalog convert to micros.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")

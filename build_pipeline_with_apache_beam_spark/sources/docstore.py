@@ -304,6 +304,32 @@ def build_collection(spark: SparkSession, sf_dir: str) -> str:
     return root
 
 
+def _register_stream_source(spark: SparkSession) -> None:
+    """Register the stream source with ``spark`` unless its session already
+    holds it: every re-registration logs "replaced a previously registered
+    data source".
+
+    Each session of an application has its own data-source manager, but
+    ``registerPython`` checks for a name clash in the application's ACTIVE
+    session.  A second session (``spark.newSession()``) would therefore
+    fail with ``DATA_SOURCE_ALREADY_EXISTS`` after the first registered,
+    so the registration runs with ``spark`` made active for its duration."""
+    jspark = spark._jsparkSession
+    if jspark.sessionState().dataSourceManager().dataSourceExists(
+            DocStoreDataSource.name()):
+        return
+    jsession = spark._jvm.SparkSession
+    previous = jsession.getActiveSession()
+    jsession.setActiveSession(jspark)
+    try:
+        spark.dataSource.register(DocStoreDataSource)
+    finally:
+        if previous.isDefined():
+            jsession.setActiveSession(previous.get())
+        else:
+            jsession.clearActiveSession()
+
+
 def open_docstore(spark: SparkSession, sf_dir: str, stream: bool = False,
                   window: tuple[int, int] | None = None,
                   **overrides) -> DataFrame:
@@ -335,11 +361,7 @@ def open_docstore(spark: SparkSession, sf_dir: str, stream: bool = False,
     if stream:
         if window is not None:
             raise ValueError("a docstore stream takes no window")
-        # register once per session: every re-registration logs "replaced
-        # a previously registered data source"
-        if not (spark._jsparkSession.sessionState().dataSourceManager()
-                .dataSourceExists(DocStoreDataSource.name())):
-            spark.dataSource.register(DocStoreDataSource)
+        _register_stream_source(spark)
         return spark.readStream.format("docstore").options(**opts).load()
     root = opts["path"]
     _check_auth(root, opts)

@@ -493,3 +493,25 @@ def test_stream_source_registers_once_per_session(spark, sf_dir,
     for _ in range(2):
         assert open_docstore(spark, sf_dir, stream=True).isStreaming
     assert len(calls) <= 1  # none when an earlier open registered it
+
+
+def test_stream_opens_on_a_second_session(spark, sf_dir, tmp_path):
+    """A stream opened on ``spark.newSession()`` after one opened on
+    ``spark`` reads every row.  Each session has its own data-source
+    manager, so the second open registers the source with its own session
+    instead of failing with DATA_SOURCE_ALREADY_EXISTS."""
+    root = build_collection(spark, sf_dir)
+    assert open_docstore(spark, sf_dir, stream=True, path=root).isStreaming
+    other = spark.newSession()
+    got: list = []
+    q = (open_docstore(other, sf_dir, stream=True, path=root)
+         .writeStream
+         .foreachBatch(lambda df, _bid: got.extend(df.collect()))
+         .option("checkpointLocation", str(tmp_path / "ckpt"))
+         .trigger(availableNow=True).start())
+    q.awaitTermination(120)
+    assert q.exception() is None
+    with open(os.path.join(root, MANIFEST)) as fh:
+        n_expected = sum(m["n"] for m in json.load(fh))
+    assert n_expected > 0
+    assert len(got) == n_expected

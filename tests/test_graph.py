@@ -11,7 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from build_pipeline_with_apache_beam_spark.operators import graph
+from build_pipeline_with_apache_beam_spark.operators import dedup, graph
 
 
 def test_degree_histogram_mass_equals_edge_count(spark, sf_dir):
@@ -41,3 +41,20 @@ def test_pagerank_mass_is_conserved_up_to_dangling_leak(spark, sf_dir):
     # with no dangling leak total == 1; leak only ever removes mass,
     # and the teleport term alone guarantees at least 0.15
     assert 0.15 <= total <= 1.0 + 1e-6 * len(rows)
+
+
+def test_iterative_ops_leave_the_cache_empty(spark, sf_dir):
+    """Sinking an iterative graph op, or the dedup grouping that runs the
+    same components loop, leaves the session's CacheManager empty: inputs
+    several jobs read are localCheckpoint leaves, never ``persist()``-ed,
+    so a returned frame pins no cached blocks and needs no unpersist."""
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    for op in (graph.graph_khop_reachability,
+               graph.graph_shortest_paths_weighted,
+               graph.graph_component_size_dist,
+               graph.graph_label_propagation,
+               graph.graph_triangle_count,
+               dedup.dedup_connected_groups):
+        op(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        assert cache.isEmpty(), op.__name__

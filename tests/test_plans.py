@@ -673,12 +673,17 @@ def test_graph_iter_layout_large_hash_partitions_on_key(spark):
 def test_graph_partitioned_path_matches_small_path(
         spark, sf_dir, registry, monkeypatch):
     """Forcing the hash-partitioned iteration layout at test sf must give
-    byte-identical results to the small-graph single-partition path."""
-    for op in ("graph_khop_reachability", "graph_component_size_dist"):
+    byte-identical results to the small-graph single-partition path — for
+    both shared loops (``_relax``: k-hop, shortest paths;
+    ``connected_components``: component sizes, dedup groups)."""
+    from build_pipeline_with_apache_beam_spark.operators import graph
+
+    for op in ("graph_khop_reachability", "graph_shortest_paths_weighted",
+               "graph_component_size_dist", "dedup_connected_groups"):
         base = {tuple(r) for r in registry[op](spark, sf_dir).collect()}
-        monkeypatch.setenv("SPARK_GRAFT_GRAPH_SMALL_LIMIT", "0")
+        monkeypatch.setattr(graph, "GRAPH_ROWS_PER_PARTITION", 0)
         forced = {tuple(r) for r in registry[op](spark, sf_dir).collect()}
-        monkeypatch.delenv("SPARK_GRAFT_GRAPH_SMALL_LIMIT")
+        monkeypatch.undo()
         assert forced == base, op
 
 

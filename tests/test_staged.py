@@ -1,6 +1,7 @@
 """The staging helper's contract (``catalog._staged``): a builder is called
 only when a stage is written, a reuse hit builds and runs nothing, and the
-reused re-read carries the schema parquet inference would return."""
+reused re-read carries the schema parquet inference would return.  Also the
+footer-only table statistics (``catalog.table_meta``) the spread rule reads."""
 
 from __future__ import annotations
 
@@ -11,7 +12,7 @@ import uuid
 import pytest
 from pyspark.sql import functions as F
 
-from build_pipeline_with_apache_beam_spark.catalog import _staged
+from build_pipeline_with_apache_beam_spark.catalog import _staged, table_meta
 from build_pipeline_with_apache_beam_spark.operators.dedup import (
     dedup_fuzzy_minhash,
 )
@@ -94,3 +95,20 @@ def test_warm_fuzzy_minhash_runs_no_job_before_its_sink(spark, sf_dir):
     finally:
         sc._jsc.clearJobGroup()
     assert {f: os.stat(f).st_mtime_ns for f in stage_files} == mtimes
+
+
+def test_table_meta_walks_a_hive_partitioned_table(spark, tmp_path):
+    """A ``dt=``-partitioned table directory: ``table_meta`` walks the
+    partition dirs, so its row count is the sum of every part file's
+    footer and every file counts as a split — a (0, 0) here would make
+    ``sized_spread`` squeeze the scan into one task."""
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "t.parquet")
+    (spark.range(1000).withColumn("dt", F.col("id") % 3)
+     .repartition(2).write.partitionBy("dt").parquet(path))
+    parts = glob.glob(os.path.join(path, "dt=*", "*.parquet"))
+    assert len({os.path.dirname(p) for p in parts}) == 3
+    footer_rows = sum(pq.ParquetFile(p).metadata.num_rows for p in parts)
+    assert table_meta(str(tmp_path), "t") == (footer_rows, len(parts))
+    assert footer_rows == 1000
