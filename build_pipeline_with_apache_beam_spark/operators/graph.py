@@ -30,8 +30,8 @@ One materialization rule, for every op in this module:
 
 - Nothing is ``persist()``-ed.  An input that more than one Spark job
   reads becomes a ``localCheckpoint`` leaf (the strong-tie edge list, a
-  loop's laid-out edges), so a returned frame pins nothing in the
-  session's CacheManager and there is nothing to ``unpersist``.
+  loop's edges), so a returned frame pins nothing in the session's
+  CacheManager and there is nothing to ``unpersist``.
 - A loop checkpoints its state every round only when it broadcasts that
   state (``_relax``) or counts it on the driver (``connected_components``'s
   convergence test).  A lazily broadcast state nests every earlier round
@@ -39,7 +39,8 @@ One materialization rule, for every op in this module:
   checkpoint per round, though it starts fewer jobs.
 - A fixed, small round count whose state is joined by shuffle
   (``graph_label_propagation``) composes one lazy plan: no checkpoint.
-- Iteration state is laid out by size (``_iter_layout``).
+- Iteration state is laid out by size (``_iter_layout``); a leaf that
+  shuffle joins read every round is laid out once (``_laid_out_leaf``).
 """
 
 from __future__ import annotations
@@ -71,16 +72,29 @@ def _iter_layout(df: DataFrame, n_rows: int, *keys: str) -> DataFrame:
 
 
 def _laid_out_leaf(df: DataFrame, *keys: str) -> tuple[DataFrame, int]:
-    """``df`` as a ``localCheckpoint`` leaf read through ``_iter_layout``,
-    and its row count.  The layout sits on the read side: a leaf cut from
-    an AQE plan reports no partitioning, so a layout applied before the cut
-    would not spare the next join its exchange, while a one-partition read
-    is narrow and lets two small leaves join without one — as long as the
-    leaf's size estimate, inherited from the plan it was cut from, stays
-    under ``spark.sql.maxSinglePartitionBytes``."""
+    """``df`` as a ``localCheckpoint`` leaf laid out by ``_iter_layout``,
+    and its row count.  A small leaf is read through ``coalesce(1)``: the
+    read is narrow and lets two small leaves join without an exchange, as
+    long as the leaf's size estimate, inherited from the plan it was cut
+    from, stays under ``spark.sql.maxSinglePartitionBytes``.  A large leaf
+    is hash-partitioned on ``keys`` ONCE and cut again with adaptive
+    execution off for that one job: a leaf cut from an AQE plan reports no
+    partitioning, so every join on ``keys`` would shuffle it again, while
+    the non-adaptive cut keeps its ``hashpartitioning`` and a join against
+    state laid out the same way needs no exchange on this side."""
     leaf = df.localCheckpoint()
     n_rows = leaf.count()
-    return _iter_layout(leaf, n_rows, *keys), n_rows
+    laid = _iter_layout(leaf, n_rows, *keys)
+    if n_rows <= GRAPH_ROWS_PER_PARTITION:
+        return laid, n_rows
+    conf = df.sparkSession.conf
+    aqe = conf.get("spark.sql.adaptive.enabled")
+    conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        laid = laid.localCheckpoint()
+    finally:
+        conf.set("spark.sql.adaptive.enabled", aqe)
+    return laid, n_rows
 
 
 def _part_supplier_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -120,26 +134,21 @@ def _co_supply_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("co_parts")))
 
 
-def _strong_co_supply(spark: SparkSession, sf_dir: str,
-                      weighted: bool = False) -> DataFrame:
-    """Strong-tie co-supply edges ``(u, v)``: pairs at or above the exact
-    95th percentile of co-part weight, as a ``localCheckpoint`` leaf — the
-    fact table collapses to the pair list ONCE and every downstream job
-    (threshold, degrees, joins, loop rounds) reads the materialized list
-    instead of re-running the lineitem scan.  ``weighted`` adds the edge
-    length ``w = max(1, round(10000 / co_parts))``: strong ties are short,
-    and integer lengths make every distance byte-identical on any engine.
+def _strong_co_supply(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Strong-tie co-supply edges ``(u, v, co_parts)``: pairs at or above
+    the exact 95th percentile of co-part weight, as a ``localCheckpoint``
+    leaf — the fact table collapses to the pair list ONCE and every
+    downstream job (threshold, degrees, joins, loop rounds) reads the
+    materialized list instead of re-running the lineitem scan.
 
     Both consumers of the pair list (the cut and the filter) sit in the
     one checkpoint job, whose shuffles AQE reuses, so the pair list itself
     needs no leaf."""
     pairs = _co_supply_pairs(spark, sf_dir)
     cut = pairs.agg(F.expr("percentile(co_parts, 0.95)").alias("cut"))
-    w = F.greatest(F.lit(1).cast("long"),
-                   F.round(F.lit(10000.0) / F.col("co_parts")).cast("long"))
     return (pairs.crossJoin(F.broadcast(cut))
             .where(F.col("co_parts") >= F.col("cut"))
-            .select("u", "v", *([w.alias("w")] if weighted else []))
+            .select("u", "v", "co_parts")
             .localCheckpoint())
 
 
@@ -157,11 +166,13 @@ def _relax(sym: DataFrame, rounds: int) -> DataFrame:
     edge list ``(src, dst, w)``: ``(node, dist)`` for every node within
     ``rounds`` edges of the seed (the seed itself at distance 0).
 
-    The edge list becomes a size-laid-out leaf (``_iter_layout`` on
-    ``src``).  Each round joins it to the broadcast vertex-bounded distance
-    table, and a two-phase min-aggregate closes the round; the table is
-    checkpointed every round because it is broadcast (round k's plan is
-    O(1), not O(k), and no round nests its predecessors' jobs)."""
+    The edge list becomes a leaf laid out ONCE by size
+    (``_laid_out_leaf``): one task per round while it is small, spread
+    over hash partitions once it is not.  Each round joins it to the
+    broadcast vertex-bounded distance table, and a two-phase min-aggregate
+    closes the round; the table is checkpointed every round because it is
+    broadcast (round k's plan is O(1), not O(k), and no round nests its
+    predecessors' jobs)."""
     sym, n_sym = _laid_out_leaf(sym, "src")
     dist = (sym.agg(F.min("src").alias("node"))
             .select("node", F.lit(0).cast("long").alias("dist"))
@@ -190,12 +201,13 @@ def connected_components(edges: DataFrame, vertices: DataFrame) -> DataFrame:
     O(log diameter).  The driver reads only the count of labels that
     changed, carried as a ``chg`` flag on the new state — one scan of the
     materialized round, no old-vs-new join.  Because that count reads the
-    state, the state is checkpointed every round; the mirrored edges are a
-    leaf.  Both are laid out by size (``_iter_layout``: edges on ``dst``,
-    labels on ``node``), and the round's joins carry ``shuffle_hash``
-    hints: edge list and label state may both grow with the corpus, and
-    an AQE broadcast of the edge side measured 128 MiB at sf1
-    (tools/broadcast_audit.py)."""
+    state, the state is checkpointed every round; the mirrored edges are
+    a leaf laid out ONCE (``_laid_out_leaf`` on ``dst``), so a large edge
+    list is not shuffled again each round.  The label state is laid out
+    by size on ``node`` as each round reads it, and the round's joins
+    carry ``shuffle_hash`` hints: edge list and label state may both grow
+    with the corpus, and an AQE broadcast of the edge side measured
+    128 MiB at sf1 (tools/broadcast_audit.py)."""
     sym, _ = _laid_out_leaf(_sym_edges(edges), "dst")
     labels, n_nodes = _laid_out_leaf(
         vertices.select("node", F.col("node").alias("group_id")), "node")
@@ -488,14 +500,15 @@ def graph_shortest_paths_weighted(spark: SparkSession,
     """Bounded weighted shortest paths (Bellman–Ford, 4 ``_relax`` rounds)
     from the lowest-id supplier of the strong co-supply graph.  Edge
     length is inversely proportional to tie strength —
-    ``max(1, round(10000 / co_parts))`` from ``_strong_co_supply(...,
-    weighted=True)`` — so strong ties are short, and the integer weights
-    make every distance byte-identical on any engine.  Layout, per-round
-    checkpoint and the two-phase min-aggregate that closes each round are
-    ``_relax``'s: never a one-task straggler, never a driver-side
-    frontier."""
-    strong = _strong_co_supply(spark, sf_dir, weighted=True)
-    dist = _relax(_sym_edges(strong, "w"), 4)
+    ``w = max(1, round(10000 / co_parts))`` over the strong-tie leaf — so
+    strong ties are short, and the integer weights make every distance
+    byte-identical on any engine.  Layout, per-round checkpoint and the
+    two-phase min-aggregate that closes each round are ``_relax``'s: never
+    a one-task straggler, never a driver-side frontier."""
+    w = F.greatest(F.lit(1).cast("long"),
+                   F.round(F.lit(10000.0) / F.col("co_parts")).cast("long"))
+    dist = _relax(_sym_edges(_strong_co_supply(spark, sf_dir),
+                             w.alias("w")), 4)
     return (dist.select(F.col("node").alias("supplier"), "dist")
             .orderBy("supplier"))
 

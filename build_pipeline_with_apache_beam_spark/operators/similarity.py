@@ -66,8 +66,7 @@ _VEC_ROWS_PER_PARTITION = 128
 
 
 def _with_unit_vec(df: DataFrame, col: str = "embedding",
-                   sf_dir: str | None = None,
-                   table: str = "embeddings") -> DataFrame:
+                   sf_dir: str | None = None) -> DataFrame:
     """Pre-normalize to unit length ONCE per vector, so every pairwise
     cosine downstream is a single dot product instead of dot + two norms —
     3× less expression work inside the join, and at scale the normalized
@@ -80,16 +79,15 @@ def _with_unit_vec(df: DataFrame, col: str = "embedding",
     corpora are one split, so they still fan out for the per-pair HOF hot
     loops (measured 0.77 → 0.24 s on sim_cosine_pairs at sf0.1), while a
     corpus-scale scan rides its own splits with NO exchange.  Callers pass
-    sf_dir (and ``table``, the catalog table ``df`` scans) so row/split
-    counts come off that table's parquet footers (no Spark job); without
-    sf_dir the decision falls back to a count() + plan walk."""
+    sf_dir so row/split counts come off the parquet footers (no Spark
+    job); without it the decision falls back to a count() + plan walk."""
     from build_pipeline_with_apache_beam_spark.catalog import (
         sized_spread,
         table_meta,
     )
 
     if sf_dir is not None:
-        n_rows, n_splits = table_meta(sf_dir, table)
+        n_rows, n_splits = table_meta(sf_dir, "embeddings")
     else:
         n_rows, n_splits = df.count(), None
     df = sized_spread(df, n_rows, _VEC_ROWS_PER_PARTITION, n_splits)

@@ -670,6 +670,33 @@ def test_graph_iter_layout_large_hash_partitions_on_key(spark):
     assert "hashpartitioning(src" in plan_of(out), plan_of(out)
 
 
+def test_graph_large_edge_leaf_is_shuffled_once(spark, monkeypatch):
+    """Above the threshold a loop's edge leaf keeps the hash layout it was
+    cut with, so a round's join against label state laid out on the same
+    key plans no exchange on the edge side: the edge list is shuffled
+    once per loop, not once per round.  The cut leaves AQE as it found
+    it."""
+    import re
+
+    from build_pipeline_with_apache_beam_spark.operators import graph
+
+    from pyspark.sql import functions as F
+
+    monkeypatch.setattr(graph, "GRAPH_ROWS_PER_PARTITION", 0)
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    edges = spark.range(1000).select(F.col("id").alias("src"),
+                                     (F.col("id") % 100).alias("dst"))
+    leaf, n_rows = graph._laid_out_leaf(edges, "dst")
+    assert n_rows == 1000
+    assert spark.conf.get("spark.sql.adaptive.enabled") == aqe
+    labels = graph._iter_layout(
+        spark.range(100).select(F.col("id").alias("node")), 100, "node")
+    plan = plan_of(leaf.join(labels.hint("shuffle_hash"),
+                             leaf.dst == labels.node))
+    # the one exchange is the label state's own layout
+    assert len(re.findall(r"^\(\d+\) Exchange", plan, re.M)) == 1, plan
+
+
 def test_graph_partitioned_path_matches_small_path(
         spark, sf_dir, registry, monkeypatch):
     """Forcing the hash-partitioned iteration layout at test sf must give
