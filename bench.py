@@ -19,12 +19,14 @@ from __future__ import annotations
 import json
 import os
 import re
+import shutil
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from build_pipeline_with_apache_beam_spark import registry
+from build_pipeline_with_apache_beam_spark.scratch import namespace
 from build_pipeline_with_apache_beam_spark.session import get_spark
 
 # Pinned noise-control set (round-11 verdict #3): twelve cheap, structurally
@@ -50,13 +52,16 @@ ORACLE_COMPANION_OPS = (
     "dedup_connected_groups", "corpus_dedup_rate_curve",
 )
 
-# Ops whose WARM pass rides a reuse=True persisted-index stage built by the
-# cold pass (round-14 verdict #8: keep reuse ops honest — the index-build
-# cost must stay visible).  The summary line reports their cold seconds
-# beside the headline warm numbers.
+# Ops whose WARM pass rides a persisted-index stage built by the cold pass
+# (round-14 verdict #8: keep reuse ops honest — the index-build cost must
+# stay visible).  The summary line reports their cold seconds beside the
+# headline warm numbers.  The graph ops read the staged strong-tie cut.
 REUSE_INDEX_OPS = (
     "dedup_fuzzy_minhash", "dedup_incremental_minhash",
     "dedup_minhash_recall_eval", "sql_recursive_cte",
+    "graph_triangle_count", "graph_khop_reachability", "graph_assortativity",
+    "graph_component_size_dist", "graph_link_prediction_scores",
+    "graph_label_propagation", "graph_shortest_paths_weighted",
 )
 
 
@@ -118,6 +123,9 @@ def main() -> None:
             print(f"# bench error {name} ({attempt}): {e}", file=sys.stderr)
             return -1.0
 
+    # derived artifacts outlive the process that built them: drop the ones
+    # an earlier run left, so the cold pass builds every one of them again
+    shutil.rmtree(namespace(sf_dir), ignore_errors=True)
     t_total = time.time()
     for name, fn in sorted(qs.items()):
         cold[name] = _run_once(name, fn, "cold")
@@ -229,8 +237,8 @@ def main() -> None:
         "s_per_op_noise_adjusted": (
             round(s_per_op / ctrl_ratio, 4)
             if s_per_op and ctrl_ratio else None),
-        # reuse=True index ops: warm rides the cold pass's persisted stage,
-        # so the index-build cost is reported beside the headline (r14 #8)
+        # index ops: warm rides the cold pass's persisted stage, so the
+        # index-build cost is reported beside the headline (r14 #8)
         "reuse_ops_cold": {
             k: cold[k] for k in REUSE_INDEX_OPS if cold.get(k, 0) > 0},
         "n_errors": sum(1 for v in warm.values() if v <= 0),

@@ -7,21 +7,21 @@ that: every table is a distributed parquet scan, so filters/projections push
 down to the file source and the driver holds only the plan.
 
 Operators' intermediate parquet stages (``_staged``) are managed here too,
-beside the scan-spread rule: each stage is written to a process-scoped
-scratch directory and read back as a plain parquet scan.
+beside the scan-spread rule: each stage is a content-addressed
+``scratch.derived`` artifact — keyed by the sf dir's table files and the
+package code, committed by rename, reused by every later call in any
+process — and read back as a plain parquet scan.
 """
 
 from __future__ import annotations
 
-import atexit
-import hashlib
 import os
-import shutil
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+from build_pipeline_with_apache_beam_spark.scratch import derived, parquet_files
 from build_pipeline_with_apache_beam_spark.session import MAX_PARTITION_BYTES
 
 TABLES = (
@@ -71,19 +71,13 @@ def table_meta(sf_dir: str, name: str) -> tuple[int, int]:
     per operator call and ``df.rdd.getNumPartitions()`` re-plans the scan
     (~0.2 s combined per call, measured r15).  A table is one file or a
     directory tree of them (nested or Hive-partitioned ``key=value``
-    dirs); like Spark's file index, names starting with ``_`` or ``.``
-    (``_SUCCESS``, ``_temporary``, checksums) are skipped.  The split
-    estimate mirrors Spark's packing math (total bytes /
-    ``MAX_PARTITION_BYTES``, at least one split per file) closely enough
-    for a spread-or-not threshold."""
+    dirs), walked by ``scratch.parquet_files``, the walk the derived
+    artifacts' input fingerprint uses too.  The split estimate mirrors
+    Spark's packing math (total bytes / ``MAX_PARTITION_BYTES``, at least
+    one split per file) closely enough for a spread-or-not threshold."""
     import pyarrow.parquet as pq
 
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    files = [path] if os.path.isfile(path) else []
-    for root, dirs, names in os.walk(path):
-        dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
-        files += [os.path.join(root, f) for f in sorted(names)
-                  if f.endswith(".parquet") and not f.startswith(("_", "."))]
+    files = parquet_files(os.path.join(sf_dir, f"{name}.parquet"))
     n_rows = 0
     total_bytes = 0
     for f in files:
@@ -119,79 +113,36 @@ def sized_spread(df: DataFrame, n_rows: int,
     return df.repartition(target)
 
 
-# (sf tag, stage name) -> schema of the stage's post-write re-read, for every
-# stage this process has written (see _staged)
-_STAGE_DONE: dict[tuple[str, str], StructType] = {}
-_CLEANUP_REGISTERED = False
-
-
-def _stage_root() -> str:
-    # imported here, not at module level: sources.sinks imports this module
-    from build_pipeline_with_apache_beam_spark.sources.sinks import SCRATCH
-
-    return os.path.join(SCRATCH, "dedup_stage")
-
-
-def _cleanup_own_stage_dirs() -> None:
-    """atexit: remove THIS process's pid-scoped stage dirs.
-
-    The pid-scoping (r9) stopped cross-process clobbering but left every
-    run's corpus-scale staged parquet behind forever — pytest + bench +
-    sweep each leaked a full copy at sf1/sf3.  Bounded again: each process
-    removes its own dirs on exit, and `_sweep_dead_pid_dirs` collects
-    anything a killed process left behind.
-    """
-    root = _stage_root()
-    suffix = f"-{os.getpid()}"
-    try:
-        entries = os.listdir(root)
-    except OSError:
-        return
-    for d in entries:
-        if d.endswith(suffix):
-            shutil.rmtree(os.path.join(root, d), ignore_errors=True)
-
-
-def _sweep_dead_pid_dirs() -> None:
-    """Remove stage dirs whose owning pid is no longer alive (crash debris)."""
-    root = _stage_root()
-    try:
-        entries = os.listdir(root)
-    except OSError:
-        return
-    for d in entries:
-        pid_part = d.rsplit("-", 1)[-1]
-        if not pid_part.isdigit() or int(pid_part) == os.getpid():
-            continue
-        try:
-            os.kill(int(pid_part), 0)
-        except ProcessLookupError:
-            shutil.rmtree(os.path.join(root, d), ignore_errors=True)
-        except PermissionError:
-            pass  # pid alive under another uid — leave its dir alone
+# committed stage path -> schema of its re-read, for every stage this
+# process has read (see _staged)
+_STAGE_DONE: dict[str, StructType] = {}
 
 
 def _staged(spark: SparkSession, build: Callable[[], DataFrame], sf_dir: str,
-            name: str, reuse: bool = False) -> DataFrame:
-    """Materialize an intermediate to scratch parquet and re-read it.
+            name: str) -> DataFrame:
+    """Materialize an intermediate as a content-addressed parquet stage
+    (``scratch.derived``) and re-read it.
 
     Builder contract: ``build`` is a zero-argument callable returning the
     DataFrame to stage, and it is called only when the stage is about to
     be written.  Anything that is not callable (a DataFrame from a caller
     of the old eager form) raises ``TypeError`` at once.
 
-    A reuse hit runs nothing.  With ``reuse=True``, a stage this process
-    already wrote (and whose files still exist) is re-read without calling
-    ``build``: no upstream plan is constructed, none of the builder's own
-    staged writes or table scans run, and the re-read starts no job.
+    A stage is keyed by the sf dir's table files and the package code, and
+    committed by rename, so it outlives the process that wrote it: any
+    later call with the same inputs, in this process or another, is a hit.
+    A hit runs nothing: ``build`` is not called, so no upstream plan is
+    constructed, none of the builder's own stages or table scans run.
+    A stage must therefore be a pure function of the sf dir: anything else
+    it depends on belongs in its ``name``.
 
-    Schema memo: ``_STAGE_DONE`` maps (sf tag, name) to the schema of the
-    post-write ``spark.read.parquet(path)``, and a reuse hit re-reads with
-    ``spark.read.schema(s).parquet(path)``, which skips the parquet
-    schema-inference job a bare re-read starts.  The memo is taken from
-    the re-read, not from the written frame, so a hit returns exactly the
-    schema a cold re-read infers: file sources read every column back as
-    nullable, and the written frame may declare columns non-null.
+    Schema memo: ``_STAGE_DONE`` maps the committed path to the schema of
+    its first ``spark.read.parquet(path)`` in this process, and a later hit
+    re-reads with ``spark.read.schema(s).parquet(path)``, which skips the
+    parquet schema-inference job a bare re-read starts.  The memo is taken
+    from the re-read, not from the written frame, so a hit returns exactly
+    the schema a cold re-read infers: file sources read every column back
+    as nullable, and the written frame may declare columns non-null.
 
     The sketch pipelines are deliberately executed in STAGES (signature
     index → candidate pairs → verification) rather than as one fused lazy
@@ -213,36 +164,10 @@ def _staged(spark: SparkSession, build: Callable[[], DataFrame], sf_dir: str,
         raise TypeError(
             f"_staged({name!r}): build must be a zero-argument callable "
             f"returning a DataFrame, got {type(build).__name__}")
-    # sf-scoped via the EXPLICIT sf_dir parameter (not shared mutable
-    # state): concurrent runs at different scale factors (gate at sf0.01
-    # while bench reads sf0.1) must not clobber each other's stages.
-    # Keyed on the FULL absolute path (basename + 8-hex path hash), not the
-    # basename alone: two roots sharing a basename (/root/testdata/sf1 vs
-    # .scratch/sfscale/sf1) must not serve each other's staged truth.
-    abspath = os.path.abspath(sf_dir.rstrip("/") or "/")
-    tag = (os.path.basename(abspath) or "default") + "." + \
-        hashlib.md5(abspath.encode()).hexdigest()[:8]
-    # PROCESS-scoped stage root: two engines running the same op at the
-    # same sf (a correctness sweep beside a scale probe) must not
-    # overwrite each other's in-flight _temporary dirs — observed as a
-    # FileNotFoundException on commit during the r9 artifact runs.  The
-    # production analog is one stage dir per pipeline RUN, exactly like a
-    # Structured Streaming checkpoint dir.  Dirs are bounded: removed at
-    # process exit (atexit) and dead-pid debris swept on first use.
-    global _CLEANUP_REGISTERED
-    if not _CLEANUP_REGISTERED:
-        _CLEANUP_REGISTERED = True
-        atexit.register(_cleanup_own_stage_dirs)
-        _sweep_dead_pid_dirs()
-    path = os.path.join(_stage_root(), f"{tag}-{os.getpid()}", name)
-    # reuse=True: skip the rewrite when THIS process already materialized
-    # the stage (never trust a path another process/older code wrote) —
-    # the banded-oracle promotions made three registered ops share the
-    # exact-truth stage, and inputs are immutable within a run
-    schema = _STAGE_DONE.get((tag, name))
-    if reuse and schema is not None and os.path.exists(path):
+    path = derived(sf_dir, name, lambda tmp: build().write.parquet(tmp))
+    schema = _STAGE_DONE.get(path)
+    if schema is not None:
         return spark.read.schema(schema).parquet(path)
-    build().write.mode("overwrite").parquet(path)
     staged = spark.read.parquet(path)
-    _STAGE_DONE[(tag, name)] = staged.schema
+    _STAGE_DONE[path] = staged.schema
     return staged

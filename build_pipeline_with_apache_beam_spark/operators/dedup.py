@@ -23,7 +23,7 @@ Scale design (the part that matters at 1000 executors):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from build_pipeline_with_apache_beam_spark.catalog import (
@@ -86,6 +86,13 @@ def _docs_with_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
             f" i -> concat_ws(' ', slice(toks, i + 1, {SHINGLE_WIDTH})))"
         )).alias("shingles"),
     )
+
+
+def _hashed_shingle_sets(shingled: DataFrame) -> DataFrame:
+    """doc_id + ``sh``, the distinct xxhash64 of each shingle: the set form
+    exact-Jaccard verification intersects and unions."""
+    return shingled.select("doc_id", F.array_distinct(
+        F.transform("shingles", lambda s: F.xxhash64(s))).alias("sh"))
 
 
 def minhash_signatures(shingled: DataFrame, n_hashes: int = N_MINHASH) -> DataFrame:
@@ -196,21 +203,16 @@ def fuzzy_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     banded-oracle histogram DuckDB can check (the pair SET itself depends
     on the seeded banding, which is not portable SQL)."""
     # stage 1: the signature index + hashed shingle sets (persisted — at
-    # scale this is the reusable dedup index, built incrementally)
-    shingled = _docs_with_shingles(spark, sf_dir)
-    sigs = _staged(spark, lambda: minhash_signatures(shingled), sf_dir,
-                   "minhash_sigs", reuse=True)
+    # scale this is the reusable dedup index, built incrementally); stage
+    # 2: LSH banding → candidate pairs, whose hit skips the signatures
+    pairs = _staged(spark, lambda: lsh_candidate_pairs(_staged(
+        spark, lambda: minhash_signatures(_docs_with_shingles(spark, sf_dir)),
+        sf_dir, "minhash_sigs")), sf_dir, "minhash_candidates")
     # hashed shingle sets for verification: intersect/union on fixed-width
     # longs instead of ~20-byte strings — smaller shuffle, cheaper compares;
     # xxhash64 collisions are negligible for jaccard
-    hashed = _staged(spark, lambda: shingled.select(
-        "doc_id",
-        F.array_distinct(F.transform("shingles", lambda s: F.xxhash64(s)))
-         .alias("sh"),
-    ), sf_dir, "minhash_shingle_sets", reuse=True)
-    # stage 2: LSH banding → candidate pairs
-    pairs = _staged(spark, lambda: lsh_candidate_pairs(sigs), sf_dir,
-                    "minhash_candidates", reuse=True)
+    hashed = _staged(spark, lambda: _hashed_shingle_sets(
+        _docs_with_shingles(spark, sf_dir)), sf_dir, "minhash_shingle_sets")
     # stage 3: exact-jaccard verification of the candidates
     a = hashed.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
     b = hashed.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
@@ -264,7 +266,7 @@ def dedup_fuzzy_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     exist)."""
     truth = _exact_truth_with_jaccard(spark, sf_dir)
     pred = _staged(spark, lambda: fuzzy_minhash_pairs(spark, sf_dir),
-                   sf_dir, "fmh_pred", reuse=True)
+                   sf_dir, "fmh_pred")
     tb = truth.withColumn("bk", _jbucket(F.col("jaccard")))
     pb = pred.withColumn("bk", _jbucket(F.col("jaccard")))
     outside = (pb.join(truth.hint("shuffle_hash"),
@@ -509,20 +511,10 @@ def incremental_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     banded-oracle form (the pair set depends on the seeded banding, which is
     not portable SQL).
     """
-    shingled = _docs_with_shingles(spark, sf_dir)
     is_new = F.col("doc_id") % 10 == 0
 
-    # persisted index over history (reuse=True — the whole point of the
-    # incremental shape: history is signed ONCE and re-read as parquet on
-    # every subsequent ingest, so per-run cost scales with the batch, not
-    # the corpus; before r14 the index was silently re-signed per call);
-    # only the new batch is (re)signed each run
-    hist_sigs = _staged(
-        spark, lambda: minhash_signatures(shingled.where(~is_new)),
-        sf_dir, "inc_index_sigs", reuse=True)
-    new_sigs = _staged(
-        spark, lambda: minhash_signatures(shingled.where(is_new)),
-        sf_dir, "inc_new_sigs")
+    def shingled(rows: Column) -> DataFrame:
+        return _docs_with_shingles(spark, sf_dir).where(rows)
 
     def _bands(sigs: DataFrame) -> DataFrame:
         withb = sigs.select(
@@ -536,29 +528,39 @@ def incremental_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
                 n=N_BANDS,
                 args=", ".join(f"{b}, band_{b}" for b in range(N_BANDS))))
 
-    new_b = _bands(new_sigs).alias("a")
-    # shuffle_hash: the history index side is corpus-sized (sf3 audit)
-    all_b = _bands(hist_sigs.unionByName(new_sigs)).alias("b") \
-        .hint("shuffle_hash")
-    pairs = (
-        new_b.join(all_b, (F.col("a.band_id") == F.col("b.band_id"))
-                   & (F.col("a.band_hash") == F.col("b.band_hash"))
-                   & (F.col("a.doc_id") != F.col("b.doc_id")))
-        .select(F.col("a.doc_id").alias("new_doc"),
-                F.col("b.doc_id").alias("cand_doc"))
-        .distinct()
-    )
-    # shingle sets split the same way: history sets are part of the
-    # persisted index (reuse=True), batch sets are fresh per run — and the
-    # a-side of the verification join is the BATCH sets only (new_doc is
-    # always a batch doc), a batch-sized build side instead of corpus-sized
-    hashed_sets = F.array_distinct(
-        F.transform("shingles", lambda s: F.xxhash64(s))).alias("sh")
+    def candidates() -> DataFrame:
+        # persisted index over history — the whole point of the
+        # incremental shape: history is signed ONCE and re-read as parquet
+        # on every subsequent ingest, so per-run cost scales with the
+        # batch, not the corpus.  The batch stages are keyed on their
+        # inputs too, so an unchanged batch is not re-signed either.
+        hist_sigs = _staged(
+            spark, lambda: minhash_signatures(shingled(~is_new)),
+            sf_dir, "inc_index_sigs")
+        new_sigs = _staged(
+            spark, lambda: minhash_signatures(shingled(is_new)),
+            sf_dir, "inc_new_sigs")
+        new_b = _bands(new_sigs).alias("a")
+        # shuffle_hash: the history index side is corpus-sized (sf3 audit)
+        all_b = _bands(hist_sigs.unionByName(new_sigs)).alias("b") \
+            .hint("shuffle_hash")
+        return (
+            new_b.join(all_b, (F.col("a.band_id") == F.col("b.band_id"))
+                       & (F.col("a.band_hash") == F.col("b.band_hash"))
+                       & (F.col("a.doc_id") != F.col("b.doc_id")))
+            .select(F.col("a.doc_id").alias("new_doc"),
+                    F.col("b.doc_id").alias("cand_doc"))
+            .distinct()
+        )
+
+    # shingle sets split the same way — and the a-side of the verification
+    # join is the BATCH sets only (new_doc is always a batch doc), a
+    # batch-sized build side instead of corpus-sized
     hist_sets = _staged(
-        spark, lambda: shingled.where(~is_new).select("doc_id", hashed_sets),
-        sf_dir, "inc_index_sets", reuse=True)
+        spark, lambda: _hashed_shingle_sets(shingled(~is_new)),
+        sf_dir, "inc_index_sets")
     new_sets = _staged(
-        spark, lambda: shingled.where(is_new).select("doc_id", hashed_sets),
+        spark, lambda: _hashed_shingle_sets(shingled(is_new)),
         sf_dir, "inc_new_sets")
     a = new_sets.select(F.col("doc_id").alias("new_doc"),
                         F.col("sh").alias("sh_a"))
@@ -570,7 +572,7 @@ def incremental_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shuffle_hash on both shingle-set joins: corpus-sized array payload
     # (r9 sf3 audit; see fuzzy_minhash_pairs)
     return (
-        _staged(spark, lambda: pairs, sf_dir, "inc_candidates")
+        _staged(spark, candidates, sf_dir, "inc_candidates")
         .join(a.hint("shuffle_hash"), "new_doc")
         .join(b.hint("shuffle_hash"), "cand_doc")
         .withColumn("_r", ratio)
@@ -807,23 +809,20 @@ def _exact_truth_with_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     ints divide to the identical IEEE double in DuckDB), then rounds to 4
     for the emitted value.
 
-    Staged once per process per sf (reuse): three registered ops (recall
-    eval, fuzzy histogram, incremental) share this exact-truth index, and
-    a reuse hit runs none of :func:`_exact_truth_plan` — not even its
-    ``mh_eval_sets`` stage."""
+    Staged once per sf: three registered ops (recall eval, fuzzy
+    histogram, incremental) share this exact-truth index, and a hit runs
+    none of :func:`_exact_truth_plan` — not even its ``mh_eval_sets``
+    stage."""
     return _staged(spark, lambda: _exact_truth_plan(spark, sf_dir), sf_dir,
-                   "exact_truth", reuse=True)
+                   "exact_truth")
 
 
 def _exact_truth_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The lazy plan :func:`_exact_truth_with_jaccard` stages: hashed
     shingle sets (an eager ``mh_eval_sets`` stage) → capped inverted index
     → pair self-join → exact ratio at the threshold."""
-    shingled = _docs_with_shingles(spark, sf_dir)
-    hashed = _staged(spark, lambda: shingled.select(
-        "doc_id",
-        F.array_distinct(F.transform("shingles", lambda s: F.xxhash64(s)))
-        .alias("sh")), sf_dir, "mh_eval_sets")
+    hashed = _staged(spark, lambda: _hashed_shingle_sets(
+        _docs_with_shingles(spark, sf_dir)), sf_dir, "mh_eval_sets")
     sizes = hashed.select("doc_id", F.size("sh").alias("n"))
     inv = hashed.select("doc_id", F.explode("sh").alias("h"))
     hot = (inv.groupBy("h")
@@ -880,11 +879,11 @@ def minhash_eval_detail(spark: SparkSession, sf_dir: str) -> DataFrame:
     metric for the law tests; the registered op
     :func:`dedup_minhash_recall_eval` reshapes it into the banded-oracle
     form DuckDB can check."""
-    # truth and the verified pair set are staged (and per-process cached)
-    # parquet indexes shared with dedup_fuzzy_minhash
+    # truth and the verified pair set are staged parquet indexes shared
+    # with dedup_fuzzy_minhash
     t = _exact_truth_with_jaccard(spark, sf_dir).select("doc_a", "doc_b")
     p = _staged(spark, lambda: fuzzy_minhash_pairs(spark, sf_dir),
-                sf_dir, "fmh_pred", reuse=True).select("doc_a", "doc_b")
+                sf_dir, "fmh_pred").select("doc_a", "doc_b")
     # shuffle_hash: both pair sets scale with dup density x corpus
     both = (t.withColumn("in_t", F.lit(1))
             .join(p.withColumn("in_p", F.lit(1)).hint("shuffle_hash"),

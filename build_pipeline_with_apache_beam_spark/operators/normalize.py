@@ -183,15 +183,10 @@ def q_normalize_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     gate, not just in unit tests.  Every step after the text scan is a
     codegen expression.
     """
-    import os
-
     from build_pipeline_with_apache_beam_spark.catalog import load_table
-    from build_pipeline_with_apache_beam_spark.sources.sinks import (
-        SCRATCH, source_tag)
+    from build_pipeline_with_apache_beam_spark.scratch import derived
 
-    path = os.path.join(SCRATCH, f"arraylines_{source_tag(sf_dir)}")
-    if not os.path.exists(path):
-        staging = path + "_staging"
+    def write_lines(path: str) -> None:
         ev = load_table(spark, sf_dir, "events")
         rec = F.to_json(F.struct(
             F.col("event_id").cast("string").alias("_id"),
@@ -204,12 +199,9 @@ def q_normalize_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
                                F.concat_ws(",", F.collect_list(rec)),
                                F.lit("]")).alias("value"))
                  .select("value"))
-        lines.write.mode("overwrite").text(staging)
-        try:
-            os.rename(staging, path)
-        except OSError:
-            if not os.path.exists(path):
-                raise
+        lines.write.text(path)
+
+    path = derived(sf_dir, "arraylines", write_lines)
     element = T.StructType([
         T.StructField("_id", T.StringType()),
         T.StructField("type", T.StringType()),

@@ -1182,13 +1182,13 @@ def sql_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     side would stall the broadcast — the repo-wide VALUES rule).
     """
     # The 6-way fact collapse is iteration-invariant AND nation-bounded
-    # (≤ 25×24 rows at any sf), so it is a reuse=True persisted stage (r15,
-    # guide §2.3 — r14 verdict #5): built once per process by the cold
-    # pass, re-read as a tiny parquet after — the same persisted-index
-    # shape as the dedup signature stages.  The recursion itself runs
-    # fresh on every invocation.
+    # (≤ 25×24 rows at any sf), so it is a persisted stage (r15, guide
+    # §2.3 — r14 verdict #5): built once per sf by the first call, re-read
+    # as a tiny parquet after — the same persisted-index shape as the
+    # dedup signature stages.  The recursion itself runs fresh on every
+    # invocation.
     edge_rows = _staged(spark, lambda: _trade_edges(spark, sf_dir), sf_dir,
-                        "trade_edges", reuse=True
+                        "trade_edges"
                         ).collect()  # driver-bounded: ≤ 25*24 rows
     if edge_rows:
         q = lambda s: "'" + s.replace("'", "''") + "'"  # noqa: E731

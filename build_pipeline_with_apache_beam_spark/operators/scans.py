@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from build_pipeline_with_apache_beam_spark.catalog import load_table
+from build_pipeline_with_apache_beam_spark.scratch import derived
 
 # The engine-side analog of the reference's fixed extraction day
 # (retrieval.py:214-215): a closed timestamp range on event time.
@@ -113,15 +114,9 @@ def scan_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     (row-oriented text), which is exactly why the lake layer converts to
     parquet on ingest; this op exists to cover the format, not to bless it.
     """
-    import os
-
-    from build_pipeline_with_apache_beam_spark.sources.sinks import SCRATCH
-
-    sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    path = os.path.join(SCRATCH, f"csv_customer_{sf_tag}")
-    if not os.path.exists(path):
-        (load_table(spark, sf_dir, "customer")
-         .write.mode("overwrite").option("header", True).csv(path))
+    path = derived(sf_dir, "csv_customer", lambda p: (
+        load_table(spark, sf_dir, "customer")
+        .write.option("header", True).csv(p)))
     schema = ("c_custkey BIGINT, c_name STRING, c_nationkey INT, "
               "c_acctbal DOUBLE, c_mktsegment STRING")
     return (spark.read.schema(schema).option("header", True).csv(path)
@@ -139,19 +134,16 @@ def _stage_evo_orders(spark: SparkSession, sf_dir: str) -> str:
     and ``dq_schema_drift``."""
     import os
 
-    from build_pipeline_with_apache_beam_spark.sources.sinks import SCRATCH
-
-    sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    path = os.path.join(SCRATCH, f"evo_orders_{sf_tag}")
-    if not os.path.exists(path):
+    def write(path: str) -> None:
         orders = load_table(spark, sf_dir, "orders")
         (orders.where(F.col("o_orderkey") % 2 == 0)
          .select("o_orderkey", "o_totalprice")
-         .write.mode("overwrite").parquet(os.path.join(path, "gen=old")))
+         .write.parquet(os.path.join(path, "gen=old")))
         (orders.where(F.col("o_orderkey") % 2 == 1)
          .select("o_orderkey", "o_totalprice", "o_orderpriority")
-         .write.mode("overwrite").parquet(os.path.join(path, "gen=new")))
-    return path
+         .write.parquet(os.path.join(path, "gen=new")))
+
+    return derived(sf_dir, "evo_orders", write)
 
 
 def scan_schema_evolution_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -218,6 +210,15 @@ def dq_schema_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("col_name"))
 
 
+def _stage_events_by_day(spark: SparkSession, sf_dir: str) -> str:
+    """Stage (once per sf) events as a ``dt=``-partitioned parquet table —
+    the fact both partition-pruning ops read."""
+    return derived(sf_dir, "evpart", lambda p: (
+        load_table(spark, sf_dir, "events")
+        .withColumn("dt", F.date_format("ts", "yyyy-MM-dd"))
+        .write.partitionBy("dt").parquet(p)))
+
+
 def scan_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hive-style partition pruning: events written as dt=YYYY-MM-DD
     directories (the reference's lake layout, normalization.py:119-123),
@@ -228,15 +229,7 @@ def scan_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     days read.  This, not file-mtime listing (normalization.py:62-63), is
     the scalable form of time-windowed ingestion reads.
     """
-    import os
-
-    from build_pipeline_with_apache_beam_spark.sources.sinks import SCRATCH, source_tag
-
-    path = os.path.join(SCRATCH, f"evpart_{source_tag(sf_dir)}")
-    if not os.path.exists(path):
-        (load_table(spark, sf_dir, "events")
-         .withColumn("dt", F.date_format("ts", "yyyy-MM-dd"))
-         .write.mode("overwrite").partitionBy("dt").parquet(path))
+    path = _stage_events_by_day(spark, sf_dir)
     # partition-type inference would surface dt as DATE; pin to string so
     # the schema is stable across engines
     ev = spark.read.parquet(path).withColumn("dt", F.col("dt").cast("string"))
@@ -260,15 +253,7 @@ def join_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFram
     100 TB replacement for the reference's mtime-filtered listing
     (normalization.py:62-63) when the filter depends on data, not constants.
     """
-    import os
-
-    from build_pipeline_with_apache_beam_spark.sources.sinks import SCRATCH, source_tag
-
-    path = os.path.join(SCRATCH, f"evpart_{source_tag(sf_dir)}")
-    if not os.path.exists(path):
-        (load_table(spark, sf_dir, "events")
-         .withColumn("dt", F.date_format("ts", "yyyy-MM-dd"))
-         .write.mode("overwrite").partitionBy("dt").parquet(path))
+    path = _stage_events_by_day(spark, sf_dir)
     # join on the inferred DATE partition column directly — wrapping dt in a
     # cast before the join would break the attribute match DPP needs
     fact = spark.read.parquet(path)
@@ -302,25 +287,13 @@ def scan_corrupt_capture(spark: SparkSession, sf_dir: str) -> DataFrame:
     routes to a quarantine sink while the good rows continue — no job
     restarts for a few bad lines.
     """
-    import os
-
-    from build_pipeline_with_apache_beam_spark.sources.sinks import SCRATCH, source_tag
-
-    path = os.path.join(SCRATCH, f"dirty_jsonl_{source_tag(sf_dir)}")
-    if not os.path.exists(path):
-        staging = path + "_staging"
-        line = F.when(
-            F.col("event_id") % 7 == 0,
-            F.concat(F.lit("{BROKEN "), F.col("event_id").cast("string")))\
-            .otherwise(F.to_json(F.struct("event_id", "event_type", "value")))
-        (load_table(spark, sf_dir, "events")
-         .select(line.alias("value"))
-         .write.mode("overwrite").text(staging))
-        try:
-            os.rename(staging, path)
-        except OSError:
-            if not os.path.exists(path):
-                raise
+    line = F.when(
+        F.col("event_id") % 7 == 0,
+        F.concat(F.lit("{BROKEN "), F.col("event_id").cast("string")))\
+        .otherwise(F.to_json(F.struct("event_id", "event_type", "value")))
+    path = derived(sf_dir, "dirty_jsonl", lambda p: (
+        load_table(spark, sf_dir, "events")
+        .select(line.alias("value")).write.text(p)))
     parsed = (spark.read
               .schema("event_id BIGINT, event_type STRING, value DOUBLE, "
                       "_corrupt_record STRING")
@@ -382,30 +355,19 @@ def scan_json_multiline(spark: SparkSession, sf_dir: str) -> DataFrame:
     files bounded (one per API page) and converts to JSONL/parquet on
     ingest; this op stages 100 docs per file, the bounded shape.
     """
-    import os
-
-    from build_pipeline_with_apache_beam_spark.sources.sinks import SCRATCH, source_tag
-
-    path = os.path.join(SCRATCH, f"mljson_{source_tag(sf_dir, 'documents')}")
-    if not os.path.exists(path):
-        staging = path + "_staging"
-        docs = load_table(spark, sf_dir, "documents")
-        # one pretty-shaped array per 100-doc page, one file per page
-        (docs.where(F.col("doc_id") < 300)
-         .select(F.floor(F.col("doc_id") / 100).alias("page"),
-                 F.to_json(F.struct("doc_id", "lang", "n_chars")).alias("j"))
-         .groupBy("page")
-         .agg(F.concat(F.lit("[\n  "),
-                       F.concat_ws(",\n  ", F.collect_list("j")),
-                       F.lit("\n]")).alias("value"))
-         .select("value")
-         .repartition(3)
-         .write.mode("overwrite").text(staging))
-        try:
-            os.rename(staging, path)
-        except OSError:
-            if not os.path.exists(path):
-                raise
+    # one pretty-shaped array per 100-doc page, one file per page
+    path = derived(sf_dir, "mljson", lambda p: (
+        load_table(spark, sf_dir, "documents")
+        .where(F.col("doc_id") < 300)
+        .select(F.floor(F.col("doc_id") / 100).alias("page"),
+                F.to_json(F.struct("doc_id", "lang", "n_chars")).alias("j"))
+        .groupBy("page")
+        .agg(F.concat(F.lit("[\n  "),
+                      F.concat_ws(",\n  ", F.collect_list("j")),
+                      F.lit("\n]")).alias("value"))
+        .select("value")
+        .repartition(3)
+        .write.text(p)))
     return (spark.read.option("multiLine", "true")
             .schema("doc_id BIGINT, lang STRING, n_chars BIGINT")
             .json(path)
@@ -425,25 +387,13 @@ def scan_binary_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     generation: the first N_BINARY_FILES documents written as one .bin file
     each (at 100 TB the equivalent staging is the upstream object store).
     """
-    import os
-
-    from build_pipeline_with_apache_beam_spark.sources.sinks import SCRATCH, source_tag
-
-    path = os.path.join(SCRATCH, f"binfiles_{source_tag(sf_dir, 'documents')}")
-    if not os.path.exists(path):
-        staging = path + "_staging"
-        (load_table(spark, sf_dir, "documents")
-         .where(F.col("doc_id") < N_BINARY_FILES)
-         .select(F.col("doc_id").cast("string").alias("name"),
-                 F.encode("text", "utf-8").alias("payload"))
-         .repartition(8)
-         .foreachPartition(lambda rows: _write_bin_files(staging, rows)))
-        try:
-            os.rename(staging, path)
-        except OSError:
-            # a concurrent builder won the rename; its output is identical
-            if not os.path.exists(path):
-                raise
+    path = derived(sf_dir, "binfiles", lambda p: (
+        load_table(spark, sf_dir, "documents")
+        .where(F.col("doc_id") < N_BINARY_FILES)
+        .select(F.col("doc_id").cast("string").alias("name"),
+                F.encode("text", "utf-8").alias("payload"))
+        .repartition(8)
+        .foreachPartition(lambda rows: _write_bin_files(p, rows))))
     binf = (spark.read.format("binaryFile")
             .option("pathGlobFilter", "*.bin").load(path))
     return (
@@ -475,15 +425,8 @@ def scan_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     (PushedFilters in the scan node), and column pruning reads only the
     three projected streams.  Covers the second columnar lake format a
     migrating warehouse user brings alongside parquet."""
-    import os
-
-    from build_pipeline_with_apache_beam_spark.sources.sinks import SCRATCH
-
-    sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    path = os.path.join(SCRATCH, f"orc_orders_{sf_tag}")
-    if not os.path.exists(path):
-        (load_table(spark, sf_dir, "orders")
-         .write.mode("overwrite").orc(path))
+    path = derived(sf_dir, "orc_orders", lambda p: (
+        load_table(spark, sf_dir, "orders").write.orc(p)))
     return (spark.read.orc(path)
             .where(F.col("o_totalprice") > 50000.0)
             .select("o_orderkey", "o_orderstatus",
@@ -504,17 +447,10 @@ def scan_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     escapes markup in string values, so round-tripping free-text columns
     (p_name, p_type) is part of what the oracle verifies.
     """
-    import os
-
-    from build_pipeline_with_apache_beam_spark.sources.sinks import SCRATCH
-
-    sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    path = os.path.join(SCRATCH, f"xml_part_{sf_tag}")
-    if not os.path.exists(path):
-        (load_table(spark, sf_dir, "part")
-         .write.mode("overwrite")
-         .option("rootTag", "parts").option("rowTag", "part")
-         .format("xml").save(path))
+    path = derived(sf_dir, "xml_part", lambda p: (
+        load_table(spark, sf_dir, "part")
+        .write.option("rootTag", "parts").option("rowTag", "part")
+        .format("xml").save(p)))
     schema = ("p_partkey BIGINT, p_name STRING, p_brand STRING, "
               "p_type STRING, p_size INT, p_retailprice DOUBLE")
     return (spark.read.schema(schema).option("rowTag", "part")
@@ -536,19 +472,13 @@ def scan_text_regex_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     pinned by the oracle: %.4f rendering then cast-back must equal
     ROUND(value, 4) of the base table on every row.
     """
-    import os
-
-    from build_pipeline_with_apache_beam_spark.sources.sinks import SCRATCH
-
-    sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    path = os.path.join(SCRATCH, f"textlog_events_{sf_tag}")
-    if not os.path.exists(path):
-        (load_table(spark, sf_dir, "events")
-         .select(F.format_string(
-             "id=%d ts=%d user=%d type=%s value=%.4f",
-             "event_id", F.unix_micros("ts"), "user_id", "event_type",
-             "value").alias("value"))
-         .write.mode("overwrite").text(path))
+    path = derived(sf_dir, "textlog_events", lambda p: (
+        load_table(spark, sf_dir, "events")
+        .select(F.format_string(
+            "id=%d ts=%d user=%d type=%s value=%.4f",
+            "event_id", F.unix_micros("ts"), "user_id", "event_type",
+            "value").alias("value"))
+        .write.text(p)))
     # ids/value capture an optional sign (round-12 advice: %d renders
     # negatives with '-' and an unsigned capture would extract '' → NULL
     # → silent row drop through the event_type filter; a domain change

@@ -14,6 +14,8 @@ import os
 
 import duckdb
 
+from build_pipeline_with_apache_beam_spark.scratch import run_dir
+
 TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings")
 
@@ -35,15 +37,11 @@ def oracle_sf_dir() -> str:
 
 def duck_connect(sf_dir: str) -> duckdb.DuckDBPyConnection:
     con = duckdb.connect()
-    # Spill to a per-process temp dir: concurrent oracle processes sharing
+    # Spill to a per-process run dir: concurrent oracle processes sharing
     # DuckDB's cwd-default ".tmp" overwrite each other's numbered
     # duckdb_temp_storage-N.tmp files (observed during the round-4 sf1
     # sweep: disk-fill + IOException when two sweeps ran side by side).
-    tmp = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        ".scratch", f"ducktmp-{os.getpid()}")
-    os.makedirs(tmp, exist_ok=True)
-    con.execute(f"SET temp_directory='{tmp}'")
+    con.execute(f"SET temp_directory='{run_dir(sf_dir, 'ducktmp')}'")
     for t in TABLES:
         path = os.path.join(sf_dir, f"{t}.parquet")
         if os.path.isdir(path):

@@ -33,7 +33,6 @@ shuffle so they are collected in the write's result stage (see
 
 from __future__ import annotations
 
-import atexit
 import os
 import shutil
 from datetime import datetime, timezone
@@ -42,6 +41,8 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from build_pipeline_with_apache_beam_spark.scratch import run_dir
+
 _WINDOW_LO = "2024-01-08 00:00:00"
 _WINDOW_HI = "2024-01-14 23:59:59.999999"
 
@@ -49,27 +50,6 @@ _WINDOW_HI = "2024-01-14 23:59:59.999999"
 # stream's lake the event time it merges on)
 _RECORD_DDL = "event_id BIGINT, user_id BIGINT, value DOUBLE"
 _STREAM_LAKE_DDL = f"{_RECORD_DDL}, ts TIMESTAMP, dt STRING"
-
-_RUN_DIRS: list[str] = []
-
-
-def _run_dir(prefix: str, tag: str) -> str:
-    """PROCESS-scoped scratch dir for one ETL run artifact.
-
-    Scoped by pid, not just sf tag: two engines running the same op at
-    the same sf (correctness sweep beside a scale probe) raced on
-    rmtree + write + re-read of the shared ``etl_lake_{tag}`` dir —
-    FileNotFoundException or an undercounted ``n_sunk``.  Each process
-    owns its dirs and removes them at exit (bounded accumulation).
-    """
-    from build_pipeline_with_apache_beam_spark.sources.sinks import SCRATCH
-    path = os.path.join(SCRATCH, f"{prefix}_{tag}_{os.getpid()}")
-    if not _RUN_DIRS:
-        atexit.register(lambda: [shutil.rmtree(p, ignore_errors=True)
-                                 for p in _RUN_DIRS])
-    _RUN_DIRS.append(path)
-    return path
-
 
 def _with_validity(df: DataFrame) -> DataFrame:
     """Stage 2, shared by the batch and streaming runs: serialize each
@@ -141,7 +121,6 @@ def pipeline_reference_etl(spark: SparkSession, sf_dir: str) -> DataFrame:
     five values are known once the write, the re-read and the watermark
     commit have run.
     """
-    from build_pipeline_with_apache_beam_spark.sources.sinks import source_tag
     from build_pipeline_with_apache_beam_spark.streaming.watermark import (
         WatermarkStore,
     )
@@ -151,20 +130,16 @@ def pipeline_reference_etl(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # stage 4: partitioned JSON lake write, then re-read (never trust an
     # unverified sink — n_sunk comes off the re-read, counted eagerly: a
-    # later same-process rerun rmtree's the same pid-scoped dir)
-    tag = source_tag(sf_dir)
-    lake = _run_dir("etl_lake", tag)
-    shutil.rmtree(lake, ignore_errors=True)
-    survivors.write.partitionBy("dt").json(lake)
+    # later rerun in this process empties the same run dir)
+    lake = run_dir(sf_dir, "etl_lake")
+    survivors.write.partitionBy("dt").mode("overwrite").json(lake)
     counts = funnel.get
     n_sunk = spark.read.schema(f"{_RECORD_DDL}, dt STRING").json(
         lake).count()
 
     # stage 5: watermark commit AFTER the verified sink (the reference
     # marks done before its pipeline runs — documented non-goal)
-    wm_root = _run_dir("etl_wm", tag)
-    shutil.rmtree(wm_root, ignore_errors=True)
-    store = WatermarkStore(wm_root)
+    store = WatermarkStore(run_dir(sf_dir, "etl_wm"))
     win_lo = datetime(2024, 1, 8, tzinfo=timezone.utc)
     win_hi = datetime(2024, 1, 14, 23, 59, 59, 999999, tzinfo=timezone.utc)
     store.commit(win_lo, win_hi, record_count=n_sunk)
@@ -483,17 +458,12 @@ def pipeline_reference_etl_stream(spark: SparkSession, sf_dir: str,
         MANIFEST,
         build_collection,
     )
-    from build_pipeline_with_apache_beam_spark.sources.sinks import source_tag
     from build_pipeline_with_apache_beam_spark.streaming.watermark import (
         WatermarkStore,
     )
 
-    tag = source_tag(sf_dir)
-    lake = _run_dir("etls_lake", tag)
-    wm_root = _run_dir("etls_wm", tag)
-    ckpt = _run_dir("etls_ckpt", tag)
-    for d in (lake, wm_root, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
+    lake, wm_root, ckpt = (run_dir(sf_dir, kind)
+                           for kind in ("etls_lake", "etls_wm", "etls_ckpt"))
 
     root = build_collection(spark, sf_dir)
     with open(os.path.join(root, MANIFEST)) as fh:

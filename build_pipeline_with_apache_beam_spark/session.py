@@ -17,6 +17,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from build_pipeline_with_apache_beam_spark.scratch import SPARK_LOCAL, WAREHOUSE
+
 # Shuffle partitions: on local[N] match core count (each partition is a task;
 # 200 tiny tasks on 32 cores is pure overhead).  On a 1000-executor cluster
 # this would be sized ~2-3x total cores instead; AQE coalesces down from it.
@@ -77,15 +79,11 @@ def get_spark(app_name: str = "build_pipeline_with_apache_beam_spark",
         # type, so scan them as long and let the catalog convert to micros.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # managed tables (bucketed-join layouts) go to scratch, not CWD
-        .config("spark.sql.warehouse.dir",
-                os.path.join(os.path.dirname(os.path.dirname(
-                    os.path.abspath(__file__))), ".scratch", "warehouse"))
+        .config("spark.sql.warehouse.dir", WAREHOUSE)
         # shuffle/spill files live under the repo scratch dir, NOT /tmp:
         # long stages (e.g. the sf10 range-join spill) outlive the host's
         # /tmp reaper, which deletes blockmgr temp files mid-stage
-        .config("spark.local.dir",
-                os.path.join(os.path.dirname(os.path.dirname(
-                    os.path.abspath(__file__))), ".scratch", "spark-local"))
+        .config("spark.local.dir", SPARK_LOCAL)
         # let custom Python DataSources receive pushFilters() — off by
         # default in Spark 4.1; required for the docstore source's
         # manifest-based file pruning

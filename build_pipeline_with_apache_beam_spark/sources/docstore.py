@@ -49,7 +49,7 @@ from pyspark.sql.datasource import (
 )
 
 from build_pipeline_with_apache_beam_spark.catalog import load_table
-from build_pipeline_with_apache_beam_spark.sources.sinks import SCRATCH, source_tag
+from build_pipeline_with_apache_beam_spark.scratch import derived, run_dir
 
 SCHEMA_DDL = ("event_id BIGINT, ts_micros BIGINT, user_id BIGINT, "
               "event_type STRING, value DOUBLE")
@@ -251,19 +251,16 @@ def build_collection(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the events table as a JSONL collection + stats manifest.
 
     One file per event-day (the reference's lake layout, dt=-shaped), each
-    with min/max ts recorded — built distributed, listed once.
+    with min/max ts recorded — built distributed, listed once, and
+    committed as a derived artifact, so every process reuses it.
     """
-    root = os.path.join(SCRATCH, f"docstore_{source_tag(sf_dir)}")
-    if os.path.exists(os.path.join(root, MANIFEST)):
-        with open(os.path.join(root, MANIFEST)) as fh:
-            existing = json.load(fh)
-        if all("n" in m for m in existing):
-            return root
-        # stale pre-row-count manifest (round-13: count-from-manifest
-        # needs per-entry row counts) — rebuild the collection once
-        import shutil as _shutil
+    return derived(sf_dir, "docstore", lambda root: _write_collection(
+        spark, sf_dir, root))
 
-        _shutil.rmtree(root, ignore_errors=True)
+
+def _write_collection(spark: SparkSession, sf_dir: str, root: str) -> None:
+    import shutil
+
     ev = load_table(spark, sf_dir, "events").select(
         "event_id",
         (F.unix_micros("ts")).alias("ts_micros"),
@@ -288,20 +285,19 @@ def build_collection(spark: SparkSession, sf_dir: str) -> str:
             continue
         day = dt_dir.split("=", 1)[1]
         out_name = f"{day}.jsonl"
-        import shutil as _shutil
-
         with open(os.path.join(root, out_name), "wb") as out:
             for part in sorted(os.listdir(os.path.join(staging, dt_dir))):
                 if not part.endswith(".json"):
                     continue
                 with open(os.path.join(staging, dt_dir, part), "rb") as fh:
-                    _shutil.copyfileobj(fh, out)
+                    shutil.copyfileobj(fh, out)
         lo, hi, n = stats[day]
         manifest.append({"file": out_name, "min_ts": lo, "max_ts": hi,
                          "n": n})
+    # the day files hold every byte; the Spark output is a second copy
+    shutil.rmtree(staging)
     with open(os.path.join(root, MANIFEST), "w") as fh:
         json.dump(manifest, fh)
-    return root
 
 
 def _register_stream_source(spark: SparkSession) -> None:
@@ -472,7 +468,6 @@ def stream_docstore_tail(spark: SparkSession, sf_dir: str,
     ``complete`` output mode carries state across batches, so the final
     sink equals a batch GROUP BY over events at ANY trigger size — which
     is the DuckDB oracle."""
-    import shutil
     import time
 
     from build_pipeline_with_apache_beam_spark.plans.etl import (
@@ -485,11 +480,8 @@ def stream_docstore_tail(spark: SparkSession, sf_dir: str,
         total_files = len(json.load(fh))
     cap = resolve_trigger_files(trigger_files, total_files,
                                 default_batches=1)
-    sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    sink_dir = os.path.join(SCRATCH, f"docstream_sink_{sf_tag}")
-    ckpt_dir = os.path.join(SCRATCH, f"docstream_ckpt_{sf_tag}")
-    for d in (sink_dir, ckpt_dir):
-        shutil.rmtree(d, ignore_errors=True)
+    sink_dir = run_dir(sf_dir, "docstream_sink")
+    ckpt_dir = run_dir(sf_dir, "docstream_ckpt")
 
     stream = open_docstore(spark, sf_dir, stream=True, path=root,
                            tail_cap=str(cap if cap < total_files else 0))
@@ -767,15 +759,9 @@ def sink_docstore_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     from build_pipeline_with_apache_beam_spark.catalog import load_table
-    from build_pipeline_with_apache_beam_spark.sources.sinks import (
-        SCRATCH,
-        source_tag,
-    )
 
-    src = build_collection(spark, sf_dir)
-    root = os.path.join(SCRATCH, f"docstore_append_{source_tag(sf_dir)}")
-    shutil.rmtree(root, ignore_errors=True)
-    shutil.copytree(src, root)
+    root = run_dir(sf_dir, "docstore_append")
+    shutil.copytree(build_collection(spark, sf_dir), root, dirs_exist_ok=True)
 
     ev = load_table(spark, sf_dir, "events")
     late = (ev.orderBy(F.col("event_id").desc()).limit(200)

@@ -17,31 +17,11 @@ Reference mapping:
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from build_pipeline_with_apache_beam_spark.catalog import load_table
-
-def source_tag(sf_dir: str, table: str = "events") -> str:
-    """Cache key for SCRATCH artifacts derived from a testdata table:
-    sf tag + source file (mtime, size), so a driver-regenerated testdata
-    drop (e.g. a schema change) invalidates every derived cache instead of
-    silently serving stale layouts."""
-    sf = os.path.basename(sf_dir.rstrip("/"))
-    src = os.path.join(sf_dir, f"{table}.parquet")
-    try:
-        st = os.stat(src)
-        return f"{sf}_{int(st.st_mtime)}_{st.st_size}"
-    except OSError:
-        return sf
-
-
-SCRATCH = os.path.join(os.path.dirname(os.path.dirname(
-    os.path.dirname(os.path.abspath(__file__)))), ".scratch")
-
+from build_pipeline_with_apache_beam_spark.scratch import run_dir
 
 def write_partitioned_json(df: DataFrame, path: str, ts_col: str = "ts") -> None:
     """Event-time-partitioned JSONL lake write (dt=/hr= layout, N3)."""
@@ -89,8 +69,7 @@ def q_sink_partitioned_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     # processing window (the incremental runner feeds one window at a time).
     ev = (load_table(spark, sf_dir, "events")
           .where(F.col("ts") < F.lit("2024-01-04 00:00:00").cast("timestamp")))
-    sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    path = os.path.join(SCRATCH, f"lake_{sf_tag}", "events_json")
+    path = run_dir(sf_dir, "sink_lake")
     write_partitioned_json(ev.select("event_id", "value", "ts"), path)
 
     # explicit schema: inference would re-scan every part file a second time
@@ -103,10 +82,6 @@ def q_sink_partitioned_write(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("dt").cast("string").alias("dt"),
         F.col("hr").cast("int").alias("hr"),
     )
-
-
-def cleanup_scratch() -> None:
-    shutil.rmtree(SCRATCH, ignore_errors=True)
 
 
 QUERIES = {

@@ -45,6 +45,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from build_pipeline_with_apache_beam_spark.scratch import run_dir
+
 
 class CommitConflict(Exception):
     """Another writer committed this version first."""
@@ -239,17 +241,9 @@ def _demo_changeset(spark: SparkSession, sf_dir: str):
 
 
 def _demo_table(spark: SparkSession, sf_dir: str, name: str) -> "TxTable":
-    """Fresh TxTable under scratch with the demo change-set applied."""
-    from build_pipeline_with_apache_beam_spark.sources.sinks import (
-        SCRATCH,
-        source_tag,
-    )
-
-    root = os.path.join(SCRATCH, "txtable",
-                        source_tag(sf_dir, "customer"), name)
-    shutil.rmtree(root, ignore_errors=True)
+    """Fresh TxTable in a run dir with the demo change-set applied."""
     base, changes = _demo_changeset(spark, sf_dir)
-    table = TxTable(spark, root)
+    table = TxTable(spark, run_dir(sf_dir, f"txtable_{name}"))
     table.create(base)
     table.merge(changes, key="c_custkey")
     return table
@@ -304,16 +298,8 @@ def merge_acid_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     file count depends on parquet encoding sizes, so it rides as the
     ``files_reduced`` law boolean the oracle pins TRUE; the raw count
     stays available via ``TxTable.data_file_count`` (tests assert it)."""
-    from build_pipeline_with_apache_beam_spark.sources.sinks import (
-        SCRATCH,
-        source_tag,
-    )
-
-    root = os.path.join(SCRATCH, "txtable",
-                        source_tag(sf_dir, "customer"), "compactdemo")
-    shutil.rmtree(root, ignore_errors=True)
     base, changes = _demo_changeset(spark, sf_dir)
-    table = TxTable(spark, root)
+    table = TxTable(spark, run_dir(sf_dir, "txtable_compactdemo"))
     table.create(base.repartition(64))  # deliberately fragmented
     v_before = table.latest_version()
     files_before = table.data_file_count(v_before)

@@ -94,27 +94,25 @@ def q_incremental_runlog(spark, sf_dir: str) -> DataFrame:
     retrieval.py:53-60 / normalization.py:24-43), produced by the
     watermark-committing runner instead of hand-written SQLite rows.
 
-    Built once per testdata generation; re-running a round reuses the
-    committed store and (correctly) processes nothing new — idempotence is
-    the point of the watermark.
+    The committed store is a derived artifact: built once per testdata
+    generation, and a re-run reads it back instead of running the flow
+    again (which would process nothing new — idempotence is the point of
+    the watermark).
     """
-    import os
-
     from build_pipeline_with_apache_beam_spark.catalog import load_table
-    from build_pipeline_with_apache_beam_spark.sources.sinks import (
-        SCRATCH, source_tag)
+    from build_pipeline_with_apache_beam_spark.scratch import derived
 
-    store_dir = os.path.join(SCRATCH, f"runlog_{source_tag(sf_dir)}")
-    store = WatermarkStore(store_dir, default_epoch=_RUN_EPOCH)
-    runner = IncrementalRunner(
-        store,
-        source=lambda: load_table(spark, sf_dir, "events"),
-        sink=lambda df, ws, we: df.count(),   # count action gates the commit
-        ts_col="ts",
-        window=timedelta(hours=_RUN_WINDOW_H))
-    runner.run_once(now=_RUN_EPOCH + timedelta(hours=_RUN_SPAN_H))
+    def run(path: str) -> None:
+        IncrementalRunner(
+            WatermarkStore(path, default_epoch=_RUN_EPOCH),
+            source=lambda: load_table(spark, sf_dir, "events"),
+            sink=lambda df, ws, we: df.count(),  # count action gates the commit
+            ts_col="ts",
+            window=timedelta(hours=_RUN_WINDOW_H),
+        ).run_once(now=_RUN_EPOCH + timedelta(hours=_RUN_SPAN_H))
 
-    recs = store.history()
+    recs = WatermarkStore(derived(sf_dir, "runlog", run),
+                          default_epoch=_RUN_EPOCH).history()
     rows = ",\n".join(
         "('{ws}', '{we}', {n})".format(
             ws=r["window_start"], we=r["window_end"], n=r["record_count"])

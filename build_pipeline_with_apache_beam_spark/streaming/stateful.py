@@ -25,6 +25,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from build_pipeline_with_apache_beam_spark.scratch import derived, run_dir
 from build_pipeline_with_apache_beam_spark.streaming.drain import (
     await_drained,
 )
@@ -70,19 +71,13 @@ def q_stream_stateful_user_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     the DuckDB oracle.  (With more batches the sink would hold one row per
     (user, batch); the last one still matches — production would upsert.)
     """
-    from build_pipeline_with_apache_beam_spark.sources.sinks import SCRATCH
-
-    sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    src_dir = os.path.join(SCRATCH, f"state_src_{sf_tag}")
-    sink_dir = os.path.join(SCRATCH, f"state_sink_{sf_tag}")
-    ckpt_dir = os.path.join(SCRATCH, f"state_ckpt_{sf_tag}")
-    for d in (src_dir, sink_dir, ckpt_dir):
-        shutil.rmtree(d, ignore_errors=True)
     from build_pipeline_with_apache_beam_spark.streaming.windows import (
-        _stage_events_source,
+        _events_source,
     )
 
-    _stage_events_source(sf_dir, src_dir)
+    src_dir = _events_source(sf_dir)
+    sink_dir = run_dir(sf_dir, "state_sink")
+    ckpt_dir = run_dir(sf_dir, "state_ckpt")
 
     raw_schema = spark.read.parquet(src_dir).schema
     stream = (spark.readStream.schema(raw_schema).parquet(src_dir)
@@ -150,19 +145,13 @@ def q_stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame
         def close(self) -> None:
             pass
 
-    from build_pipeline_with_apache_beam_spark.sources.sinks import SCRATCH
-
-    sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    src_dir = os.path.join(SCRATCH, f"tws_src_{sf_tag}")
-    sink_dir = os.path.join(SCRATCH, f"tws_sink_{sf_tag}")
-    ckpt_dir = os.path.join(SCRATCH, f"tws_ckpt_{sf_tag}")
-    for d in (src_dir, sink_dir, ckpt_dir):
-        shutil.rmtree(d, ignore_errors=True)
     from build_pipeline_with_apache_beam_spark.streaming.windows import (
-        _stage_events_source,
+        _events_source,
     )
 
-    _stage_events_source(sf_dir, src_dir)
+    src_dir = _events_source(sf_dir)
+    sink_dir = run_dir(sf_dir, "tws_sink")
+    ckpt_dir = run_dir(sf_dir, "tws_ckpt")
 
     # transformWithState requires the RocksDB state store provider
     prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
@@ -219,22 +208,19 @@ def q_stream_upsert_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame
     from pyspark.sql import functions as F
 
     from build_pipeline_with_apache_beam_spark.catalog import load_table
-    from build_pipeline_with_apache_beam_spark.sources.sinks import SCRATCH
-
-    sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    src_dir = os.path.join(SCRATCH, f"upsert_src_{sf_tag}")
-    state_dir = os.path.join(SCRATCH, f"upsert_state_{sf_tag}")
-    ckpt_dir = os.path.join(SCRATCH, f"upsert_ckpt_{sf_tag}")
-    for d in (src_dir, state_dir, ckpt_dir):
-        shutil.rmtree(d, ignore_errors=True)
-    os.makedirs(src_dir)
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value")
-    ev.where(F.col("event_id") % 2 == 0).coalesce(1).write.parquet(  # fixture-only
-        os.path.join(src_dir, "batch_a"))
-    ev.where(F.col("event_id") % 2 == 1).coalesce(1).write.parquet(  # fixture-only
-        os.path.join(src_dir, "batch_b"))
+
+    def write_batches(path: str) -> None:
+        for name, parity in (("batch_a", 0), ("batch_b", 1)):
+            (ev.where(F.col("event_id") % 2 == parity)
+             .coalesce(1)  # fixture-only
+             .write.parquet(os.path.join(path, name)))
+
+    src_dir = derived(sf_dir, "upsert_src", write_batches)
+    state_dir = run_dir(sf_dir, "upsert_state")
+    ckpt_dir = run_dir(sf_dir, "upsert_ckpt")
 
     schema = ev.schema
     stream = (spark.readStream.schema(schema)

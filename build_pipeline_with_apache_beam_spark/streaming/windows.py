@@ -32,6 +32,7 @@ from build_pipeline_with_apache_beam_spark.streaming.drain import (
 )
 
 from build_pipeline_with_apache_beam_spark.catalog import load_table
+from build_pipeline_with_apache_beam_spark.scratch import derived, run_dir
 
 STATE_PARTITIONS = 8
 
@@ -75,6 +76,24 @@ def _stage_events_source(sf_dir: str, src_dir: str) -> None:
                             os.path.join(src_dir, f"events-{i:05d}.parquet"))
     else:
         shutil.copy(src, os.path.join(src_dir, "events.parquet"))
+
+
+def _events_source(sf_dir: str) -> str:
+    """The events table as a committed stream-source dir, shared by every
+    stream that replays the whole table in one micro-batch."""
+    return derived(sf_dir, "events_src",
+                   lambda p: _stage_events_source(sf_dir, p))
+
+
+def _sliced_source(sf_dir: str, name: str, ev: DataFrame, n: int) -> str:
+    """``ev`` as a committed stream-source dir of ``n`` time-ordered
+    ``part=`` slices, one file each: a ``maxFilesPerTrigger=1`` stream
+    consumes one slice per micro-batch."""
+    return derived(sf_dir, name, lambda p: (
+        _time_sliced(ev, n)
+        .repartition(1)  # fixture-only
+        .sortWithinPartitions("ts")
+        .write.partitionBy("part").parquet(p)))
 
 
 def _time_sliced(df: DataFrame, n: int, ts_col: str = "ts") -> DataFrame:
@@ -167,17 +186,9 @@ def q_stream_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs distributed (this is where a Kafka/Pub-Sub producer with
     per-partition client init would go — see sources.sinks.publish_foreach_partition).
     """
-    from build_pipeline_with_apache_beam_spark.sources.sinks import SCRATCH
-
-    from build_pipeline_with_apache_beam_spark.sources.sinks import source_tag
-
-    sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    src_dir = os.path.join(SCRATCH, f"stream_src_{source_tag(sf_dir)}")
-    sink_dir = os.path.join(SCRATCH, f"stream_sink_{sf_tag}")
-    ckpt_dir = os.path.join(SCRATCH, f"stream_ckpt_{sf_tag}")
-    for d in (src_dir, sink_dir, ckpt_dir):
-        shutil.rmtree(d, ignore_errors=True)
-    _stage_events_source(sf_dir, src_dir)
+    src_dir = _events_source(sf_dir)
+    sink_dir = run_dir(sf_dir, "stream_sink")
+    ckpt_dir = run_dir(sf_dir, "stream_ckpt")
 
     # raw parquet schema (ts is INT64 nanos under nanosAsLong): the stream
     # must declare what is physically in the files, not the converted view
@@ -209,25 +220,12 @@ def q_stream_window_append_watermark(spark: SparkSession, sf_dir: str) -> DataFr
     the reference's hand-rolled 20-minute driver loops (retrieval.py:189-196,
     normalization.py:142-165), which have no late-data story at all.
     """
-    from build_pipeline_with_apache_beam_spark.sources.sinks import SCRATCH
-
-    from build_pipeline_with_apache_beam_spark.sources.sinks import source_tag
-
-    sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    src_dir = os.path.join(SCRATCH, f"wmwin_src2_{source_tag(sf_dir)}")
-    sink_dir = os.path.join(SCRATCH, f"wmwin_sink_{sf_tag}")
-    ckpt_dir = os.path.join(SCRATCH, f"wmwin_ckpt_{sf_tag}")
-    for d in (sink_dir, ckpt_dir):
-        shutil.rmtree(d, ignore_errors=True)
-
-    if not os.path.exists(src_dir):
-        ev = load_table(spark, sf_dir, "events")
-        # 4 time-ordered slices => 4 micro-batches (two-phase quantile
-        # slicing; cached across invocations — only sink/ckpt reset per run)
-        (_time_sliced(ev, 4)
-         .repartition(1)  # fixture-only
-         .sortWithinPartitions("ts")
-         .write.mode("overwrite").partitionBy("part").parquet(src_dir))
+    # 4 time-ordered slices => 4 micro-batches (two-phase quantile
+    # slicing; committed once — only sink/ckpt reset per run)
+    src_dir = _sliced_source(sf_dir, "wmwin_src",
+                             load_table(spark, sf_dir, "events"), 4)
+    sink_dir = run_dir(sf_dir, "wmwin_sink")
+    ckpt_dir = run_dir(sf_dir, "wmwin_ckpt")
 
     schema = spark.read.parquet(src_dir).schema
     stream = (spark.readStream.schema(schema)
@@ -267,26 +265,13 @@ def q_stream_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame
     retention — the reference's SQLite watermark (retrieval.py:30-60) can't
     express this because its driver loop sees one window at a time.
     """
-    from build_pipeline_with_apache_beam_spark.sources.sinks import SCRATCH
-
-    sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    from build_pipeline_with_apache_beam_spark.sources.sinks import source_tag
-
-    src_tag = source_tag(sf_dir)
-    dirs = {n: os.path.join(SCRATCH, f"ssj2_{n}_{src_tag if n in ('click', 'purch') else sf_tag}")
-            for n in ("click", "purch", "sink", "ckpt")}
-    for n in ("sink", "ckpt"):
-        shutil.rmtree(dirs[n], ignore_errors=True)
-
     ev = load_table(spark, sf_dir, "events")
     # two time-ordered slices per side => two micro-batches per stream
-    # (slice writes cached across invocations; only sink/ckpt reset)
-    for etype, path in (("click", dirs["click"]), ("purchase", dirs["purch"])):
-        if not os.path.exists(path):
-            (_time_sliced(ev.where(F.col("event_type") == etype), 2)
-             .repartition(1)  # fixture-only
-             .sortWithinPartitions("ts")
-             .write.mode("overwrite").partitionBy("part").parquet(path))
+    # (slice writes committed once; only sink/ckpt reset)
+    dirs = {n: _sliced_source(sf_dir, f"ssj_{n}",
+                              ev.where(F.col("event_type") == etype), 2)
+            for n, etype in (("click", "click"), ("purch", "purchase"))}
+    dirs.update((n, run_dir(sf_dir, f"ssj_{n}")) for n in ("sink", "ckpt"))
 
     def read_stream(path: str, prefix: str) -> DataFrame:
         schema = spark.read.parquet(path).schema
@@ -332,24 +317,11 @@ def q_stream_session_window_watermark(spark: SparkSession, sf_dir: str) -> DataF
     size is bounded by (delay + gap) of per-user history: the watermark is
     what makes session windows possible on an unbounded stream at all.
     """
-    from build_pipeline_with_apache_beam_spark.sources.sinks import SCRATCH
-
-    from build_pipeline_with_apache_beam_spark.sources.sinks import source_tag
-
-    sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    src_dir = os.path.join(SCRATCH, f"sesswin_src2_{source_tag(sf_dir)}")
-    sink_dir = os.path.join(SCRATCH, f"sesswin_sink_{sf_tag}")
-    ckpt_dir = os.path.join(SCRATCH, f"sesswin_ckpt_{sf_tag}")
-    for d in (sink_dir, ckpt_dir):
-        shutil.rmtree(d, ignore_errors=True)
-
-    if not os.path.exists(src_dir):
-        ev = load_table(spark, sf_dir, "events").where(
-            F.col("event_type") == "purchase")
-        (_time_sliced(ev, 3)
-         .repartition(1)  # fixture-only
-         .sortWithinPartitions("ts")
-         .write.mode("overwrite").partitionBy("part").parquet(src_dir))
+    src_dir = _sliced_source(
+        sf_dir, "sesswin_src", load_table(spark, sf_dir, "events").where(
+            F.col("event_type") == "purchase"), 3)
+    sink_dir = run_dir(sf_dir, "sesswin_sink")
+    ckpt_dir = run_dir(sf_dir, "sesswin_ckpt")
 
     schema = spark.read.parquet(src_dir).schema
     stream = (spark.readStream.schema(schema)
@@ -386,21 +358,9 @@ def q_stream_static_enrich_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     correct for any micro-batch slicing.  Streaming state is the
     |segments|-row aggregate — bounded by the dimension, never the stream.
     """
-    from build_pipeline_with_apache_beam_spark.sources.sinks import (
-        SCRATCH,
-        source_tag,
-    )
-
-    sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    src_dir = os.path.join(SCRATCH, f"enrich_src_{source_tag(sf_dir)}")
-    sink_dir = os.path.join(SCRATCH, f"enrich_sink_{sf_tag}")
-    ckpt_dir = os.path.join(SCRATCH, f"enrich_ckpt_{sf_tag}")
-    for d in (sink_dir, ckpt_dir):
-        shutil.rmtree(d, ignore_errors=True)
-    if not (os.path.isdir(src_dir)
-            and any(f.endswith(".parquet") for f in os.listdir(src_dir))):
-        shutil.rmtree(src_dir, ignore_errors=True)
-        _stage_events_source(sf_dir, src_dir)
+    src_dir = _events_source(sf_dir)
+    sink_dir = run_dir(sf_dir, "enrich_sink")
+    ckpt_dir = run_dir(sf_dir, "enrich_ckpt")
 
     # static dimension: user → segment (derived deterministically so the
     # batch oracle can rebuild it)
@@ -456,24 +416,10 @@ def q_stream_cep_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     from build_pipeline_with_apache_beam_spark.operators.behavioral import (
         CEP_PATTERN,
     )
-    from build_pipeline_with_apache_beam_spark.sources.sinks import (
-        SCRATCH,
-        source_tag,
-    )
-
-    sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    src_dir = os.path.join(SCRATCH, f"cep_src_{source_tag(sf_dir)}")
-    sink_dir = os.path.join(SCRATCH, f"cep_sink_{sf_tag}")
-    ckpt_dir = os.path.join(SCRATCH, f"cep_ckpt_{sf_tag}")
-    for d in (sink_dir, ckpt_dir):
-        shutil.rmtree(d, ignore_errors=True)
-
-    if not os.path.exists(src_dir):
-        ev = load_table(spark, sf_dir, "events")
-        (_time_sliced(ev, 3)
-         .repartition(1)  # fixture-only
-         .sortWithinPartitions("ts")
-         .write.mode("overwrite").partitionBy("part").parquet(src_dir))
+    src_dir = _sliced_source(sf_dir, "cep_src",
+                             load_table(spark, sf_dir, "events"), 3)
+    sink_dir = run_dir(sf_dir, "cep_sink")
+    ckpt_dir = run_dir(sf_dir, "cep_ckpt")
 
     schema = spark.read.parquet(src_dir).schema
     stream = (spark.readStream.schema(schema)

@@ -63,12 +63,11 @@ def _secured_collection(spark, sf_dir) -> str:
         AUTH_FILE,
         build_collection,
     )
-    from build_pipeline_with_apache_beam_spark.sources.sinks import SCRATCH
+    from build_pipeline_with_apache_beam_spark.scratch import run_dir
 
     src = build_collection(spark, sf_dir)
-    dst = os.path.join(SCRATCH, "docstore_secured_test")
-    shutil.rmtree(dst, ignore_errors=True)
-    shutil.copytree(src, dst)
+    dst = run_dir(sf_dir, "docstore_secured_test")
+    shutil.copytree(src, dst, dirs_exist_ok=True)
     with open(os.path.join(dst, AUTH_FILE), "w") as fh:
         fh.write("tok-123\n")
     return dst

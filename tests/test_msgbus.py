@@ -28,12 +28,12 @@ from build_pipeline_with_apache_beam_spark.sources.msgbus import (
     real_client_available,
     stream_events_to_bus,
 )
-from build_pipeline_with_apache_beam_spark.sources.sinks import SCRATCH
+from build_pipeline_with_apache_beam_spark.scratch import run_dir
 
 
 @pytest.fixture()
-def bus_dir():
-    d = os.path.join(SCRATCH, f"msgbus_{uuid.uuid4().hex[:8]}")
+def bus_dir(sf_dir):
+    d = run_dir(sf_dir, f"msgbus_{uuid.uuid4().hex[:8]}")
     yield d
     shutil.rmtree(d, ignore_errors=True)
 

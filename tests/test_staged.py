@@ -1,12 +1,13 @@
 """The staging helper's contract (``catalog._staged``): a builder is called
-only when a stage is written, a reuse hit builds and runs nothing, and the
-reused re-read carries the schema parquet inference would return.  Also the
+only when a stage is written, a hit builds and runs nothing, and the
+memoized re-read carries the schema parquet inference would return.  Also the
 footer-only table statistics (``catalog.table_meta``) the spread rule reads."""
 
 from __future__ import annotations
 
 import glob
 import os
+import shutil
 import uuid
 
 import pytest
@@ -16,7 +17,14 @@ from build_pipeline_with_apache_beam_spark.catalog import _staged, table_meta
 from build_pipeline_with_apache_beam_spark.operators.dedup import (
     dedup_fuzzy_minhash,
 )
-from build_pipeline_with_apache_beam_spark.sources.sinks import SCRATCH
+from build_pipeline_with_apache_beam_spark.scratch import namespace
+
+
+@pytest.fixture()
+def sf(tmp_path):
+    """An empty sf dir; its scratch namespace is removed afterwards."""
+    yield str(tmp_path)
+    shutil.rmtree(namespace(str(tmp_path)), ignore_errors=True)
 
 
 def _once(frame):
@@ -38,36 +46,34 @@ def _jobs_in_group(spark, group: str) -> list[int]:
     return list(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def test_staged_rejects_a_dataframe(spark, tmp_path):
+def test_staged_rejects_a_dataframe(spark, sf):
     """The builder contract fails at the call, not in a later verdict."""
     with pytest.raises(TypeError, match="callable"):
-        _staged(spark, spark.range(3), str(tmp_path), "not_a_builder")
+        _staged(spark, spark.range(3), sf, "not_a_builder")
 
 
-def test_reuse_hit_never_calls_builder(spark, tmp_path):
-    sf = str(tmp_path)
+def test_reuse_hit_never_calls_builder(spark, sf):
     build = _once(lambda: spark.range(5))
-    first = _staged(spark, build, sf, "reuse_probe", reuse=True)
-    again = _staged(spark, build, sf, "reuse_probe", reuse=True)
+    first = _staged(spark, build, sf, "reuse_probe")
+    again = _staged(spark, build, sf, "reuse_probe")
     assert sorted(r.id for r in again.collect()) == list(range(5))
     assert again.schema == first.schema
-    # without reuse every call rebuilds
+    # a changed input re-keys the stage, so the builder runs again
+    open(os.path.join(sf, "t.parquet"), "w").close()
     with pytest.raises(AssertionError, match="reuse hit"):
         _staged(spark, build, sf, "reuse_probe")
 
 
-def test_reused_reread_schema_equals_inferred(spark, tmp_path):
+def test_reused_reread_schema_equals_inferred(spark, sf):
     """The memoized schema is the inferred one (every column nullable),
     not the written frame's (``id`` is declared non-null)."""
-    sf = str(tmp_path)
-
     def frame():
         return spark.range(4).select(
             "id", F.array(F.col("id"), F.lit(None).cast("long")).alias("xs"),
             F.when(F.col("id") > 1, F.lit("big")).alias("tag"))
 
-    inferred = _staged(spark, frame, sf, "schema_probe", reuse=True)
-    hit = _staged(spark, frame, sf, "schema_probe", reuse=True)
+    inferred = _staged(spark, frame, sf, "schema_probe")
+    hit = _staged(spark, frame, sf, "schema_probe")
     assert hit.schema == inferred.schema
     assert hit.schema != frame().schema
     assert all(f.nullable for f in hit.schema.fields)
@@ -80,7 +86,7 @@ def test_warm_fuzzy_minhash_runs_no_job_before_its_sink(spark, sf_dir):
     ``mh_eval_sets`` stage under the reused exact truth is not rewritten."""
     dedup_fuzzy_minhash(spark, sf_dir)
     stage_files = glob.glob(os.path.join(
-        SCRATCH, "dedup_stage", f"*-{os.getpid()}", "mh_eval_sets", "*"))
+        namespace(sf_dir), "mh_eval_sets-*", "*"))
     assert stage_files, "cold call staged no mh_eval_sets files"
     mtimes = {f: os.stat(f).st_mtime_ns for f in stage_files}
 

@@ -20,7 +20,6 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 from datetime import datetime
 
 import pytest
@@ -38,7 +37,7 @@ from build_pipeline_with_apache_beam_spark.sources.docstore import (
     MANIFEST,
     build_collection,
 )
-from build_pipeline_with_apache_beam_spark.sources.sinks import SCRATCH
+from build_pipeline_with_apache_beam_spark.scratch import run_dir
 from build_pipeline_with_apache_beam_spark.streaming.watermark import (
     WatermarkStore,
 )
@@ -47,12 +46,9 @@ LAKE_SCHEMA = ("event_id BIGINT, user_id BIGINT, value DOUBLE, "
                "ts TIMESTAMP, dt STRING")
 
 
-def _dirs(tag: str) -> tuple[str, str, str]:
-    out = tuple(os.path.join(SCRATCH, f"etls_test_{kind}_{tag}_{os.getpid()}")
-                for kind in ("lake", "wm", "ckpt"))
-    for d in out:
-        shutil.rmtree(d, ignore_errors=True)
-    return out
+def _dirs(sf_dir: str, tag: str) -> tuple[str, str, str]:
+    return tuple(run_dir(sf_dir, f"etls_test_{kind}_{tag}")
+                 for kind in ("lake", "wm", "ckpt"))
 
 
 def _lake_rows(spark, lake):
@@ -69,7 +65,7 @@ def test_stream_funnel_matches_batch_and_is_multibatch(spark, sf_dir):
 
 
 def test_stream_runs_in_multiple_batches(spark, sf_dir):
-    lake, wm, ckpt = _dirs("multibatch")
+    lake, wm, ckpt = _dirs(sf_dir, "multibatch")
     root = build_collection(spark, sf_dir)
     with open(os.path.join(root, MANIFEST)) as fh:
         total = len(json.load(fh))
@@ -92,13 +88,13 @@ def test_stream_kill_resume_reaches_identical_state(spark, sf_dir):
     cap = max(1, total // 4)
 
     # uninterrupted reference run
-    lake0, wm0, ckpt0 = _dirs("uninterrupted")
+    lake0, wm0, ckpt0 = _dirs(sf_dir, "uninterrupted")
     done = run_etl_stream(spark, sf_dir, lake0, wm0, ckpt0, tail_cap=cap)
     assert done >= total
     want = sorted(map(tuple, _lake_rows(spark, lake0)))
 
     # killed run: stop as soon as the FIRST batch's files are committed
-    lake1, wm1, ckpt1 = _dirs("killed")
+    lake1, wm1, ckpt1 = _dirs(sf_dir, "killed")
     partial = run_etl_stream(spark, sf_dir, lake1, wm1, ckpt1, tail_cap=cap,
                              stop_after_files=cap)
     assert 0 < partial, "kill-run never committed a batch"
@@ -151,7 +147,7 @@ def test_stream_commit_order_is_sink_then_watermark(spark, sf_dir):
     count must be reproducible from the lake AT THAT POINT — i.e. the
     run-log never claims more than the sink holds (the reference marks
     done before its pipeline runs; this pins the fixed order)."""
-    lake, wm, ckpt = _dirs("commitorder")
+    lake, wm, ckpt = _dirs(sf_dir, "commitorder")
     root = build_collection(spark, sf_dir)
     with open(os.path.join(root, MANIFEST)) as fh:
         total = len(json.load(fh))
@@ -202,12 +198,12 @@ def test_lake_swap_crash_window_leaves_old_xor_new(spark, sf_dir, crash_point):
         pytest.skip("collection too small for a mid-run crash")
 
     # uninterrupted reference run (same cap as the worker)
-    lake0, wm0, ckpt0 = _dirs(f"chaosref_{crash_point}")
+    lake0, wm0, ckpt0 = _dirs(sf_dir, f"chaosref_{crash_point}")
     assert run_etl_stream(spark, sf_dir, lake0, wm0, ckpt0,
                           tail_cap=1) >= total
     want = sorted(map(tuple, _lake_rows(spark, lake0)))
 
-    lake1, wm1, ckpt1 = _dirs(f"chaos_{crash_point}")
+    lake1, wm1, ckpt1 = _dirs(sf_dir, f"chaos_{crash_point}")
     worker = os.path.join(os.path.dirname(__file__), "etl_crash_worker.py")
     env = {k: v for k, v in os.environ.items()
            if k != "SPARK_GRAFT_ETL_CRASH"}

@@ -147,21 +147,13 @@ def test_compaction_preserves_rows_and_time_travel(spark, sf_dir):
 
 
 def test_compaction_rows_identical_and_old_version_readable(spark, sf_dir):
-    import os
-    import shutil
-
-    from build_pipeline_with_apache_beam_spark.sources.sinks import (
-        SCRATCH,
-        source_tag,
-    )
+    from build_pipeline_with_apache_beam_spark.scratch import run_dir
     from build_pipeline_with_apache_beam_spark.sources.txtable import (
         TxTable,
         _demo_changeset,
     )
 
-    root = os.path.join(SCRATCH, "txtable", source_tag(sf_dir, "customer"),
-                        "compact_t2")
-    shutil.rmtree(root, ignore_errors=True)
+    root = run_dir(sf_dir, "txtable_compact_t2")
     base, _ = _demo_changeset(spark, sf_dir)
     t = TxTable(spark, root)
     t.create(base.repartition(16))

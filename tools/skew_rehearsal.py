@@ -44,26 +44,22 @@ def main() -> int:
     from build_pipeline_with_apache_beam_spark.operators.behavioral import (
         SESSION_GAP_S,
     )
+    from build_pipeline_with_apache_beam_spark.scratch import derived
     from build_pipeline_with_apache_beam_spark.session import get_spark
-    from build_pipeline_with_apache_beam_spark.sources.sinks import SCRATCH
 
     spark = get_spark("skew-rehearsal")
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    skew_dir = os.path.join(SCRATCH, f"skewed_events_{tag}")
-    dim_dir = os.path.join(SCRATCH, f"skewed_dim_{tag}")
-
-    if not os.path.exists(skew_dir):
-        (load_table(spark, sf_dir, "events")
-         .withColumn("user_id",
-                     F.when(F.col("event_id") % 5 < 2, F.lit(HOT_USER))
-                     .otherwise(F.col("user_id")))
-         .write.parquet(skew_dir))
-    ev = spark.read.parquet(skew_dir)
-    if not os.path.exists(dim_dir):
-        (ev.groupBy("user_id")
-         .agg(F.countDistinct("event_type").alias("n_types"))
-         .write.parquet(dim_dir))
-    dim = spark.read.parquet(dim_dir)
+    # derived fixtures are keyed on the tables and the package code, not on
+    # this script: rename one if its builder below changes
+    ev = spark.read.parquet(derived(sf_dir, "skewed_events", lambda p: (
+        load_table(spark, sf_dir, "events")
+        .withColumn("user_id",
+                    F.when(F.col("event_id") % 5 < 2, F.lit(HOT_USER))
+                    .otherwise(F.col("user_id")))
+        .write.parquet(p))))
+    dim = spark.read.parquet(derived(sf_dir, "skewed_dim", lambda p: (
+        ev.groupBy("user_id")
+        .agg(F.countDistinct("event_type").alias("n_types"))
+        .write.parquet(p))))
 
     n_rows = ev.count()
     n_hot = ev.where(F.col("user_id") == HOT_USER).count()

@@ -20,7 +20,6 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import sys
 import threading
 import time
@@ -60,8 +59,8 @@ def main() -> int:
         MANIFEST,
         build_collection,
     )
+    from build_pipeline_with_apache_beam_spark.scratch import run_dir
     from build_pipeline_with_apache_beam_spark.session import get_spark
-    from build_pipeline_with_apache_beam_spark.sources.sinks import SCRATCH
     from build_pipeline_with_apache_beam_spark.streaming.watermark import (
         WatermarkStore,
     )
@@ -70,30 +69,13 @@ def main() -> int:
     root = build_collection(spark, sf_dir)
     manifest = json.load(open(os.path.join(root, MANIFEST)))
     total_files = len(manifest)
-    # per-file ingest row counts (the manifest records ts stats only)
-    from build_pipeline_with_apache_beam_spark.sources.docstore import (
-        _entry_files,
-    )
-
-    rows_per_file = []
-    for m in manifest:
-        if "n" in m:  # round-13 manifests carry row counts
-            rows_per_file.append(m["n"])
-            continue
-        n = 0
-        for f in _entry_files(m):  # legacy: count lines (multi-part aware)
-            with open(os.path.join(root, f), "rb") as fh:
-                n += sum(1 for _ in fh)
-        rows_per_file.append(n)
+    # per-file ingest row counts: every manifest entry records its rows
+    rows_per_file = [m["n"] for m in manifest]
     total_rows = sum(rows_per_file)
     cap = max(1, -(-total_files // n_batches))
 
-    tag = f"rehearsal_{os.getpid()}"
-    lake = os.path.join(SCRATCH, f"etls_lake_{tag}")
-    wm_root = os.path.join(SCRATCH, f"etls_wm_{tag}")
-    ckpt = os.path.join(SCRATCH, f"etls_ckpt_{tag}")
-    for d in (lake, wm_root, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
+    lake, wm_root, ckpt = (run_dir(sf_dir, f"rehearsal_{kind}")
+                           for kind in ("lake", "wm", "ckpt"))
 
     samples: list[dict] = []
     stop = threading.Event()
@@ -194,8 +176,6 @@ def main() -> int:
     if json_out:
         with open(json_out, "w") as fh:
             fh.write(line + "\n")
-    for d in (lake, wm_root, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
     return 0
 
 
