@@ -136,13 +136,15 @@ def _staged(spark: SparkSession, build: Callable[[], DataFrame], sf_dir: str,
     A stage must therefore be a pure function of the sf dir: anything else
     it depends on belongs in its ``name``.
 
-    Schema memo: ``_STAGE_DONE`` maps the committed path to the schema of
-    its first ``spark.read.parquet(path)`` in this process, and a later hit
-    re-reads with ``spark.read.schema(s).parquet(path)``, which skips the
-    parquet schema-inference job a bare re-read starts.  The memo is taken
-    from the re-read, not from the written frame, so a hit returns exactly
-    the schema a cold re-read infers: file sources read every column back
-    as nullable, and the written frame may declare columns non-null.
+    Schema memo: a re-read with ``spark.read.schema(s).parquet(path)``
+    skips the parquet schema-inference job a bare re-read starts.  A stage
+    this call writes is re-read with the written frame's schema;
+    ``_STAGE_DONE`` maps the committed path to the schema of its first
+    re-read in this process, and a later hit re-reads with that.  Only a
+    stage another process committed is inferred, once.  Either way a hit
+    returns exactly the schema a cold re-read infers: a file source reads a
+    given schema back as nullable, as it does an inferred one, and the
+    written frame may declare columns non-null.
 
     The sketch pipelines are deliberately executed in STAGES (signature
     index → candidate pairs → verification) rather than as one fused lazy
@@ -164,10 +166,16 @@ def _staged(spark: SparkSession, build: Callable[[], DataFrame], sf_dir: str,
         raise TypeError(
             f"_staged({name!r}): build must be a zero-argument callable "
             f"returning a DataFrame, got {type(build).__name__}")
-    path = derived(sf_dir, name, lambda tmp: build().write.parquet(tmp))
-    schema = _STAGE_DONE.get(path)
-    if schema is not None:
-        return spark.read.schema(schema).parquet(path)
-    staged = spark.read.parquet(path)
+    written: list[StructType] = []
+
+    def write(tmp: str) -> None:
+        df = build()
+        df.write.parquet(tmp)
+        written.append(df.schema)
+
+    path = derived(sf_dir, name, write)
+    schema = written[0] if written else _STAGE_DONE.get(path)
+    staged = (spark.read.parquet(path) if schema is None
+              else spark.read.schema(schema).parquet(path))
     _STAGE_DONE[path] = staged.schema
     return staged

@@ -23,6 +23,8 @@ Scale design (the part that matters at 1000 executors):
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -202,17 +204,20 @@ def fuzzy_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     The registered op :func:`dedup_fuzzy_minhash` wraps this in the
     banded-oracle histogram DuckDB can check (the pair SET itself depends
     on the seeded banding, which is not portable SQL)."""
+    # the shingled docs, built on the first stage miss and shared by every
+    # builder below; a full hit builds nothing
+    shingled = functools.cache(lambda: _docs_with_shingles(spark, sf_dir))
     # stage 1: the signature index + hashed shingle sets (persisted — at
     # scale this is the reusable dedup index, built incrementally); stage
     # 2: LSH banding → candidate pairs, whose hit skips the signatures
     pairs = _staged(spark, lambda: lsh_candidate_pairs(_staged(
-        spark, lambda: minhash_signatures(_docs_with_shingles(spark, sf_dir)),
+        spark, lambda: minhash_signatures(shingled()),
         sf_dir, "minhash_sigs")), sf_dir, "minhash_candidates")
     # hashed shingle sets for verification: intersect/union on fixed-width
     # longs instead of ~20-byte strings — smaller shuffle, cheaper compares;
     # xxhash64 collisions are negligible for jaccard
-    hashed = _staged(spark, lambda: _hashed_shingle_sets(
-        _docs_with_shingles(spark, sf_dir)), sf_dir, "minhash_shingle_sets")
+    hashed = _staged(spark, lambda: _hashed_shingle_sets(shingled()),
+                     sf_dir, "minhash_shingle_sets")
     # stage 3: exact-jaccard verification of the candidates
     a = hashed.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
     b = hashed.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
@@ -512,9 +517,11 @@ def incremental_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     not portable SQL).
     """
     is_new = F.col("doc_id") % 10 == 0
+    # built on the first stage miss and shared by every builder below
+    docs = functools.cache(lambda: _docs_with_shingles(spark, sf_dir))
 
     def shingled(rows: Column) -> DataFrame:
-        return _docs_with_shingles(spark, sf_dir).where(rows)
+        return docs().where(rows)
 
     def _bands(sigs: DataFrame) -> DataFrame:
         withb = sigs.select(

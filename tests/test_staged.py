@@ -66,7 +66,8 @@ def test_reuse_hit_never_calls_builder(spark, sf):
 
 def test_reused_reread_schema_equals_inferred(spark, sf):
     """The memoized schema is the inferred one (every column nullable),
-    not the written frame's (``id`` is declared non-null)."""
+    not the written frame's (``id`` is declared non-null), both on the
+    call that writes the stage and on a hit."""
     def frame():
         return spark.range(4).select(
             "id", F.array(F.col("id"), F.lit(None).cast("long")).alias("xs"),
@@ -74,10 +75,36 @@ def test_reused_reread_schema_equals_inferred(spark, sf):
 
     inferred = _staged(spark, frame, sf, "schema_probe")
     hit = _staged(spark, frame, sf, "schema_probe")
-    assert hit.schema == inferred.schema
+    bare = spark.read.parquet(os.path.dirname(hit.inputFiles()[0]))
+    assert hit.schema == inferred.schema == bare.schema
     assert hit.schema != frame().schema
     assert all(f.nullable for f in hit.schema.fields)
     assert sorted(hit.collect()) == sorted(inferred.collect())
+
+
+def test_fresh_stage_runs_only_its_write_jobs(spark, sf, tmp_path_factory):
+    """A stage the call writes is re-read with the written frame's schema:
+    the call starts the jobs of the write alone, no parquet
+    schema-inference job on top."""
+    def frame():
+        return spark.range(6).select("id", (F.col("id") * 2).alias("y"))
+
+    sc = spark.sparkContext
+
+    def jobs(fn) -> int:
+        group = f"staged-fresh-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "fresh stage")
+        try:
+            fn()
+        finally:
+            sc._jsc.clearJobGroup()
+        return len(_jobs_in_group(spark, group))
+
+    plain = str(tmp_path_factory.mktemp("plain") / "out")
+    write_jobs = jobs(lambda: frame().write.parquet(plain))
+    assert write_jobs
+    assert jobs(lambda: _staged(spark, frame, sf, "fresh_probe")) \
+        == write_jobs
 
 
 def test_warm_fuzzy_minhash_runs_no_job_before_its_sink(spark, sf_dir):
