@@ -15,6 +15,7 @@ process — and read back as a plain parquet scan.
 
 from __future__ import annotations
 
+import json
 import os
 from collections.abc import Callable
 
@@ -113,9 +114,9 @@ def sized_spread(df: DataFrame, n_rows: int,
     return df.repartition(target)
 
 
-# committed stage path -> schema of its re-read, for every stage this
-# process has read (see _staged)
-_STAGE_DONE: dict[str, StructType] = {}
+# the written frame's schema, beside each stage's parquet files (Spark
+# skips ``_``-prefixed files when it lists a dir)
+_STAGE_SCHEMA = "_schema.json"
 
 
 def _staged(spark: SparkSession, build: Callable[[], DataFrame], sf_dir: str,
@@ -136,15 +137,10 @@ def _staged(spark: SparkSession, build: Callable[[], DataFrame], sf_dir: str,
     A stage must therefore be a pure function of the sf dir: anything else
     it depends on belongs in its ``name``.
 
-    Schema memo: a re-read with ``spark.read.schema(s).parquet(path)``
-    skips the parquet schema-inference job a bare re-read starts.  A stage
-    this call writes is re-read with the written frame's schema;
-    ``_STAGE_DONE`` maps the committed path to the schema of its first
-    re-read in this process, and a later hit re-reads with that.  Only a
-    stage another process committed is inferred, once.  Either way a hit
-    returns exactly the schema a cold re-read infers: a file source reads a
-    given schema back as nullable, as it does an inferred one, and the
-    written frame may declare columns non-null.
+    Stored schema: the stage carries the written frame's schema, and every
+    re-read passes it, so no process runs a parquet schema-inference job.
+    It reads back exactly as inferred: a file source reads a given schema
+    back as nullable, and the written frame may declare columns non-null.
 
     The sketch pipelines are deliberately executed in STAGES (signature
     index → candidate pairs → verification) rather than as one fused lazy
@@ -166,16 +162,13 @@ def _staged(spark: SparkSession, build: Callable[[], DataFrame], sf_dir: str,
         raise TypeError(
             f"_staged({name!r}): build must be a zero-argument callable "
             f"returning a DataFrame, got {type(build).__name__}")
-    written: list[StructType] = []
-
     def write(tmp: str) -> None:
         df = build()
         df.write.parquet(tmp)
-        written.append(df.schema)
+        with open(os.path.join(tmp, _STAGE_SCHEMA), "w") as fh:
+            fh.write(df.schema.json())
 
     path = derived(sf_dir, name, write)
-    schema = written[0] if written else _STAGE_DONE.get(path)
-    staged = (spark.read.parquet(path) if schema is None
-              else spark.read.schema(schema).parquet(path))
-    _STAGE_DONE[path] = staged.schema
-    return staged
+    with open(os.path.join(path, _STAGE_SCHEMA)) as fh:
+        schema = StructType.fromJson(json.load(fh))
+    return spark.read.schema(schema).parquet(path)

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from build_pipeline_with_apache_beam_spark.catalog import load_table
+from build_pipeline_with_apache_beam_spark.functions import sqlgen
 
 SESSION_GAP_S = 30 * 60
 
@@ -893,24 +894,13 @@ def events_attribution_markov(spark: SparkSession, sf_dir: str) -> DataFrame:
         Tr[:, idx[c]] = 0.0
         pc = p_conv(Tr)
         effects.append((c, max(0.0, (base - pc) / base) if base else 0.0))
-    if not effects:
-        # degenerate stream (no non-purchase event types): an empty VALUES
-        # list is a parse error, so return an empty typed result instead
-        return spark.sql(
-            "SELECT CAST(NULL AS STRING) AS channel, "
-            "CAST(NULL AS BOOLEAN) AS effect_in_unit, "
-            "CAST(NULL AS BOOLEAN) AS shares_valid WHERE 1 = 0")
     total = sum(e for _, e in effects)
     shares_valid = (total == 0.0
                     or abs(sum(e / total for _, e in effects) - 1.0) <= 1e-9)
-    rows = ", ".join(
-        "('{}', {}, {})".format(
-            c, "TRUE" if 0.0 <= e <= 1.0 else "FALSE",
-            "TRUE" if shares_valid else "FALSE")
-        for c, e in effects)
-    return spark.sql(
-        f"SELECT * FROM (VALUES {rows}) "
-        "AS t(channel, effect_in_unit, shares_valid)").orderBy("channel")
+    rows = [(c, 0.0 <= e <= 1.0, shares_valid) for c, e in effects]
+    return spark.sql(sqlgen.values(
+        rows, "channel STRING, effect_in_unit BOOLEAN, shares_valid BOOLEAN"
+    )).orderBy("channel")
 
 
 def events_ratio_metric_delta_ci(spark: SparkSession, sf_dir: str) -> DataFrame:

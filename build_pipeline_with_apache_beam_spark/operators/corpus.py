@@ -20,25 +20,13 @@ Scale notes:
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from build_pipeline_with_apache_beam_spark.catalog import load_table
+from build_pipeline_with_apache_beam_spark.functions import sqlgen
 from build_pipeline_with_apache_beam_spark.functions.ngrams import word_ngrams
 
-
-def _dlit(x: float) -> str:
-    """SQL double literal that round-trips ANY double (ADVICE r14): repr()
-    is exact for finite values, but bare ``nan``/``inf`` parse as COLUMN
-    REFERENCES in Spark SQL — a non-finite iterate would throw
-    AnalysisException instead of propagating NaN the way F.lit did."""
-    if math.isfinite(x):
-        return f"CAST({x!r} AS DOUBLE)"
-    if math.isnan(x):
-        return "CAST('NaN' AS DOUBLE)"
-    return f"CAST('{'-' if x < 0 else ''}Infinity' AS DOUBLE)"
 
 # md5-hex → uniform int bucket in [0, 65536): portable across engines.
 def _bucket_64k(col):
@@ -956,14 +944,7 @@ def embedding_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame
     v = [1.0 / (d ** 0.5)] * d
     trace = []
     for it in range(1, 9):
-        # one F.expr per iteration (r14, guide §4/driver cost): building the
-        # same expression from 64 F.lit py4j calls cost ~0.3 s/iteration of
-        # pure driver time; repr() round-trips doubles exactly, so the
-        # parsed literals — and the scores — are bit-identical
-        v_sql = ", ".join(_dlit(c) for c in v)
-        score = F.expr(
-            f"aggregate(zip_with(x, array({v_sql}), (a, b) -> a * b), "
-            "CAST(0.0 AS DOUBLE), (acc, t) -> acc + t)")
+        score = F.expr(sqlgen.zip_fold("x", sqlgen.array(v)))
         # E[x·(xᵀv)] per dim — one posexplode + partial-sum aggregate
         sums = (x.select(score.alias("s"), "x")
                 .select("s", F.posexplode("x").alias("dim", "xi"))
@@ -978,18 +959,12 @@ def embedding_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame
         trace.append((it, rayleigh,
                       rayleigh / total_var if total_var else None))
     x.unpersist()
-    # literal trace via SQL VALUES (a Python-RDD createDataFrame build
-    # side can stall broadcasts — session-wide convention)
-    rows = ", ".join(
-        "(CAST({} AS BIGINT), {}, {}, CAST({} AS DOUBLE))".format(
-            it,
-            "TRUE" if (i == 0 or ev >= trace[i - 1][1] - 1e-9) else "FALSE",
-            "TRUE" if (share is not None and 0.0 < share <= 1.0) else "FALSE",
-            round(total_var, 4))
-        for i, (it, ev, share) in enumerate(trace))
-    return spark.sql(
-        f"SELECT * FROM (VALUES {rows}) AS t(iteration, "
-        "rayleigh_nondecreasing, explained_var_in_unit, total_var_4dp)")
+    rows = [(it, i == 0 or ev >= trace[i - 1][1] - 1e-9,
+             share is not None and 0.0 < share <= 1.0, round(total_var, 4))
+            for i, (it, ev, share) in enumerate(trace)]
+    return spark.sql(sqlgen.values(
+        rows, "iteration BIGINT, rayleigh_nondecreasing BOOLEAN, "
+        "explained_var_in_unit BOOLEAN, total_var_4dp DOUBLE"))
 
 
 def corpus_kl_divergence_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1111,15 +1086,9 @@ def embedding_kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
         # iteration is ONE distributed job with ONE shuffle (the (cid,dim)
         # hash aggregate) — no crossJoin fanout, no groupBy(vec_id) pass,
         # and the inertia rides the same aggregate on the dim==0 slice.
-        cent_sql = "array({})".format(", ".join(
-            "array({})".format(", ".join(_dlit(val) for val in vec))
-            for vec in centroids))
-        # one F.expr per stage (a single py4j call — 512 nested F.lit
-        # columns cost ~0.5 s/iteration in py4j round-trips alone)
+        d2 = sqlgen.zip_fold("v", "cv", "(x - y) * (x - y)")
         stage = x.select("v", F.expr(
-            f"transform({cent_sql}, cv -> aggregate("
-            "zip_with(v, cv, (a, b) -> (a - b) * (a - b)), "
-            "CAST(0.0 AS DOUBLE), (acc, t) -> acc + t))").alias("d2s"))
+            f"transform({sqlgen.array(centroids)}, cv -> {d2})").alias("d2s"))
         flat = stage.select(
             # first occurrence on ties == lowest cid, matching the
             # min_by((d, cid)) ordering of the previous formulation
@@ -1151,15 +1120,11 @@ def embedding_kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
             for c in range(KMEANS_K)]
         trace.append((it, float(inertia), conserved))
     x.unpersist()
-    rows = ", ".join(
-        "(CAST({} AS BIGINT), {}, {}, CAST({} AS BIGINT), {})".format(
-            it,
-            "TRUE" if (i == 0 or v <= trace[i - 1][1] + 1e-9) else "FALSE",
-            "TRUE" if ok else "FALSE", n_vecs, KMEANS_K)
-        for i, (it, v, ok) in enumerate(trace))
-    return spark.sql(
-        f"SELECT * FROM (VALUES {rows}) AS t(iteration, "
-        "inertia_nonincreasing, mass_conserved, n_vecs, k)")
+    rows = [(it, i == 0 or v <= trace[i - 1][1] + 1e-9, ok, n_vecs, KMEANS_K)
+            for i, (it, v, ok) in enumerate(trace)]
+    return spark.sql(sqlgen.values(
+        rows, "iteration BIGINT, inertia_nonincreasing BOOLEAN, "
+        "mass_conserved BOOLEAN, n_vecs BIGINT, k INT"))
 
 
 LOGREG_ITERS = 15
@@ -1221,14 +1186,10 @@ def corpus_quality_logreg_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     trace = []
     n_feat = len(w)
     for it in range(1, LOGREG_ITERS + 1):
-        # expressions as ONE F.expr string each (r14, guide §4/driver
-        # cost): composing them from pyspark Column operators cost ~1 s of
-        # py4j round-trips PER ITERATION — more than the distributed job
-        # itself.  repr() round-trips doubles exactly and the string keeps
-        # the identical operation order (left-associative sums, same
-        # epsilon placement), so every gradient/loss/acc value is
-        # bit-identical to the Column form (collect-compared at rewrite).
-        z = " + ".join(f"f{i} * {_dlit(w[i])}" for i in range(n_feat))
+        # ONE F.expr string each (see functions/sqlgen), in the Column
+        # form's operation order (left-associative sums, same epsilon
+        # placement): every gradient/loss/acc value is bit-identical to it
+        z = " + ".join(f"f{i} * {sqlgen.lit(w[i])}" for i in range(n_feat))
         p = f"(CAST(1.0 AS DOUBLE) / (CAST(1.0 AS DOUBLE) + exp(-({z}))))"
         row = std.agg(
             *[F.expr(f"avg(({p} - y) * f{i})").alias(f"g{i}")
@@ -1242,17 +1203,12 @@ def corpus_quality_logreg_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     feats.unpersist()
     majority = max(base["pos_bp"], 10000 - base["pos_bp"]) / 10000.0
     final_ok = trace[-1][2] > majority
-    rows = ", ".join(
-        "(CAST({} AS BIGINT), {}, {}, CAST({} AS BIGINT), "
-        "CAST({} AS BIGINT))".format(
-            it,
-            "TRUE" if (i == 0 or loss < trace[i - 1][1]) else "FALSE",
-            "TRUE" if final_ok else "FALSE",
-            base["n"], base["pos_bp"])
-        for i, (it, loss, _acc) in enumerate(trace))
-    return spark.sql(
-        f"SELECT * FROM (VALUES {rows}) AS t(iteration, "
-        "loss_decreasing, final_acc_beats_majority, n_docs, pos_bp)")
+    rows = [(it, i == 0 or loss < trace[i - 1][1], final_ok,
+             base["n"], base["pos_bp"])
+            for i, (it, loss, _acc) in enumerate(trace)]
+    return spark.sql(sqlgen.values(
+        rows, "iteration BIGINT, loss_decreasing BOOLEAN, "
+        "final_acc_beats_majority BOOLEAN, n_docs BIGINT, pos_bp BIGINT"))
 
 
 N_SHARDS = 8            # output shards for balanced sharding

@@ -24,6 +24,7 @@ Scale design (the part that matters at 1000 executors):
 from __future__ import annotations
 
 import functools
+from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -34,6 +35,7 @@ from build_pipeline_with_apache_beam_spark.catalog import (
     sized_spread,
     table_meta,
 )
+from build_pipeline_with_apache_beam_spark.functions import sqlgen
 from build_pipeline_with_apache_beam_spark.operators.graph import (
     connected_components,
 )
@@ -88,6 +90,15 @@ def _docs_with_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
             f" i -> concat_ws(' ', slice(toks, i + 1, {SHINGLE_WIDTH})))"
         )).alias("shingles"),
     )
+
+
+def shingled_docs(spark: SparkSession,
+                  sf_dir: str) -> Callable[[], DataFrame]:
+    """:func:`_docs_with_shingles` as a thunk that builds it on its first
+    call.  An op makes one per call and hands it to every stage builder
+    that needs the shingled docs, so they are planned at most once, and a
+    full stage hit plans them not at all."""
+    return functools.cache(lambda: _docs_with_shingles(spark, sf_dir))
 
 
 def _hashed_shingle_sets(shingled: DataFrame) -> DataFrame:
@@ -197,16 +208,15 @@ def lsh_candidate_pairs(signatures: DataFrame,
     )
 
 
-def fuzzy_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+def fuzzy_minhash_pairs(spark: SparkSession, sf_dir: str,
+                        shingled: Callable[[], DataFrame]) -> DataFrame:
     """Full MinHash-LSH pipeline: shingle → sign → band → candidate pairs →
     exact-Jaccard verification at the threshold.  The raw (doc_a, doc_b,
     jaccard) pair surface — what a dedup run joins back against the corpus.
     The registered op :func:`dedup_fuzzy_minhash` wraps this in the
     banded-oracle histogram DuckDB can check (the pair SET itself depends
-    on the seeded banding, which is not portable SQL)."""
-    # the shingled docs, built on the first stage miss and shared by every
-    # builder below; a full hit builds nothing
-    shingled = functools.cache(lambda: _docs_with_shingles(spark, sf_dir))
+    on the seeded banding, which is not portable SQL).  ``shingled`` is
+    the op call's :func:`shingled_docs` thunk."""
     # stage 1: the signature index + hashed shingle sets (persisted — at
     # scale this is the reusable dedup index, built incrementally); stage
     # 2: LSH banding → candidate pairs, whose hit skips the signatures
@@ -269,8 +279,9 @@ def dedup_fuzzy_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``dedup_minhash_recall_eval``.  A bucket appears iff the truth
     occupies it (predictions ⊆ truth, so no prediction-only bucket can
     exist)."""
-    truth = _exact_truth_with_jaccard(spark, sf_dir)
-    pred = _staged(spark, lambda: fuzzy_minhash_pairs(spark, sf_dir),
+    shingled = shingled_docs(spark, sf_dir)
+    truth = _exact_truth_with_jaccard(spark, sf_dir, shingled)
+    pred = _staged(spark, lambda: fuzzy_minhash_pairs(spark, sf_dir, shingled),
                    sf_dir, "fmh_pred")
     tb = truth.withColumn("bk", _jbucket(F.col("jaccard")))
     pb = pred.withColumn("bk", _jbucket(F.col("jaccard")))
@@ -347,11 +358,9 @@ def simhash_pairs(spark: SparkSession, sf_dir: str,
     # Per-bit aggregate is sum of the raw bit (branch-free) plus one shared
     # count; "majority of signed ±1 sums > 0" ⟺ "2·Σbit > n" — same bits,
     # half the per-row expression work in the hot partial-agg loop.
-    # F.expr strings, not Column operators (r15, guide §4 driver cost —
-    # the logreg/PCA/bloom fix): composing the 64 aggregates + the 64-term
-    # reconstruction from pyspark Columns cost ~1.8 s of py4j round-trips
-    # PER CALL; integer arithmetic is exact, so the SQL form is
-    # bit-identical (oracle-reverified).
+    # F.expr strings, not Column operators (see functions/sqlgen):
+    # composing the 64 aggregates + the 64-term reconstruction from pyspark
+    # Columns cost ~1.8 s of py4j round-trips PER CALL.
     bit_sums = _staged(spark, lambda: toks.groupBy("doc_id").agg(
         F.expr("count(1)").alias("n_toks"),
         *[F.expr(f"sum(shiftrightunsigned(c{b // 16}, {b % 16}) & 1)")
@@ -360,7 +369,7 @@ def simhash_pairs(spark: SparkSession, sf_dir: str,
     sim_sql = " + ".join(
         f"(CASE WHEN s_{b} * 2 > n_toks THEN CAST(1 AS BIGINT)"
         f" ELSE CAST(0 AS BIGINT) END"
-        f" * CAST({1 << b if b < 63 else -(1 << 63)} AS BIGINT))"
+        f" * {sqlgen.lit(1 << b if b < 63 else -(1 << 63))})"
         for b in range(64))
     simhash = bit_sums.select("doc_id", F.expr(sim_sql).alias("simhash"))
     # 4 × 16-bit bands; hamming ≤ 3 ⟹ at least one band identical
@@ -501,7 +510,8 @@ def dedup_connected_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(F.col("node").alias("doc_id"), "group_id"))
 
 
-def incremental_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+def incremental_minhash_pairs(spark: SparkSession, sf_dir: str,
+                              docs: Callable[[], DataFrame]) -> DataFrame:
     """Incremental dedup, pair surface: a new ingest batch checked against
     the persisted signature index WITHOUT re-deduplicating history.
 
@@ -514,11 +524,10 @@ def incremental_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     rolls them up per new doc, and the registered
     :func:`dedup_incremental_minhash` reshapes the rollup into the
     banded-oracle form (the pair set depends on the seeded banding, which is
-    not portable SQL).
+    not portable SQL).  ``docs`` is the op call's :func:`shingled_docs`
+    thunk.
     """
     is_new = F.col("doc_id") % 10 == 0
-    # built on the first stage miss and shared by every builder below
-    docs = functools.cache(lambda: _docs_with_shingles(spark, sf_dir))
 
     def shingled(rows: Column) -> DataFrame:
         return docs().where(rows)
@@ -600,7 +609,8 @@ def incremental_minhash_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-new-doc rollup of :func:`incremental_minhash_pairs`: duplicate
     match count + verdict for every doc in the batch (the user surface a
     daily ingest filters on)."""
-    verified = incremental_minhash_pairs(spark, sf_dir)
+    verified = incremental_minhash_pairs(spark, sf_dir,
+                                         shingled_docs(spark, sf_dir))
     return (
         _new_doc_axis(spark, sf_dir)
         .join(verified.groupBy("new_doc")
@@ -634,9 +644,11 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     :func:`incremental_minhash_matches`; the batch-equivalence law
     (incremental ≡ full pipeline restricted to new docs) is tested in
     tests/test_llm_ops.py."""
-    pred = _staged(spark, lambda: incremental_minhash_pairs(spark, sf_dir),
+    docs = shingled_docs(spark, sf_dir)
+    pred = _staged(spark,
+                   lambda: incremental_minhash_pairs(spark, sf_dir, docs),
                    sf_dir, "inc_pred")
-    truth = _exact_truth_with_jaccard(spark, sf_dir)
+    truth = _exact_truth_with_jaccard(spark, sf_dir, docs)
     # truth matches per new doc: every truth pair touching the doc
     tm = (truth.select(F.explode(F.array("doc_a", "doc_b")).alias("new_doc"))
           .where(F.col("new_doc") % 10 == 0)
@@ -800,7 +812,8 @@ def eval_hot_shingles(spark: SparkSession, sf_dir: str,
             .where(F.col("df") > cap))
 
 
-def _exact_truth_with_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _exact_truth_with_jaccard(spark: SparkSession, sf_dir: str,
+                              shingled: Callable[[], DataFrame]) -> DataFrame:
     """COMPLETE exact shingle-Jaccard ground truth over the threshold:
     (doc_a, doc_b, jaccard rounded 4) — the shared truth side of the
     banded oracles (``dedup_minhash_recall_eval``, ``dedup_fuzzy_minhash``,
@@ -819,17 +832,19 @@ def _exact_truth_with_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     Staged once per sf: three registered ops (recall eval, fuzzy
     histogram, incremental) share this exact-truth index, and a hit runs
     none of :func:`_exact_truth_plan` — not even its ``mh_eval_sets``
-    stage."""
-    return _staged(spark, lambda: _exact_truth_plan(spark, sf_dir), sf_dir,
-                   "exact_truth")
+    stage.  ``shingled`` is the op call's :func:`shingled_docs` thunk,
+    shared with its pair builder."""
+    return _staged(spark, lambda: _exact_truth_plan(spark, sf_dir, shingled),
+                   sf_dir, "exact_truth")
 
 
-def _exact_truth_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _exact_truth_plan(spark: SparkSession, sf_dir: str,
+                      shingled: Callable[[], DataFrame]) -> DataFrame:
     """The lazy plan :func:`_exact_truth_with_jaccard` stages: hashed
     shingle sets (an eager ``mh_eval_sets`` stage) → capped inverted index
     → pair self-join → exact ratio at the threshold."""
-    hashed = _staged(spark, lambda: _hashed_shingle_sets(
-        _docs_with_shingles(spark, sf_dir)), sf_dir, "mh_eval_sets")
+    hashed = _staged(spark, lambda: _hashed_shingle_sets(shingled()),
+                     sf_dir, "mh_eval_sets")
     sizes = hashed.select("doc_id", F.size("sh").alias("n"))
     inv = hashed.select("doc_id", F.explode("sh").alias("h"))
     hot = (inv.groupBy("h")
@@ -888,8 +903,10 @@ def minhash_eval_detail(spark: SparkSession, sf_dir: str) -> DataFrame:
     form DuckDB can check."""
     # truth and the verified pair set are staged parquet indexes shared
     # with dedup_fuzzy_minhash
-    t = _exact_truth_with_jaccard(spark, sf_dir).select("doc_a", "doc_b")
-    p = _staged(spark, lambda: fuzzy_minhash_pairs(spark, sf_dir),
+    shingled = shingled_docs(spark, sf_dir)
+    t = _exact_truth_with_jaccard(spark, sf_dir, shingled).select(
+        "doc_a", "doc_b")
+    p = _staged(spark, lambda: fuzzy_minhash_pairs(spark, sf_dir, shingled),
                 sf_dir, "fmh_pred").select("doc_a", "doc_b")
     # shuffle_hash: both pair sets scale with dup density x corpus
     both = (t.withColumn("in_t", F.lit(1))

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from build_pipeline_with_apache_beam_spark.catalog import load_table
+from build_pipeline_with_apache_beam_spark.functions import sqlgen
 
 def _detect_codec() -> str:
     """Pick the decoder backend once, driver-side; the name ships to
@@ -459,16 +460,11 @@ def _media_table(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("source").alias("source"),
         ).alias("meta"),
     )
-    # SQL VALUES with hex literals: a JVM-side LocalRelation, never a
-    # Python-RDD build side (those stall broadcasts — see verify notes)
-    rows = ", ".join(
-        f"({i}, unhex('{payload.hex()}'), '{ctype}')"
-        for i, payload, ctype in _planted_assets())
-    planted = (spark.sql(f"SELECT * FROM (VALUES {rows}) "
-                         "AS t(doc_id, payload, ctype)")
+    planted = (spark.sql(sqlgen.values(
+                   _planted_assets(),
+                   "doc_id BIGINT, payload BINARY, ctype STRING"))
                .select(
-                   F.col("doc_id").cast("long").alias("doc_id"),
-                   "payload",
+                   "doc_id", "payload",
                    F.struct(
                        F.col("ctype").alias("content_type"),
                        F.length("payload").cast("long").alias("n_bytes"),

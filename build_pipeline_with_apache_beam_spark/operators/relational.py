@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from build_pipeline_with_apache_beam_spark.catalog import _staged, load_table
+from build_pipeline_with_apache_beam_spark.functions import sqlgen
 
 
 # ---------------------------------------------------------------------------
@@ -249,8 +250,7 @@ def join_theta_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     only sane shape for a theta join at scale (never NLJ two big sides).
     """
     cust = load_table(spark, sf_dir, "customer")
-    # LocalRelation via SQL VALUES, not createDataFrame: a Python-RDD-backed
-    # build side forces Python worker launches just to broadcast 4 rows.
+    # a VALUES LocalRelation (see functions/sqlgen)
     bands = spark.sql("""
         SELECT * FROM VALUES
             ('low', CAST(-99999.0 AS DOUBLE), CAST(2500.0 AS DOUBLE)),
@@ -1178,8 +1178,7 @@ def sql_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     as a collected SQL ``VALUES`` literal inlined into the recursive
     statement — no checkpoint blocks to leak across repeated invocations
     and no session-global temp view for concurrent callers to race on
-    (round-12 advice), and no ``createDataFrame`` (a Python-RDD build
-    side would stall the broadcast — the repo-wide VALUES rule).
+    (round-12 advice).
     """
     # The 6-way fact collapse is iteration-invariant AND nation-bounded
     # (≤ 25×24 rows at any sf), so it is a persisted stage (r15, guide
@@ -1190,15 +1189,8 @@ def sql_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     edge_rows = _staged(spark, lambda: _trade_edges(spark, sf_dir), sf_dir,
                         "trade_edges"
                         ).collect()  # driver-bounded: ≤ 25*24 rows
-    if edge_rows:
-        q = lambda s: "'" + s.replace("'", "''") + "'"  # noqa: E731
-        edges_body = (
-            "SELECT col1 AS src, col2 AS dst FROM (VALUES "
-            + ", ".join(f"({q(r['src'])}, {q(r['dst'])}, {int(r['w'])})"
-                        for r in edge_rows) + ")")
-    else:
-        edges_body = ("SELECT CAST(NULL AS STRING) AS src, "
-                      "CAST(NULL AS STRING) AS dst WHERE FALSE")
+    edges_body = sqlgen.values([(r["src"], r["dst"]) for r in edge_rows],
+                               "src STRING, dst STRING")
     return spark.sql(f"""
         WITH RECURSIVE reach(nation, hops) AS (
             SELECT CAST('NATION_0' AS STRING), 0
@@ -2562,17 +2554,11 @@ def join_bloom_semi_reduction(spark: SparkSession, sf_dir: str) -> DataFrame:
     masks = [0] * _BLOOM_WORDS
     for r in words.collect():  # driver-bounded: <= 1024 (word, mask) rows of filter metadata
         masks[r["w"]] = r["mask"]
-    # each literal MUST be cast to long: a saturated filter's words are
-    # small-magnitude negatives (≈ -1) that all fit int32, and an
+    # one F.expr (see functions/sqlgen) of BIGINT words: a saturated
+    # filter's words are small negatives (≈ -1) that fit int32, and an
     # ARRAY<INT> element under shiftrightunsigned(x, 41) shifts by
     # 41 & 31 = 9 (Java int semantics) — silently dropping true matches
-    # ONE F.expr for the 1024-word mask literal (r15, guide §4 driver
-    # cost — the logreg/PCA fix): 1024 F.lit().cast() Columns cost ~2.5 s
-    # of py4j round-trips PER CALL, dwarfing the query itself.  The SQL
-    # long-literal array is a single driver call; values are exact
-    # (integers round-trip through their decimal text).
-    arr = F.expr(
-        "array({})".format(", ".join(f"{m}L" for m in masks)))
+    arr = F.expr(sqlgen.array(masks))
     li = load_table(spark, sf_dir, "lineitem").withColumn("_bf", arr)
     # ONE forall HOF instead of k AND-ed bit tests (r15, guide §2.3
     # per-task work, measured 3.45 → 0.96 s at sf0.1 with identical

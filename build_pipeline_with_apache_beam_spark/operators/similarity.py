@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from build_pipeline_with_apache_beam_spark.catalog import load_table
+from build_pipeline_with_apache_beam_spark.functions import sqlgen
 
 DIM = 64
 N_PLANES = 4  # 2^4 buckets — sized so buckets hold enough candidates at test SFs
@@ -142,22 +143,12 @@ def _bucket(vec_col: str) -> F.Column:
     and the DuckDB oracle (which buckets the raw vector) — round-8 ADVICE.
     Bucketing the raw vector makes both sides evaluate the SAME expression:
     identical products, identical left-to-right double accumulation."""
-    planes = _hyperplanes()
-    # ONE F.expr per bucket expression (r15, guide §4 driver cost — the
-    # logreg/PCA/bloom fix): 4×64 F.lit() plane-literal Columns cost
-    # ~0.5 s of py4j round-trips per call; the SQL string is one call.
-    # CAST(repr AS DOUBLE) round-trips each double exactly, and the fold
-    # (zip_with → aggregate, CAST(0.0 AS DOUBLE) seed, left-to-right
-    # acc + v) is the same expression _dot builds — identical doubles,
-    # oracle-reverified.
-    terms = []
-    for i, p in enumerate(planes):
-        arr = "array({})".format(
-            ", ".join(f"CAST({v!r} AS DOUBLE)" for v in p))
-        terms.append(
-            f"(CASE WHEN aggregate(zip_with({vec_col}, {arr},"
-            " (x, y) -> x * y), CAST(0.0 AS DOUBLE),"
-            f" (acc, v) -> acc + v) >= 0 THEN {1 << i} ELSE 0 END)")
+    # one F.expr (see functions/sqlgen); the fold is the expression _dot
+    # builds — identical doubles
+    terms = [
+        f"(CASE WHEN {sqlgen.zip_fold(vec_col, sqlgen.array(p))} >= 0"
+        f" THEN {1 << i} ELSE 0 END)"
+        for i, p in enumerate(_hyperplanes())]
     return F.expr("CAST((" + " + ".join(terms) + ") AS INT)")
 
 
@@ -175,7 +166,7 @@ def _bucket_sql(vec_expr: str) -> str:
     eleven orders of magnitude above summation-order noise)."""
     terms = [
         f"(CASE WHEN list_dot_product({vec_expr}, "
-        f"[{', '.join(repr(v) for v in p)}]) >= 0 THEN {1 << i} ELSE 0 END)"
+        f"[{', '.join(map(sqlgen.lit, p))}]) >= 0 THEN {1 << i} ELSE 0 END)"
         for i, p in enumerate(_hyperplanes())
     ]
     return "(" + " + ".join(terms) + ")"
@@ -222,17 +213,11 @@ def _argmax_cell(dots: F.Column) -> F.Column:
 
 
 def _cell_dots(vec_col: str, centroids: list[list[float]]) -> F.Column:
-    """Array of dot(vec, centroid_c) per cell — one F.expr (r15, guide §4
-    driver cost): the k×d F.lit() literal Columns cost ~1 s of py4j
-    round-trips per call.  Same fold (zip_with → aggregate, double seed,
-    left-to-right acc + v) as _dot, in centroid order — identical doubles
-    (oracle-reverified).  ``vec_col`` is the vector column's SQL text."""
-    cent = "array({})".format(", ".join(
-        "array({})".format(", ".join(f"CAST({v!r} AS DOUBLE)" for v in c))
-        for c in centroids))
-    return F.expr(
-        f"transform({cent}, cv -> aggregate(zip_with({vec_col}, cv,"
-        " (x, y) -> x * y), CAST(0.0 AS DOUBLE), (acc, v) -> acc + v))")
+    """Array of dot(vec, centroid_c) per cell, one F.expr (see
+    functions/sqlgen): the fold _dot builds, in centroid order — identical
+    doubles.  ``vec_col`` is the vector column's SQL text."""
+    return F.expr(f"transform({sqlgen.array(centroids)},"
+                  f" cv -> {sqlgen.zip_fold(vec_col, 'cv')})")
 
 
 _TRAIN_SAMPLE = 4096  # codebook training sample size (driver-side, bounded)
@@ -683,7 +668,7 @@ def _mmr_oracle_sql() -> str:
     class as the codebook oracles: the engine's pairwise sims come from a
     BLAS matmul, the oracle's from sequential list_dot_product — a pick
     flip needs two scores within ~1e-15 (observed margins O(1e-3))."""
-    lam, one_minus = repr(MMR_LAMBDA), repr(1 - MMR_LAMBDA)
+    lam, one_minus = sqlgen.lit(MMR_LAMBDA), sqlgen.lit(1 - MMR_LAMBDA)
     parts = [f"""WITH e AS (
             SELECT vec_id, embedding::DOUBLE[] AS raw FROM embeddings
         ), u AS (
@@ -890,14 +875,6 @@ ORACLE = {
 _CODEBOOK_CACHE: dict[str, list[list[float]]] = {}
 
 
-def _cents_values_sql(cents: list[list[float]]) -> str:
-    """The trained codebook as a DuckDB VALUES relation (cid, c)."""
-    rows = ", ".join(
-        f"({cid}, [{', '.join(repr(v) for v in c)}]::DOUBLE[])"
-        for cid, c in enumerate(cents))
-    return f"SELECT * FROM (VALUES {rows}) AS t(cid, c)"
-
-
 def ORACLE_DYNAMIC() -> dict:
     """Data-dependent oracles, built per scale factor (see
     registry.oracle_sql): the IVF/semdedup cells come from a codebook
@@ -932,10 +909,12 @@ def ORACLE_DYNAMIC() -> dict:
             f"the data is absent)")
     if sf_dir not in _CODEBOOK_CACHE:
         _CODEBOOK_CACHE[sf_dir] = _oracle_codebook(sf_dir)
-    cents_sql = _cents_values_sql(_CODEBOOK_CACHE[sf_dir])
-    # shared replay prelude: raw double vectors, the engine's unit
-    # normalization, per-(vector, cell) dots, and first-max cell assignment
-    prelude = f"""cents AS ({cents_sql}),
+    cents = ", ".join(f"({cid}, [{', '.join(map(sqlgen.lit, c))}])"
+                      for cid, c in enumerate(_CODEBOOK_CACHE[sf_dir]))
+    # shared replay prelude: the codebook (cid, c), raw double vectors, the
+    # engine's unit normalization, per-(vector, cell) dots, and first-max
+    # cell assignment
+    prelude = f"""cents AS (SELECT * FROM (VALUES {cents}) AS t(cid, c)),
         e AS (SELECT vec_id, embedding::DOUBLE[] AS raw FROM embeddings),
         u AS (SELECT vec_id, raw,
                      list_transform(raw, x ->

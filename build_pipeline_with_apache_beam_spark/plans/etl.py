@@ -41,7 +41,12 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from build_pipeline_with_apache_beam_spark.functions import sqlgen
 from build_pipeline_with_apache_beam_spark.scratch import run_dir
+from build_pipeline_with_apache_beam_spark.streaming.drain import (
+    committed_file_idx,
+    drain_to,
+)
 
 _WINDOW_LO = "2024-01-08 00:00:00"
 _WINDOW_HI = "2024-01-14 23:59:59.999999"
@@ -50,6 +55,9 @@ _WINDOW_HI = "2024-01-14 23:59:59.999999"
 # stream's lake the event time it merges on)
 _RECORD_DDL = "event_id BIGINT, user_id BIGINT, value DOUBLE"
 _STREAM_LAKE_DDL = f"{_RECORD_DDL}, ts TIMESTAMP, dt STRING"
+# the one-row result both reference ETL runs return
+_FUNNEL_DDL = ("n_scanned BIGINT, n_valid BIGINT, n_unique BIGINT, "
+               "n_sunk BIGINT, watermark_advanced BOOLEAN")
 
 def _with_validity(df: DataFrame) -> DataFrame:
     """Stage 2, shared by the batch and streaming runs: serialize each
@@ -145,14 +153,9 @@ def pipeline_reference_etl(spark: SparkSession, sf_dir: str) -> DataFrame:
     store.commit(win_lo, win_hi, record_count=n_sunk)
     advanced = store.last_processed() == win_hi
 
-    # SQL literal, never createDataFrame (Python-RDD build sides stall
-    # broadcasts)
-    return spark.sql(
-        f"SELECT CAST({int(counts['n_scanned'])} AS BIGINT) AS n_scanned, "
-        f"CAST({int(counts['n_valid'])} AS BIGINT) AS n_valid, "
-        f"CAST({int(counts['n_unique'])} AS BIGINT) AS n_unique, "
-        f"CAST({int(n_sunk)} AS BIGINT) AS n_sunk, "
-        f"{'TRUE' if advanced else 'FALSE'} AS watermark_advanced")
+    return spark.sql(sqlgen.values(
+        [(counts["n_scanned"], counts["n_valid"], counts["n_unique"], n_sunk,
+          advanced)], _FUNNEL_DDL))
 
 
 def publish_lake_version(lake: str, tmp: str) -> None:
@@ -239,32 +242,6 @@ def resolve_trigger_files(trigger_files: int | None, total_files: int,
     return max(1, -(-total_files // default_batches))
 
 
-def _committed_file_idx(ckpt_dir: str) -> int:
-    """The docstore offset already committed in a streaming checkpoint
-    (0 when the checkpoint is fresh or unreadable).
-
-    Reads Spark's offset log — a stable, documented on-disk layout
-    (``offsets/<batchId>`` written before the batch, ``commits/<batchId>``
-    after) whose per-source offset line is OUR OWN json
-    (``{"file_idx": N}``, DocStoreStreamReader).  Used only as the
-    restart seed for the rate-capped tail; a wrong seed degrades to
-    re-delivery, which the idempotent MERGE absorbs (at-least-once)."""
-    import json
-
-    commits = os.path.join(ckpt_dir, "commits")
-    offsets = os.path.join(ckpt_dir, "offsets")
-    try:
-        done = max(int(f) for f in os.listdir(commits) if f.isdigit())
-    except (OSError, ValueError):
-        return 0
-    try:
-        with open(os.path.join(offsets, str(done))) as fh:
-            lines = [ln.strip() for ln in fh if ln.strip()]
-        return int(json.loads(lines[-1])["file_idx"])
-    except (OSError, ValueError, KeyError, IndexError):
-        return 0
-
-
 def run_etl_stream(spark: SparkSession, sf_dir: str, lake: str, wm_root: str,
                    ckpt: str, tail_cap: int = 0,
                    max_wait_sec: float | None = None,
@@ -298,8 +275,6 @@ def run_etl_stream(spark: SparkSession, sf_dir: str, lake: str, wm_root: str,
     table format (see sources/txtable.py for the ACID variant); the
     per-batch plan — keyed window + union + keep-latest — is unchanged.
     """
-    import time
-
     from build_pipeline_with_apache_beam_spark.sources.docstore import (
         MANIFEST,
         build_collection,
@@ -317,7 +292,7 @@ def run_etl_stream(spark: SparkSession, sf_dir: str, lake: str, wm_root: str,
     stream = open_docstore(
         spark, sf_dir, stream=True, path=root,
         tail_cap=str(tail_cap),
-        resume_from=str(_committed_file_idx(ckpt)))
+        resume_from=str(committed_file_idx(ckpt)))
 
     store = WatermarkStore(wm_root)
     win_lo = F.lit(_WINDOW_LO).cast("timestamp")
@@ -397,18 +372,7 @@ def run_etl_stream(spark: SparkSession, sf_dir: str, lake: str, wm_root: str,
         # 3005-file collection stalled at 1002 files against the old
         # constant)
         max_wait_sec = max(180.0, 1.0 * total_files)
-    deadline = time.time() + max_wait_sec
-    try:
-        while time.time() < deadline:
-            if q.exception() is not None:
-                raise q.exception()
-            if _committed_file_idx(ckpt) >= target:
-                break
-            time.sleep(0.2)
-    finally:
-        q.stop()
-        q.awaitTermination(60)
-    return _committed_file_idx(ckpt)
+    return drain_to(q, ckpt, target, max_wait_sec)
 
 
 def _runlog_funnel(hist: list[dict]) -> tuple[int, int]:
@@ -488,14 +452,8 @@ def pipeline_reference_etl_stream(spark: SparkSession, sf_dir: str,
     max_valid_ts = max((r["window_end"] for r in hist), default=None)
     advanced = (max_valid_ts is not None
                 and wm_final.isoformat() == max_valid_ts)
-    # SQL VALUES, never createDataFrame literals (Python-RDD build sides
-    # stall broadcasts — see the verify notes)
-    return spark.sql(
-        f"SELECT CAST({int(n_scanned)} AS BIGINT) AS n_scanned, "
-        f"CAST({int(n_valid)} AS BIGINT) AS n_valid, "
-        f"CAST({int(n_unique)} AS BIGINT) AS n_unique, "
-        f"CAST({int(n_sunk)} AS BIGINT) AS n_sunk, "
-        f"{'TRUE' if advanced else 'FALSE'} AS watermark_advanced")
+    return spark.sql(sqlgen.values(
+        [(n_scanned, n_valid, n_unique, n_sunk, advanced)], _FUNNEL_DDL))
 
 
 QUERIES = {

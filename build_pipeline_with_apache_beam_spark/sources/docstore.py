@@ -49,7 +49,12 @@ from pyspark.sql.datasource import (
 )
 
 from build_pipeline_with_apache_beam_spark.catalog import load_table
+from build_pipeline_with_apache_beam_spark.functions import sqlgen
 from build_pipeline_with_apache_beam_spark.scratch import derived, run_dir
+from build_pipeline_with_apache_beam_spark.streaming.drain import (
+    await_drained,
+    drain_to,
+)
 
 SCHEMA_DDL = ("event_id BIGINT, ts_micros BIGINT, user_id BIGINT, "
               "event_type STRING, value DOUBLE")
@@ -448,13 +453,10 @@ def scan_docstore_count_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats: dict = {}
     n = count_documents(spark, root, _session_micros(spark, _CNT_LO),
                         _session_micros(spark, _CNT_HI), stats=stats)
-    return spark.sql(f"""
-        SELECT CAST({n} AS BIGINT) AS n_docs,
-               CAST({stats['n_manifest_only']} AS BIGINT)
-                   AS n_files_manifest_only,
-               CAST({stats['n_opened']} AS BIGINT) AS n_files_opened,
-               CAST({stats['n_pruned']} AS BIGINT) AS n_files_pruned
-    """)
+    return spark.sql(sqlgen.values(
+        [(n, stats["n_manifest_only"], stats["n_opened"], stats["n_pruned"])],
+        "n_docs BIGINT, n_files_manifest_only BIGINT, n_files_opened BIGINT, "
+        "n_files_pruned BIGINT"))
 
 
 def stream_docstore_tail(spark: SparkSession, sf_dir: str,
@@ -468,10 +470,7 @@ def stream_docstore_tail(spark: SparkSession, sf_dir: str,
     ``complete`` output mode carries state across batches, so the final
     sink equals a batch GROUP BY over events at ANY trigger size — which
     is the DuckDB oracle."""
-    import time
-
     from build_pipeline_with_apache_beam_spark.plans.etl import (
-        _committed_file_idx,
         resolve_trigger_files,
     )
 
@@ -498,10 +497,6 @@ def stream_docstore_tail(spark: SparkSession, sf_dir: str,
              .option("checkpointLocation", ckpt_dir)
              .outputMode("complete")
              .trigger(availableNow=True).start())
-        from build_pipeline_with_apache_beam_spark.streaming.drain import (
-            await_drained,
-        )
-
         await_drained(q)
     else:
         # capped: continuous micro-batches until the checkpoint has
@@ -511,22 +506,12 @@ def stream_docstore_tail(spark: SparkSession, sf_dir: str,
              .option("checkpointLocation", ckpt_dir)
              .outputMode("complete")
              .trigger(processingTime="0 seconds").start())
-        deadline = time.time() + max(180.0, 1.0 * total_files)
-        try:
-            while time.time() < deadline:
-                if q.exception() is not None:
-                    raise q.exception()
-                if _committed_file_idx(ckpt_dir) >= total_files:
-                    break
-                time.sleep(0.2)
-        finally:
-            q.stop()
-            q.awaitTermination(60)
+        committed = drain_to(q, ckpt_dir, total_files,
+                             max(180.0, 1.0 * total_files))
         # A timeout must be an error, never a truncated answer (the same
         # contract await_drained enforces): if the deadline expired before
         # every manifest entry was committed, the sink holds a HALF-DRAINED
         # aggregate — raise instead of returning it.
-        committed = _committed_file_idx(ckpt_dir)
         if committed < total_files:
             raise TimeoutError(
                 f"stream_docstore_tail drain incomplete: committed "

@@ -25,6 +25,7 @@ from typing import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from build_pipeline_with_apache_beam_spark.functions import sqlgen
 from build_pipeline_with_apache_beam_spark.streaming.watermark import WatermarkStore
 
 
@@ -113,18 +114,11 @@ def q_incremental_runlog(spark, sf_dir: str) -> DataFrame:
 
     recs = WatermarkStore(derived(sf_dir, "runlog", run),
                           default_epoch=_RUN_EPOCH).history()
-    rows = ",\n".join(
-        "('{ws}', '{we}', {n})".format(
-            ws=r["window_start"], we=r["window_end"], n=r["record_count"])
-        for r in recs)
-    # VALUES literal (driver metadata, a handful of rows) → DataFrame
-    return spark.sql(f"""
-        SELECT CAST(window_start AS TIMESTAMP) AS window_start,
-               CAST(window_end AS TIMESTAMP) AS window_end,
-               CAST(record_count AS BIGINT) AS record_count
-        FROM (VALUES {rows}) AS t(window_start, window_end, record_count)
-        ORDER BY window_start
-    """)
+    rows = [(r["window_start"], r["window_end"], r["record_count"])
+            for r in recs]
+    return spark.sql(sqlgen.values(
+        rows, "window_start TIMESTAMP, window_end TIMESTAMP, "
+        "record_count BIGINT")).orderBy("window_start")
 
 
 QUERIES = {

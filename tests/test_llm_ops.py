@@ -14,6 +14,7 @@ from build_pipeline_with_apache_beam_spark.operators.dedup import (
     dedup_ngram_jaccard,
     dedup_simhash,
     fuzzy_minhash_pairs,
+    shingled_docs,
 )
 from build_pipeline_with_apache_beam_spark.operators.multimodal import (
     multimodal_feature_extract,
@@ -30,7 +31,7 @@ from build_pipeline_with_apache_beam_spark.operators.similarity import (
 def test_minhash_precision(spark, sf_dir):
     """Every pair MinHash-LSH emits must truly meet the Jaccard threshold —
     the pipeline ends with exact verification, so precision is 1.0."""
-    pairs = fuzzy_minhash_pairs(spark, sf_dir)
+    pairs = fuzzy_minhash_pairs(spark, sf_dir, shingled_docs(spark, sf_dir))
     assert pairs.where(F.col("jaccard") < 0.7).count() == 0
     assert pairs.count() > 0  # the corpus does contain near-dups
 
@@ -49,7 +50,8 @@ def test_minhash_recall_of_strong_dups(spark, sf_dir):
         .where(F.col("j") >= 0.9)
         .select("doc_a", "doc_b")
     )
-    found = fuzzy_minhash_pairs(spark, sf_dir).select("doc_a", "doc_b")
+    found = fuzzy_minhash_pairs(spark, sf_dir, lambda: shingled).select(
+        "doc_a", "doc_b")
     n_truth = truth.count()
     if n_truth == 0:
         return  # nothing this strong at this SF — precision test still covers
@@ -217,14 +219,14 @@ def test_incremental_minhash_matches_full_pipeline(spark, sf_dir):
     same bands, same threshold, so no pair involving a new doc may appear
     or vanish just because the index was built incrementally."""
     from build_pipeline_with_apache_beam_spark.operators.dedup import (
-        fuzzy_minhash_pairs,
         incremental_minhash_matches,
     )
 
     inc = {r["new_doc"]: r["n_dup_matches"]
            for r in incremental_minhash_matches(spark, sf_dir).collect()}
 
-    full_pairs = fuzzy_minhash_pairs(spark, sf_dir).collect()
+    full_pairs = fuzzy_minhash_pairs(
+        spark, sf_dir, shingled_docs(spark, sf_dir)).collect()
     want = {d: 0 for d in inc}
     for r in full_pairs:
         for d, other in ((r["doc_a"], r["doc_b"]), (r["doc_b"], r["doc_a"])):
@@ -242,13 +244,12 @@ def test_minhash_signature_estimates_jaccard(spark, sf_dir):
 
     from build_pipeline_with_apache_beam_spark.operators.dedup import (
         N_MINHASH,
-        _docs_with_shingles,
-        fuzzy_minhash_pairs,
         minhash_signatures,
     )
 
-    pairs = fuzzy_minhash_pairs(spark, sf_dir)   # (doc_a, doc_b, jaccard)
-    sigs = minhash_signatures(_docs_with_shingles(spark, sf_dir))
+    shingled = shingled_docs(spark, sf_dir)
+    pairs = fuzzy_minhash_pairs(spark, sf_dir, shingled)   # (doc_a, doc_b, jaccard)
+    sigs = minhash_signatures(shingled())
     a = sigs.select(F.col("doc_id").alias("doc_a"),
                     *[F.col(f"mh_{i}").alias(f"a_{i}") for i in range(N_MINHASH)])
     b = sigs.select(F.col("doc_id").alias("doc_b"),

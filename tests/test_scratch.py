@@ -4,6 +4,7 @@ sf dir whose name carries the sf dir's basename."""
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import subprocess
@@ -158,16 +159,32 @@ def test_every_scratch_entry_of_an_sf_dir_carries_its_basename(tmp_path):
     assert not os.path.exists(namespace(sf))
 
 
-def test_staged_rereads_a_committed_stage_in_a_new_process(spark, sf,
-                                                          monkeypatch):
-    """With the schema memo cleared — a new process, as far as ``_staged``
-    can tell — a committed stage is re-read and its builder never runs."""
+def test_staged_rereads_a_committed_stage_in_a_new_process(spark, sf):
+    """A second process re-reads a committed stage with the schema stored
+    beside it: its builder never runs, and the first read starts no Spark
+    job (no parquet schema inference)."""
     first = catalog._staged(spark, lambda: spark.range(7), sf, "probe")
-    monkeypatch.setattr(catalog, "_STAGE_DONE", {})
+    out = _run(f"""
+        import json, os
+        os.environ.update(SPARK_GRAFT_CPUS="1", SPARK_GRAFT_DRIVER_MEM="1g")
+        from build_pipeline_with_apache_beam_spark import catalog
+        from build_pipeline_with_apache_beam_spark.session import get_spark
 
-    def build():
-        raise AssertionError("builder called for a committed stage")
+        def build():
+            raise AssertionError("builder called for a committed stage")
 
-    again = catalog._staged(spark, build, sf, "probe")
-    assert again.schema == first.schema
-    assert sorted(r.id for r in again.collect()) == list(range(7))
+        spark = get_spark("stage-reread")
+        sc = spark.sparkContext
+        sc.setJobGroup("reread", "first read of a committed stage")
+        again = catalog._staged(spark, build, {sf!r}, "probe")
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = list(sc.statusTracker().getJobIdsForGroup("reread"))
+        sc._jsc.clearJobGroup()
+        print(json.dumps({{"jobs": jobs, "schema": again.schema.json(),
+                          "ids": sorted(r.id for r in again.collect())}}))
+    """)
+    assert out.returncode == 0, out.stderr[-2000:]
+    got = json.loads(out.stdout.strip().splitlines()[-1])
+    assert got["jobs"] == []
+    assert got["schema"] == first.schema.json()
+    assert got["ids"] == list(range(7))

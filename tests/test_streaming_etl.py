@@ -27,7 +27,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from build_pipeline_with_apache_beam_spark.plans.etl import (
-    _committed_file_idx,
     _runlog_funnel,
     pipeline_reference_etl,
     pipeline_reference_etl_stream,

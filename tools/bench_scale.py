@@ -376,9 +376,11 @@ def main() -> int:
     # density contract is actually defined
     from build_pipeline_with_apache_beam_spark.operators.dedup import (
         fuzzy_minhash_pairs,
+        shingled_docs,
     )
 
-    DENSITY_FNS = {"dedup_fuzzy_minhash": fuzzy_minhash_pairs}
+    DENSITY_FNS = {"dedup_fuzzy_minhash": lambda spark, d: fuzzy_minhash_pairs(
+        spark, d, shingled_docs(spark, d))}
     dense_dir = dense30_dir = None
     for i, a in enumerate(sys.argv):
         if a == "--dense-dir" and i + 1 < len(sys.argv):
