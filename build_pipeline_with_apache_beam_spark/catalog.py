@@ -10,7 +10,8 @@ Operators' intermediate parquet stages (``_staged``) are managed here too,
 beside the scan-spread rule: each stage is a content-addressed
 ``scratch.derived`` artifact — keyed by the sf dir's table files and the
 package code, committed by rename, reused by every later call in any
-process — and read back as a plain parquet scan.
+process — and read back as a parquet scan, one partition when it is
+small.
 """
 
 from __future__ import annotations
@@ -68,17 +69,24 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
 
 def table_meta(sf_dir: str, name: str) -> tuple[int, int]:
     """(n_rows, n_splits_estimate) for a table, straight off the parquet
-    footers — NO Spark job: a ``df.count()`` costs a scheduler round-trip
-    per operator call and ``df.rdd.getNumPartitions()`` re-plans the scan
-    (~0.2 s combined per call, measured r15).  A table is one file or a
-    directory tree of them (nested or Hive-partitioned ``key=value``
-    dirs), walked by ``scratch.parquet_files``, the walk the derived
-    artifacts' input fingerprint uses too.  The split estimate mirrors
-    Spark's packing math (total bytes / ``MAX_PARTITION_BYTES``, at least
-    one split per file) closely enough for a spread-or-not threshold."""
+    footers (``parquet_meta``)."""
+    return parquet_meta(os.path.join(sf_dir, f"{name}.parquet"))
+
+
+def parquet_meta(path: str) -> tuple[int, int]:
+    """(n_rows, n_splits_estimate) for a parquet file or dir, straight off
+    the footers — NO Spark job: a ``df.count()`` costs a scheduler
+    round-trip per operator call and ``df.rdd.getNumPartitions()`` re-plans
+    the scan (~0.2 s combined per call, measured r15).  ``path`` is one
+    file or a directory tree of them (nested or Hive-partitioned
+    ``key=value`` dirs), walked by ``scratch.parquet_files``, the walk the
+    derived artifacts' input fingerprint uses too.  The split estimate
+    mirrors Spark's packing math (total bytes / ``MAX_PARTITION_BYTES``, at
+    least one split per file) closely enough for a spread-or-not
+    threshold."""
     import pyarrow.parquet as pq
 
-    files = parquet_files(os.path.join(sf_dir, f"{name}.parquet"))
+    files = parquet_files(path)
     n_rows = 0
     total_bytes = 0
     for f in files:
@@ -102,11 +110,14 @@ def sized_spread(df: DataFrame, n_rows: int,
     provide the parallelism and the shuffle is pure waste.  This helper
     sizes the target by rows (capped at defaultParallelism) and adds the
     exchange only when the scan itself falls short of it — corpus-scale
-    paths take NO exchange.
+    paths take NO exchange.  Without ``n_splits`` the scan's partitions are
+    counted by planning it (~0.09 s), only when the target exceeds one.
     """
     spark = df.sparkSession
     target = max(1, min(spark.sparkContext.defaultParallelism,
                         -(-n_rows // max(1, rows_per_partition))))
+    if target == 1:
+        return df
     if n_splits is None:
         n_splits = df.rdd.getNumPartitions()
     if n_splits >= target:
@@ -142,6 +153,17 @@ def _staged(spark: SparkSession, build: Callable[[], DataFrame], sf_dir: str,
     It reads back exactly as inferred: a file source reads a given schema
     back as nullable, and the written frame may declare columns non-null.
 
+    Layout: a stage whose parquet files total at most the session's
+    ``spark.sql.adaptive.coalescePartitions.minPartitionSize`` is read as
+    ONE partition (``coalesce(1)``); a larger one keeps its scan splits.
+    AQE coalesces a shuffle towards partitions of that size, so a shuffle
+    of a leaf that small ends up in about one partition anyway: reading it
+    as one partition loses no parallelism, and joins, aggregates and
+    windows over it plan no exchange (a one-partition child satisfies any
+    clustered distribution while its size estimate stays under
+    ``spark.sql.maxSinglePartitionBytes``).  The decision stats the stage's
+    files: no footer read and no Spark job.
+
     The sketch pipelines are deliberately executed in STAGES (signature
     index → candidate pairs → verification) rather than as one fused lazy
     plan.  Two reasons:
@@ -171,4 +193,17 @@ def _staged(spark: SparkSession, build: Callable[[], DataFrame], sf_dir: str,
     path = derived(sf_dir, name, write)
     with open(os.path.join(path, _STAGE_SCHEMA)) as fh:
         schema = StructType.fromJson(json.load(fh))
-    return spark.read.schema(schema).parquet(path)
+    df = spark.read.schema(schema).parquet(path)
+    size = sum(os.path.getsize(f) for f in parquet_files(path))
+    if size <= _min_partition_bytes(spark):
+        return df.coalesce(1)  # small-bounded: under AQE's partition floor
+    return df
+
+
+def _min_partition_bytes(spark: SparkSession) -> int:
+    """The session's ``spark.sql.adaptive.coalescePartitions.minPartitionSize``
+    in bytes, parsed the way Spark parses byte confs."""
+    jvm = spark.sparkContext._jvm
+    return int(jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        spark.conf.get(
+            "spark.sql.adaptive.coalescePartitions.minPartitionSize")))

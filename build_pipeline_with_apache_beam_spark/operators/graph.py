@@ -32,7 +32,9 @@ One materialization rule, for every op in this module:
   reads becomes a leaf: a staged parquet stage when it is a pure function
   of the tables (the strong-tie edge list), a ``localCheckpoint``
   otherwise (a loop's edges), so a returned frame pins nothing in the
-  session's CacheManager and there is nothing to ``unpersist``.
+  session's CacheManager and there is nothing to ``unpersist``.  A small
+  stage is a one-partition leaf (``catalog._staged``), and ``_sym_edges``
+  keeps that partitioning.
 - A loop checkpoints its state every round only when it broadcasts that
   state (``_relax``) or counts it on the driver (``connected_components``'s
   convergence test).  A lazily broadcast state nests every earlier round
@@ -40,16 +42,27 @@ One materialization rule, for every op in this module:
   checkpoint per round, though it starts fewer jobs.
 - A fixed, small round count whose state is joined by shuffle
   (``graph_label_propagation``) composes one lazy plan: no checkpoint.
+  Below the layout bound its state is one partition too, so the whole
+  plan is a single-partition plan with no exchange: one Spark job.
 - Iteration state is laid out by size (``_iter_layout``); a leaf that
   shuffle joins read every round is laid out once (``_laid_out_leaf``).
 """
 
 from __future__ import annotations
 
+import os
+from urllib.parse import urlparse
+from urllib.request import url2pathname
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from build_pipeline_with_apache_beam_spark.catalog import _staged, load_table
+from build_pipeline_with_apache_beam_spark.catalog import (
+    _staged,
+    load_table,
+    parquet_meta,
+    sized_spread,
+)
 
 # Size-aware iteration layout (round-3 verdict #2): below this many rows a
 # graph-iteration state collapses to ONE partition (one task per round, no
@@ -57,6 +70,9 @@ from build_pipeline_with_apache_beam_spark.catalog import _staged, load_table
 # join key so a 10⁸-vertex supplier graph never becomes a one-task
 # straggler.
 GRAPH_ROWS_PER_PARTITION = 250_000
+
+# Directed edges per task on the probe side of link prediction's path join.
+_PATH_ROWS_PER_PARTITION = 8192
 
 
 def _iter_layout(df: DataFrame, n_rows: int, *keys: str) -> DataFrame:
@@ -158,11 +174,24 @@ def _strong_co_supply(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sym_edges(strong: DataFrame, *cols: str | Column) -> DataFrame:
     """Both orientations ``(src, dst, *cols)`` of an undirected ``(u, v)``
-    edge list: every vertex sees all of its neighbors as ``dst``."""
-    return (strong.select(F.col("u").alias("src"), F.col("v").alias("dst"),
-                          *cols)
-            .unionAll(strong.select(F.col("v").alias("src"),
-                                    F.col("u").alias("dst"), *cols)))
+    edge list: every vertex sees all of its neighbors as ``dst``.
+
+    One ``inline`` of a two-struct array per row: the leaf is scanned once
+    and the ``Generate`` keeps its partitioning, where a ``Union`` of two
+    selects scans it twice and reports no partitioning, so a one-partition
+    leaf would be shuffled again by every join or aggregate above it."""
+    return strong.select(
+        F.inline(F.array(
+            F.struct(F.col("u").alias("src"), F.col("v").alias("dst")),
+            F.struct(F.col("v").alias("src"), F.col("u").alias("dst")))),
+        *cols)
+
+
+def _stage_rows(stage: DataFrame) -> int:
+    """Row count of a staged leaf, read off its parquet footers: no Spark
+    job."""
+    path = url2pathname(urlparse(stage.inputFiles()[0]).path)
+    return parquet_meta(os.path.dirname(path))[0]
 
 
 def _relax(sym: DataFrame, rounds: int) -> DataFrame:
@@ -432,12 +461,16 @@ def graph_link_prediction_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     strong = _strong_co_supply(spark, sf_dir)
     sym = _sym_edges(strong)
     deg = sym.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
+    # the path join fans each edge out to deg(x) candidates: spread a
+    # one-partition leaf over the cores before it
+    paths = sized_spread(sym, 2 * _stage_rows(strong),
+                         _PATH_ROWS_PER_PARTITION)
     # a common neighbor always has deg >= 2 (it touches both endpoints),
     # but ANSI mode evaluates the term for deg-1 leaves too — guard it
     aa = deg.select("src", F.when(F.col("deg") >= 2,
                                   F.round(10000 / F.log("deg")))
                     .otherwise(F.lit(0)).cast("bigint").alias("aa_bp"))
-    s1 = sym.select(F.col("src").alias("a"), F.col("dst").alias("x"))
+    s1 = paths.select(F.col("src").alias("a"), F.col("dst").alias("x"))
     s2 = sym.select(F.col("src").alias("x2"), F.col("dst").alias("b"))
     cand = (s1.join(s2, (F.col("x") == F.col("x2"))
                     & (F.col("a") < F.col("b")))
@@ -478,22 +511,29 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     table collapsed to the strong-tie leaf once, in ``_strong_co_supply``).
     The round count is fixed and small and the label state is joined by
     shuffle, never broadcast, so the rounds compose ONE lazy plan with no
-    checkpoint: the sink runs it as one query.  Output is the
-    community-size histogram keyed by final label."""
+    checkpoint: the sink runs it as one query.  The label state is laid
+    out by size (``_iter_layout`` on the edge count, which bounds it):
+    below the layout bound the strong-tie stage is a one-partition leaf
+    (``catalog._staged``), so every round's join, vote count and window
+    read one partition and the three rounds run as one Spark job with no
+    exchange.  Output is the community-size histogram keyed by final
+    label."""
     from pyspark.sql import Window as W
 
-    sym = _sym_edges(_strong_co_supply(spark, sf_dir))
-    labels = (sym.select(F.col("src").alias("node")).distinct()
-              .withColumn("label", F.col("node")))
+    strong = _strong_co_supply(spark, sf_dir)
+    n_sym = 2 * _stage_rows(strong)
+    sym = _sym_edges(strong)
+    labels = _iter_layout(sym.select(F.col("src").alias("node")).distinct()
+                          .withColumn("label", F.col("node")), n_sym, "node")
     pick = W.partitionBy("node").orderBy(F.col("c").desc(), F.col("label"))
     for _ in range(LPA_ITERS):
         votes = (sym.join(labels.hint("shuffle_hash"),
                           sym.dst == labels.node)
                  .groupBy(sym.src.alias("node"), "label")
                  .agg(F.count(F.lit(1)).alias("c")))
-        labels = (votes.withColumn("rn", F.row_number().over(pick))
-                  .where(F.col("rn") == 1)
-                  .select("node", "label"))
+        labels = _iter_layout(votes.withColumn("rn", F.row_number().over(pick))
+                              .where(F.col("rn") == 1)
+                              .select("node", "label"), n_sym, "node")
     return (labels.groupBy(F.col("label").alias("community"))
             .agg(F.count(F.lit(1)).alias("n_members"))
             .orderBy("community"))

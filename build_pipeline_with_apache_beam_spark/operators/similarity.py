@@ -23,6 +23,7 @@ bucketing as a blocked self-join.
 
 from __future__ import annotations
 
+import json
 import math
 import os
 
@@ -33,6 +34,7 @@ from pyspark.sql import functions as F
 
 from build_pipeline_with_apache_beam_spark.catalog import load_table
 from build_pipeline_with_apache_beam_spark.functions import sqlgen
+from build_pipeline_with_apache_beam_spark.scratch import derived
 
 DIM = 64
 N_PLANES = 4  # 2^4 buckets — sized so buckets hold enough candidates at test SFs
@@ -255,6 +257,22 @@ def _ivf_codebook(emb: DataFrame) -> list[list[float]]:
     return _ivf_codebook_from_matrix(sample)
 
 
+def _codebook(sf_dir: str, emb: DataFrame) -> list[list[float]]:
+    """The IVF codebook of ``sf_dir``'s embeddings as a derived artifact
+    (``scratch.derived``): one JSON file of the centroids, trained by
+    :func:`_ivf_codebook` on ``emb`` (the unit vectors of the embeddings
+    table) only on a miss.  The training is deterministic, so the file is a
+    pure function of the tables and the package code, and a warm call
+    starts no Spark job for it.  JSON writes each double as its shortest
+    repr, which reads back bit-exactly."""
+    def write(tmp: str) -> None:
+        with open(tmp, "w") as fh:
+            json.dump(_ivf_codebook(emb), fh)
+
+    with open(derived(sf_dir, "ivf_codebook", write)) as fh:
+        return json.load(fh)
+
+
 def _oracle_codebook(sf_dir: str) -> list[list[float]]:
     """The oracle builder's twin of :func:`_ivf_codebook`: read the training
     sample straight off the parquet (pyarrow, no Spark), replicate Spark's
@@ -301,14 +319,14 @@ def sim_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window as W
 
-    # persist the normalized vectors: they feed codebook training, cell
-    # assignment, and both join sides — and materializing `vec` stops the
-    # normalization expression from being re-inlined into every one of the
-    # 8 per-cell dot products (at scale the assigned index is written to
-    # disk partitioned by cell — probing becomes partition pruning)
+    # persist the normalized vectors: cell assignment and both join sides
+    # read them, and materializing `vec` stops the normalization
+    # expression from being re-inlined into every one of the 8 per-cell
+    # dot products (at scale the assigned index is written to disk
+    # partitioned by cell — probing becomes partition pruning)
     emb = (_with_unit_vec(load_table(spark, sf_dir, "embeddings"), sf_dir=sf_dir)
            .select("vec_id", "vec").persist())
-    cents = _ivf_codebook(emb)
+    cents = _codebook(sf_dir, emb)
     assigned = emb.withColumn(
         "cell", _argmax_cell(_cell_dots("vec", cents)))
     c = assigned.select(F.col("vec_id").alias("cand_id"),
@@ -618,7 +636,7 @@ def corpus_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     emb = (_with_unit_vec(load_table(spark, sf_dir, "embeddings"), sf_dir=sf_dir)
            .select("vec_id", "vec").persist())
-    cents = _ivf_codebook(emb)
+    cents = _codebook(sf_dir, emb)
     assigned = (emb
                 .withColumn("dots", _cell_dots("vec", cents))
                 .withColumn("cell", _argmax_cell(F.col("dots")))

@@ -24,6 +24,7 @@ Two kinds of path:
 from __future__ import annotations
 
 import atexit
+import contextlib
 import functools
 import hashlib
 import os
@@ -97,8 +98,8 @@ def derived(sf_dir: str, name: str, write: Callable[[str], None]) -> str:
     is a pure function of ``sf_dir``'s tables and the package code.
 
     On a miss ``write(tmp)`` creates the artifact at ``tmp``, a fresh path
-    that does not exist yet (a Spark writer's output dir, or a dir the
-    writer makes), and ``os.rename`` commits it.  If another process
+    that does not exist yet (a Spark writer's output dir, a dir the writer
+    makes, or one file), and ``os.rename`` commits it.  If another process
     committed the key first the rename fails; that copy is as good, so this
     one is dropped.  After a commit the other keys of ``name`` are deleted:
     one copy per artifact per sf dir."""
@@ -116,12 +117,21 @@ def derived(sf_dir: str, name: str, write: Callable[[str], None]) -> str:
             if not os.path.exists(path):
                 raise
     finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        _remove(tmp)
     stale = re.compile(rf"{re.escape(name)}-[0-9a-f]{{{_KEY_HEX}}}")
     for entry in os.listdir(ns):
         if stale.fullmatch(entry) and os.path.join(ns, entry) != path:
-            shutil.rmtree(os.path.join(ns, entry), ignore_errors=True)
+            _remove(os.path.join(ns, entry))
     return path
+
+
+def _remove(path: str) -> None:
+    """Delete a dir tree or a file, ignoring errors (a missing path too)."""
+    if os.path.isdir(path) and not os.path.islink(path):
+        shutil.rmtree(path, ignore_errors=True)
+    else:
+        with contextlib.suppress(OSError):
+            os.remove(path)
 
 
 # namespace -> this process's run root in it

@@ -702,11 +702,13 @@ def test_graph_partitioned_path_matches_small_path(
     """Forcing the hash-partitioned iteration layout at test sf must give
     byte-identical results to the small-graph single-partition path — for
     both shared loops (``_relax``: k-hop, shortest paths;
-    ``connected_components``: component sizes, dedup groups)."""
+    ``connected_components``: component sizes, dedup groups) and for
+    LPA's label state."""
     from build_pipeline_with_apache_beam_spark.operators import graph
 
     for op in ("graph_khop_reachability", "graph_shortest_paths_weighted",
-               "graph_component_size_dist", "dedup_connected_groups"):
+               "graph_component_size_dist", "dedup_connected_groups",
+               "graph_label_propagation"):
         base = {tuple(r) for r in registry[op](spark, sf_dir).collect()}
         monkeypatch.setattr(graph, "GRAPH_ROWS_PER_PARTITION", 0)
         forced = {tuple(r) for r in registry[op](spark, sf_dir).collect()}
@@ -723,6 +725,80 @@ def test_lpa_windows_are_partitioned_by_node(spark, sf_dir, registry):
     n_partitioned = plan.count("windowspecdefinition(node#")
     assert n_specs == n_partitioned, plan
     assert "CartesianProduct" not in plan
+
+
+def _jobs_of(spark, fn) -> int:
+    """Spark jobs ``fn()`` starts, counted in a job group of its own."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"plans-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "counted")
+    try:
+        fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_warm_lpa_is_one_job_without_exchanges(spark, sf_dir, registry):
+    """Below the layout bound the strong-tie stage is a one-partition leaf
+    and LPA lays its label state out by the edge count: a warm call's
+    three rounds plan no hash exchange, and its sink is one Spark job."""
+    registry["graph_label_propagation"](spark, sf_dir)  # commits the stage
+    df = registry["graph_label_propagation"](spark, sf_dir)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange hashpartitioning" not in plan, plan
+    assert _jobs_of(spark, lambda: df.write.format("noop")
+                    .mode("overwrite").save()) == 1
+
+
+def _union_sym_edges(strong, *cols):
+    """The two-select ``unionAll`` form ``_sym_edges`` replaced."""
+    from pyspark.sql import functions as F
+
+    return (strong.select(F.col("u").alias("src"), F.col("v").alias("dst"),
+                          *cols)
+            .unionAll(strong.select(F.col("v").alias("src"),
+                                    F.col("u").alias("dst"), *cols)))
+
+
+def test_sym_edges_equals_the_union_form(spark, sf_dir):
+    """``_sym_edges`` is the multiset union of both orientations, with and
+    without an extra weight column, on the strong-tie stage and on an edge
+    list with a repeated edge and a self-loop."""
+    from collections import Counter
+
+    from pyspark.sql import functions as F
+
+    from build_pipeline_with_apache_beam_spark.operators import graph
+
+    toy = spark.sql("SELECT * FROM VALUES (1L, 2L, 5L), (1L, 2L, 5L),"
+                    " (3L, 3L, 1L), (2L, 4L, 7L) AS t(u, v, co_parts)")
+    w = (F.col("co_parts") * 2).alias("w")
+    for strong in (graph._strong_co_supply(spark, sf_dir), toy):
+        for cols in ((), (w,)):
+            new = graph._sym_edges(strong, *cols)
+            old = _union_sym_edges(strong, *cols)
+            assert new.schema.simpleString() == old.schema.simpleString()
+            got = Counter(map(tuple, new.collect()))
+            assert got and got == Counter(map(tuple, old.collect()))
+
+
+def test_sym_edges_scans_its_leaf_once(spark, sf_dir):
+    """One scan of the leaf and no ``Union``: the ``Generate`` keeps the
+    one-partition leaf's partitioning, so a per-``src`` aggregate above
+    it plans no exchange."""
+    from build_pipeline_with_apache_beam_spark.operators import graph
+
+    sym = graph._sym_edges(graph._strong_co_supply(spark, sf_dir))
+    plan = sym._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FileScan parquet") == 1, plan
+    assert "Union" not in plan, plan
+    deg = sym.groupBy("src").count()
+    assert "Exchange" not in deg._jdf.queryExecution().executedPlan() \
+        .toString()
 
 
 def test_declared_small_broadcasts_stay_under_bound(spark, sf_dir, registry):

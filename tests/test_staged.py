@@ -1,7 +1,9 @@
 """The staging helper's contract (``catalog._staged``): a builder is called
-only when a stage is written, a hit builds and runs nothing, and the
-memoized re-read carries the schema parquet inference would return.  Also the
-footer-only table statistics (``catalog.table_meta``) the spread rule reads."""
+only when a stage is written, a hit builds and runs nothing, the memoized
+re-read carries the schema parquet inference would return, and a stage
+under AQE's partition floor reads as one partition.  Also the footer-only
+table statistics (``catalog.table_meta``) the spread rule reads, and the
+IVF codebook artifact (``similarity._codebook``)."""
 
 from __future__ import annotations
 
@@ -13,11 +15,26 @@ import uuid
 import pytest
 from pyspark.sql import functions as F
 
-from build_pipeline_with_apache_beam_spark.catalog import _staged, table_meta
+from build_pipeline_with_apache_beam_spark.catalog import (
+    _min_partition_bytes,
+    _staged,
+    load_table,
+    table_meta,
+)
 from build_pipeline_with_apache_beam_spark.operators.dedup import (
     dedup_fuzzy_minhash,
 )
-from build_pipeline_with_apache_beam_spark.scratch import namespace
+from build_pipeline_with_apache_beam_spark.operators.similarity import (
+    _codebook,
+    _ivf_codebook,
+    _with_unit_vec,
+    corpus_semdedup,
+    sim_ann_ivf_topk,
+)
+from build_pipeline_with_apache_beam_spark.scratch import (
+    namespace,
+    parquet_files,
+)
 
 
 @pytest.fixture()
@@ -107,6 +124,79 @@ def test_fresh_stage_runs_only_its_write_jobs(spark, sf, tmp_path_factory):
         == write_jobs
 
 
+def _in_group(spark, fn):
+    """``fn()``'s result and the ids of the Spark jobs it started."""
+    sc = spark.sparkContext
+    group = f"staged-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "counted")
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    return out, _jobs_in_group(spark, group)
+
+
+def _stage_dir(sf: str, name: str) -> str:
+    (path,) = glob.glob(os.path.join(namespace(sf), f"{name}-*"))
+    return path
+
+
+def _stage_bytes(sf: str, name: str) -> int:
+    return sum(os.path.getsize(f)
+               for f in parquet_files(_stage_dir(sf, name)))
+
+
+def _executed(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_small_stage_reads_as_one_partition(spark, sf):
+    """A stage whose files total at most the session's
+    ``coalescePartitions.minPartitionSize`` is read through ``Coalesce 1``:
+    one partition, although the write left four files."""
+    def frame():
+        return spark.range(0, 1000, numPartitions=4)
+
+    df = _staged(spark, frame, sf, "small_layout_probe")
+    assert len(df.inputFiles()) == 4
+    assert _stage_bytes(sf, "small_layout_probe") \
+        <= _min_partition_bytes(spark)
+    assert df.rdd.getNumPartitions() == 1
+    assert "Coalesce 1" in _executed(df)
+    assert sorted(r.id for r in df.collect()) == list(range(1000))
+
+
+def test_large_stage_keeps_its_scan_splits(spark, sf):
+    """A stage over the bound is a plain scan: as many partitions as a
+    bare parquet read of the same files, and no coalesce."""
+    def frame():
+        return (spark.range(0, 200_000, numPartitions=4)
+                .select("id", F.rand(7).alias("x"), F.randn(8).alias("y")))
+
+    df = _staged(spark, frame, sf, "large_layout_probe")
+    assert _stage_bytes(sf, "large_layout_probe") \
+        > _min_partition_bytes(spark)
+    bare = spark.read.parquet(_stage_dir(sf, "large_layout_probe"))
+    assert df.rdd.getNumPartitions() == bare.rdd.getNumPartitions() > 1
+    assert "Coalesce" not in _executed(df)
+
+
+def test_layout_decision_starts_no_job(spark, sf):
+    """Re-reading a committed stage, small or large, and deciding its
+    layout starts no Spark job."""
+    def small():
+        return spark.range(10)
+
+    def large():
+        return spark.range(0, 200_000, numPartitions=2).select(
+            "id", F.rand(3).alias("x"))
+
+    for name, frame in (("small_decide", small), ("large_decide", large)):
+        _staged(spark, frame, sf, name)
+        _, jobs = _in_group(spark, lambda: _staged(spark, frame, sf, name))
+        assert jobs == [], name
+
+
 def test_warm_fuzzy_minhash_runs_no_job_before_its_sink(spark, sf_dir):
     """A second ``dedup_fuzzy_minhash`` call builds its plan from reused
     stages alone: no Spark job starts until the sink, and the
@@ -145,3 +235,32 @@ def test_table_meta_walks_a_hive_partitioned_table(spark, tmp_path):
     footer_rows = sum(pq.ParquetFile(p).metadata.num_rows for p in parts)
     assert table_meta(str(tmp_path), "t") == (footer_rows, len(parts))
     assert footer_rows == 1000
+
+
+def test_codebook_artifact_equals_in_process_training(spark, sf_dir):
+    """The centroids read back from the ``ivf_codebook`` artifact are the
+    ones ``_ivf_codebook`` trains in this process, element for element."""
+    emb = _with_unit_vec(load_table(spark, sf_dir, "embeddings"),
+                         sf_dir=sf_dir).select("vec_id", "vec")
+    stored = _codebook(sf_dir, emb)
+    assert glob.glob(os.path.join(namespace(sf_dir), "ivf_codebook-*"))
+    assert stored == _ivf_codebook(emb)
+
+
+@pytest.mark.parametrize("op", [sim_ann_ivf_topk, corpus_semdedup])
+def test_warm_codebook_op_runs_no_job_before_its_sink(spark, sf_dir, op):
+    """A warm IVF op reads its codebook from the artifact: before its sink
+    it starts only the embeddings table's own schema read, no training
+    job or ``toPandas``."""
+    op(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    spark.catalog.clearCache()
+    _, table_jobs = _in_group(
+        spark, lambda: load_table(spark, sf_dir, "embeddings"))
+    df, build_jobs = _in_group(spark, lambda: op(spark, sf_dir))
+    try:
+        assert len(build_jobs) == len(table_jobs)
+        _, sink_jobs = _in_group(
+            spark, lambda: df.write.format("noop").mode("overwrite").save())
+        assert sink_jobs, "sink ran no job in the group"
+    finally:
+        spark.catalog.clearCache()
