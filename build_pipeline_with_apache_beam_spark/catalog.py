@@ -110,14 +110,11 @@ def sized_spread(df: DataFrame, n_rows: int,
     provide the parallelism and the shuffle is pure waste.  This helper
     sizes the target by rows (capped at defaultParallelism) and adds the
     exchange only when the scan itself falls short of it — corpus-scale
-    paths take NO exchange.  Without ``n_splits`` the scan's partitions are
-    counted by planning it (~0.09 s), only when the target exceeds one.
+    paths take NO exchange.
     """
     spark = df.sparkSession
     target = max(1, min(spark.sparkContext.defaultParallelism,
                         -(-n_rows // max(1, rows_per_partition))))
-    if target == 1:
-        return df
     if n_splits is None:
         n_splits = df.rdd.getNumPartitions()
     if n_splits >= target:
@@ -128,6 +125,13 @@ def sized_spread(df: DataFrame, n_rows: int,
 # the written frame's schema, beside each stage's parquet files (Spark
 # skips ``_``-prefixed files when it lists a dir)
 _STAGE_SCHEMA = "_schema.json"
+
+# Rows one task may carry for a one-partition stage's consumers: the bound
+# ``graph.GRAPH_ROWS_PER_PARTITION`` sets for one-partition iteration state.
+# A consumer can join a stage with itself (link prediction's path join, the
+# triangle census, a candidate-pair verification), so an n-row stage may
+# feed up to n² rows into that one task.
+_ONE_TASK_ROWS = 250_000
 
 
 def _staged(spark: SparkSession, build: Callable[[], DataFrame], sf_dir: str,
@@ -153,16 +157,22 @@ def _staged(spark: SparkSession, build: Callable[[], DataFrame], sf_dir: str,
     It reads back exactly as inferred: a file source reads a given schema
     back as nullable, and the written frame may declare columns non-null.
 
-    Layout: a stage whose parquet files total at most the session's
-    ``spark.sql.adaptive.coalescePartitions.minPartitionSize`` is read as
-    ONE partition (``coalesce(1)``); a larger one keeps its scan splits.
-    AQE coalesces a shuffle towards partitions of that size, so a shuffle
-    of a leaf that small ends up in about one partition anyway: reading it
-    as one partition loses no parallelism, and joins, aggregates and
-    windows over it plan no exchange (a one-partition child satisfies any
-    clustered distribution while its size estimate stays under
-    ``spark.sql.maxSinglePartitionBytes``).  The decision stats the stage's
-    files: no footer read and no Spark job.
+    Layout: a small stage is read as ONE partition (``coalesce(1)``), so
+    joins, aggregates and windows over it plan no exchange (a one-partition
+    child satisfies any clustered distribution while its size estimate
+    stays under ``spark.sql.maxSinglePartitionBytes``); any other stage
+    keeps its scan splits.  Small means both:
+
+    - its parquet files total at most the session's
+      ``spark.sql.adaptive.coalescePartitions.minPartitionSize``, below
+      which AQE would coalesce a shuffle of the stage's own rows into one
+      partition anyway;
+    - n² <= ``_ONE_TASK_ROWS`` for its n rows: every consumer's work runs
+      in that one task, and a self-join of the stage fans out to up to n²
+      rows, which no byte count of the leaf bounds.
+
+    The decision reads the stage's file sizes and parquet footers: no
+    Spark job.
 
     The sketch pipelines are deliberately executed in STAGES (signature
     index → candidate pairs → verification) rather than as one fused lazy
@@ -194,9 +204,11 @@ def _staged(spark: SparkSession, build: Callable[[], DataFrame], sf_dir: str,
     with open(os.path.join(path, _STAGE_SCHEMA)) as fh:
         schema = StructType.fromJson(json.load(fh))
     df = spark.read.schema(schema).parquet(path)
+    n_rows, _ = parquet_meta(path)
     size = sum(os.path.getsize(f) for f in parquet_files(path))
-    if size <= _min_partition_bytes(spark):
-        return df.coalesce(1)  # small-bounded: under AQE's partition floor
+    if n_rows * n_rows <= _ONE_TASK_ROWS and size <= _min_partition_bytes(
+            spark):
+        return df.coalesce(1)  # small-bounded: n² rows fit one task
     return df
 
 

@@ -50,10 +50,6 @@ One materialization rule, for every op in this module:
 
 from __future__ import annotations
 
-import os
-from urllib.parse import urlparse
-from urllib.request import url2pathname
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -61,8 +57,8 @@ from build_pipeline_with_apache_beam_spark.catalog import (
     _staged,
     load_table,
     parquet_meta,
-    sized_spread,
 )
+from build_pipeline_with_apache_beam_spark.scratch import derived_path
 
 # Size-aware iteration layout (round-3 verdict #2): below this many rows a
 # graph-iteration state collapses to ONE partition (one task per round, no
@@ -70,9 +66,6 @@ from build_pipeline_with_apache_beam_spark.catalog import (
 # join key so a 10⁸-vertex supplier graph never becomes a one-task
 # straggler.
 GRAPH_ROWS_PER_PARTITION = 250_000
-
-# Directed edges per task on the probe side of link prediction's path join.
-_PATH_ROWS_PER_PARTITION = 8192
 
 
 def _iter_layout(df: DataFrame, n_rows: int, *keys: str) -> DataFrame:
@@ -185,13 +178,6 @@ def _sym_edges(strong: DataFrame, *cols: str | Column) -> DataFrame:
             F.struct(F.col("u").alias("src"), F.col("v").alias("dst")),
             F.struct(F.col("v").alias("src"), F.col("u").alias("dst")))),
         *cols)
-
-
-def _stage_rows(stage: DataFrame) -> int:
-    """Row count of a staged leaf, read off its parquet footers: no Spark
-    job."""
-    path = url2pathname(urlparse(stage.inputFiles()[0]).path)
-    return parquet_meta(os.path.dirname(path))[0]
 
 
 def _relax(sym: DataFrame, rounds: int) -> DataFrame:
@@ -461,16 +447,12 @@ def graph_link_prediction_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     strong = _strong_co_supply(spark, sf_dir)
     sym = _sym_edges(strong)
     deg = sym.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    # the path join fans each edge out to deg(x) candidates: spread a
-    # one-partition leaf over the cores before it
-    paths = sized_spread(sym, 2 * _stage_rows(strong),
-                         _PATH_ROWS_PER_PARTITION)
     # a common neighbor always has deg >= 2 (it touches both endpoints),
     # but ANSI mode evaluates the term for deg-1 leaves too — guard it
     aa = deg.select("src", F.when(F.col("deg") >= 2,
                                   F.round(10000 / F.log("deg")))
                     .otherwise(F.lit(0)).cast("bigint").alias("aa_bp"))
-    s1 = paths.select(F.col("src").alias("a"), F.col("dst").alias("x"))
+    s1 = sym.select(F.col("src").alias("a"), F.col("dst").alias("x"))
     s2 = sym.select(F.col("src").alias("x2"), F.col("dst").alias("b"))
     cand = (s1.join(s2, (F.col("x") == F.col("x2"))
                     & (F.col("a") < F.col("b")))
@@ -520,9 +502,9 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     label."""
     from pyspark.sql import Window as W
 
-    strong = _strong_co_supply(spark, sf_dir)
-    n_sym = 2 * _stage_rows(strong)
-    sym = _sym_edges(strong)
+    sym = _sym_edges(_strong_co_supply(spark, sf_dir))
+    # the committed stage's footer row count: no Spark job
+    n_sym = 2 * parquet_meta(derived_path(sf_dir, "strong_co_supply"))[0]
     labels = _iter_layout(sym.select(F.col("src").alias("node")).distinct()
                           .withColumn("label", F.col("node")), n_sym, "node")
     pick = W.partitionBy("node").orderBy(F.col("c").desc(), F.col("label"))

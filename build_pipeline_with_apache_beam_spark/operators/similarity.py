@@ -259,17 +259,19 @@ def _ivf_codebook(emb: DataFrame) -> list[list[float]]:
 
 def _codebook(sf_dir: str, emb: DataFrame) -> list[list[float]]:
     """The IVF codebook of ``sf_dir``'s embeddings as a derived artifact
-    (``scratch.derived``): one JSON file of the centroids, trained by
-    :func:`_ivf_codebook` on ``emb`` (the unit vectors of the embeddings
-    table) only on a miss.  The training is deterministic, so the file is a
-    pure function of the tables and the package code, and a warm call
-    starts no Spark job for it.  JSON writes each double as its shortest
-    repr, which reads back bit-exactly."""
+    (``scratch.derived``): a dir holding the centroids as one JSON file,
+    trained by :func:`_ivf_codebook` on ``emb`` (the unit vectors of the
+    embeddings table) only on a miss.  The training is deterministic, so
+    the file is a pure function of the tables and the package code, and a
+    warm call starts no Spark job for it.  JSON writes each double as its
+    shortest repr, which reads back bit-exactly."""
     def write(tmp: str) -> None:
-        with open(tmp, "w") as fh:
+        os.makedirs(tmp)
+        with open(os.path.join(tmp, "centroids.json"), "w") as fh:
             json.dump(_ivf_codebook(emb), fh)
 
-    with open(derived(sf_dir, "ivf_codebook", write)) as fh:
+    path = derived(sf_dir, "ivf_codebook", write)
+    with open(os.path.join(path, "centroids.json")) as fh:
         return json.load(fh)
 
 

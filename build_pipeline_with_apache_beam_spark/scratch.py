@@ -24,7 +24,6 @@ Two kinds of path:
 from __future__ import annotations
 
 import atexit
-import contextlib
 import functools
 import hashlib
 import os
@@ -93,18 +92,24 @@ def _key(sf_dir: str) -> str:
     return h.hexdigest()[:_KEY_HEX]
 
 
+def derived_path(sf_dir: str, name: str) -> str:
+    """``<namespace>/<name>-<key>``: where :func:`derived` commits the
+    artifact ``name`` of ``sf_dir`` (stat calls only)."""
+    return os.path.join(namespace(sf_dir), f"{name}-{_key(sf_dir)}")
+
+
 def derived(sf_dir: str, name: str, write: Callable[[str], None]) -> str:
-    """The committed path ``<namespace>/<name>-<key>`` of an artifact that
-    is a pure function of ``sf_dir``'s tables and the package code.
+    """The committed path :func:`derived_path` of an artifact that is a
+    pure function of ``sf_dir``'s tables and the package code.
 
     On a miss ``write(tmp)`` creates the artifact at ``tmp``, a fresh path
-    that does not exist yet (a Spark writer's output dir, a dir the writer
-    makes, or one file), and ``os.rename`` commits it.  If another process
+    that does not exist yet (a Spark writer's output dir, or a dir the
+    writer makes), and ``os.rename`` commits it.  If another process
     committed the key first the rename fails; that copy is as good, so this
     one is dropped.  After a commit the other keys of ``name`` are deleted:
     one copy per artifact per sf dir."""
     ns = namespace(sf_dir)
-    path = os.path.join(ns, f"{name}-{_key(sf_dir)}")
+    path = derived_path(sf_dir, name)
     if os.path.exists(path):
         return path
     os.makedirs(ns, exist_ok=True)
@@ -117,21 +122,12 @@ def derived(sf_dir: str, name: str, write: Callable[[str], None]) -> str:
             if not os.path.exists(path):
                 raise
     finally:
-        _remove(tmp)
+        shutil.rmtree(tmp, ignore_errors=True)
     stale = re.compile(rf"{re.escape(name)}-[0-9a-f]{{{_KEY_HEX}}}")
     for entry in os.listdir(ns):
         if stale.fullmatch(entry) and os.path.join(ns, entry) != path:
-            _remove(os.path.join(ns, entry))
+            shutil.rmtree(os.path.join(ns, entry), ignore_errors=True)
     return path
-
-
-def _remove(path: str) -> None:
-    """Delete a dir tree or a file, ignoring errors (a missing path too)."""
-    if os.path.isdir(path) and not os.path.islink(path):
-        shutil.rmtree(path, ignore_errors=True)
-    else:
-        with contextlib.suppress(OSError):
-            os.remove(path)
 
 
 # namespace -> this process's run root in it

@@ -40,16 +40,13 @@ def sf(tmp_path):
     shutil.rmtree(namespace(path), ignore_errors=True)
 
 
-def _writer(content: str, one_file: bool = False):
-    """A ``derived`` writer making a dir holding ``data``, or, with
-    ``one_file``, the artifact as a single file."""
+def _writer(content: str):
     calls = []
 
     def write(tmp: str) -> None:
         calls.append(tmp)
-        if not one_file:
-            os.makedirs(tmp)
-        with open(tmp if one_file else os.path.join(tmp, "data"), "w") as fh:
+        os.makedirs(tmp)
+        with open(os.path.join(tmp, "data"), "w") as fh:
             fh.write(content)
 
     return write, calls
@@ -97,17 +94,7 @@ def test_concurrent_writers_of_one_key_share_one_commit(sf):
 
 
 def test_touching_a_table_file_rekeys_and_drops_the_old_copy(sf):
-    _rekey_drops_old_copy(sf, one_file=False)
-
-
-def test_a_one_file_artifact_rekeys_and_drops_the_old_copy(sf):
-    """An artifact written as a single file (the IVF codebook) is
-    committed and dropped on a re-key like a dir."""
-    _rekey_drops_old_copy(sf, one_file=True)
-
-
-def _rekey_drops_old_copy(sf, one_file: bool) -> None:
-    write, calls = _writer("v1", one_file)
+    write, calls = _writer("v1")
     first = derived(sf, "probe", write)
     assert derived(sf, "probe", write) == first and len(calls) == 1
 

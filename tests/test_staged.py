@@ -1,9 +1,9 @@
 """The staging helper's contract (``catalog._staged``): a builder is called
 only when a stage is written, a hit builds and runs nothing, the memoized
-re-read carries the schema parquet inference would return, and a stage
-under AQE's partition floor reads as one partition.  Also the footer-only
-table statistics (``catalog.table_meta``) the spread rule reads, and the
-IVF codebook artifact (``similarity._codebook``)."""
+re-read carries the schema parquet inference would return, and a small
+stage reads as one partition.  Also the footer-only table statistics
+(``catalog.table_meta``) the spread rule reads, and the IVF codebook
+artifact (``similarity._codebook``)."""
 
 from __future__ import annotations
 
@@ -16,6 +16,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from build_pipeline_with_apache_beam_spark.catalog import (
+    _ONE_TASK_ROWS,
     _min_partition_bytes,
     _staged,
     load_table,
@@ -152,18 +153,36 @@ def _executed(df) -> str:
 
 def test_small_stage_reads_as_one_partition(spark, sf):
     """A stage whose files total at most the session's
-    ``coalescePartitions.minPartitionSize`` is read through ``Coalesce 1``:
-    one partition, although the write left four files."""
+    ``coalescePartitions.minPartitionSize`` and whose n rows have
+    n² <= ``_ONE_TASK_ROWS`` is read through ``Coalesce 1``: one
+    partition, although the write left four files."""
     def frame():
-        return spark.range(0, 1000, numPartitions=4)
+        return spark.range(0, 400, numPartitions=4)
 
     df = _staged(spark, frame, sf, "small_layout_probe")
     assert len(df.inputFiles()) == 4
     assert _stage_bytes(sf, "small_layout_probe") \
         <= _min_partition_bytes(spark)
+    assert 400 * 400 <= _ONE_TASK_ROWS
     assert df.rdd.getNumPartitions() == 1
     assert "Coalesce 1" in _executed(df)
-    assert sorted(r.id for r in df.collect()) == list(range(1000))
+    assert sorted(r.id for r in df.collect()) == list(range(400))
+
+
+def test_stage_with_a_large_self_join_keeps_its_scan_splits(spark, sf):
+    """A stage far under the byte bound whose n rows could fan out to
+    n² > ``_ONE_TASK_ROWS`` rows in a self-join keeps its scan splits, so
+    a fan-out consumer is not run in one task."""
+    def frame():
+        return spark.range(0, 5000, numPartitions=4)
+
+    df = _staged(spark, frame, sf, "fanout_layout_probe")
+    assert _stage_bytes(sf, "fanout_layout_probe") \
+        <= _min_partition_bytes(spark)
+    assert 5000 * 5000 > _ONE_TASK_ROWS
+    bare = spark.read.parquet(_stage_dir(sf, "fanout_layout_probe"))
+    assert df.rdd.getNumPartitions() == bare.rdd.getNumPartitions() > 1
+    assert "Coalesce" not in _executed(df)
 
 
 def test_large_stage_keeps_its_scan_splits(spark, sf):
