@@ -96,9 +96,8 @@ def parquet_meta(path: str) -> tuple[int, int]:
     return n_rows, int(n_splits)
 
 
-def sized_spread(df: DataFrame, n_rows: int,
-                 rows_per_partition: int,
-                 n_splits: int | None = None) -> DataFrame:
+def sized_spread(df: DataFrame, n_rows: int, rows_per_partition: int,
+                 n_splits: int) -> DataFrame:
     """Spread a small scan for a CPU-heavy downstream stage — ONLY when the
     scan has fewer partitions than the row-sized target (optimization guide
     §2.2/§6; round-14 verdict #1).
@@ -110,13 +109,12 @@ def sized_spread(df: DataFrame, n_rows: int,
     provide the parallelism and the shuffle is pure waste.  This helper
     sizes the target by rows (capped at defaultParallelism) and adds the
     exchange only when the scan itself falls short of it — corpus-scale
-    paths take NO exchange.
+    paths take NO exchange.  ``n_rows`` and ``n_splits`` come off the
+    parquet footers (``table_meta``), so the decision starts no Spark job.
     """
     spark = df.sparkSession
     target = max(1, min(spark.sparkContext.defaultParallelism,
                         -(-n_rows // max(1, rows_per_partition))))
-    if n_splits is None:
-        n_splits = df.rdd.getNumPartitions()
     if n_splits >= target:
         return df
     return df.repartition(target)

@@ -40,6 +40,8 @@ WAREHOUSE = os.path.join(SCRATCH, "warehouse")
 SPARK_LOCAL = os.path.join(SCRATCH, "spark-local")
 
 _KEY_HEX = 16
+#: a writer's private temp path in a namespace: ``.tmp-<pid>-<uuid>``
+_TMP = re.compile(r"\.tmp-(\d+)-.+")
 
 
 def parquet_files(path: str) -> list[str]:
@@ -107,13 +109,16 @@ def derived(sf_dir: str, name: str, write: Callable[[str], None]) -> str:
     writer makes), and ``os.rename`` commits it.  If another process
     committed the key first the rename fails; that copy is as good, so this
     one is dropped.  After a commit the other keys of ``name`` are deleted:
-    one copy per artifact per sf dir."""
+    one copy per artifact per sf dir.  So are the temp paths of writers
+    that died before their commit: ``tmp`` is ``.tmp-<pid>-<uuid>``, and a
+    temp path whose pid is no longer alive is removed (a live writer's
+    never is)."""
     ns = namespace(sf_dir)
     path = derived_path(sf_dir, name)
     if os.path.exists(path):
         return path
     os.makedirs(ns, exist_ok=True)
-    tmp = os.path.join(ns, f".tmp-{uuid.uuid4().hex}")
+    tmp = os.path.join(ns, f".tmp-{os.getpid()}-{uuid.uuid4().hex}")
     try:
         write(tmp)
         try:
@@ -125,9 +130,22 @@ def derived(sf_dir: str, name: str, write: Callable[[str], None]) -> str:
         shutil.rmtree(tmp, ignore_errors=True)
     stale = re.compile(rf"{re.escape(name)}-[0-9a-f]{{{_KEY_HEX}}}")
     for entry in os.listdir(ns):
-        if stale.fullmatch(entry) and os.path.join(ns, entry) != path:
+        orphan = _TMP.fullmatch(entry)
+        if ((stale.fullmatch(entry) and os.path.join(ns, entry) != path)
+                or (orphan and not _alive(int(orphan[1])))):
             shutil.rmtree(os.path.join(ns, entry), ignore_errors=True)
     return path
+
+
+def _alive(pid: int) -> bool:
+    """Whether process ``pid`` exists (signal 0 checks without sending)."""
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:  # exists, owned by another user
+        pass
+    return True
 
 
 # namespace -> this process's run root in it

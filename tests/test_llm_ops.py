@@ -368,7 +368,8 @@ def test_embedding_dedup_hot_bucket_split_bounds_blocks(spark, sf_dir):
         _with_unit_vec,
     )
 
-    emb = _with_unit_vec(load_table(spark, sf_dir, "embeddings"))
+    emb = _with_unit_vec(load_table(spark, sf_dir, "embeddings"),
+                         sf_dir=sf_dir)
     bucketed = (emb.select("vec_id", "vec", "embedding")
                 .withColumn("bucket",
                             _bucket("CAST(embedding AS ARRAY<DOUBLE>)"))
@@ -551,7 +552,8 @@ def test_sub_block_split_engages_and_spreads_under_forced_cap(spark, sf_dir):
     )
 
     cap = 16  # force n_sub > 1 in every occupied bucket
-    emb = _with_unit_vec(load_table(spark, sf_dir, "embeddings"))
+    emb = _with_unit_vec(load_table(spark, sf_dir, "embeddings"),
+                         sf_dir=sf_dir)
     bucketed = (emb.select("vec_id", "vec", "embedding")
                 .withColumn("bucket",
                             _bucket("CAST(embedding AS ARRAY<DOUBLE>)"))

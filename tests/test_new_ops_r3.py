@@ -178,8 +178,8 @@ def test_semdedup_matches_numpy_replica(spark, sf_dir):
     )
 
     out = {r["cell"]: r for r in corpus_semdedup(spark, sf_dir).collect()}
-    emb = _with_unit_vec(load_table(spark, sf_dir, "embeddings")) \
-        .select("vec_id", "vec")
+    emb = _with_unit_vec(load_table(spark, sf_dir, "embeddings"),
+                         sf_dir=sf_dir).select("vec_id", "vec")
     pdf = emb.toPandas().sort_values("vec_id")
     vecs = np.stack(pdf["vec"].values)
     ids = pdf["vec_id"].to_numpy()

@@ -107,6 +107,23 @@ def test_touching_a_table_file_rekeys_and_drops_the_old_copy(sf):
     assert os.path.basename(second).startswith("probe-")
 
 
+def test_commit_removes_dead_writers_temp_dirs_only(sf):
+    """A writer that died inside ``derived`` left its ``.tmp-<pid>-*``
+    dir; the next commit in the namespace removes it, and keeps the temp
+    dir of a writer that is still alive."""
+    dead = subprocess.run(
+        [sys.executable, "-c", "import os; print(os.getpid())"],
+        capture_output=True, text=True, check=True)
+    ns = namespace(sf)
+    orphan = os.path.join(ns, f".tmp-{int(dead.stdout)}-x")
+    live = os.path.join(ns, f".tmp-{os.getpid()}-x")
+    for d in (orphan, live):
+        os.makedirs(os.path.join(d, "part"))
+    derived(sf, "probe", _writer("v1")[0])
+    assert not os.path.exists(orphan)
+    assert os.path.isdir(live)
+
+
 def test_sf_dirs_sharing_a_basename_get_different_namespaces(tmp_path):
     a = _sf(tmp_path / "a", "sf1")
     b = _sf(tmp_path / "b", "sf1")

@@ -2,8 +2,10 @@
 only when a stage is written, a hit builds and runs nothing, the memoized
 re-read carries the schema parquet inference would return, and a small
 stage reads as one partition.  Also the footer-only table statistics
-(``catalog.table_meta``) the spread rule reads, and the IVF codebook
-artifact (``similarity._codebook``)."""
+(``catalog.table_meta``) the spread rule reads, and the staged IVF index
+(``similarity._ivf_index``): its rows equal a numpy recomputation, and a
+warm IVF op reads it without starting a job before its sink or caching
+anything."""
 
 from __future__ import annotations
 
@@ -11,7 +13,9 @@ import glob
 import os
 import shutil
 import uuid
+from decimal import ROUND_HALF_UP, Decimal
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -26,8 +30,9 @@ from build_pipeline_with_apache_beam_spark.operators.dedup import (
     dedup_fuzzy_minhash,
 )
 from build_pipeline_with_apache_beam_spark.operators.similarity import (
-    _codebook,
     _ivf_codebook,
+    _ivf_index,
+    _oracle_codebook,
     _with_unit_vec,
     corpus_semdedup,
     sim_ann_ivf_topk,
@@ -256,30 +261,56 @@ def test_table_meta_walks_a_hive_partitioned_table(spark, tmp_path):
     assert footer_rows == 1000
 
 
-def test_codebook_artifact_equals_in_process_training(spark, sf_dir):
-    """The centroids read back from the ``ivf_codebook`` artifact are the
-    ones ``_ivf_codebook`` trains in this process, element for element."""
+def _round6(x: float) -> float:
+    """Spark's ``round(x, 6)`` on a double: HALF_UP on its decimal repr."""
+    return float(Decimal(repr(x)).quantize(Decimal("1e-6"), ROUND_HALF_UP))
+
+
+def test_ivf_index_matches_a_numpy_recomputation(spark, sf_dir):
+    """Every row of the staged IVF index carries the unit vector, cell,
+    probe cells and centroid similarity recomputed here from the collected
+    unit vectors and ``_ivf_codebook``'s centroids (dots folded left to
+    right, as the engine's ``aggregate`` does); that codebook is the one
+    the DuckDB oracle trains straight off the parquet."""
     emb = _with_unit_vec(load_table(spark, sf_dir, "embeddings"),
-                         sf_dir=sf_dir).select("vec_id", "vec")
-    stored = _codebook(sf_dir, emb)
-    assert glob.glob(os.path.join(namespace(sf_dir), "ivf_codebook-*"))
-    assert stored == _ivf_codebook(emb)
+                         sf_dir).select("vec_id", "vec")
+    cents = _ivf_codebook(emb)
+    assert _oracle_codebook(sf_dir) == cents
+    pdf = emb.toPandas().sort_values("vec_id")
+    idx = _ivf_index(spark, sf_dir).toPandas().sort_values("vec_id")
+    assert idx["vec_id"].tolist() == pdf["vec_id"].tolist()
+    for vec, row in zip(pdf["vec"], idx.itertuples()):
+        assert list(row.vec) == list(vec)
+        dots = np.array([sum((x * y for x, y in zip(vec, c)), 0.0)
+                         for c in cents])
+        cell = int(np.argmax(dots))
+        masked = np.where(np.arange(len(dots)) == cell, -9.0, dots)
+        assert row.cell == cell
+        assert list(row.probes) == [cell, int(np.argmax(masked))]
+        assert row.cent_sim == _round6(float(dots.max()))
 
 
 @pytest.mark.parametrize("op", [sim_ann_ivf_topk, corpus_semdedup])
 def test_warm_codebook_op_runs_no_job_before_its_sink(spark, sf_dir, op):
-    """A warm IVF op reads its codebook from the artifact: before its sink
-    it starts only the embeddings table's own schema read, no training
-    job or ``toPandas``."""
+    """A warm IVF op reads the staged index: it starts no Spark job before
+    its sink (no schema read, no codebook training or ``toPandas``), and a
+    warm ``sim_ann_ivf_topk`` runs at most 2 jobs in all."""
     op(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    spark.catalog.clearCache()
-    _, table_jobs = _in_group(
-        spark, lambda: load_table(spark, sf_dir, "embeddings"))
     df, build_jobs = _in_group(spark, lambda: op(spark, sf_dir))
-    try:
-        assert len(build_jobs) == len(table_jobs)
-        _, sink_jobs = _in_group(
-            spark, lambda: df.write.format("noop").mode("overwrite").save())
-        assert sink_jobs, "sink ran no job in the group"
-    finally:
-        spark.catalog.clearCache()
+    assert build_jobs == []
+    _, sink_jobs = _in_group(
+        spark, lambda: df.write.format("noop").mode("overwrite").save())
+    assert sink_jobs, "sink ran no job in the group"
+    if op is sim_ann_ivf_topk:
+        assert len(sink_jobs) <= 2
+
+
+def test_ivf_ops_leave_the_cache_empty(spark, sf_dir):
+    """Sinking an IVF op leaves the session's CacheManager empty: the ops
+    read the staged index and ``persist()`` nothing, so a returned frame
+    pins no cached blocks and needs no unpersist."""
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    for op in (sim_ann_ivf_topk, corpus_semdedup):
+        op(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        assert cache.isEmpty(), op.__name__
