@@ -51,11 +51,17 @@ def coerce_events_ts(df: DataFrame) -> DataFrame:
     return df
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Distributed parquet scan of one table (no driver materialization)."""
+def raw_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Distributed parquet scan of one table as its files store it (no
+    driver materialization): events' ``ts`` is not yet coerced."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Distributed parquet scan of one table, events' ``ts`` coerced."""
+    df = raw_table(spark, sf_dir, name)
     if name == "events":
         df = coerce_events_ts(df)
     return df
@@ -120,9 +126,26 @@ def sized_spread(df: DataFrame, n_rows: int, rows_per_partition: int,
     return df.repartition(target)
 
 
-# the written frame's schema, beside each stage's parquet files (Spark
-# skips ``_``-prefixed files when it lists a dir)
-_STAGE_SCHEMA = "_schema.json"
+# a written frame's schema, beside its parquet files (Spark's batch and
+# stream file sources skip ``_``-prefixed files when they list a dir)
+_SCHEMA_FILE = "_schema.json"
+
+
+def write_schema(path: str, schema: StructType) -> None:
+    """Store ``schema`` beside the parquet files in dir ``path``: the
+    schema of the frame written there, which :func:`read_schema` hands
+    every later read, so no reader runs a parquet schema-inference job.
+    A file source reads any given schema back as nullable, so a frame that
+    declares columns non-null reads back exactly as inference would."""
+    with open(os.path.join(path, _SCHEMA_FILE), "w") as fh:
+        fh.write(schema.json())
+
+
+def read_schema(path: str) -> StructType:
+    """The schema :func:`write_schema` stored in dir ``path``."""
+    with open(os.path.join(path, _SCHEMA_FILE)) as fh:
+        return StructType.fromJson(json.load(fh))
+
 
 # Rows one task may carry for a one-partition stage's consumers: the bound
 # ``graph.GRAPH_ROWS_PER_PARTITION`` sets for one-partition iteration state.
@@ -150,10 +173,9 @@ def _staged(spark: SparkSession, build: Callable[[], DataFrame], sf_dir: str,
     A stage must therefore be a pure function of the sf dir: anything else
     it depends on belongs in its ``name``.
 
-    Stored schema: the stage carries the written frame's schema, and every
-    re-read passes it, so no process runs a parquet schema-inference job.
-    It reads back exactly as inferred: a file source reads a given schema
-    back as nullable, and the written frame may declare columns non-null.
+    Stored schema: the stage carries the written frame's schema
+    (:func:`write_schema`), and every re-read passes it, so no process
+    runs a parquet schema-inference job.
 
     Layout: a small stage is read as ONE partition (``coalesce(1)``), so
     joins, aggregates and windows over it plan no exchange (a one-partition
@@ -195,13 +217,10 @@ def _staged(spark: SparkSession, build: Callable[[], DataFrame], sf_dir: str,
     def write(tmp: str) -> None:
         df = build()
         df.write.parquet(tmp)
-        with open(os.path.join(tmp, _STAGE_SCHEMA), "w") as fh:
-            fh.write(df.schema.json())
+        write_schema(tmp, df.schema)
 
     path = derived(sf_dir, name, write)
-    with open(os.path.join(path, _STAGE_SCHEMA)) as fh:
-        schema = StructType.fromJson(json.load(fh))
-    df = spark.read.schema(schema).parquet(path)
+    df = spark.read.schema(read_schema(path)).parquet(path)
     n_rows, _ = parquet_meta(path)
     size = sum(os.path.getsize(f) for f in parquet_files(path))
     if n_rows * n_rows <= _ONE_TASK_ROWS and size <= _min_partition_bytes(

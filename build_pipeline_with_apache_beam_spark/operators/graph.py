@@ -59,6 +59,7 @@ from build_pipeline_with_apache_beam_spark.catalog import (
     parquet_meta,
 )
 from build_pipeline_with_apache_beam_spark.scratch import derived_path
+from build_pipeline_with_apache_beam_spark.session import scoped_conf
 
 # Size-aware iteration layout (round-3 verdict #2): below this many rows a
 # graph-iteration state collapses to ONE partition (one task per round, no
@@ -97,13 +98,8 @@ def _laid_out_leaf(df: DataFrame, *keys: str) -> tuple[DataFrame, int]:
     laid = _iter_layout(leaf, n_rows, *keys)
     if n_rows <= GRAPH_ROWS_PER_PARTITION:
         return laid, n_rows
-    conf = df.sparkSession.conf
-    aqe = conf.get("spark.sql.adaptive.enabled")
-    conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    with scoped_conf(df.sparkSession, "spark.sql.adaptive.enabled", "false"):
         laid = laid.localCheckpoint()
-    finally:
-        conf.set("spark.sql.adaptive.enabled", aqe)
     return laid, n_rows
 
 

@@ -17,8 +17,10 @@ Two kinds of path:
   committed.  The artifact is written to a private temp path and committed
   by ``os.rename``: concurrent writers of one key race only on the rename.
 - :func:`run_dir` — a dir an op mutates (a lake, a watermark store, a
-  stream sink or checkpoint): empty on every call, under one root per
-  process that is removed at exit.
+  stream sink or checkpoint): empty on every call, under one
+  ``run-<pid>-*`` root per process that is removed at exit.  A process
+  killed before its exit handler ran leaves its root behind; the next
+  process to create a root in the namespace removes it.
 """
 
 from __future__ import annotations
@@ -42,6 +44,8 @@ SPARK_LOCAL = os.path.join(SCRATCH, "spark-local")
 _KEY_HEX = 16
 #: a writer's private temp path in a namespace: ``.tmp-<pid>-<uuid>``
 _TMP = re.compile(r"\.tmp-(\d+)-.+")
+#: a process's run-dir root in a namespace: ``run-<pid>-<suffix>``
+_RUN_ROOT = re.compile(r"run-(\d+)-.+")
 
 
 def parquet_files(path: str) -> list[str]:
@@ -154,13 +158,20 @@ _RUN_ROOTS: dict[str, str] = {}
 
 def run_dir(sf_dir: str, kind: str) -> str:
     """An empty ``<kind>`` dir for an op to mutate, under this process's
-    ``run-*`` root in ``sf_dir``'s namespace.  Each call empties it, so a
-    rerun starts clean; the root is removed when the process exits."""
+    ``run-<pid>-*`` root in ``sf_dir``'s namespace.  Each call empties it,
+    so a rerun starts clean; the root is removed when the process exits.
+    Creating a root also removes the roots of processes that are no
+    longer alive (a live process's root never is)."""
     ns = namespace(sf_dir)
     root = _RUN_ROOTS.get(ns)
     if root is None or not os.path.isdir(root):
         os.makedirs(ns, exist_ok=True)
-        root = _RUN_ROOTS[ns] = tempfile.mkdtemp(prefix="run-", dir=ns)
+        for entry in os.listdir(ns):
+            dead = _RUN_ROOT.fullmatch(entry)
+            if dead and not _alive(int(dead[1])):
+                shutil.rmtree(os.path.join(ns, entry), ignore_errors=True)
+        root = _RUN_ROOTS[ns] = tempfile.mkdtemp(
+            prefix=f"run-{os.getpid()}-", dir=ns)
     path = os.path.join(root, kind)
     shutil.rmtree(path, ignore_errors=True)
     os.makedirs(path)

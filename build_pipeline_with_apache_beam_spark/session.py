@@ -14,6 +14,8 @@ reference's manual >20 000-records re-planning branch (retrieval.py:217-249).
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -84,10 +86,6 @@ def get_spark(app_name: str = "build_pipeline_with_apache_beam_spark",
         # long stages (e.g. the sf10 range-join spill) outlive the host's
         # /tmp reaper, which deletes blockmgr temp files mid-stage
         .config("spark.local.dir", SPARK_LOCAL)
-        # let custom Python DataSources receive pushFilters() — off by
-        # default in Spark 4.1; required for the docstore source's
-        # manifest-based file pruning
-        .config("spark.sql.python.filterPushdown.enabled", "true")
         # Generated methods above the JIT's 8 KB bytecode compile limit run
         # interpreted forever (HotSpot refuses to compile them) — observed as
         # minute-long stalls on wide-aggregate/higher-order-function plans.
@@ -100,3 +98,20 @@ def get_spark(app_name: str = "build_pipeline_with_apache_beam_spark",
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, key: str, value: str) -> Iterator[None]:
+    """Set session conf ``key`` to ``value`` for the ``with`` block only.
+
+    On exit, normal or by exception, the old value comes back; a key that
+    was unset before is unset again, so the session's default applies."""
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)

@@ -52,7 +52,7 @@ from build_pipeline_with_apache_beam_spark.catalog import load_table
 from build_pipeline_with_apache_beam_spark.functions import sqlgen
 from build_pipeline_with_apache_beam_spark.scratch import derived, run_dir
 from build_pipeline_with_apache_beam_spark.streaming.drain import (
-    await_drained,
+    drain_each,
     drain_to,
 )
 
@@ -493,11 +493,7 @@ def stream_docstore_tail(spark: SparkSession, sf_dir: str,
 
     if cap >= total_files:
         # uncapped: the original single-batch drain
-        q = (agg.writeStream.foreachBatch(sink_batch)
-             .option("checkpointLocation", ckpt_dir)
-             .outputMode("complete")
-             .trigger(availableNow=True).start())
-        await_drained(q)
+        drain_each(agg, sink_batch, ckpt_dir, "complete")
     else:
         # capped: continuous micro-batches until the checkpoint has
         # committed every manifest entry (same drain loop the composed
@@ -509,7 +505,7 @@ def stream_docstore_tail(spark: SparkSession, sf_dir: str,
         committed = drain_to(q, ckpt_dir, total_files,
                              max(180.0, 1.0 * total_files))
         # A timeout must be an error, never a truncated answer (the same
-        # contract await_drained enforces): if the deadline expired before
+        # contract drain_each enforces): if the deadline expired before
         # every manifest entry was committed, the sink holds a HALF-DRAINED
         # aggregate — raise instead of returning it.
         if committed < total_files:
@@ -517,7 +513,7 @@ def stream_docstore_tail(spark: SparkSession, sf_dir: str,
                 f"stream_docstore_tail drain incomplete: committed "
                 f"{committed}/{total_files} manifest entries before the "
                 f"deadline — refusing to return a half-drained sink")
-    return spark.read.parquet(sink_dir)
+    return spark.read.schema(agg.schema).parquet(sink_dir)
 
 
 def _reclaim_stale_batch_claim(root: str, name: str, sentinel: str) -> bool:

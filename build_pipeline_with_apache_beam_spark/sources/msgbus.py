@@ -196,21 +196,19 @@ def stream_events_to_bus(spark, sf_dir: str, topic: str, bus_dir: str,
                          fail_once_dir: str | None = None) -> None:
     """REAL Structured Streaming publish: file source → availableNow →
     foreachBatch → client-API sends.  The streaming twin of the
-    reference's bounded Pub/Sub pipeline (retrieval.py:229-249)."""
-    raw_schema = spark.read.parquet(src_dir).schema
-    raw = spark.readStream.schema(raw_schema).parquet(src_dir)
-    keyed = raw.selectExpr("CAST(event_id AS STRING) AS key",
-                           "to_json(struct(*)) AS payload")
+    reference's bounded Pub/Sub pipeline (retrieval.py:229-249).
+    ``src_dir`` is a stream-source dir with its schema stored
+    (``windows._stage_events_source``)."""
+    from build_pipeline_with_apache_beam_spark.streaming.drain import (
+        drain_each,
+        read_source,
+    )
+
+    keyed = read_source(spark, src_dir).selectExpr(
+        "CAST(event_id AS STRING) AS key", "to_json(struct(*)) AS payload")
 
     def sink(batch_df, batch_id: int) -> None:
         publish_batch_to_bus(batch_df, topic, bus_dir,
                              fail_once_dir=fail_once_dir)
 
-    q = (keyed.writeStream.foreachBatch(sink)
-         .option("checkpointLocation", ckpt_dir)
-         .trigger(availableNow=True).start())
-    from build_pipeline_with_apache_beam_spark.streaming.drain import (
-        await_drained,
-    )
-
-    await_drained(q)
+    drain_each(keyed, sink, ckpt_dir)

@@ -1,12 +1,25 @@
-"""Loud drains for streaming queries.
+"""One reader and one drain for the file-source stream ops.
 
-``q.awaitTermination(N)`` returns False on timeout WITHOUT stopping the
-query — every call site that then reads the sink treats a half-drained
-run as complete.  At sf10 the stream-stream interval join hit exactly
-this: the second micro-batch was still joining at the 180 s mark, the op
-read the sink early, and the result silently lost half its matches (the
-r13 sweep caught it as a 2x oracle rowcount).  A drain timeout must be
-an ERROR, never a truncated answer.
+Structured Streaming runs a stream as a batch plan over a declared source
+schema.  Every file-source stream op here follows that shape in three
+calls:
+
+- :func:`read_source` opens a committed stream-source dir (a
+  ``scratch.derived`` artifact) with the schema stored beside its files
+  (``catalog.write_schema``), so no op infers a schema before its stream;
+- :func:`drain` runs the streamed frame to its end into a parquet sink and
+  returns the sink read back with the frame's own schema;
+- :func:`drain_each` is the start-and-await under :func:`drain`, for the
+  ops whose ``foreachBatch`` body is their own sink (a MERGE, a message
+  bus publish).
+
+A drain must never return a half-drained sink.  ``q.awaitTermination(N)``
+returns False on timeout WITHOUT stopping the query, so a caller that then
+reads the sink treats a partial run as complete.  At sf10 the
+stream-stream interval join hit exactly this: the second micro-batch was
+still joining at the 180 s mark, the op read the sink early, and the
+result silently lost half its matches (the r13 sweep caught it as a 2x
+oracle rowcount).  A drain timeout is an ERROR, never a truncated answer.
 """
 
 from __future__ import annotations
@@ -14,12 +27,34 @@ from __future__ import annotations
 import json
 import os
 import time
+from collections.abc import Callable
+
+from pyspark.sql import DataFrame, SparkSession
+
+from build_pipeline_with_apache_beam_spark.catalog import read_schema
 
 
-def await_drained(q, timeout_sec: float = 1800.0) -> None:
-    """Wait for an availableNow (terminating) query to finish; RAISE if
-    it is still running at the deadline instead of returning a sink that
-    is missing batches."""
+def read_source(spark: SparkSession, path: str,
+                files_per_trigger: int | None = None) -> DataFrame:
+    """A file stream over the committed source dir ``path``, read with its
+    stored schema; ``files_per_trigger`` caps each micro-batch at that
+    many files (``maxFilesPerTrigger``)."""
+    reader = spark.readStream.schema(read_schema(path))
+    if files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", str(files_per_trigger))
+    return reader.parquet(path)
+
+
+def drain_each(frame: DataFrame,
+               on_batch: Callable[[DataFrame, int], None], ckpt_dir: str,
+               mode: str = "append", timeout_sec: float = 1800.0) -> None:
+    """Run streamed ``frame`` to the end of its source: an ``availableNow``
+    query that hands each micro-batch to ``on_batch`` in output ``mode``.
+    If the query is still running at the deadline it is stopped and
+    ``TimeoutError`` raised; a failed query raises its error."""
+    q = (frame.writeStream.foreachBatch(on_batch)
+         .option("checkpointLocation", ckpt_dir)
+         .outputMode(mode).trigger(availableNow=True).start())
     q.awaitTermination(timeout_sec)
     if q.isActive:
         q.stop()
@@ -30,6 +65,21 @@ def await_drained(q, timeout_sec: float = 1800.0) -> None:
             f"{q.lastProgress and q.lastProgress.get('batchId')})")
     if q.exception() is not None:
         raise q.exception()
+
+
+def drain(frame: DataFrame, sink_dir: str, ckpt_dir: str,
+          mode: str = "append") -> DataFrame:
+    """:func:`drain_each` into a parquet sink at ``sink_dir``, read back
+    with ``frame``'s schema.  Append and update modes append each batch;
+    complete mode re-emits the whole result per batch, so each batch
+    overwrites the sink and the last one is the answer."""
+    write_mode = "overwrite" if mode == "complete" else "append"
+
+    def sink_batch(batch_df: DataFrame, batch_id: int) -> None:
+        batch_df.write.mode(write_mode).parquet(sink_dir)
+
+    drain_each(frame, sink_batch, ckpt_dir, mode)
+    return frame.sparkSession.read.schema(frame.schema).parquet(sink_dir)
 
 
 def committed_file_idx(ckpt_dir: str) -> int:

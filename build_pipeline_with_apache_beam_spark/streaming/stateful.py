@@ -7,6 +7,13 @@ per-group state (running aggregates here; sessionization, CDC merge, or
 online dedup counters in production) maintained by the state store across
 micro-batches, with Arrow-batched Python doing only the per-group update.
 
+Every op here streams a committed source dir through the one reader and
+drain of ``streaming/drain.py``: ``read_source`` opens the events replay
+(``windows._events_source``) or the two-file upsert feed with the schema
+stored beside its files, and ``drain`` (or, for the upsert's own MERGE
+sink, ``drain_each``) runs the query to the end of its source, loudly on
+timeout.  No op infers a schema on a warm call.
+
 Scale notes: state lives partitioned by grouping key in the executor state
 stores (RocksDB-backed on a real cluster), so per-key state scales out with
 the cluster; a production op sets a timeout (``GroupStateTimeout``) or
@@ -18,16 +25,28 @@ from __future__ import annotations
 
 import os
 import shutil
-from typing import Any, Iterator
+from typing import Iterator
 
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from build_pipeline_with_apache_beam_spark.catalog import (
+    load_table,
+    read_schema,
+    write_schema,
+)
 from build_pipeline_with_apache_beam_spark.scratch import derived, run_dir
+from build_pipeline_with_apache_beam_spark.session import scoped_conf
 from build_pipeline_with_apache_beam_spark.streaming.drain import (
-    await_drained,
+    drain,
+    drain_each,
+    read_source,
+)
+from build_pipeline_with_apache_beam_spark.streaming.windows import (
+    _events_source,
+    _state_partitions,
 )
 
 OUTPUT_SCHEMA = "user_id BIGINT, n_events BIGINT, total_value DOUBLE"
@@ -71,34 +90,11 @@ def q_stream_stateful_user_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     the DuckDB oracle.  (With more batches the sink would hold one row per
     (user, batch); the last one still matches — production would upsert.)
     """
-    from build_pipeline_with_apache_beam_spark.streaming.windows import (
-        _events_source,
-    )
-
-    src_dir = _events_source(sf_dir)
-    sink_dir = run_dir(sf_dir, "state_sink")
-    ckpt_dir = run_dir(sf_dir, "state_ckpt")
-
-    raw_schema = spark.read.parquet(src_dir).schema
-    stream = (spark.readStream.schema(raw_schema).parquet(src_dir)
-              .select("user_id", "value"))
-
-    def sink_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(sink_dir)
-
-    from build_pipeline_with_apache_beam_spark.streaming.windows import (
-        _state_partitions,
-    )
-
+    stream = read_source(spark, _events_source(sf_dir)).select(
+        "user_id", "value")
     with _state_partitions(spark):
-        q = (stateful_user_agg(stream)
-             .writeStream.foreachBatch(sink_batch)
-             .option("checkpointLocation", ckpt_dir)
-             .outputMode("update")
-             .trigger(availableNow=True).start())
-        await_drained(q)
-
-    return spark.read.parquet(sink_dir)
+        return drain(stateful_user_agg(stream), run_dir(sf_dir, "state_sink"),
+                     run_dir(sf_dir, "state_ckpt"), "update")
 
 
 def q_stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -145,51 +141,21 @@ def q_stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame
         def close(self) -> None:
             pass
 
-    from build_pipeline_with_apache_beam_spark.streaming.windows import (
-        _events_source,
-    )
-
-    src_dir = _events_source(sf_dir)
-    sink_dir = run_dir(sf_dir, "tws_sink")
-    ckpt_dir = run_dir(sf_dir, "tws_ckpt")
-
     # transformWithState requires the RocksDB state store provider
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try:
-        raw_schema = spark.read.parquet(src_dir).schema
-        stream = (spark.readStream.schema(raw_schema).parquet(src_dir)
-                  .select("user_id", "value"))
-        out = stream.groupBy("user_id").transformWithStateInPandas(
-            statefulProcessor=UserAgg(),
-            outputStructType=OUTPUT_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
-        )
-
-        def sink_batch(batch_df: DataFrame, batch_id: int) -> None:
-            batch_df.write.mode("append").parquet(sink_dir)
-
-        from build_pipeline_with_apache_beam_spark.streaming.windows import (
-            _state_partitions,
-        )
-
-        with _state_partitions(spark):
-            q = (out.writeStream.foreachBatch(sink_batch)
-                 .option("checkpointLocation", ckpt_dir)
-                 .outputMode("update")
-                 .trigger(availableNow=True).start())
-            await_drained(q)
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev)
-
-    return spark.read.parquet(sink_dir)
+    with scoped_conf(
+            spark, "spark.sql.streaming.stateStore.providerClass",
+            "org.apache.spark.sql.execution.streaming.state."
+            "RocksDBStateStoreProvider"), _state_partitions(spark):
+        out = (read_source(spark, _events_source(sf_dir))
+               .select("user_id", "value")
+               .groupBy("user_id").transformWithStateInPandas(
+                   statefulProcessor=UserAgg(),
+                   outputStructType=OUTPUT_SCHEMA,
+                   outputMode="Update",
+                   timeMode="None",
+               ))
+        return drain(out, run_dir(sf_dir, "tws_sink"),
+                     run_dir(sf_dir, "tws_ckpt"), "update")
 
 
 def q_stream_upsert_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -198,7 +164,7 @@ def q_stream_upsert_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame
     Delta/Iceberg MERGE INTO formalizes).
 
     The source delivers events in two micro-batches (maxFilesPerTrigger=1,
-    the file split by event parity so updates for the same user arrive in
+    one file per event parity so updates for the same user arrive in
     both batches); each batch keeps the latest event per user by (ts,
     event_id) and merges it against the existing state with the same
     keep-newest rule.  Final state = latest event per user — the arg_max
@@ -207,25 +173,18 @@ def q_stream_upsert_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame
     """
     from pyspark.sql import functions as F
 
-    from build_pipeline_with_apache_beam_spark.catalog import load_table
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id", "ts", "user_id", "event_type", "value")
-
     def write_batches(path: str) -> None:
-        for name, parity in (("batch_a", 0), ("batch_b", 1)):
+        ev = load_table(spark, sf_dir, "events").select(
+            "event_id", "ts", "user_id", "event_type", "value")
+        for parity in (0, 1):
             (ev.where(F.col("event_id") % 2 == parity)
              .coalesce(1)  # fixture-only
-             .write.parquet(os.path.join(path, name)))
+             .write.mode("append").parquet(path))
+        write_schema(path, ev.schema)
 
     src_dir = derived(sf_dir, "upsert_src", write_batches)
     state_dir = run_dir(sf_dir, "upsert_state")
-    ckpt_dir = run_dir(sf_dir, "upsert_ckpt")
-
-    schema = ev.schema
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", "1")
-              .option("recursiveFileLookup", "true").parquet(src_dir))
+    schema = read_schema(src_dir)
 
     from pyspark.sql.window import Window as W
 
@@ -238,7 +197,8 @@ def q_stream_upsert_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame
         latest = _keep_newest(batch_df)
         target = os.path.join(state_dir, "current")
         if os.path.exists(target):
-            existing = batch_df.sparkSession.read.parquet(target)
+            existing = batch_df.sparkSession.read.schema(schema).parquet(
+                target)
             merged = _keep_newest(existing.unionByName(latest))
         else:
             merged = latest
@@ -251,12 +211,9 @@ def q_stream_upsert_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame
         os.rename(tmp, target)
         shutil.rmtree(old, ignore_errors=True)
 
-    q = (stream.writeStream.foreachBatch(merge_batch)
-         .option("checkpointLocation", ckpt_dir)
-         .trigger(availableNow=True).start())
-    await_drained(q)
-
-    out = spark.read.parquet(os.path.join(state_dir, "current"))
+    drain_each(read_source(spark, src_dir, 1), merge_batch,
+               run_dir(sf_dir, "upsert_ckpt"))
+    out = spark.read.schema(schema).parquet(os.path.join(state_dir, "current"))
     return out.select("user_id", "event_id", "ts", "event_type",
                       F.round("value", 4).alias("value")).orderBy("user_id")
 

@@ -7,9 +7,15 @@ first-class: ``window()`` / ``session_window()`` aggregations that run
 identically in batch and in Structured Streaming, plus watermark-based dedup
 — the principled version of the SQLite watermark (retrieval.py:30-60).
 
-Batch-checkable analogs are registered for the driver's oracle gate; the
-actual streaming execution paths (readStream → foreachBatch) are exercised
-by tests/test_streaming.py with a real file-source stream.
+Batch-checkable analogs are registered for the DuckDB oracle gate, next
+to the real file-source stream ops.  Each stream op reads a committed
+stream-source dir (``scratch.derived``): the raw events replay
+(``_events_source``) or time-ordered ``part=`` slices of a derived frame
+(``_sliced_source``, whose builder runs only when the dir is written).
+Both store their schema beside their files, so ``drain.read_source`` opens
+the stream without a schema-inference job, and ``drain.drain`` runs it to
+the end of its source into a parquet sink read back with the streamed
+frame's schema.  The stateful ones scope ``STATE_PARTITIONS``.
 
 Scale notes: windowed aggregation shuffles once on (window, keys) with
 map-side partial aggregation; session windows need a per-key sort but Spark
@@ -22,23 +28,28 @@ from __future__ import annotations
 
 import os
 import shutil
-from contextlib import contextmanager
+from collections.abc import Callable
+from contextlib import AbstractContextManager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from build_pipeline_with_apache_beam_spark.streaming.drain import (
-    await_drained,
+from build_pipeline_with_apache_beam_spark.catalog import (
+    load_table,
+    raw_table,
+    write_schema,
 )
-
-from build_pipeline_with_apache_beam_spark.catalog import load_table
 from build_pipeline_with_apache_beam_spark.scratch import derived, run_dir
+from build_pipeline_with_apache_beam_spark.session import scoped_conf
+from build_pipeline_with_apache_beam_spark.streaming.drain import (
+    drain,
+    read_source,
+)
 
 STATE_PARTITIONS = 8
 
 
-@contextmanager
-def _state_partitions(spark: SparkSession, n: int = STATE_PARTITIONS):
+def _state_partitions(spark: SparkSession) -> AbstractContextManager[None]:
     """Size the streaming state-store partition count to the stream.
 
     A stateful query fixes its number of state-store instances from
@@ -51,22 +62,21 @@ def _state_partitions(spark: SparkSession, n: int = STATE_PARTITIONS):
     the overhead is the 32 partitions × 4 join state stores × ~5
     micro-batches of store machinery churning on a few thousand rows.
     At 100 TB the same knob goes the other way: raise it so per-store
-    state fits in executor memory.  Scoped via context manager so the
-    session's batch shuffle sizing is untouched afterwards.
+    state fits in executor memory.  Scoped (``session.scoped_conf``) so
+    the session's batch shuffle sizing is untouched afterwards.
     """
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+    return scoped_conf(spark, "spark.sql.shuffle.partitions",
+                       str(STATE_PARTITIONS))
 
 
 def _stage_events_source(sf_dir: str, src_dir: str) -> None:
     """Copy the events table into a fresh stream-source dir, handling both
     layouts: driver testdata ships one parquet FILE, while Spark-written
     scale-up tables are DIRECTORIES of part files (each part file lands
-    flat in src_dir, so the file-source stream sees them all)."""
+    flat in src_dir, so the file-source stream sees them all).  The
+    table's raw schema is stored beside the copies: ``ts`` as the files
+    hold it (``timestamp_ntz``, or a nanos long in older drops), not the
+    catalog's coerced view."""
     os.makedirs(src_dir, exist_ok=True)
     src = os.path.join(sf_dir, "events.parquet")
     if os.path.isdir(src):
@@ -76,6 +86,8 @@ def _stage_events_source(sf_dir: str, src_dir: str) -> None:
                             os.path.join(src_dir, f"events-{i:05d}.parquet"))
     else:
         shutil.copy(src, os.path.join(src_dir, "events.parquet"))
+    write_schema(src_dir, raw_table(SparkSession.active(), sf_dir,
+                                    "events").schema)
 
 
 def _events_source(sf_dir: str) -> str:
@@ -85,15 +97,20 @@ def _events_source(sf_dir: str) -> str:
                    lambda p: _stage_events_source(sf_dir, p))
 
 
-def _sliced_source(sf_dir: str, name: str, ev: DataFrame, n: int) -> str:
-    """``ev`` as a committed stream-source dir of ``n`` time-ordered
-    ``part=`` slices, one file each: a ``maxFilesPerTrigger=1`` stream
-    consumes one slice per micro-batch."""
-    return derived(sf_dir, name, lambda p: (
-        _time_sliced(ev, n)
-        .repartition(1)  # fixture-only
-        .sortWithinPartitions("ts")
-        .write.partitionBy("part").parquet(p)))
+def _sliced_source(sf_dir: str, name: str, build: Callable[[], DataFrame],
+                   n: int) -> str:
+    """``build()`` as a committed stream-source dir of ``n`` time-ordered
+    ``part=`` slices, one file each, with its schema stored: a
+    ``maxFilesPerTrigger=1`` stream consumes one slice per micro-batch.
+    ``build`` runs only when the dir is written."""
+    def write(path: str) -> None:
+        df = (_time_sliced(build(), n)
+              .repartition(1)  # fixture-only
+              .sortWithinPartitions("ts"))
+        df.write.partitionBy("part").parquet(path)
+        write_schema(path, df.schema)
+
+    return derived(sf_dir, name, write)
 
 
 def _time_sliced(df: DataFrame, n: int, ts_col: str = "ts") -> DataFrame:
@@ -186,25 +203,10 @@ def q_stream_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs distributed (this is where a Kafka/Pub-Sub producer with
     per-partition client init would go — see sources.sinks.publish_foreach_partition).
     """
-    src_dir = _events_source(sf_dir)
-    sink_dir = run_dir(sf_dir, "stream_sink")
-    ckpt_dir = run_dir(sf_dir, "stream_ckpt")
-
-    # raw parquet schema (ts is INT64 nanos under nanosAsLong): the stream
-    # must declare what is physically in the files, not the converted view
-    raw_schema = spark.read.parquet(src_dir).schema
-    raw = spark.readStream.schema(raw_schema).parquet(src_dir)
-
-    def sink_batch(batch_df: DataFrame, batch_id: int) -> None:
-        (batch_df.select("event_id", "event_type")
-         .write.mode("append").parquet(sink_dir))
-
-    q = (raw.writeStream.foreachBatch(sink_batch)
-         .option("checkpointLocation", ckpt_dir)
-         .trigger(availableNow=True).start())
-    await_drained(q)
-
-    return spark.read.parquet(sink_dir)
+    stream = read_source(spark, _events_source(sf_dir)).select(
+        "event_id", "event_type")
+    return drain(stream, run_dir(sf_dir, "stream_sink"),
+                 run_dir(sf_dir, "stream_ckpt"))
 
 
 def q_stream_window_append_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -222,31 +224,18 @@ def q_stream_window_append_watermark(spark: SparkSession, sf_dir: str) -> DataFr
     """
     # 4 time-ordered slices => 4 micro-batches (two-phase quantile
     # slicing; committed once — only sink/ckpt reset per run)
-    src_dir = _sliced_source(sf_dir, "wmwin_src",
-                             load_table(spark, sf_dir, "events"), 4)
-    sink_dir = run_dir(sf_dir, "wmwin_sink")
-    ckpt_dir = run_dir(sf_dir, "wmwin_ckpt")
-
-    schema = spark.read.parquet(src_dir).schema
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", "1").parquet(src_dir)
-              .select("ts", "value"))
+    src_dir = _sliced_source(
+        sf_dir, "wmwin_src", lambda: load_table(spark, sf_dir, "events"), 4)
+    stream = read_source(spark, src_dir, 1).select("ts", "value")
     agg = (stream.withWatermark("ts", "1 hour")
            .groupBy(F.window("ts", "1 hour").alias("w"))
            .agg(F.count(F.lit(1)).alias("n_events"),
                 F.round(F.sum("value"), 4).alias("sum_value"))
            .select(F.col("w.start").alias("w_start"),
                    F.col("w.end").alias("w_end"), "n_events", "sum_value"))
-
-    def sink_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(sink_dir)
-
     with _state_partitions(spark):
-        q = (agg.writeStream.foreachBatch(sink_batch)
-             .option("checkpointLocation", ckpt_dir)
-             .outputMode("append").trigger(availableNow=True).start())
-        await_drained(q)
-    return spark.read.parquet(sink_dir)
+        return drain(agg, run_dir(sf_dir, "wmwin_sink"),
+                     run_dir(sf_dir, "wmwin_ckpt"))
 
 
 def q_stream_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -265,42 +254,30 @@ def q_stream_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame
     retention — the reference's SQLite watermark (retrieval.py:30-60) can't
     express this because its driver loop sees one window at a time.
     """
-    ev = load_table(spark, sf_dir, "events")
     # two time-ordered slices per side => two micro-batches per stream
     # (slice writes committed once; only sink/ckpt reset)
-    dirs = {n: _sliced_source(sf_dir, f"ssj_{n}",
-                              ev.where(F.col("event_type") == etype), 2)
-            for n, etype in (("click", "click"), ("purch", "purchase"))}
-    dirs.update((n, run_dir(sf_dir, f"ssj_{n}")) for n in ("sink", "ckpt"))
-
-    def read_stream(path: str, prefix: str) -> DataFrame:
-        schema = spark.read.parquet(path).schema
-        return (spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", "1").parquet(path)
+    def read_stream(etype: str, prefix: str) -> DataFrame:
+        src_dir = _sliced_source(
+            sf_dir, f"ssj_{prefix}", lambda: load_table(
+                spark, sf_dir, "events").where(F.col("event_type") == etype),
+            2)
+        return (read_source(spark, src_dir, 1)
                 .select(F.col("event_id").alias(f"{prefix}_id"),
                         F.col("user_id").alias(f"{prefix}_user"),
                         F.col("ts").alias(f"{prefix}_ts"))
                 .withWatermark(f"{prefix}_ts", "4 hours"))
 
-    clicks = read_stream(dirs["click"], "click")
-    purchases = read_stream(dirs["purch"], "purch")
+    clicks = read_stream("click", "click")
+    purchases = read_stream("purchase", "purch")
     joined = clicks.join(
         purchases,
         (F.col("click_user") == F.col("purch_user"))
         & (F.col("purch_ts") >= F.col("click_ts"))
         & (F.col("purch_ts") <= F.col("click_ts") + F.expr("INTERVAL 30 MINUTE")),
     ).select("click_id", "purch_id", F.col("click_user").alias("user_id"))
-
-    def sink_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(dirs["sink"])
-
     with _state_partitions(spark):
-        q = (joined.writeStream.foreachBatch(sink_batch)
-             .option("checkpointLocation", dirs["ckpt"])
-             .outputMode("append").trigger(availableNow=True).start())
-        await_drained(q)
-    return spark.read.parquet(dirs["sink"])
-
+        return drain(joined, run_dir(sf_dir, "ssj_sink"),
+                     run_dir(sf_dir, "ssj_ckpt"))
 
 
 def q_stream_session_window_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -318,15 +295,9 @@ def q_stream_session_window_watermark(spark: SparkSession, sf_dir: str) -> DataF
     what makes session windows possible on an unbounded stream at all.
     """
     src_dir = _sliced_source(
-        sf_dir, "sesswin_src", load_table(spark, sf_dir, "events").where(
-            F.col("event_type") == "purchase"), 3)
-    sink_dir = run_dir(sf_dir, "sesswin_sink")
-    ckpt_dir = run_dir(sf_dir, "sesswin_ckpt")
-
-    schema = spark.read.parquet(src_dir).schema
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", "1").parquet(src_dir)
-              .select("user_id", "ts", "value"))
+        sf_dir, "sesswin_src", lambda: load_table(spark, sf_dir, "events")
+        .where(F.col("event_type") == "purchase"), 3)
+    stream = read_source(spark, src_dir, 1).select("user_id", "ts", "value")
     agg = (stream.withWatermark("ts", "2 hours")
            .groupBy("user_id", F.session_window("ts", "30 minutes").alias("w"))
            .agg(F.count(F.lit(1)).alias("n_events"),
@@ -335,16 +306,9 @@ def q_stream_session_window_watermark(spark: SparkSession, sf_dir: str) -> DataF
                    F.col("w.start").alias("session_start"),
                    F.col("w.end").alias("session_end"),
                    "n_events", "sum_value"))
-
-    def sink_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(sink_dir)
-
     with _state_partitions(spark):
-        q = (agg.writeStream.foreachBatch(sink_batch)
-             .option("checkpointLocation", ckpt_dir)
-             .outputMode("append").trigger(availableNow=True).start())
-        await_drained(q)
-    return spark.read.parquet(sink_dir)
+        return drain(agg, run_dir(sf_dir, "sesswin_sink"),
+                     run_dir(sf_dir, "sesswin_ckpt"))
 
 
 def q_stream_static_enrich_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -353,45 +317,27 @@ def q_stream_static_enrich_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     production, which is how slowly-changing dims reach a stream without
     stream-stream state), then rolls up value per segment.
 
-    Complete-mode aggregation snapshots land per batch tagged with their
-    batch id; the read-back keeps the last snapshot, so the result is
-    correct for any micro-batch slicing.  Streaming state is the
+    Complete mode re-emits the whole aggregate per batch and the drain
+    overwrites the sink with it, so the sink holds the last snapshot: the
+    answer for any micro-batch slicing.  Streaming state is the
     |segments|-row aggregate — bounded by the dimension, never the stream.
     """
-    src_dir = _events_source(sf_dir)
-    sink_dir = run_dir(sf_dir, "enrich_sink")
-    ckpt_dir = run_dir(sf_dir, "enrich_ckpt")
-
     # static dimension: user → segment (derived deterministically so the
     # batch oracle can rebuild it)
     dim = (load_table(spark, sf_dir, "events")
            .select("user_id").distinct()
            .withColumn("segment", (F.col("user_id") % 5).cast("int")))
 
-    raw_schema = spark.read.parquet(src_dir).schema
-    raw = spark.readStream.schema(raw_schema).parquet(src_dir)
-    enriched = (raw.select("user_id", "value")
+    enriched = (read_source(spark, _events_source(sf_dir))
+                .select("user_id", "value")
                 .join(F.broadcast(dim), "user_id")
                 .groupBy("segment")
                 .agg(F.count(F.lit(1)).alias("n_events"),
                      F.sum("value").alias("sum_value_raw")))
-
-    def sink_batch(batch_df: DataFrame, batch_id: int) -> None:
-        (batch_df.withColumn("batch_id", F.lit(batch_id))
-         .write.mode("append").parquet(sink_dir))
-
-    q = (enriched.writeStream.foreachBatch(sink_batch)
-         .option("checkpointLocation", ckpt_dir)
-         .outputMode("complete").trigger(availableNow=True).start())
-    await_drained(q)
-
-    # complete-mode rewrites the full aggregate per batch — the LAST
-    # snapshot (max batch_id) is the answer for any micro-batch slicing
-    sunk = spark.read.parquet(sink_dir)
-    last = sunk.agg(F.max("batch_id").alias("b"))
-    return (sunk.join(F.broadcast(last), sunk.batch_id == last.b)
-            .select("segment", "n_events",
-                    F.round("sum_value_raw", 4).alias("sum_value"))
+    sunk = drain(enriched, run_dir(sf_dir, "enrich_sink"),
+                 run_dir(sf_dir, "enrich_ckpt"), "complete")
+    return (sunk.select("segment", "n_events",
+                        F.round("sum_value_raw", 4).alias("sum_value"))
             .orderBy("segment"))
 
 
@@ -416,14 +362,9 @@ def q_stream_cep_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     from build_pipeline_with_apache_beam_spark.operators.behavioral import (
         CEP_PATTERN,
     )
-    src_dir = _sliced_source(sf_dir, "cep_src",
-                             load_table(spark, sf_dir, "events"), 3)
-    sink_dir = run_dir(sf_dir, "cep_sink")
-    ckpt_dir = run_dir(sf_dir, "cep_ckpt")
-
-    schema = spark.read.parquet(src_dir).schema
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", "1").parquet(src_dir)
+    src_dir = _sliced_source(
+        sf_dir, "cep_src", lambda: load_table(spark, sf_dir, "events"), 3)
+    stream = (read_source(spark, src_dir, 1)
               .select("user_id", "ts", "event_id",
                       F.substring("event_type", 1, 1).alias("code")))
     agg = (stream.withWatermark("ts", "2 hours")
@@ -440,16 +381,9 @@ def q_stream_cep_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
                    F.regexp_count("journey", F.lit(CEP_PATTERN))
                     .cast("bigint").alias("n_matches"))
            .where(F.col("n_matches") > 0))
-
-    def sink_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(sink_dir)
-
     with _state_partitions(spark):
-        q = (agg.writeStream.foreachBatch(sink_batch)
-             .option("checkpointLocation", ckpt_dir)
-             .outputMode("append").trigger(availableNow=True).start())
-        await_drained(q)
-    return spark.read.parquet(sink_dir)
+        return drain(agg, run_dir(sf_dir, "cep_sink"),
+                     run_dir(sf_dir, "cep_ckpt"))
 
 
 QUERIES = {

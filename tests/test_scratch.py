@@ -158,6 +158,25 @@ def test_run_dir_is_empty_per_call_and_removed_at_exit(sf):
     assert not os.path.exists(root)
 
 
+def test_new_run_root_removes_dead_processes_roots_only(sf):
+    """A process killed before its exit handler ran left its
+    ``run-<pid>-*`` root; the next process to create a root in the
+    namespace removes it, and keeps the root of a process still alive."""
+    dead = subprocess.run(
+        [sys.executable, "-c", "import os; print(os.getpid())"],
+        capture_output=True, text=True, check=True)
+    ns = namespace(sf)
+    orphan = os.path.join(ns, f"run-{int(dead.stdout)}-x")
+    live = os.path.join(ns, f"run-{os.getpid()}-x")
+    for d in (orphan, live):
+        os.makedirs(os.path.join(d, "sink"))
+    fresh = run_dir(sf, "lake")
+    assert os.path.basename(os.path.dirname(fresh)).startswith(
+        f"run-{os.getpid()}-")
+    assert not os.path.exists(orphan)
+    assert os.path.isdir(live)
+
+
 def test_every_scratch_entry_of_an_sf_dir_carries_its_basename(tmp_path):
     """What a wipe by data tag relies on (``perfbench/run.py``'s
     ``_wipe_fixtures`` deletes the top-level entries that contain the data

@@ -1,0 +1,123 @@
+"""The one stream reader and drain (``streaming/drain.py``): every
+committed stream-source dir stores the schema a bare parquet read infers,
+a warm file-source stream op starts no job on the calling thread before
+its sink, and a drain that outlives its deadline raises with no query
+left running."""
+
+from __future__ import annotations
+
+import os
+import time
+import uuid
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+from pyspark.sql.types import LongType
+
+from build_pipeline_with_apache_beam_spark.catalog import (
+    read_schema,
+    write_schema,
+)
+from build_pipeline_with_apache_beam_spark.scratch import derived_path
+from build_pipeline_with_apache_beam_spark.streaming.drain import (
+    drain_each,
+    read_source,
+)
+from build_pipeline_with_apache_beam_spark.streaming.stateful import (
+    q_stream_upsert_foreach_batch,
+)
+from build_pipeline_with_apache_beam_spark.streaming.windows import (
+    _stage_events_source,
+    q_stream_cep_sessions,
+    q_stream_foreach_batch_sink,
+    q_stream_session_window_watermark,
+    q_stream_stream_interval_join,
+    q_stream_window_append_watermark,
+)
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PERFBENCH_DATA = os.path.join(REPO, "perfbench", "data", "sf0.01")
+
+# op -> the committed stream-source dirs it reads
+SOURCES = {
+    q_stream_foreach_batch_sink: ("events_src",),
+    q_stream_window_append_watermark: ("wmwin_src",),
+    q_stream_stream_interval_join: ("ssj_click", "ssj_purch"),
+    q_stream_session_window_watermark: ("sesswin_src",),
+    q_stream_cep_sessions: ("cep_src",),
+    q_stream_upsert_foreach_batch: ("upsert_src",),
+}
+
+
+def _calling_thread_jobs(spark, run) -> int:
+    """How many Spark jobs ``run()`` starts on the calling thread."""
+    sc = spark.sparkContext
+    group = f"calling-thread-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "counted")
+    try:
+        run()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_every_stored_source_schema_equals_a_bare_read(spark, sf_dir):
+    for op, names in SOURCES.items():
+        op(spark, sf_dir)
+        for name in names:
+            path = derived_path(sf_dir, name)
+            assert read_schema(path) == spark.read.parquet(path).schema, name
+
+
+@pytest.mark.parametrize("layout", ["sf_dir", "perfbench", "nanos_drop"])
+def test_events_source_schema_is_the_raw_table_schema(spark, sf_dir,
+                                                      tmp_path, layout):
+    """The events replay stores ``ts`` as its files hold it: a nanos long
+    in older drops (``nanosAsLong``), not the catalog's coerced view."""
+    src_sf = {"sf_dir": sf_dir, "perfbench": PERFBENCH_DATA}.get(layout)
+    if layout == "perfbench" and not os.path.isdir(src_sf):
+        pytest.skip("perfbench data not present")
+    if layout == "nanos_drop":
+        src_sf = str(tmp_path / "drop")
+        os.makedirs(src_sf)
+        pq.write_table(pa.table({
+            "event_id": pa.array([1, 2], pa.int64()),
+            "ts": pa.array([1_700_000_000_000_000_000,
+                            1_700_000_001_000_000_000], pa.timestamp("ns")),
+            "value": pa.array([0.5, 1.5], pa.float64()),
+        }), os.path.join(src_sf, "events.parquet"))
+    src_dir = str(tmp_path / "src")
+    _stage_events_source(src_sf, src_dir)
+    stored = read_schema(src_dir)
+    assert stored == spark.read.parquet(src_dir).schema
+    if layout == "nanos_drop":
+        assert stored["ts"].dataType == LongType()
+
+
+def test_warm_file_stream_ops_start_only_their_sink_job(spark, sf_dir):
+    """Warm, the source dirs are committed with their schemas, so the
+    calling thread runs no schema inference and no table read: its one
+    job is the collect of the sink read back.  (The stream's own batches
+    run on the query's thread.)"""
+    for op in (q_stream_foreach_batch_sink, q_stream_window_append_watermark):
+        op(spark, sf_dir)  # commit the sources
+        assert _calling_thread_jobs(
+            spark, lambda: op(spark, sf_dir).collect()) == 1, op.__name__
+
+
+def test_drain_past_its_deadline_raises_and_stops_the_query(spark, tmp_path):
+    src = str(tmp_path / "src")
+    df = spark.range(3)
+    df.write.parquet(src)
+    write_schema(src, df.schema)
+
+    def slow_batch(batch_df, batch_id: int) -> None:
+        time.sleep(3)
+
+    with pytest.raises(TimeoutError, match="half-drained"):
+        drain_each(read_source(spark, src), slow_batch,
+                   str(tmp_path / "ckpt"), timeout_sec=0.5)
+    assert spark.streams.active == []
+
