@@ -6,18 +6,20 @@ Beam (``collection.find`` → list, /root/reference/retrieval.py:76,221;
 that: every table is a distributed parquet scan, so filters/projections push
 down to the file source and the driver holds only the plan.
 
-Operators' intermediate parquet stages (``_staged``) are managed here too,
-beside the scan-spread rule: each stage is a content-addressed
+Tables, operators' intermediate stages (``_staged``) and committed stream
+sources all read a stored schema (:func:`write_schema`), so no read runs
+a schema-inference job.  Each table schema and each stage is a
 ``scratch.derived`` artifact — keyed by the sf dir's table files and the
 package code, committed by rename, reused by every later call in any
-process — and read back as a parquet scan, one partition when it is
-small.
+process; a small stage is read back as one partition.  SQL-form operators
+run through :func:`sql`, which registers only the tables their query names.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -53,10 +55,20 @@ def coerce_events_ts(df: DataFrame) -> DataFrame:
 
 def raw_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Distributed parquet scan of one table as its files store it (no
-    driver materialization): events' ``ts`` is not yet coerced."""
+    driver materialization): events' ``ts`` is not yet coerced.  The scan
+    passes the stored schema ``table_schema-<name>``, a derived dir that
+    holds only ``_schema.json``, written from one inferred read on a miss:
+    a warm read is pure planning."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+
+    def write(tmp: str) -> None:
+        os.makedirs(tmp)
+        write_schema(tmp, spark.read.parquet(path).schema)
+
+    stored = read_schema(derived(sf_dir, f"table_schema-{name}", write))
+    return spark.read.schema(stored).parquet(path)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -67,29 +79,39 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register all tables as temp views so SQL-form operators can run."""
-    for name in TABLES:
+def register_views(spark: SparkSession, sf_dir: str,
+                   names: tuple[str, ...]) -> None:
+    """Register the tables ``names`` as temp views (for :func:`sql`)."""
+    for name in names:
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)
+
+
+def sql(spark: SparkSession, sf_dir: str, query: str, **kwargs) -> DataFrame:
+    """``spark.sql(query, **kwargs)`` over the tables ``query`` names (a
+    whole-word match: a name in a comment registers one view too many,
+    never one too few), each registered as a temp view first."""
+    register_views(spark, sf_dir, tuple(
+        t for t in TABLES if re.search(rf"\b{t}\b", query, re.IGNORECASE)))
+    return spark.sql(query, **kwargs)
 
 
 def table_meta(sf_dir: str, name: str) -> tuple[int, int]:
     """(n_rows, n_splits_estimate) for a table, straight off the parquet
     footers (``parquet_meta``)."""
-    return parquet_meta(os.path.join(sf_dir, f"{name}.parquet"))
+    return parquet_meta(os.path.join(sf_dir, f"{name}.parquet"))[:2]
 
 
-def parquet_meta(path: str) -> tuple[int, int]:
-    """(n_rows, n_splits_estimate) for a parquet file or dir, straight off
-    the footers — NO Spark job: a ``df.count()`` costs a scheduler
-    round-trip per operator call and ``df.rdd.getNumPartitions()`` re-plans
-    the scan (~0.2 s combined per call, measured r15).  ``path`` is one
-    file or a directory tree of them (nested or Hive-partitioned
-    ``key=value`` dirs), walked by ``scratch.parquet_files``, the walk the
-    derived artifacts' input fingerprint uses too.  The split estimate
-    mirrors Spark's packing math (total bytes / ``MAX_PARTITION_BYTES``, at
-    least one split per file) closely enough for a spread-or-not
-    threshold."""
+def parquet_meta(path: str) -> tuple[int, int, int]:
+    """(n_rows, n_splits_estimate, n_bytes) for a parquet file or dir,
+    straight off the footers and file sizes — NO Spark job: a
+    ``df.count()`` costs a scheduler round-trip per operator call and
+    ``df.rdd.getNumPartitions()`` re-plans the scan (~0.2 s combined per
+    call, measured r15).  ``path`` is one file or a directory tree of them
+    (nested or Hive-partitioned ``key=value`` dirs), walked by
+    ``scratch.parquet_files``, the walk the derived artifacts' input
+    fingerprint uses too.  The split estimate mirrors Spark's packing math
+    (total bytes / ``MAX_PARTITION_BYTES``, at least one split per file)
+    closely enough for a spread-or-not threshold."""
     import pyarrow.parquet as pq
 
     files = parquet_files(path)
@@ -99,14 +121,14 @@ def parquet_meta(path: str) -> tuple[int, int]:
         n_rows += pq.ParquetFile(f).metadata.num_rows
         total_bytes += os.path.getsize(f)
     n_splits = max(len(files), -(-total_bytes // MAX_PARTITION_BYTES))
-    return n_rows, int(n_splits)
+    return n_rows, int(n_splits), total_bytes
 
 
-def sized_spread(df: DataFrame, n_rows: int, rows_per_partition: int,
-                 n_splits: int) -> DataFrame:
-    """Spread a small scan for a CPU-heavy downstream stage — ONLY when the
-    scan has fewer partitions than the row-sized target (optimization guide
-    §2.2/§6; round-14 verdict #1).
+def sized_spread(df: DataFrame, sf_dir: str, name: str,
+                 rows_per_partition: int) -> DataFrame:
+    """Spread ``df``, a scan of table ``name``, for a CPU-heavy downstream
+    stage — ONLY when the scan has fewer partitions than the row-sized
+    target (optimization guide §2.2/§6; round-14 verdict #1).
 
     The test corpora are one parquet file = ONE input split, so without a
     spread a CPU-bound stage (shingling, token hashing) runs on a single
@@ -115,9 +137,11 @@ def sized_spread(df: DataFrame, n_rows: int, rows_per_partition: int,
     provide the parallelism and the shuffle is pure waste.  This helper
     sizes the target by rows (capped at defaultParallelism) and adds the
     exchange only when the scan itself falls short of it — corpus-scale
-    paths take NO exchange.  ``n_rows`` and ``n_splits`` come off the
-    parquet footers (``table_meta``), so the decision starts no Spark job.
+    paths take NO exchange.  The table's row and split counts come off its
+    parquet footers (:func:`table_meta`), so the decision starts no Spark
+    job.
     """
+    n_rows, n_splits = table_meta(sf_dir, name)
     spark = df.sparkSession
     target = max(1, min(spark.sparkContext.defaultParallelism,
                         -(-n_rows // max(1, rows_per_partition))))
@@ -221,8 +245,7 @@ def _staged(spark: SparkSession, build: Callable[[], DataFrame], sf_dir: str,
 
     path = derived(sf_dir, name, write)
     df = spark.read.schema(read_schema(path)).parquet(path)
-    n_rows, _ = parquet_meta(path)
-    size = sum(os.path.getsize(f) for f in parquet_files(path))
+    n_rows, _, size = parquet_meta(path)
     if n_rows * n_rows <= _ONE_TASK_ROWS and size <= _min_partition_bytes(
             spark):
         return df.coalesce(1)  # small-bounded: n² rows fit one task

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf, udf
 
+from build_pipeline_with_apache_beam_spark import catalog
 from build_pipeline_with_apache_beam_spark.catalog import load_table
 
 
@@ -192,8 +193,6 @@ def udtf_python_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql.functions import udtf
 
-    from build_pipeline_with_apache_beam_spark.catalog import register_views
-
     @udtf(returnType="pos INT, token STRING")
     class TokenizeHead:
         def eval(self, text: str):
@@ -202,9 +201,8 @@ def udtf_python_native(spark: SparkSession, sf_dir: str) -> DataFrame:
             for i, tok in enumerate(text.split(" ")[:3]):
                 yield i, tok
 
-    register_views(spark, sf_dir)
     spark.udtf.register("tokenize_head", TokenizeHead)
-    return spark.sql("""
+    return catalog.sql(spark, sf_dir, """
         SELECT d.doc_id, t.pos, t.token
         FROM documents d, LATERAL tokenize_head(d.text) t
     """)

@@ -409,19 +409,15 @@ def corpus_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window as W
 
-    from build_pipeline_with_apache_beam_spark.catalog import (
-        sized_spread,
-        table_meta,
-    )
+    from build_pipeline_with_apache_beam_spark.catalog import sized_spread
 
     # size-aware spread (guide §2.2/§6): the per-doc stage below computes
     # md5 fingerprints + 5-gram arrays — CPU-heavy, and the test corpus is
     # ONE input split (2.0 s serial vs ~0.3 s spread at sf0.1); at 100 TB
     # the splits provide the parallelism and no exchange is added.  The
     # bench-slice filter still pushes below the repartition to the scan.
-    n_docs, n_splits = table_meta(sf_dir, "documents")  # footer-only
     docs = sized_spread(load_table(spark, sf_dir, "documents"),
-                        n_docs, 128, n_splits)
+                        sf_dir, "documents", 128)  # footer-only
     toks = F.split("text", " ")
 
     # stage 1: quality (the gopher-style battery, abbreviated)

@@ -33,7 +33,6 @@ from build_pipeline_with_apache_beam_spark.catalog import (
     _staged,
     load_table,
     sized_spread,
-    table_meta,
 )
 from build_pipeline_with_apache_beam_spark.functions import sqlgen
 from build_pipeline_with_apache_beam_spark.operators.graph import (
@@ -73,11 +72,10 @@ def _docs_with_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # compute from IS-NOT-NULL docs — so the scan filter matches exactly.
     # (The r14 form also dropped empty-STRING text, silently diverging from
     # the oracle on corpora with empty docs — ADVICE r14, fixed r15.)
-    n_docs, n_splits = table_meta(sf_dir, "documents")  # footer-only, no job
-    docs = sized_spread(
+    docs = sized_spread(  # footer-only, no job
         load_table(spark, sf_dir, "documents")
         .where(F.col("text").isNotNull()),
-        n_docs, _DOC_ROWS_PER_PARTITION, n_splits)
+        sf_dir, "documents", _DOC_ROWS_PER_PARTITION)
     # Pre-split in a SEPARATE projection: `toks` is referenced more than
     # once by a non-cheap expression, so CollapseProject leaves the split
     # materialized.  Inlining `split(text, ' ')` into the lambda body makes
@@ -336,9 +334,8 @@ def simhash_pairs(spark: SparkSession, sf_dir: str,
     # size-aware spread of the tokenize+hash stage (r15, guide §2.2/§6):
     # the test corpus is one parquet file = one input split; at 100 TB the
     # splits provide the parallelism natively and no exchange is added
-    n_docs, n_splits = table_meta(sf_dir, "documents")
     docs = sized_spread(load_table(spark, sf_dir, "documents"),
-                        n_docs, _DOC_ROWS_PER_PARTITION, n_splits)
+                        sf_dir, "documents", _DOC_ROWS_PER_PARTITION)
     # hash once per token in its own projection — inlining the hash chunks
     # into the 64 per-bit aggregates below would recompute the digest 64×
     # per row.  c0..c3 are the 64 hash bits as four 16-bit ints.

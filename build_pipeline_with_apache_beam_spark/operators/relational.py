@@ -23,6 +23,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from build_pipeline_with_apache_beam_spark import catalog
 from build_pipeline_with_apache_beam_spark.catalog import _staged, load_table
 from build_pipeline_with_apache_beam_spark.functions import sqlgen
 
@@ -146,8 +147,7 @@ def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    return spark.sql("""
+    return catalog.sql(spark, sf_dir, """
         SELECT l_returnflag, l_linestatus,
                ROUND(SUM(l_quantity), 4) AS sum_qty,
                COUNT(1) AS n_rows
@@ -1118,10 +1118,7 @@ def sql_tpch_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SQL surface: the same engine through ``spark.sql`` over registered
     views (TPC-H Q6 shape).  Catalyst compiles this to the identical plan the
     DataFrame API would produce — one scan with pushed filters + one agg."""
-    from build_pipeline_with_apache_beam_spark.catalog import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql("""
+    return catalog.sql(spark, sf_dir, """
         SELECT ROUND(SUM(l_extendedprice * l_discount), 4) AS revenue,
                COUNT(1) AS n_rows
         FROM lineitem
@@ -1138,10 +1135,7 @@ TRADE_EDGE_MIN = 40     # min lineitem count for a nation→nation trade edge
 def _trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted nation→nation trade edges: the 6-way fact collapse
     :func:`sql_recursive_cte` stages once and recurses over."""
-    from build_pipeline_with_apache_beam_spark.catalog import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(f"""
+    return catalog.sql(spark, sf_dir, f"""
         -- orders/customer scale with the corpus: shuffle_hash-pinned
         -- (round-9 sf3 probe; the dim joins below stay broadcast)
         SELECT /*+ SHUFFLE_HASH(o, c) */
@@ -1209,10 +1203,8 @@ def sql_parameterized(spark: SparkSession, sf_dir: str) -> DataFrame:
     parameters bind as literals in the analyzed plan — injection-safe and
     plan-cache-friendly, the way an engine exposes templated queries to
     applications.  Same pushdown/pruning as inline literals."""
-    from build_pipeline_with_apache_beam_spark.catalog import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(
+    return catalog.sql(
+        spark, sf_dir,
         """
         SELECT o_orderpriority, COUNT(1) AS n_orders,
                -- decimal sum: float flips the 4th decimal at sf10 (~1e11)

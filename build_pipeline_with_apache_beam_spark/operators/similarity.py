@@ -80,13 +80,9 @@ def _with_unit_vec(df: DataFrame, sf_dir: str) -> DataFrame:
     corpus-scale scan rides its own splits with NO exchange.  The row and
     split counts of ``sf_dir``'s embeddings come off the parquet footers
     (no Spark job)."""
-    from build_pipeline_with_apache_beam_spark.catalog import (
-        sized_spread,
-        table_meta,
-    )
+    from build_pipeline_with_apache_beam_spark.catalog import sized_spread
 
-    n_rows, n_splits = table_meta(sf_dir, "embeddings")
-    df = sized_spread(df, n_rows, _VEC_ROWS_PER_PARTITION, n_splits)
+    df = sized_spread(df, sf_dir, "embeddings", _VEC_ROWS_PER_PARTITION)
     v = F.col("embedding").cast("array<double>")
     n = F.sqrt(F.aggregate(v, F.lit(0.0), lambda a, x: a + x * x))
     return df.withColumn("vec", F.transform(v, lambda x: x / n))

@@ -24,13 +24,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from build_pipeline_with_apache_beam_spark.catalog import register_views
+from build_pipeline_with_apache_beam_spark import catalog
 
 
 def subquery_in(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Orders from one market segment via an IN subquery (→ semi join)."""
-    register_views(spark, sf_dir)
-    return spark.sql("""
+    return catalog.sql(spark, sf_dir, """
         SELECT o_orderstatus,
                COUNT(1) AS n_orders,
                -- decimal sum: ~2.5e11/group at sf10, float flips 4th dec
@@ -51,8 +50,7 @@ def subquery_not_in_null_aware(spark: SparkSession, sf_dir: str) -> DataFrame:
     compare UNKNOWN and must be dropped, which a plain anti join would keep.
     Spark plans this as a null-aware anti join (single-key NAAJ).
     """
-    register_views(spark, sf_dir)
-    return spark.sql("""
+    return catalog.sql(spark, sf_dir, """
         SELECT o_orderstatus, COUNT(1) AS n_orders
         FROM orders
         WHERE NULLIF(o_custkey, 7) NOT IN
@@ -68,8 +66,7 @@ def subquery_scalar_correlated(spark: SparkSession, sf_dir: str) -> DataFrame:
     Catalyst decorrelates to one aggregate over customer grouped by nation +
     a join back — the per-outer-row subquery never executes N times.
     """
-    register_views(spark, sf_dir)
-    return spark.sql("""
+    return catalog.sql(spark, sf_dir, """
         SELECT c_custkey, c_name, ROUND(c_acctbal, 4) AS acctbal
         FROM customer c1
         WHERE c_acctbal > (SELECT AVG(c2.c_acctbal) FROM customer c2
@@ -85,8 +82,7 @@ def subquery_exists_correlated(spark: SparkSession, sf_dir: str) -> DataFrame:
     the EXISTS probe never materializes duplicates, so the output cardinality
     is bounded by the supplier dim regardless of fact-table size.
     """
-    register_views(spark, sf_dir)
-    return spark.sql("""
+    return catalog.sql(spark, sf_dir, """
         SELECT s_suppkey, s_name
         FROM supplier s
         WHERE EXISTS (SELECT /*+ SHUFFLE_HASH(l) */ 1 FROM lineitem l
@@ -103,8 +99,7 @@ def subquery_lateral_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-executing the inner query per outer row.  Deterministic tie-break on
     c_custkey so the oracle comparison is exact.
     """
-    register_views(spark, sf_dir)
-    return spark.sql("""
+    return catalog.sql(spark, sf_dir, """
         SELECT n_name, t.c_name, ROUND(t.c_acctbal, 4) AS acctbal
         FROM nation
         JOIN LATERAL (
@@ -124,8 +119,7 @@ def subquery_exists_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     of filtering, so the outer cardinality is preserved.  The scalable form
     of "flag rows that have a match" — no count subquery, no left join +
     dedup."""
-    register_views(spark, sf_dir)
-    return spark.sql("""
+    return catalog.sql(spark, sf_dir, """
         SELECT o_orderkey,
                EXISTS (SELECT /*+ SHUFFLE_HASH(lineitem) */ 1 FROM lineitem
                        WHERE l_orderkey = o_orderkey AND l_quantity >= 48)
@@ -145,8 +139,7 @@ def subquery_all_comparison(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Finds orders strictly larger than EVERY order of the low-key customer cohort — the
     "beats the whole cohort" filter."""
-    register_views(spark, sf_dir)
-    return spark.sql("""
+    return catalog.sql(spark, sf_dir, """
         SELECT o_orderkey, ROUND(o_totalprice, 4) AS o_totalprice,
                o_orderpriority
         FROM orders
@@ -162,8 +155,7 @@ def sql_cte_reuse(spark: SparkSession, sf_dir: str) -> DataFrame:
     subtree either inlines into both consumers (and the scan runs twice,
     cheap here) or materializes once under ReusedExchange; either way the
     semantics must match DuckDB's single-evaluation CTE exactly."""
-    register_views(spark, sf_dir)
-    return spark.sql("""
+    return catalog.sql(spark, sf_dir, """
         WITH nation_rev AS (
             SELECT s.s_nationkey AS nationkey,
                    SUM(CAST(l.l_extendedprice AS DECIMAL(18,4))) AS rev

@@ -22,7 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from build_pipeline_with_apache_beam_spark.catalog import load_table, register_views
+from build_pipeline_with_apache_beam_spark import catalog
+from build_pipeline_with_apache_beam_spark.catalog import load_table
 
 
 def flagship_q4_priority_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -33,8 +34,7 @@ def flagship_q4_priority_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
     l_orderkey with the extra non-equi condition attached, so each order is
     counted once no matter how many qualifying lines it has.
     """
-    register_views(spark, sf_dir)
-    return spark.sql("""
+    return catalog.sql(spark, sf_dir, """
         SELECT o_orderpriority, COUNT(1) AS order_count
         FROM orders
         WHERE o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
@@ -155,8 +155,7 @@ def flagship_q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the two branches' subplans differ, so Spark couldn't dedupe them)
     and no 5-column re-aggregation; 5.6 → ~2.8 s.
     """
-    register_views(spark, sf_dir)
-    return spark.sql("""
+    return catalog.sql(spark, sf_dir, """
         SELECT /*+ SHUFFLE_HASH(orders, customer, big) */
                c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice,
                big.total_qty
@@ -213,8 +212,7 @@ def flagship_q22_anti_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     join on c_custkey against the filtered orders.  Grouped by nation key
     in lieu of TPC-H's phone prefix.
     """
-    register_views(spark, sf_dir)
-    return spark.sql("""
+    return catalog.sql(spark, sf_dir, """
         SELECT c_nationkey,
                COUNT(1) AS numcust,
                ROUND(SUM(c_acctbal), 4) AS totacctbal

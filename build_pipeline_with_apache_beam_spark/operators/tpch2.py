@@ -33,7 +33,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from build_pipeline_with_apache_beam_spark.catalog import load_table, register_views
+from build_pipeline_with_apache_beam_spark import catalog
+from build_pipeline_with_apache_beam_spark.catalog import load_table
 
 
 def _partsupp(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -108,8 +109,7 @@ def flagship_q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcasting 290 MiB of orders in-memory off an under-threshold
     compressed estimate — the flip the r8 narrative assumed never happens.
     """
-    register_views(spark, sf_dir)
-    return spark.sql("""
+    return catalog.sql(spark, sf_dir, """
         SELECT supp_nation, cust_nation, l_year,
                ROUND(SUM(volume), 4) AS revenue
         FROM (
@@ -139,8 +139,7 @@ def flagship_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     The share is a conditional-sum over the same aggregate pass (no second
     scan): SUM(CASE nation)/SUM(all) per year.
     """
-    register_views(spark, sf_dir)
-    return spark.sql("""
+    return catalog.sql(spark, sf_dir, """
         SELECT o_year,
                ROUND(SUM(CASE WHEN nation = 'NATION_3' THEN volume
                               ELSE 0.0 END) / SUM(volume), 4) AS mkt_share
@@ -175,8 +174,7 @@ def flagship_q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineitem ⋈ orders is the one fact shuffle, shuffle_hash-PINNED
     (round 9: the sf3 probe measured AQE broadcasting 290 MiB of orders).
     """
-    register_views(spark, sf_dir)
-    return spark.sql("""
+    return catalog.sql(spark, sf_dir, """
         SELECT nation, o_year, ROUND(SUM(amount), 4) AS sum_profit
         FROM (
             SELECT /*+ SHUFFLE_HASH(orders) */
@@ -235,8 +233,7 @@ def flagship_q12_shipmode_priority(spark: SparkSession, sf_dir: str) -> DataFram
     high/low priority buckets per linestatus.  One fact-fact shuffle, then a
     two-row conditional aggregate.
     """
-    register_views(spark, sf_dir)
-    return spark.sql("""
+    return catalog.sql(spark, sf_dir, """
         SELECT /*+ MERGE(orders, lineitem) */ l_linestatus,
                SUM(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
                         THEN 1 ELSE 0 END) AS high_line_count,
@@ -292,8 +289,7 @@ def flagship_q16_supplier_part_cnt(spark: SparkSession, sf_dir: str) -> DataFram
     (no null-aware machinery needed); the distinct-supplier count groups by
     the broadcast part attributes.
     """
-    register_views(spark, sf_dir)
-    return spark.sql("""
+    return catalog.sql(spark, sf_dir, """
         SELECT p_brand, p_type, p_size,
                COUNT(DISTINCT ps_suppkey) AS supplier_cnt
         FROM ({ps}) partsupp
@@ -315,8 +311,7 @@ def flagship_q17_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFram
     joined back on partkey, so lineitem is scanned twice but shuffled on the
     same key both times (AQE reuses the exchange where possible).
     """
-    register_views(spark, sf_dir)
-    return spark.sql("""
+    return catalog.sql(spark, sf_dir, """
         SELECT ROUND(SUM(l_extendedprice) / 7.0, 4) AS avg_yearly,
                COUNT(1) AS n_small_lines
         FROM lineitem JOIN part ON p_partkey = l_partkey
@@ -333,8 +328,7 @@ def flagship_q20_part_promotion(spark: SparkSession, sf_dir: str) -> DataFrame:
     both IN subqueries become left-semi joins; the inner HAVING aggregate is
     the only fact shuffle.
     """
-    register_views(spark, sf_dir)
-    return spark.sql("""
+    return catalog.sql(spark, sf_dir, """
         SELECT s_name, s_acctbal
         FROM supplier
         JOIN nation ON s_nationkey = n_nationkey
@@ -362,8 +356,7 @@ def flagship_q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFram
     correlated self-join, planned as one semi and one anti join on
     l_orderkey.
     """
-    register_views(spark, sf_dir)
-    return spark.sql("""
+    return catalog.sql(spark, sf_dir, """
         SELECT /*+ SHUFFLE_HASH(orders) */ s_name, COUNT(1) AS numwait
         FROM supplier
         JOIN lineitem l1 ON s_suppkey = l1.l_suppkey
@@ -401,8 +394,7 @@ def flagship_multi_band_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     pin the canonical Q88 plan shape (each band's filter pushes to its own
     scan).
     """
-    register_views(spark, sf_dir)
-    return spark.sql("""
+    return catalog.sql(spark, sf_dir, """
         SELECT h2.cnt AS h02_04, h6.cnt AS h06_08,
                h10.cnt AS h10_12, h14.cnt AS h14_16
         FROM (SELECT COUNT(1) AS cnt FROM events

@@ -12,7 +12,8 @@ Layout::
     <root>/
       _commits/00000001.json    one manifest per committed version
       _commits/00000002.json
-      data-<uuid>/              immutable parquet snapshot per version
+      data-<uuid>/              immutable parquet snapshot per version,
+                                its schema stored as _schema.json
 
 - **Snapshots are immutable.**  A writer never mutates a committed data
   dir; MERGE writes a brand-new snapshot dir (copy-on-write).
@@ -45,6 +46,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from build_pipeline_with_apache_beam_spark.catalog import (
+    read_schema,
+    write_schema,
+)
 from build_pipeline_with_apache_beam_spark.scratch import run_dir
 
 
@@ -92,6 +97,7 @@ class TxTable:
     def _write_snapshot(self, df: DataFrame) -> str:
         data_dir = os.path.join(self.root, f"data-{uuid.uuid4().hex}")
         df.write.parquet(data_dir)
+        write_schema(data_dir, df.schema)
         return data_dir
 
     # ---- public surface -------------------------------------------------
@@ -108,8 +114,8 @@ class TxTable:
         v = self.latest_version() if version is None else version
         if v == 0:
             raise FileNotFoundError(f"no committed version under {self.root}")
-        data = self._manifest(v)["data"]
-        return self.spark.read.parquet(os.path.join(self.root, data))
+        path = os.path.join(self.root, self._manifest(v)["data"])
+        return self.spark.read.schema(read_schema(path)).parquet(path)
 
     def merge(self, changes: DataFrame, key: str, max_retries: int = 10,
               pre_commit=None) -> int:

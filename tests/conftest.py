@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -36,3 +37,23 @@ def duck(sf_dir):
     from build_pipeline_with_apache_beam_spark.oracle import duck_connect
 
     return duck_connect(sf_dir)
+
+
+@pytest.fixture(scope="session")
+def calling_thread_jobs(spark):
+    """``count(run)``: how many Spark jobs ``run()`` starts on the calling
+    thread (a status-tracker job group; a stream's batches run on the
+    query's own thread and are not counted)."""
+    sc = spark.sparkContext
+
+    def count(run) -> int:
+        group = f"calling-thread-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "counted")
+        try:
+            run()
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count

@@ -8,7 +8,6 @@ from __future__ import annotations
 
 import os
 import time
-import uuid
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -32,6 +31,7 @@ from build_pipeline_with_apache_beam_spark.streaming.windows import (
     q_stream_cep_sessions,
     q_stream_foreach_batch_sink,
     q_stream_session_window_watermark,
+    q_stream_static_enrich_join,
     q_stream_stream_interval_join,
     q_stream_window_append_watermark,
 )
@@ -48,19 +48,6 @@ SOURCES = {
     q_stream_cep_sessions: ("cep_src",),
     q_stream_upsert_foreach_batch: ("upsert_src",),
 }
-
-
-def _calling_thread_jobs(spark, run) -> int:
-    """How many Spark jobs ``run()`` starts on the calling thread."""
-    sc = spark.sparkContext
-    group = f"calling-thread-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "counted")
-    try:
-        run()
-    finally:
-        sc._jsc.clearJobGroup()
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_every_stored_source_schema_equals_a_bare_read(spark, sf_dir):
@@ -96,15 +83,16 @@ def test_events_source_schema_is_the_raw_table_schema(spark, sf_dir,
         assert stored["ts"].dataType == LongType()
 
 
-def test_warm_file_stream_ops_start_only_their_sink_job(spark, sf_dir):
+def test_warm_file_stream_ops_start_only_their_sink_job(spark, sf_dir,
+                                                        calling_thread_jobs):
     """Warm, the source dirs are committed with their schemas, so the
     calling thread runs no schema inference and no table read: its one
     job is the collect of the sink read back.  (The stream's own batches
     run on the query's thread.)"""
     for op in (q_stream_foreach_batch_sink, q_stream_window_append_watermark):
         op(spark, sf_dir)  # commit the sources
-        assert _calling_thread_jobs(
-            spark, lambda: op(spark, sf_dir).collect()) == 1, op.__name__
+        assert calling_thread_jobs(
+            lambda: op(spark, sf_dir).collect()) == 1, op.__name__
 
 
 def test_drain_past_its_deadline_raises_and_stops_the_query(spark, tmp_path):
@@ -121,3 +109,16 @@ def test_drain_past_its_deadline_raises_and_stops_the_query(spark, tmp_path):
                    str(tmp_path / "ckpt"), timeout_sec=0.5)
     assert spark.streams.active == []
 
+
+def test_warm_static_enrich_join_runs_no_schema_job(spark, sf_dir,
+                                                   calling_thread_jobs):
+    """The static user→segment dimension is a ``load_table`` of events,
+    which reads the stored table schema: a warm call starts 3 jobs on the
+    calling thread, none of them a schema inference (an inferring read
+    of events adds a fourth)."""
+    def run():
+        q_stream_static_enrich_join(spark, sf_dir).write.format(
+            "noop").mode("overwrite").save()
+
+    run()  # commit the source and the table schema
+    assert calling_thread_jobs(run) == 3
