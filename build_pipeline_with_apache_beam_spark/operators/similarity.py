@@ -215,10 +215,8 @@ _TRAIN_SAMPLE = 4096  # codebook training sample size (driver-side, bounded)
 
 
 def _ivf_codebook_from_matrix(sample: np.ndarray) -> list[list[float]]:
-    """The Lloyd loop on an already-normalized sample matrix — shared by
-    the engine (sample via Spark) and the oracle builder (sample via
-    pyarrow, see :func:`_oracle_codebook`), so both train the IDENTICAL
-    codebook from the identical doubles."""
+    """The Lloyd loop on an already-normalized sample matrix, one row per
+    vector in ``vec_id`` order."""
     cents = sample[:N_CELLS].copy()
     for _ in range(LLOYD_ITERS):
         # unit vectors: nearest-by-cosine == argmax dot
@@ -231,32 +229,24 @@ def _ivf_codebook_from_matrix(sample: np.ndarray) -> list[list[float]]:
     return cents.round(6).tolist()
 
 
-def _ivf_codebook(emb: DataFrame) -> list[list[float]]:
-    """Train the IVF codebook on a BOUNDED deterministic sample, in numpy.
+def _codebook(sf_dir: str) -> list[list[float]]:
+    """Train the IVF codebook on a BOUNDED deterministic sample, in numpy:
+    the ``_TRAIN_SAMPLE`` lowest vec_ids, first-N init, a fixed iteration
+    count.
 
-    This is the production shape (faiss et al. train codebooks on a sample,
-    not the corpus): the sample is fixed-size regardless of corpus scale, so
-    the driver holds index METADATA, never data.  Assignment of the full
-    corpus to cells stays fully distributed.  Deterministic: sample = lowest
-    vec_ids, seeded init, fixed iteration count."""
-    # deterministic sample WITHOUT a global sort (ids are dense from 0), and
-    # Arrow transfer instead of row-wise Py4J collect
-    pdf = emb.where(F.col("vec_id") < _TRAIN_SAMPLE).toPandas()  # driver-bounded: fixed 4096-row training sample
-    sample = np.stack(pdf.sort_values("vec_id")["vec"].values)
-    return _ivf_codebook_from_matrix(sample)
-
-
-def _oracle_codebook(sf_dir: str) -> list[list[float]]:
-    """The oracle builder's twin of :func:`_ivf_codebook`: read the training
-    sample straight off the parquet (pyarrow, no Spark), replicate Spark's
-    unit normalization with the SAME sequential double arithmetic
-    (``aggregate``'s left-to-right fold, float32→double casts, one divide
-    per element), and run the shared Lloyd loop.  The replication is exact
-    up to the final ``round(6)`` on the centroids, which absorbs any
-    residual 1-ulp difference; accepted residual risk: a centroid component
-    within 5e-7 of a rounding boundary AND a 1-ulp normalization divergence
-    on the same component could differ — none of the test corpora comes
-    within 1e-9 of that."""
+    This is the production shape (faiss et al. train codebooks on a
+    sample, not the corpus): the driver holds index METADATA, never data,
+    and assignment of the full corpus to cells stays distributed.  The
+    sample is read straight off the parquet (pyarrow, no Spark job) and
+    normalized with the SAME sequential double arithmetic as
+    :func:`_with_unit_vec` (``aggregate``'s left-to-right fold,
+    float32→double casts, one divide per element), so the engine's index
+    builder and the DuckDB oracle share this one trainer.  The replication
+    of Spark's unit vectors is exact up to the final ``round(6)`` on the
+    centroids, which absorbs any residual 1-ulp difference; accepted
+    residual risk: a centroid component within 5e-7 of a rounding
+    boundary AND a 1-ulp normalization divergence on the same component
+    could differ — none of the test corpora comes within 1e-9 of that."""
     import pyarrow.dataset as pads
 
     ds = pads.dataset(f"{sf_dir.rstrip('/')}/embeddings.parquet")
@@ -280,19 +270,19 @@ def _ivf_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``catalog._staged``) and re-read by every later call.
 
     The builder normalizes the vectors (:func:`_with_unit_vec`), trains the
-    codebook on them (:func:`_ivf_codebook`) and scores each vector
-    against every centroid: ``cell`` is the first-max cell, ``probes`` the
-    ``N_PROBE`` highest-scoring cells in order (the argmax, then the
-    argmax with it masked out — unrolled because ``N_PROBE`` is tiny), and
-    ``cent_sim`` the rounded similarity to the assigned centroid.  All of
-    it is a pure function of the embeddings table, so a warm IVF op builds
-    no codebook expression and starts no job before its sink.  Doubles
-    round-trip exactly through parquet."""
+    codebook on a sample read off the parquet (:func:`_codebook`) and
+    scores each vector against every centroid: ``cell`` is the first-max
+    cell, ``probes`` the ``N_PROBE`` highest-scoring cells in order (the
+    argmax, then the argmax with it masked out — unrolled because
+    ``N_PROBE`` is tiny), and ``cent_sim`` the rounded similarity to the
+    assigned centroid.  All of it is a pure function of the embeddings
+    table, so a warm IVF op builds no codebook expression and starts no
+    job before its sink.  Doubles round-trip exactly through parquet."""
     def build() -> DataFrame:
         emb = _with_unit_vec(load_table(spark, sf_dir, "embeddings"),
                              sf_dir).select("vec_id", "vec")
         return (emb
-                .withColumn("dots", _cell_dots("vec", _ivf_codebook(emb)))
+                .withColumn("dots", _cell_dots("vec", _codebook(sf_dir)))
                 .withColumn("cell", _argmax_cell(F.col("dots")))
                 .withColumn("probe2", _argmax_cell(F.transform(
                     "dots", lambda x, i: F.when(i == F.col("cell"),
@@ -318,10 +308,10 @@ def sim_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Exact oracle (promoted round 9, verdict #8): the codebook training is
     deterministic (fixed sample, seeded init, fixed iterations), so the
-    oracle builder retrains the bit-identical codebook straight off the
-    parquet (:func:`_oracle_codebook`), inlines the centroids as SQL
-    literals, and DuckDB replays cell assignment, the 2-cell probe, and
-    the rounded-cosine top-k value-for-value (``ORACLE_DYNAMIC``).
+    oracle builder takes the index builder's codebook (:func:`_codebook`),
+    inlines the centroids as SQL literals, and DuckDB replays cell
+    assignment, the 2-cell probe, and the rounded-cosine top-k
+    value-for-value (``ORACLE_DYNAMIC``).
     """
     from pyspark.sql import Window as W
 
@@ -618,8 +608,8 @@ def corpus_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Exact oracle (promoted round 9, verdict #8): the sample-trained cells
     ARE portable SQL once the deterministic codebook is inlined as
-    centroid literals (``ORACLE_DYNAMIC``; bit-identical retraining via
-    :func:`_oracle_codebook`) — DuckDB replays assignment, the sub-split,
+    centroid literals (``ORACLE_DYNAMIC``; the builder's own codebook,
+    :func:`_codebook`) — DuckDB replays assignment, the sub-split,
     the τ-threshold removal join, and the per-cell audit value-for-value.
     Tests additionally assert the keep-rule invariants.
     """
@@ -881,11 +871,10 @@ def ORACLE_DYNAMIC() -> dict:
     registry.oracle_sql): the IVF/semdedup cells come from a codebook
     trained on the data, so the centroid literals the SQL replay needs
     cannot be one static string across scale factors.  The oracle builder
-    trains the IDENTICAL codebook from the parquet directly
-    (:func:`_oracle_codebook`, verified bit-equal to the engine's at every
-    test sf), inlines it, and replays cell assignment, probing, and the
-    blocked pair stage in portable SQL — the round-6 hyperplane-inlining
-    trick (round-9 verdict #8), one level deeper.
+    trains the engine's codebook from the parquet (:func:`_codebook`, the
+    index builder's trainer), inlines it, and replays cell assignment,
+    probing, and the blocked pair stage in portable SQL — the round-6
+    hyperplane-inlining trick (round-9 verdict #8), one level deeper.
 
     Accepted residual float risk (documented per round-8 ADVICE): cell
     argmax compares dots that differ only in summation order between
@@ -909,7 +898,7 @@ def ORACLE_DYNAMIC() -> dict:
             f"actually read (registry.oracle_sql skips these entries when "
             f"the data is absent)")
     if sf_dir not in _CODEBOOK_CACHE:
-        _CODEBOOK_CACHE[sf_dir] = _oracle_codebook(sf_dir)
+        _CODEBOOK_CACHE[sf_dir] = _codebook(sf_dir)
     cents = ", ".join(f"({cid}, [{', '.join(map(sqlgen.lit, c))}])"
                       for cid, c in enumerate(_CODEBOOK_CACHE[sf_dir]))
     # shared replay prelude: the codebook (cid, c), raw double vectors, the

@@ -33,6 +33,7 @@ shuffle so they are collected in the write's result stage (see
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 from datetime import datetime, timezone
@@ -43,10 +44,7 @@ from pyspark.sql import Window as W
 
 from build_pipeline_with_apache_beam_spark.functions import sqlgen
 from build_pipeline_with_apache_beam_spark.scratch import run_dir
-from build_pipeline_with_apache_beam_spark.streaming.drain import (
-    committed_file_idx,
-    drain_to,
-)
+from build_pipeline_with_apache_beam_spark.streaming.drain import drain_each
 
 _WINDOW_LO = "2024-01-08 00:00:00"
 _WINDOW_HI = "2024-01-14 23:59:59.999999"
@@ -176,17 +174,6 @@ def publish_lake_version(lake: str, tmp: str) -> None:
     """
     current = os.path.join(lake, "current")
     prev_target = os.path.realpath(current) if os.path.islink(current) else None
-    if os.path.isdir(current) and not os.path.islink(current):
-        # legacy real-directory lake (pre-symlink layout): move it aside
-        # non-atomically once; every publish after this one is atomic.
-        # A prior crashed migration may have left _legacy_current behind
-        # (with `current` re-created since): clear the stale copy first so
-        # the rename cannot fail outright, then resume the migration.
-        legacy = os.path.join(lake, "_legacy_current")
-        if os.path.lexists(legacy):
-            shutil.rmtree(legacy, ignore_errors=True)
-        os.rename(current, legacy)
-        prev_target = legacy
     if os.environ.get("SPARK_GRAFT_ETL_CRASH") == "before_publish":
         os._exit(137)
     link_tmp = current + ".staged"
@@ -206,12 +193,7 @@ def _gc_lake_versions(lake: str) -> None:
     tmp never published, or a retired dir whose rmtree never ran)."""
     current = os.path.join(lake, "current")
     if not os.path.islink(current):
-        # No published version to anchor liveness — either a legacy
-        # real-dir lake (migration owns it) or a crash mid-migration
-        # where `current` is gone and `_legacy_current` holds the ONLY
-        # copy of the lake.  GC with live=None would rmtree that copy;
-        # skip entirely until a publish re-establishes the symlink.
-        return
+        return  # no published version to anchor liveness
     live = os.path.basename(os.path.realpath(current))
     try:
         entries = os.listdir(lake)
@@ -219,38 +201,19 @@ def _gc_lake_versions(lake: str) -> None:
         return
     for e in entries:
         p = os.path.join(lake, e)
-        # `_legacy_current` is the migration's pre-symlink snapshot; it is
-        # retired by publish_lake_version itself, never by GC (a crash
-        # window can make it the only copy of the pre-crash lake state).
-        if (e != "current" and e != live and e != "_legacy_current"
+        if (e != "current" and e != live
                 and os.path.isdir(p) and not os.path.islink(p)):
             shutil.rmtree(p, ignore_errors=True)
 
 
-def resolve_trigger_files(trigger_files: int | None, total_files: int,
-                          default_batches: int = 3) -> int:
-    """Files-per-trigger for a docstore tail drain (round-12 verdict #5):
-    explicit arg > ``SPARK_GRAFT_TRIGGER_FILES`` env > ~total/default
-    batches.  Returns a cap ≥ 1.  The latency/throughput trade-off is
-    measured in BASELINE.md (per-trigger machinery ≈1.5 s at any batch
-    size — small caps bound latency, large caps amortize machinery)."""
-    if trigger_files is None:
-        env = os.environ.get("SPARK_GRAFT_TRIGGER_FILES", "")
-        trigger_files = int(env) if env.isdigit() and int(env) > 0 else None
-    if trigger_files is not None:
-        return max(1, int(trigger_files))
-    return max(1, -(-total_files // default_batches))
-
-
 def run_etl_stream(spark: SparkSession, sf_dir: str, lake: str, wm_root: str,
-                   ckpt: str, tail_cap: int = 0,
-                   max_wait_sec: float | None = None,
-                   stop_after_files: int | None = None) -> int:
+                   ckpt: str, tail_cap: int = 0) -> None:
     """One streaming RUN of the reference ETL: docstore tail →
     validate/normalize → foreachBatch keep-latest MERGE into the
-    dt-partitioned lake → watermark commit after each batch's sink.
-    Returns the number of docstore files committed in the checkpoint when
-    the run stopped (== total ⇒ drained).
+    dt-partitioned lake → watermark commit after each batch's sink.  The
+    run drains the collection through ``drain_each``, which raises if the
+    drain fails or outlives its deadline, so a return means every file
+    was committed.
 
     This is the reference's ACTUAL operating mode — the incremental driver
     loop of retrieval.py:198-254 + normalization.py:133-170 — recomposed
@@ -258,7 +221,8 @@ def run_etl_stream(spark: SparkSession, sf_dir: str, lake: str, wm_root: str,
 
     - **offsets in the checkpoint**, not a hand-rolled SQLite row: the
       docstore tail's file index commits through the engine's offset log,
-      so kill/resume needs no bespoke recovery code;
+      and a restarted run resumes from it with no recovery code or seed
+      of its own;
     - **micro-batch = the files that arrived since the last commit**,
       rate-capped via ``tail_cap`` so a backlog drains in bounded steps
       (the reference's hourly windows, minus the double-download bug);
@@ -285,14 +249,11 @@ def run_etl_stream(spark: SparkSession, sf_dir: str, lake: str, wm_root: str,
     )
 
     root = build_collection(spark, sf_dir)
-    import json as _json
     with open(os.path.join(root, MANIFEST)) as fh:
-        total_files = len(_json.load(fh))
+        total_files = len(json.load(fh))
 
-    stream = open_docstore(
-        spark, sf_dir, stream=True, path=root,
-        tail_cap=str(tail_cap),
-        resume_from=str(committed_file_idx(ckpt)))
+    stream = open_docstore(spark, sf_dir, stream=True, path=root,
+                           tail_cap=str(tail_cap))
 
     store = WatermarkStore(wm_root)
     win_lo = F.lit(_WINDOW_LO).cast("timestamp")
@@ -357,22 +318,12 @@ def run_etl_stream(spark: SparkSession, sf_dir: str, lake: str, wm_root: str,
                 n_scanned=int(counts["ns"]), n_valid=int(counts["nv"]),
                 batch_id=int(batch_id))
 
-    q = (stream.writeStream.foreachBatch(merge_batch)
-         .option("checkpointLocation", ckpt)
-         .trigger(processingTime="0 seconds").start())
-    # stop_after_files: the KILL point for the resume test — the query is
-    # stopped as soon as the checkpoint has committed at least this many
-    # files (mid-run), instead of draining to the end
-    target = min(total_files, stop_after_files
-                 if stop_after_files is not None else total_files)
-    if max_wait_sec is None:
-        # every micro-batch pays a Python DataSource read (one worker per
-        # file) plus a lake merge — the drain deadline must scale with the
-        # collection, not sit at a fixed 180 s (observed: the sf10 audit's
-        # 3005-file collection stalled at 1002 files against the old
-        # constant)
-        max_wait_sec = max(180.0, 1.0 * total_files)
-    return drain_to(q, ckpt, target, max_wait_sec)
+    # every micro-batch pays a Python DataSource read (one worker per file)
+    # plus a lake merge, so the deadline scales with the collection
+    # (observed: the sf10 audit's 3005-file collection stalled at 1002
+    # files against a fixed 180 s)
+    drain_each(stream, merge_batch, ckpt,
+               timeout_sec=max(180.0, 1.0 * total_files))
 
 
 def _runlog_funnel(hist: list[dict]) -> tuple[int, int]:
@@ -406,18 +357,16 @@ def pipeline_reference_etl_stream(spark: SparkSession, sf_dir: str,
     stream-equals-batch is the law being checked.
 
     Trigger sizing is a first-class knob (round-12 verdict #5):
-    ``trigger_files`` (arg) > ``SPARK_GRAFT_TRIGGER_FILES`` (env) >
-    default ~total/3 (≈3 micro-batches).  The r12-measured trade-off —
+    ``trigger_files`` files per trigger, by default ⌈total/3⌉ (3
+    micro-batches).  The r12-measured trade-off —
     per-trigger machinery is ~1.5 s regardless of batch size, so tiny
     triggers are machinery-bound (13k-row triggers ≈9 rows/ms) while big
     ones amortize it (cap=151 drained 1M rows in 24.6 s) — lives in
     BASELINE.md; pick the cap for latency (small) vs throughput (large).
 
-    Kill/resume is proven separately in tests/test_streaming_etl.py (stop
-    after the first batch, restart from the same checkpoint, identical
-    final state — no loss, no duplication)."""
-    import json as _json
-
+    Kill/resume is proven separately in tests/test_streaming_etl.py (fail
+    the second batch, restart from the same checkpoint, identical final
+    state — no loss, no duplication)."""
     from build_pipeline_with_apache_beam_spark.sources.docstore import (
         MANIFEST,
         build_collection,
@@ -431,11 +380,9 @@ def pipeline_reference_etl_stream(spark: SparkSession, sf_dir: str,
 
     root = build_collection(spark, sf_dir)
     with open(os.path.join(root, MANIFEST)) as fh:
-        total_files = len(_json.load(fh))
-    cap = resolve_trigger_files(trigger_files, total_files)
-
-    done = run_etl_stream(spark, sf_dir, lake, wm_root, ckpt, tail_cap=cap)
-    assert done >= total_files, f"stream stalled at {done}/{total_files}"
+        total_files = len(json.load(fh))
+    run_etl_stream(spark, sf_dir, lake, wm_root, ckpt,
+                   tail_cap=trigger_files or -(-total_files // 3))
 
     # funnel: run-log aggregate + final lake re-read (never trust an
     # unverified sink), identical columns to the batch twin

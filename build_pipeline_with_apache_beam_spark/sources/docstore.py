@@ -22,7 +22,9 @@ right, the driver-side materialization is the scalability flaw.  Here:
   the tail's offsets are manifest entry indices — an ordered commit log —
   which Spark's file stream source (it tracks the files a directory
   listing has shown) has no equivalent for.  Its reader parses each file
-  with Arrow's C++ JSON reader.
+  with Arrow's C++ JSON reader.  Every tail runs through
+  ``streaming/drain.drain_each``, and its offsets live only in the query
+  checkpoint, from which Spark restores them on a restart.
 
 At 100 TB the same interface holds — only the manifest gets bigger (and
 would itself be partitioned).
@@ -51,10 +53,7 @@ from pyspark.sql.datasource import (
 from build_pipeline_with_apache_beam_spark.catalog import load_table
 from build_pipeline_with_apache_beam_spark.functions import sqlgen
 from build_pipeline_with_apache_beam_spark.scratch import derived, run_dir
-from build_pipeline_with_apache_beam_spark.streaming.drain import (
-    drain_each,
-    drain_to,
-)
+from build_pipeline_with_apache_beam_spark.streaming.drain import drain_each
 
 SCHEMA_DDL = ("event_id BIGINT, ts_micros BIGINT, user_id BIGINT, "
               "event_type STRING, value DOUBLE")
@@ -175,22 +174,21 @@ class DocStoreStreamReader(DataSourceStreamReader):
     (``read(partition)``), never in the driver.  At scale the manifest is
     the queue: appends are atomic (write file, then append its stats), so a
     tailing query never sees a half-written file.
+
+    The ``tail_cap`` option caps the files per trigger.  A restarted query
+    resumes at its checkpoint's offset with no seed from the caller:
+    Spark restores the offset into the reader (see :meth:`partitions`).
     """
 
     def __init__(self, options):
         self.path = options["path"]
         _check_auth(self.path, options)
         # rate limit: at most tail_cap NEW files per trigger (0 = drain all
-        # available — the original single-batch tail).  The Python DSv2
-        # API has no ReadLimit hook, so the cap lives in latestOffset: it
-        # advances its own high-water mark by tail_cap per call.
+        # available in one batch).  The Python DSv2 API has no ReadLimit
+        # hook, so the cap lives in latestOffset: it advances its own
+        # high-water mark by tail_cap per call.
         self.tail_cap = int(options.get("tail_cap", 0) or 0)
-        # resume seed: a restarted query's committed offset (the caller
-        # reads it from the checkpoint's offset log).  Without the seed a
-        # capped latestOffset would restart below the committed offset and
-        # re-deliver files — safe under the idempotent MERGE sink
-        # (at-least-once), but wasteful.
-        self._end = int(options.get("resume_from", 0) or 0)
+        self._end = 0
 
     def _manifest(self) -> list[dict]:
         with open(os.path.join(self.path, MANIFEST)) as fh:
@@ -207,11 +205,10 @@ class DocStoreStreamReader(DataSourceStreamReader):
         return {"file_idx": self._end}
 
     def partitions(self, start: dict, end: dict) -> list[_FilePartition]:
-        # engine-recovered start offsets also advance the high-water mark
-        # (round-10 advice): a restarted query that OMITS resume_from would
-        # otherwise see capped end offsets below its committed start until
-        # _end catches up (empty/regressing batch ranges) — the reader must
-        # be correct without the caller's seed
+        # a restarted query hands the reader its recovered offsets here
+        # (Spark's setLatestSeenOffset calls partitions(latest, latest)),
+        # so the high-water mark resumes from the checkpoint and a capped
+        # latestOffset never falls below the committed start
         self._end = max(self._end, start["file_idx"])
         entries = self._manifest()[start["file_idx"]:end["file_idx"]]
         return [_FilePartition(os.path.join(self.path, f))
@@ -463,27 +460,18 @@ def stream_docstore_tail(spark: SparkSession, sf_dir: str,
                          trigger_files: int | None = None) -> DataFrame:
     """REAL streaming run through the custom stream reader: docstore tail →
     per-batch aggregate → parquet sink, then re-read.  By default one
-    trigger drains the whole collection (offsets 0 → latest); with the
-    files-per-trigger knob set (``trigger_files`` arg >
-    ``SPARK_GRAFT_TRIGGER_FILES`` env, round-12 verdict #5) the drain is
-    rate-capped into multiple micro-batches — the streaming aggregate's
+    trigger drains the whole collection (offsets 0 → latest); with
+    ``trigger_files`` set each trigger takes at most that many files, so
+    the drain runs in several micro-batches.  The streaming aggregate's
     ``complete`` output mode carries state across batches, so the final
     sink equals a batch GROUP BY over events at ANY trigger size — which
     is the DuckDB oracle."""
-    from build_pipeline_with_apache_beam_spark.plans.etl import (
-        resolve_trigger_files,
-    )
-
-    root = build_collection(spark, sf_dir)
-    with open(os.path.join(root, MANIFEST)) as fh:
-        total_files = len(json.load(fh))
-    cap = resolve_trigger_files(trigger_files, total_files,
-                                default_batches=1)
     sink_dir = run_dir(sf_dir, "docstream_sink")
     ckpt_dir = run_dir(sf_dir, "docstream_ckpt")
 
-    stream = open_docstore(spark, sf_dir, stream=True, path=root,
-                           tail_cap=str(cap if cap < total_files else 0))
+    stream = open_docstore(spark, sf_dir, stream=True,
+                           path=build_collection(spark, sf_dir),
+                           tail_cap=str(trigger_files or 0))
     agg = (stream.groupBy("event_type")
            .agg(F.count(F.lit(1)).alias("n_events"),
                 F.round(F.sum("value"), 4).alias("total_value")))
@@ -491,28 +479,7 @@ def stream_docstore_tail(spark: SparkSession, sf_dir: str,
     def sink_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.write.mode("overwrite").parquet(sink_dir)
 
-    if cap >= total_files:
-        # uncapped: the original single-batch drain
-        drain_each(agg, sink_batch, ckpt_dir, "complete")
-    else:
-        # capped: continuous micro-batches until the checkpoint has
-        # committed every manifest entry (same drain loop the composed
-        # streaming ETL uses), then stop
-        q = (agg.writeStream.foreachBatch(sink_batch)
-             .option("checkpointLocation", ckpt_dir)
-             .outputMode("complete")
-             .trigger(processingTime="0 seconds").start())
-        committed = drain_to(q, ckpt_dir, total_files,
-                             max(180.0, 1.0 * total_files))
-        # A timeout must be an error, never a truncated answer (the same
-        # contract drain_each enforces): if the deadline expired before
-        # every manifest entry was committed, the sink holds a HALF-DRAINED
-        # aggregate — raise instead of returning it.
-        if committed < total_files:
-            raise TimeoutError(
-                f"stream_docstore_tail drain incomplete: committed "
-                f"{committed}/{total_files} manifest entries before the "
-                f"deadline — refusing to return a half-drained sink")
+    drain_each(agg, sink_batch, ckpt_dir, "complete")
     return spark.read.schema(agg.schema).parquet(sink_dir)
 
 

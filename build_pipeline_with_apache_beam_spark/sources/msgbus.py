@@ -194,7 +194,7 @@ def publish_batch_to_bus(batch_df, topic: str, bus_dir: str,
 def stream_events_to_bus(spark, sf_dir: str, topic: str, bus_dir: str,
                          src_dir: str, ckpt_dir: str,
                          fail_once_dir: str | None = None) -> None:
-    """REAL Structured Streaming publish: file source → availableNow →
+    """REAL Structured Streaming publish: file source → drain →
     foreachBatch → client-API sends.  The streaming twin of the
     reference's bounded Pub/Sub pipeline (retrieval.py:229-249).
     ``src_dir`` is a stream-source dir with its schema stored

@@ -1,32 +1,42 @@
-"""One reader and one drain for the file-source stream ops.
+"""One reader and one drain for every stream op.
 
 Structured Streaming runs a stream as a batch plan over a declared source
-schema.  Every file-source stream op here follows that shape in three
-calls:
+schema.  Every stream op here follows that shape:
 
 - :func:`read_source` opens a committed stream-source dir (a
   ``scratch.derived`` artifact) with the schema stored beside its files
   (``catalog.write_schema``), so no op infers a schema before its stream;
 - :func:`drain` runs the streamed frame to its end into a parquet sink and
   returns the sink read back with the frame's own schema;
-- :func:`drain_each` is the start-and-await under :func:`drain`, for the
+- :func:`drain_each` is the start-and-wait under :func:`drain`, for the
   ops whose ``foreachBatch`` body is their own sink (a MERGE, a message
-  bus publish).
+  bus publish, the docstore tails).  It is the only place in the package
+  a stream query is started.
 
-A drain must never return a half-drained sink.  ``q.awaitTermination(N)``
-returns False on timeout WITHOUT stopping the query, so a caller that then
-reads the sink treats a partial run as complete.  At sf10 the
-stream-stream interval join hit exactly this: the second micro-batch was
-still joining at the 180 s mark, the op read the sink early, and the
+The trigger is ``processingTime="0 seconds"``, and the caller blocks in
+``processAllAvailable()``, which returns once a trigger finds no new data
+and no batch left to run (a watermark's closing batch included).  Not
+``availableNow``: in Spark 4.1 it reads a Python source's
+``latestOffset()`` once, before the first batch, and every later
+``latestOffset(start, limit)`` returns that same offset, so a
+rate-capped docstore tail (its cap lives in ``latestOffset``) would stop
+after one batch.  Spark documents ``processAllAvailable`` as meant for
+tests, since a source that never stops growing never lets it return;
+every source here is a committed dir or a manifest, and the deadline
+timer bounds the wait either way.  Offsets live only in the query's
+checkpoint: a restarted query resumes from it with no seed from the
+caller.
+
+A drain must never return a half-drained sink.  At sf10 the
+stream-stream interval join once outlived a bare 180 s wait: the second
+micro-batch was still joining, the op read the sink early, and the
 result silently lost half its matches (the r13 sweep caught it as a 2x
 oracle rowcount).  A drain timeout is an ERROR, never a truncated answer.
 """
 
 from __future__ import annotations
 
-import json
-import os
-import time
+import threading
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -48,23 +58,35 @@ def read_source(spark: SparkSession, path: str,
 def drain_each(frame: DataFrame,
                on_batch: Callable[[DataFrame, int], None], ckpt_dir: str,
                mode: str = "append", timeout_sec: float = 1800.0) -> None:
-    """Run streamed ``frame`` to the end of its source: an ``availableNow``
-    query that hands each micro-batch to ``on_batch`` in output ``mode``.
-    If the query is still running at the deadline it is stopped and
-    ``TimeoutError`` raised; a failed query raises its error."""
+    """Run streamed ``frame`` to the end of its source, handing each
+    micro-batch to ``on_batch`` in output ``mode``.  A timer stops the
+    query at ``timeout_sec`` and the drain then raises ``TimeoutError``;
+    a failed query raises its error."""
     q = (frame.writeStream.foreachBatch(on_batch)
          .option("checkpointLocation", ckpt_dir)
-         .outputMode(mode).trigger(availableNow=True).start())
-    q.awaitTermination(timeout_sec)
-    if q.isActive:
+         .outputMode(mode).trigger(processingTime="0 seconds").start())
+    expired = threading.Event()
+
+    def expire() -> None:
+        expired.set()
         q.stop()
-        q.awaitTermination(60)
+
+    timer = threading.Timer(timeout_sec, expire)
+    timer.start()
+    try:
+        q.processAllAvailable()
+    except Exception:
+        if not expired.is_set():
+            raise
+    finally:
+        timer.cancel()
+        timer.join()
+        q.stop()
+    if expired.is_set():
         raise TimeoutError(
             f"streaming drain still running after {timeout_sec}s - "
             f"refusing to read a half-drained sink (lastProgress="
             f"{q.lastProgress and q.lastProgress.get('batchId')})")
-    if q.exception() is not None:
-        raise q.exception()
 
 
 def drain(frame: DataFrame, sink_dir: str, ckpt_dir: str,
@@ -80,46 +102,3 @@ def drain(frame: DataFrame, sink_dir: str, ckpt_dir: str,
 
     drain_each(frame, sink_batch, ckpt_dir, mode)
     return frame.sparkSession.read.schema(frame.schema).parquet(sink_dir)
-
-
-def committed_file_idx(ckpt_dir: str) -> int:
-    """The docstore offset already committed in a streaming checkpoint
-    (0 when the checkpoint is fresh or unreadable).
-
-    Reads Spark's offset log — a stable, documented on-disk layout
-    (``offsets/<batchId>`` written before the batch, ``commits/<batchId>``
-    after) whose per-source offset line is OUR OWN json
-    (``{"file_idx": N}``, DocStoreStreamReader).  Used only as the
-    restart seed for the rate-capped tail; a wrong seed degrades to
-    re-delivery, which the idempotent MERGE absorbs (at-least-once)."""
-    commits = os.path.join(ckpt_dir, "commits")
-    offsets = os.path.join(ckpt_dir, "offsets")
-    try:
-        done = max(int(f) for f in os.listdir(commits) if f.isdigit())
-    except (OSError, ValueError):
-        return 0
-    try:
-        with open(os.path.join(offsets, str(done))) as fh:
-            lines = [ln.strip() for ln in fh if ln.strip()]
-        return int(json.loads(lines[-1])["file_idx"])
-    except (OSError, ValueError, KeyError, IndexError):
-        return 0
-
-
-def drain_to(q, ckpt_dir: str, target: int, timeout_sec: float) -> int:
-    """Poll running query ``q`` until its checkpoint ``ckpt_dir`` has
-    committed ``target`` docstore files or ``timeout_sec`` passes, then
-    stop it; a failed query raises.  Returns the committed count, which
-    the caller compares with what it needs."""
-    deadline = time.time() + timeout_sec
-    try:
-        while time.time() < deadline:
-            if q.exception() is not None:
-                raise q.exception()
-            if committed_file_idx(ckpt_dir) >= target:
-                break
-            time.sleep(0.2)
-    finally:
-        q.stop()
-        q.awaitTermination(60)
-    return committed_file_idx(ckpt_dir)

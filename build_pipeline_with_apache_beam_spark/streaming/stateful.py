@@ -85,7 +85,7 @@ def q_stream_stateful_user_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL streaming run of the stateful operator: file source →
     applyInPandasWithState → foreachBatch sink → re-read.
 
-    The single-file availableNow source yields one micro-batch, so each
+    The single-file source yields one micro-batch, so each
     user's final emitted state equals the batch GROUP BY — which is exactly
     the DuckDB oracle.  (With more batches the sink would hold one row per
     (user, batch); the last one still matches — production would upsert.)
@@ -100,7 +100,7 @@ def q_stream_stateful_user_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL streaming run of the Spark-4 ``transformWithStateInPandas`` API
     (the successor to applyInPandasWithState): a ``StatefulProcessor`` with a
-    typed ValueState per user, RocksDB state store, availableNow drain.
+    typed ValueState per user, RocksDB state store, one drain.
 
     Same per-user running (count, sum) semantics as
     stream_stateful_user_agg, so the single-batch final state equals the

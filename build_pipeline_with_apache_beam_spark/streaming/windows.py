@@ -195,7 +195,7 @@ def q_stream_watermark_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_stream_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL Structured Streaming run: file source → availableNow trigger →
+    """REAL Structured Streaming run: file source → drain to the end →
     foreachBatch parquet append (the R8+R9 batch-sink pattern,
     retrieval.py:123-147) → re-read the sink.
 

@@ -42,8 +42,8 @@ def main() -> int:
     from build_pipeline_with_apache_beam_spark.session import get_spark
 
     spark = get_spark("etl-crash-worker")
-    done = etl.run_etl_stream(spark, sf_dir, lake, wm, ckpt, tail_cap=1)
-    print(f"drained {done} files without crashing", flush=True)
+    etl.run_etl_stream(spark, sf_dir, lake, wm, ckpt, tail_cap=1)
+    print("drained without crashing", flush=True)
     return 0
 
 

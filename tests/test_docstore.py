@@ -24,6 +24,7 @@ from build_pipeline_with_apache_beam_spark.sources.docstore import (
     open_docstore,
     scan_docstore_pushdown,
 )
+from build_pipeline_with_apache_beam_spark.streaming.drain import drain_each
 
 
 def test_manifest_prunes_files_from_pushed_ts_range(spark, sf_dir):
@@ -51,11 +52,14 @@ def test_manifest_prunes_files_from_pushed_ts_range(spark, sf_dir):
     assert n_jobs == 0, f"window pruning ran {n_jobs} Spark jobs"
 
 
-def test_stream_restart_consumes_only_new_files(spark, sf_dir, tmp_path):
+@pytest.mark.parametrize("tail_cap", [0, 1])
+def test_stream_restart_consumes_only_new_files(spark, sf_dir, tmp_path,
+                                                tail_cap):
     """Kill-and-restart semantics: a second run against the same checkpoint
     must pick up exactly the files appended since the committed offset —
     no reprocessing, no gaps (the at-least-once contract the reference
-    hand-rolls with SQLite watermarks, retrieval.py:30-60)."""
+    hand-rolls with SQLite watermarks, retrieval.py:30-60).  With a cap
+    the restarted reader has only the checkpoint to resume from."""
     import shutil
 
     src = build_collection(spark, sf_dir)
@@ -75,15 +79,13 @@ def test_stream_restart_consumes_only_new_files(spark, sf_dir, tmp_path):
     sink, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
 
     def run_once():
-        stream = open_docstore(spark, sf_dir, stream=True, path=root)
+        stream = open_docstore(spark, sf_dir, stream=True, path=root,
+                               tail_cap=str(tail_cap))
 
         def fb(df, bid):
             df.write.mode("append").parquet(sink)
 
-        q = (stream.writeStream.foreachBatch(fb)
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        q.awaitTermination(120)
+        drain_each(stream, fb, ckpt, timeout_sec=120)
 
     run_once()
     n_first = spark.read.parquet(sink).count()
@@ -100,6 +102,7 @@ def test_stream_restart_consumes_only_new_files(spark, sf_dir, tmp_path):
     n_events = sum(1 for m in manifest
                    for _ in open(os.path.join(root, m["file"])))
     # every event exactly once across both runs: restart added only the tail
+    assert n_first == sum(m["n"] for m in head)
     assert total == n_events, (n_first, total, n_events)
     assert total > n_first
 

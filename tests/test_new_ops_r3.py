@@ -172,7 +172,7 @@ def test_semdedup_matches_numpy_replica(spark, sf_dir):
     from build_pipeline_with_apache_beam_spark.catalog import load_table
     from build_pipeline_with_apache_beam_spark.operators.similarity import (
         SEMDEDUP_TAU,
-        _ivf_codebook,
+        _codebook,
         _with_unit_vec,
         corpus_semdedup,
     )
@@ -183,7 +183,7 @@ def test_semdedup_matches_numpy_replica(spark, sf_dir):
     pdf = emb.toPandas().sort_values("vec_id")
     vecs = np.stack(pdf["vec"].values)
     ids = pdf["vec_id"].to_numpy()
-    cents = np.array(_ivf_codebook(emb))
+    cents = np.array(_codebook(sf_dir))
     dots = vecs @ cents.T
     cell = dots.argmax(axis=1)
     csim = np.round(dots.max(axis=1), 6)

@@ -30,9 +30,10 @@ from build_pipeline_with_apache_beam_spark.operators.dedup import (
     dedup_fuzzy_minhash,
 )
 from build_pipeline_with_apache_beam_spark.operators.similarity import (
-    _ivf_codebook,
+    _TRAIN_SAMPLE,
+    _codebook,
+    _ivf_codebook_from_matrix,
     _ivf_index,
-    _oracle_codebook,
     _with_unit_vec,
     corpus_semdedup,
     sim_ann_ivf_topk,
@@ -269,14 +270,16 @@ def _round6(x: float) -> float:
 def test_ivf_index_matches_a_numpy_recomputation(spark, sf_dir):
     """Every row of the staged IVF index carries the unit vector, cell,
     probe cells and centroid similarity recomputed here from the collected
-    unit vectors and ``_ivf_codebook``'s centroids (dots folded left to
+    unit vectors and the codebook trained on them (dots folded left to
     right, as the engine's ``aggregate`` does); that codebook is the one
-    the DuckDB oracle trains straight off the parquet."""
+    ``_codebook`` trains straight off the parquet for the index builder
+    and the DuckDB oracle."""
     emb = _with_unit_vec(load_table(spark, sf_dir, "embeddings"),
                          sf_dir).select("vec_id", "vec")
-    cents = _ivf_codebook(emb)
-    assert _oracle_codebook(sf_dir) == cents
     pdf = emb.toPandas().sort_values("vec_id")
+    cents = _ivf_codebook_from_matrix(np.stack(
+        pdf[pdf["vec_id"] < _TRAIN_SAMPLE]["vec"].values))
+    assert _codebook(sf_dir) == cents
     idx = _ivf_index(spark, sf_dir).toPandas().sort_values("vec_id")
     assert idx["vec_id"].tolist() == pdf["vec_id"].tolist()
     for vec, row in zip(pdf["vec"], idx.itertuples()):

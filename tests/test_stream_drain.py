@@ -1,11 +1,12 @@
 """The one stream reader and drain (``streaming/drain.py``): every
 committed stream-source dir stores the schema a bare parquet read infers,
 a warm file-source stream op starts no job on the calling thread before
-its sink, and a drain that outlives its deadline raises with no query
-left running."""
+its sink, a drain that outlives its deadline raises with no query left
+running, and no other package module starts or waits on a stream query."""
 
 from __future__ import annotations
 
+import ast
 import os
 import time
 
@@ -37,6 +38,7 @@ from build_pipeline_with_apache_beam_spark.streaming.windows import (
 )
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PKG = os.path.join(REPO, "build_pipeline_with_apache_beam_spark")
 PERFBENCH_DATA = os.path.join(REPO, "perfbench", "data", "sf0.01")
 
 # op -> the committed stream-source dirs it reads
@@ -122,3 +124,34 @@ def test_warm_static_enrich_join_runs_no_schema_job(spark, sf_dir,
 
     run()  # commit the source and the table schema
     assert calling_thread_jobs(run) == 3
+
+
+# the stream-query lifecycle calls only streaming/drain.py may make
+_LIFECYCLE = {"writeStream", "processAllAvailable", "awaitTermination"}
+
+
+def _stream_lifecycle_calls(pkg: str) -> list[str]:
+    """``path:line attr`` of every ``_LIFECYCLE`` attribute read under
+    ``pkg`` outside ``streaming/drain.py``."""
+    found = []
+    for root, dirs, names in os.walk(pkg):
+        dirs[:] = [d for d in dirs if d != "__pycache__"]
+        for name in names:
+            path = os.path.join(root, name)
+            rel = os.path.relpath(path, pkg)
+            if not name.endswith(".py") or rel == os.path.join(
+                    "streaming", "drain.py"):
+                continue
+            with open(path, encoding="utf-8") as fh:
+                tree = ast.parse(fh.read(), path)
+            found += [f"{rel}:{node.lineno} {node.attr}"
+                      for node in ast.walk(tree)
+                      if isinstance(node, ast.Attribute)
+                      and node.attr in _LIFECYCLE]
+    return found
+
+
+def test_only_the_drain_starts_a_stream_query():
+    """Every stream op runs through ``drain_each``: no other package
+    module calls ``.writeStream`` or waits on a query itself."""
+    assert _stream_lifecycle_calls(PKG) == []

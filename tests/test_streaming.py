@@ -176,29 +176,13 @@ def test_streaming_sliding_window_matches_batch(spark, sf_dir, tmp_path):
 
 
 def test_trigger_size_knob_is_result_invariant(spark, sf_dir):
-    """Round-12 verdict #5: files-per-trigger is a first-class knob
-    (arg > SPARK_GRAFT_TRIGGER_FILES env > default) and the drained
-    result is IDENTICAL at any trigger size — the streaming aggregate's
-    complete mode and the checkpoint-offset drain loop make batch
-    boundaries invisible to the final state."""
-    import os
-
-    from build_pipeline_with_apache_beam_spark.plans.etl import (
-        resolve_trigger_files,
-    )
+    """Round-12 verdict #5: files-per-trigger is a first-class knob and
+    the drained result is IDENTICAL at any trigger size — the streaming
+    aggregate's complete mode makes batch boundaries invisible to the
+    final state."""
     from build_pipeline_with_apache_beam_spark.sources.docstore import (
         stream_docstore_tail,
     )
-
-    # resolution order: arg wins over env wins over default
-    os.environ["SPARK_GRAFT_TRIGGER_FILES"] = "7"
-    try:
-        assert resolve_trigger_files(2, 100) == 2
-        assert resolve_trigger_files(None, 100) == 7
-    finally:
-        del os.environ["SPARK_GRAFT_TRIGGER_FILES"]
-    assert resolve_trigger_files(None, 100, default_batches=3) == 34
-    assert resolve_trigger_files(0, 100) == 1  # floor at 1
 
     def key(df):
         return sorted(tuple(sorted(r.asDict().items()))

@@ -6,7 +6,7 @@ Three laws:
 2. **really multi-batch**: the rate-capped tail must process the
    collection in more than one micro-batch (otherwise this is just the
    single-trigger drain the engine already had);
-3. **kill/resume**: stopping the query mid-run and restarting from the
+3. **kill/resume**: failing the query mid-run and restarting from the
    same checkpoint must reach the identical final state — no loss (every
    user present) and no duplication (one row per user) — with the
    watermark only ever advancing.
@@ -26,6 +26,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from build_pipeline_with_apache_beam_spark.plans import etl
 from build_pipeline_with_apache_beam_spark.plans.etl import (
     _runlog_funnel,
     pipeline_reference_etl,
@@ -50,6 +51,22 @@ def _dirs(sf_dir: str, tag: str) -> tuple[str, str, str]:
                  for kind in ("lake", "wm", "ckpt"))
 
 
+def _committed(ckpt: str) -> int:
+    """The docstore offset (files consumed) of the last batch a streaming
+    checkpoint committed; 0 when it committed none.  Reads Spark's offset
+    log: ``offsets/<batchId>`` is written before the batch and
+    ``commits/<batchId>`` after it, and the source's offset line is the
+    reader's own ``{"file_idx": N}``."""
+    try:
+        done = max(int(f) for f in os.listdir(os.path.join(ckpt, "commits"))
+                   if f.isdigit())
+    except (OSError, ValueError):
+        return 0
+    with open(os.path.join(ckpt, "offsets", str(done))) as fh:
+        lines = [ln.strip() for ln in fh if ln.strip()]
+    return int(json.loads(lines[-1])["file_idx"])
+
+
 def _lake_rows(spark, lake):
     return (spark.read.schema(LAKE_SCHEMA)
             .json(os.path.join(lake, "current"))
@@ -70,16 +87,17 @@ def test_stream_runs_in_multiple_batches(spark, sf_dir):
         total = len(json.load(fh))
     assert total >= 3, "fixture must have enough day-files to batch"
     cap = max(1, -(-total // 3))
-    done = run_etl_stream(spark, sf_dir, lake, wm, ckpt, tail_cap=cap)
-    assert done >= total
+    run_etl_stream(spark, sf_dir, lake, wm, ckpt, tail_cap=cap)
+    assert _committed(ckpt) >= total
     n_batches = len([f for f in os.listdir(os.path.join(ckpt, "commits"))
                      if f.isdigit()])
     assert n_batches >= 3, f"expected a real multi-batch run, got {n_batches}"
 
 
-def test_stream_kill_resume_reaches_identical_state(spark, sf_dir):
-    """Run 1 drains only part of the collection (cap × short run), then a
-    fresh query restarts from the SAME checkpoint and drains the rest.
+def test_stream_kill_resume_reaches_identical_state(spark, sf_dir,
+                                                    monkeypatch):
+    """Run 1 fails in its second batch, after the first batch committed;
+    a fresh query restarts from the SAME checkpoint and drains the rest.
     Final lake must equal an uninterrupted run's lake exactly."""
     root = build_collection(spark, sf_dir)
     with open(os.path.join(root, MANIFEST)) as fh:
@@ -88,17 +106,28 @@ def test_stream_kill_resume_reaches_identical_state(spark, sf_dir):
 
     # uninterrupted reference run
     lake0, wm0, ckpt0 = _dirs(sf_dir, "uninterrupted")
-    done = run_etl_stream(spark, sf_dir, lake0, wm0, ckpt0, tail_cap=cap)
-    assert done >= total
+    run_etl_stream(spark, sf_dir, lake0, wm0, ckpt0, tail_cap=cap)
+    assert _committed(ckpt0) >= total
     want = sorted(map(tuple, _lake_rows(spark, lake0)))
 
-    # killed run: stop as soon as the FIRST batch's files are committed
+    # killed run: the second batch's publish raises, so the query dies
+    # with exactly the first batch's files committed
     lake1, wm1, ckpt1 = _dirs(sf_dir, "killed")
-    partial = run_etl_stream(spark, sf_dir, lake1, wm1, ckpt1, tail_cap=cap,
-                             stop_after_files=cap)
-    assert 0 < partial, "kill-run never committed a batch"
-    if partial >= total:
-        pytest.skip("kill landed after full drain — nothing to resume")
+    real_publish = etl.publish_lake_version
+    published = []
+
+    def publish_once(lake_dir: str, tmp: str) -> None:
+        if published:
+            raise RuntimeError("injected kill in the second batch")
+        real_publish(lake_dir, tmp)
+        published.append(tmp)
+
+    monkeypatch.setattr(etl, "publish_lake_version", publish_once)
+    with pytest.raises(Exception, match="injected kill"):
+        run_etl_stream(spark, sf_dir, lake1, wm1, ckpt1, tail_cap=cap)
+    monkeypatch.setattr(etl, "publish_lake_version", real_publish)
+    partial = _committed(ckpt1)
+    assert 0 < partial < total, (partial, total)
     # monotonicity baseline: only meaningful if the killed run actually
     # committed a watermark record — with an empty run-log
     # last_processed() returns the DEFAULT EPOCH (a windowing floor,
@@ -108,8 +137,8 @@ def test_stream_kill_resume_reaches_identical_state(spark, sf_dir):
 
     # resume from the same checkpoint: must pick up at the committed
     # offset and drain the remainder
-    resumed = run_etl_stream(spark, sf_dir, lake1, wm1, ckpt1, tail_cap=cap)
-    assert resumed >= total
+    run_etl_stream(spark, sf_dir, lake1, wm1, ckpt1, tail_cap=cap)
+    assert _committed(ckpt1) >= total
     got = sorted(map(tuple, _lake_rows(spark, lake1)))
     assert got == want, "resumed final state differs from uninterrupted run"
     # no duplication: exactly one row per user
@@ -198,8 +227,8 @@ def test_lake_swap_crash_window_leaves_old_xor_new(spark, sf_dir, crash_point):
 
     # uninterrupted reference run (same cap as the worker)
     lake0, wm0, ckpt0 = _dirs(sf_dir, f"chaosref_{crash_point}")
-    assert run_etl_stream(spark, sf_dir, lake0, wm0, ckpt0,
-                          tail_cap=1) >= total
+    run_etl_stream(spark, sf_dir, lake0, wm0, ckpt0, tail_cap=1)
+    assert _committed(ckpt0) >= total
     want = sorted(map(tuple, _lake_rows(spark, lake0)))
 
     lake1, wm1, ckpt1 = _dirs(sf_dir, f"chaos_{crash_point}")
@@ -229,8 +258,8 @@ def test_lake_swap_crash_window_leaves_old_xor_new(spark, sf_dir, crash_point):
     assert len(users) == len(set(users)), "torn lake: duplicate users"
 
     # (b) resume from the same checkpoint → identical final state
-    assert run_etl_stream(spark, sf_dir, lake1, wm1, ckpt1,
-                          tail_cap=1) >= total
+    run_etl_stream(spark, sf_dir, lake1, wm1, ckpt1, tail_cap=1)
+    assert _committed(ckpt1) >= total
     got = sorted(map(tuple, _lake_rows(spark, lake1)))
     assert got == want, "resumed final state differs from uninterrupted run"
     # crash debris is bounded: at most the live version dir remains live,
@@ -242,44 +271,29 @@ def test_lake_swap_crash_window_leaves_old_xor_new(spark, sf_dir, crash_point):
     assert not leftovers, f"unreaped version debris: {leftovers}"
 
 
-def test_gc_never_reaps_legacy_current_and_skips_without_symlink(tmp_path):
-    """Crash-mid-migration safety: `_legacy_current` is the only copy of a
-    pre-symlink lake while the migration is in flight — GC must never
-    remove it, and with `current` absent (the crash window between rename
-    and symlink) GC must not reap ANYTHING.  A retried migration must also
-    tolerate a `_legacy_current` left by a prior crash."""
+def test_gc_reaps_orphans_and_skips_without_symlink(tmp_path):
+    """GC reaps the version dirs ``current`` does not point at, and reaps
+    nothing while ``current`` is not a symlink (no liveness anchor)."""
     from build_pipeline_with_apache_beam_spark.plans.etl import (
         _gc_lake_versions,
-        publish_lake_version,
     )
 
     lake = tmp_path / "lake"
     lake.mkdir()
-    (lake / "_legacy_current").mkdir()
-    (lake / "_legacy_current" / "data.json").write_text('{"user_id": 1}\n')
     (lake / "v_orphan").mkdir()
 
-    # crash window: no `current` at all — GC is a no-op
+    # no `current` at all, or a real dir in its place — GC is a no-op
     _gc_lake_versions(str(lake))
-    assert (lake / "_legacy_current" / "data.json").exists()
     assert (lake / "v_orphan").exists(), "GC reaped with no liveness anchor"
+    (lake / "current").mkdir()
+    _gc_lake_versions(str(lake))
+    assert (lake / "v_orphan").exists(), "GC reaped with no liveness anchor"
+    (lake / "current").rmdir()
 
-    # healthy lake: orphan version dirs are reaped, _legacy_current is not
+    # healthy lake: orphan version dirs are reaped, the live one is not
     (lake / "v_live").mkdir()
     (lake / "v_live" / "_SUCCESS").touch()
     os.symlink("v_live", str(lake / "current"))
     _gc_lake_versions(str(lake))
-    assert (lake / "_legacy_current" / "data.json").exists()
     assert (lake / "v_live").exists()
     assert not (lake / "v_orphan").exists()
-
-    # retried migration: a real-dir `current` beside a stale
-    # _legacy_current from a prior crash must publish, not os.rename-fail
-    os.unlink(str(lake / "current"))
-    (lake / "current").mkdir()
-    (lake / "current" / "old.json").write_text('{"user_id": 2}\n')
-    (lake / "v_new").mkdir()
-    (lake / "v_new" / "_SUCCESS").touch()
-    publish_lake_version(str(lake), str(lake / "v_new"))
-    assert os.path.islink(str(lake / "current"))
-    assert os.path.realpath(str(lake / "current")).endswith("v_new")
